@@ -24,7 +24,7 @@ class Tracer:
         self._stack: list[int] = []
 
     @contextmanager
-    def span(self, name: str, trace_id: str, **attrs):
+    def span(self, name: str, trace_id: str):
         if not self.enabled:
             yield None
             return
@@ -35,7 +35,6 @@ class Tracer:
             "parent": self._stack[-1] if self._stack else None,
             "start": time.perf_counter(),
             "end": None,
-            **attrs,
         }
         self.spans.append(rec)
         self._stack.append(rec["id"])
@@ -87,7 +86,6 @@ def fold_event_log(path: str) -> dict[str, dict[str, float]]:
     the most task time).
     """
     stage_group: dict[int, str] = {}
-    job_group: dict[int, str] = {}
     stage_tasks: dict[int, list[float]] = defaultdict(list)
     out: dict[str, dict[str, float]] = defaultdict(lambda: defaultdict(float))
     with open(path) as f:
@@ -98,7 +96,6 @@ def fold_event_log(path: str) -> dict[str, dict[str, float]]:
                 group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
                 if group is None:
                     continue
-                job_group[ev["Job ID"]] = group
                 out[group]["jobs"] += 1
                 for sid in ev.get("Stage IDs", []):
                     stage_group[sid] = group
