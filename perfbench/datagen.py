@@ -10,13 +10,18 @@ duplicates, and unit-norm 64-d ``embeddings``. Every column is drawn
 independently and uniformly, as in the reference data, so the engine's
 input contract holds (no NULLs, 2-dp money, non-empty tables).
 
-The data is a fixed function of the scale factor: the benchmark's
-``--seed`` chooses only query order and micro-batch splits, never the
-tables, so every seed measures the same bytes.
+``events.ts`` is stored as TIMESTAMP(NANOS), as in the reference data,
+so every events query goes through the loader's ns -> us conversion.
+
+The data is a fixed function of the scale factor and of this file's
+source: the benchmark's ``--seed`` chooses only query order and
+micro-batch splits, never the tables, so every seed measures the same
+bytes, and an edit here writes (and oracles) a fresh data directory.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 
@@ -183,18 +188,41 @@ def make_tables(sf: float) -> dict[str, pd.DataFrame]:
     return t
 
 
+def data_key(sf: float) -> str:
+    """Name of the data directory: the scale factor plus a hash of this
+    file, so tables (and the oracle results cached beside them) written
+    by an older generator are never reused."""
+    with open(__file__, "rb") as f:
+        digest = hashlib.sha1(f.read()).hexdigest()[:8]
+    return f"sf{sf:g}-{digest}"
+
+
 def ensure_tables(root: str, sf: float) -> str:
     """Directory holding the ``sf`` tables under ``root``, written once.
 
     A ``_READY`` marker is written last, so an interrupted write is
     redone instead of read half-finished.
     """
-    out = os.path.join(root, f"sf{sf:g}")
+    out = os.path.join(root, data_key(sf))
     if os.path.exists(os.path.join(out, "_READY")):
         return out
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
-    schemas = {"embeddings": pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())), ("label", pa.int32())])}
+    schemas = {
+        "embeddings": pa.schema(
+            [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())), ("label", pa.int32())]
+        ),
+        "events": pa.schema(
+            [
+                ("event_id", pa.int64()),
+                ("ts", pa.timestamp("ns")),
+                ("user_id", pa.int64()),
+                ("event_type", pa.string()),
+                ("value", pa.float64()),
+                ("props", pa.string()),
+            ]
+        ),
+    }
     for name, df in make_tables(sf).items():
         table = pa.Table.from_pandas(df, schema=schemas.get(name), preserve_index=False)
         pq.write_table(table, os.path.join(out, f"{name}.parquet"))

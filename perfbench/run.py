@@ -14,8 +14,7 @@ Run from the repository root. One run:
 3. gates the collected results, each query against its DuckDB oracle
    with ``tools/parity.compare_frames``;
 4. runs whole passes in seed-drawn orders, as many as fill ``--seconds``
-   at the workload's reference pass time, with a full JVM collection
-   between queries, outside the timed region;
+   at the workload's reference pass time, back to back;
 5. prints a detail line (host verdict, pinned environment, gate
    messages, per-query medians), then the result line:
    ``{"correct", "attempted", "failed", "metrics"}``.
@@ -205,7 +204,9 @@ class Run:
         direction = +1 for even event ids else -1, size = value) into
         STREAM_FILES parquet files at seed-chosen rows, oldest first,
         with increasing mtimes so the file source reads them in
-        event-time order and no event arrives late."""
+        event-time order and no event arrives late. ``ts`` is written
+        in microseconds: the raw file source does not convert, and
+        would read nanoseconds as a bigint."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -214,7 +215,7 @@ class Run:
         even = pc.equal(pc.bit_wise_and(ev["event_id"], 1), 0)
         lob = pa.table(
             {
-                "ts": ev["ts"],
+                "ts": ev["ts"].cast(pa.timestamp("us")),
                 "direction": pc.if_else(even, 1, -1).cast(pa.int32()),
                 "size": ev["value"],
             }
@@ -414,20 +415,20 @@ class Run:
             traced = self.trace and i % 2 == 0
             self.tracer.enabled = traced
             layer: dict = defaultdict(float)
-            gc0 = self._gc_ms() if traced else 0
             wall = 0.0
             for name in self.rng.sample(self.wl.queries, len(self.wl.queries)):
                 tid = f"{self.wl.name}/{i}/{name}"
+                gc0 = self._gc_ms() if traced else 0
                 t0 = time.perf_counter()
                 with self.tracer.span("query", tid):
                     ok, _ = self._attempt(name, lambda: self.run_query(name, tid, traced, layer))
                 dt = time.perf_counter() - t0
+                if traced:
+                    layer["jvm.gc_s"] += (self._gc_ms() - gc0) / 1e3
                 wall += dt
-                self._collect_garbage()
                 if ok and not traced:
                     self.samples[name].append(dt)
             if traced:
-                layer["jvm.gc_s"] = (self._gc_ms() - gc0) / 1e3
                 self.spark.sparkContext.setJobGroup("pb|idle", "idle")
                 self.probe_layers(f"{self.wl.name}/{i}", layer)
                 self.layers.append(layer)
@@ -437,14 +438,14 @@ class Run:
         return traced_walls, plain_walls
 
     def _collect_garbage(self) -> None:
-        """Full JVM collection between queries, outside the timed
-        region: no query inherits another's garbage, so latency and peak
-        RSS stop depending on when the collector last ran."""
+        """Full JVM collection, once before the measured passes, so
+        their peak RSS does not carry the set-up pass's garbage."""
         self.spark.sparkContext._jvm.java.lang.System.gc()
 
     def _gc_ms(self) -> int:
         """Collection time of the JVM's garbage collectors so far; in
-        local mode driver and executors share this one JVM."""
+        local mode driver and executors share this one JVM, so this
+        counts driver-side collections that task metrics miss."""
         mf = self.spark.sparkContext._jvm.java.lang.management.ManagementFactory
         return sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())
 
