@@ -6,7 +6,8 @@
 Run from the repository root. One run:
 
 1. writes the workload's tables once under ``.perfbench_work/data``
-   (``datagen``; a fixed function of the scale factor) and cuts the
+   (``datagen``; a fixed function of the scale factor and of the
+   generator's source) and cuts the
    event stream into micro-batch files at seed-drawn points;
 2. starts a session on ``local[N]`` with N = min(4, nproc), imports the
    query registry and runs one warm pass that collects every result;
