@@ -12,16 +12,30 @@ def loadavg() -> list[float]:
         return [float(x) for x in f.read().split()[:3]]
 
 
-def cpu_jiffies() -> tuple[int, int]:
-    """(steal, total) jiffies from the first line of /proc/stat."""
+def cpu_jiffies() -> tuple[int, int, int]:
+    """(busy, steal, total) jiffies over all CPUs, from the first line
+    of /proc/stat; busy is every field but idle, iowait and steal
+    (guest time is already inside user)."""
     with open("/proc/stat") as f:
-        vals = [int(x) for x in f.readline().split()[1:]]
-    return (vals[7] if len(vals) > 7 else 0), sum(vals)
+        vals = [int(x) for x in f.readline().split()[1:9]]
+    vals += [0] * (8 - len(vals))
+    steal = vals[7]
+    return sum(vals) - vals[3] - vals[4] - steal, steal, sum(vals)
 
 
-def steal_pct(start: tuple[int, int], end: tuple[int, int]) -> float:
-    total = end[1] - start[1]
-    return 100.0 * (end[0] - start[0]) / total if total > 0 else 0.0
+def steal_pct(start: tuple[int, int, int], end: tuple[int, int, int]) -> float:
+    total = end[2] - start[2]
+    return 100.0 * (end[1] - start[1]) / total if total > 0 else 0.0
+
+
+def unstolen(start: tuple[int, int, int], end: tuple[int, int, int]) -> float:
+    """Share of the CPU time this machine's threads wanted between two
+    readings that the hypervisor gave them: busy / (busy + steal).
+    Work that got this share of the CPU time it wanted ran at this
+    share of its speed on an unshared host, so ``wall * unstolen`` is
+    the wall time it would have taken there."""
+    busy, steal = end[0] - start[0], end[1] - start[1]
+    return busy / (busy + steal) if busy + steal > 0 else 1.0
 
 
 def vm_hwm_mb(pid: int | str) -> float:

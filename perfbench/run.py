@@ -1,6 +1,6 @@
 """Layered benchmark of the engine, one workload per run.
 
-    python3 perfbench/run.py --workload lob_oi --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload lob_oi --seed 1 --seconds 20 --trace 0
     python3 perfbench/smoke.py      # every workload once, at sf0.001
 
 Run from the repository root. One run:
@@ -14,8 +14,9 @@ Run from the repository root. One run:
    ``setup_s`` is these three together;
 3. gates the collected results, each query against its DuckDB oracle
    with ``tools/parity.compare_frames``;
-4. runs whole passes in seed-drawn orders, as many as fill ``--seconds``
-   at the workload's reference pass time, back to back;
+4. runs the workload's untimed warm-up passes, then whole passes in
+   seed-drawn orders, as many as fill ``--seconds`` at the workload's
+   reference pass time, back to back;
 5. prints a detail line (host verdict, pinned environment, gate
    messages, per-query medians), then the result line:
    ``{"correct", "attempted", "failed", "metrics"}``.
@@ -25,7 +26,15 @@ Spark's event log (a startup conf passed from here), alternates traced
 and plain passes, records spans around every call into the library,
 runs the layer probes (table loader, pin, one streaming OI query gated
 against its batch twin) and reports the per-layer metrics plus the
-tracing overhead. Every file a run writes lands under
+tracing overhead.
+
+Every time reported (``setup_s``, passes, query latencies) is the wall
+time scaled by the share of CPU time the hypervisor did not steal
+while it ran, read from /proc/stat (``host.unstolen``): on a shared
+host the steal moves from run to run and would otherwise set the
+spread. The raw walls and the steal % are in the detail line.
+
+Every file a run writes lands under
 ``.perfbench_work/`` at the root; ``baseline.json`` holds the reference
 host's numbers.
 """
@@ -142,6 +151,7 @@ class Run:
         self.attempted = 0
         self.failures: list[str] = []
         self.samples: dict[str, list[float]] = {q: [] for q in workload.queries}
+        self.raw_samples: dict[str, list[float]] = {q: [] for q in workload.queries}
         self.layers: list[dict[str, float]] = []  # per traced pass
         self.gate: dict[str, str] = {}
         self.stream_layer: dict[str, float] = defaultdict(float)
@@ -406,10 +416,24 @@ class Run:
         the same, so percentiles do not jump with a pass more or less."""
         return max(2, round(self.seconds / self.wl.pass_s_ref))
 
+    def warm_up(self) -> None:
+        """Untimed passes in seed-drawn orders after the gate: the JIT
+        is still compiling the workload's hot code for several passes
+        after the first, and timing that tail measures when the
+        compiler threads got the cores."""
+        for i in range(self.wl.warmup_passes):
+            for name in self.rng.sample(self.wl.queries, len(self.wl.queries)):
+                tid = f"{self.wl.name}/warmup{i}/{name}"
+                self._attempt(name, lambda: self.run_query(name, tid, False, {}))
+
     def measure(self) -> tuple[list[float], list[float]]:
         """Whole passes; a traced run alternates traced and plain
-        passes, starting traced. Returns the pass walls, traced and
-        plain."""
+        passes, starting traced. Every query's wall is scaled by the
+        share of CPU time the hypervisor did not steal while it ran
+        (``host.unstolen``), the raw wall kept beside it. Returns the
+        scaled pass walls, traced and plain."""
+        from perfbench import host
+
         traced_walls: list[float] = []
         plain_walls: list[float] = []
         for i in range(self.n_passes()):
@@ -420,15 +444,18 @@ class Run:
             for name in self.rng.sample(self.wl.queries, len(self.wl.queries)):
                 tid = f"{self.wl.name}/{i}/{name}"
                 gc0 = self._gc_ms() if traced else 0
+                j0 = host.cpu_jiffies()
                 t0 = time.perf_counter()
                 with self.tracer.span("query", tid):
                     ok, _ = self._attempt(name, lambda: self.run_query(name, tid, traced, layer))
-                dt = time.perf_counter() - t0
+                raw = time.perf_counter() - t0
+                dt = raw * host.unstolen(j0, host.cpu_jiffies())
                 if traced:
                     layer["jvm.gc_s"] += (self._gc_ms() - gc0) / 1e3
                 wall += dt
                 if ok and not traced:
                     self.samples[name].append(dt)
+                    self.raw_samples[name].append(raw)
             if traced:
                 self.spark.sparkContext.setJobGroup("pb|idle", "idle")
                 self.probe_layers(f"{self.wl.name}/{i}", layer)
@@ -560,13 +587,15 @@ def main(argv: list[str] | None = None) -> int:
     load_start = host.loadavg()
     run = Run(wl, data_dir, run_dir, args.seed, args.seconds, trace)
     run.prepare_stream_source()
-    t0 = time.perf_counter()
+    j0, t0 = host.cpu_jiffies(), time.perf_counter()
     layer0 = run.start()
     run.tracer.enabled = False  # the warm pass is set-up, not a traced pass
     results = run.warm_pass()
-    setup_s = time.perf_counter() - t0
+    setup_raw_s = time.perf_counter() - t0
+    setup_s = setup_raw_s * host.unstolen(j0, host.cpu_jiffies())
     run.check(results)
     del results
+    run.warm_up()
     run._collect_garbage()
     run.reset_peak_rss()  # peak RSS of the measured passes, not of set-up
     jiff0 = host.cpu_jiffies()
@@ -575,7 +604,7 @@ def main(argv: list[str] | None = None) -> int:
     peak_rss = run.peak_rss_mb()
     versions = run.versions()
     run.stop()
-    verdict = host.verdict(load_start, host.steal_pct(jiff0, jiff1), run.samples)
+    verdict = host.verdict(load_start, host.steal_pct(jiff0, jiff1), run.raw_samples)
 
     latencies = [x for v in run.samples.values() for x in v]
     if trace:
@@ -610,6 +639,8 @@ def main(argv: list[str] | None = None) -> int:
         "failures": run.failures,
         "gate": run.gate,
         "query_median_s": {q: statistics.median(v) for q, v in run.samples.items() if v},
+        "setup_raw_s": setup_raw_s,
+        "query_raw_median_s": {q: statistics.median(v) for q, v in run.raw_samples.items() if v},
         "pass_walls_s": {"traced": traced_walls, "plain": plain_walls},
         "layer_moves": wl.moves,
         "self_s_per_traced_pass": {
