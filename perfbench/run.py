@@ -1,6 +1,6 @@
 """Layered benchmark of the engine, one workload per run.
 
-    python3 perfbench/run.py --workload lob_oi --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload lob_oi --seed 1 --seconds 16 --trace 0
     python3 perfbench/smoke.py      # every workload once, at sf0.001
 
 Run from the repository root. One run:

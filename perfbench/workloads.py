@@ -59,8 +59,8 @@ WORKLOADS: dict[str, Workload] = {
             why=(
                 "the paper's pipeline: executing the scans, windows and as-of "
                 "shuffles over events is 55-60% of a traced pass and build "
-                "about 40%; at this scale every stage is one task, so exec is "
-                "serial work, not parallel scan"
+                "about 40%; at this scale a stage runs 1.3 tasks on average, so "
+                "exec is mostly serial work, not parallel scan"
             ),
             moves={
                 "queries.plan_s": "pass_s",
@@ -96,7 +96,7 @@ WORKLOADS: dict[str, Workload] = {
             name="driver_loops",
             sf=0.001,
             pass_s_ref=1.6,
-            warmup_passes=10,
+            warmup_passes=7,
             queries=(
                 "mmr_rerank",
             ),
