@@ -474,19 +474,21 @@ def prefix_filter_near_dup_pairs(
     # a pair sharing several prefix shingles repeats — dedup on the id
     # pair (sizes are functionally dependent, kept as grouping keys).
     # Round 9 (§3 "reduce the big side before shuffling it"): the
-    # positional filter drops pairs whose best overlap bound max_w ub_w
-    # cannot reach the J >= t requirement n_inter >= t/(1+t)·(sa+sb)
-    # BEFORE the two wide array-fetch joins and the per-pair
-    # array_intersect — verification volume was the dominant cost
+    # positional filter drops pairs whose tightest overlap bound
+    # min_w ub_w cannot reach the J >= t requirement
+    # n_inter >= t/(1+t)·(sa+sb) BEFORE the two wide array-fetch joins
+    # and the per-pair array_intersect — verification volume was the
+    # dominant cost
     # (310k candidates at sf0.1, most hopeless). The prune is
     # output-safe: ub_w is a valid upper bound on n_inter for every
-    # shared prefix shingle (proof in the combos comment), and the
+    # shared prefix shingle (proof in the combos comment), so their
+    # minimum is the tightest bound the pair's rows give, and the
     # comparison carries a 1e-6 slack so float rounding can only KEEP
     # a borderline pair (exact verification decides it), never drop.
     cand = (
         posts.select(F.explode(pruned).alias("pr"))
         .groupBy("pr.id_a", "pr.id_b", "pr.size_a", "pr.size_b")
-        .agg(F.max("pr.ub").alias("__ub"))
+        .agg(F.min("pr.ub").alias("__ub"))
         .filter(
             (1.0 + threshold) * F.col("__ub")
             >= threshold * (F.col("size_a") + F.col("size_b")) - 1e-6
@@ -685,26 +687,29 @@ def connected_components(
     # aggregate over the just-pinned frame replaces the former
     # join-old-vs-new + limit + count job per sweep (same sweep count,
     # strictly less work per sweep; decimal(38) sum cannot overflow).
-    # The sum form requires NUMERIC node ids (a string label has no
-    # overflow-free exact sum, and ANSI would reject the cast); for any
-    # other id type fall back to the type-generic changed-row check, so
-    # the operator's contract stays "any orderable id" (round 9,
-    # ADVICE). prev_sum is SEEDED from the initial identity labels
-    # (one 1-row agg on the just-pinned frame) so an already-converged
-    # graph — e.g. an empty edge set, which previously paid all
-    # max_iter sweeps because None never compared equal — breaks after
-    # ONE sweep instead of two (round 9, VERDICT item 4).
+    # The sum form requires INTEGER node ids — integer types and
+    # decimal(p,0) (a string label has no overflow-free exact sum, and
+    # ANSI would reject the cast; a scaled decimal ROUNDS in the
+    # decimal(38,0) cast, so a changed label can leave the sum equal
+    # and stop the loop early); for any other id type fall back to the
+    # type-generic changed-row check, so the operator's contract stays
+    # "any orderable id" (round 9, ADVICE). prev_sum is SEEDED from the
+    # initial identity labels (one 1-row agg on the just-pinned frame) so
+    # an already-converged graph — e.g. an empty edge set, which
+    # previously paid all max_iter sweeps because None never compared
+    # equal — breaks after ONE sweep instead of two (round 9, VERDICT
+    # item 4).
     label_type = dict(labels.dtypes)["label"]
-    numeric_labels = label_type in (
+    integer_labels = label_type in (
         "tinyint", "smallint", "int", "bigint"
-    ) or label_type.startswith("decimal")
+    ) or (label_type.startswith("decimal(") and label_type.endswith(",0)"))
 
     def _label_sum(frame):
         return frame.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).first()["s"]
 
-    prev_sum = _label_sum(labels) if numeric_labels else None
+    prev_sum = _label_sum(labels) if integer_labels else None
     for _ in range(max_iter):
         cand = sym.join(labels, sym["dst"] == labels["id"]).select(
             F.col("src").alias("id"), "label"
@@ -715,7 +720,7 @@ def connected_components(
             .agg(F.min("label").alias("label"))
             .transform(pin)
         )
-        if numeric_labels:
+        if integer_labels:
             cur_sum = _label_sum(new)
             converged = cur_sum == prev_sum
             prev_sum = cur_sum

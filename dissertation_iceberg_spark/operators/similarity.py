@@ -1,11 +1,20 @@
 """Similarity search over embedding columns (engine extension).
 
+- the exact cosine kernel (:func:`cosine`) and the per-query top-k
+  rank (:func:`topk_per_query`): the ONE definition of the dot/norm
+  folds and of the rank-by-qid tail, shared by every brute-force and
+  rerank arm in the registry.
 - brute-force cosine top-k: query set × corpus with JVM-side
   higher-order functions (zip_with + aggregate) — the correctness
   baseline, broadcast the (small) query side.
 - LSH-bucketed variant (scale path): random-hyperplane signs bucket
   vectors; candidates only within a bucket. Hyperplanes are a tiny
   literal array (deterministic seed), applied JVM-side.
+- IVF (scale path): a deterministic integer-quantized Lloyd build
+  (:func:`build_ivf_index_exact`) and its probe
+  (:func:`ivf_search_exact`) — the only IVF operator; it is
+  bit-reproducible across engines, so the registered ivf_ann_topk
+  carries a DuckDB oracle.
 
 Float32 inputs are cast element-wise to double BEFORE multiplication in
 both engines so the oracle's positional-sum matches bit-for-bit; final
@@ -18,18 +27,51 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
+def vec_norm(a: Column) -> Column:
+    """Euclidean norm of an array column (double-cast elements)."""
+    return F.sqrt(
+        F.aggregate(
+            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
+        )
+    )
+
+
+def cosine(
+    a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | None = None
+) -> Column:
+    """Exact cosine of two array columns, UNROUNDED: dot / (|a|·|b|)
+    over element-wise double casts, summed positionally — the op shape
+    every DuckDB oracle replays. Callers round (6 dp, or micro-units)
+    before ranking. ``norm_a``/``norm_b`` take a :func:`vec_norm`
+    computed once per row in an earlier projection, so a pair join
+    pays only the dot fold per pair (same value, bit for bit)."""
+    dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+    na = vec_norm(a) if norm_a is None else norm_a
+    nb = vec_norm(b) if norm_b is None else norm_b
+    return dot / (na * nb)
 
 
-def _norm2(a: Column) -> Column:
+def int_dot(a: Column, b: Column) -> Column:
+    """Exact BIGINT dot product of two integer array columns (the
+    quantized-vector kernel: no float op, order-free)."""
     return F.aggregate(
-        a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
     )
+
+
+def topk_per_query(df: DataFrame, k: int, *order: Column) -> DataFrame:
+    """Keep each ``qid``'s first ``k`` rows under ``order``, numbered
+    1..k in ``rnk``. The default order is the round-then-rank recipe:
+    ``cosine`` descending, ``neighbor_id`` ascending as the tiebreak."""
+    order = order or (F.desc("cosine"), F.asc("neighbor_id"))
+    w = Window.partitionBy("qid").orderBy(*order)
+    return df.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
 def cosine_topk(
@@ -47,8 +89,9 @@ def cosine_topk(
     corpus pass, fine for recall grading and small ad-hoc lookups, a
     deliberate scale-killer for bulk search (at 100 TB × 10k queries
     this query IS the bottleneck). Bulk paths: `lsh_cosine_topk`
-    (hyperplane LSH, OR-amplified) or `ivf_cosine_topk` (inverted
-    lists, probe cost ≈ n_probe/n_lists of the corpus).
+    (hyperplane LSH, OR-amplified) or `build_ivf_index_exact` +
+    `ivf_search_exact` (inverted lists, probe cost ≈ n_probe/n_lists
+    of the corpus).
 
     Round 9 (guide §1.2 "per-task work"): the per-vector norms are
     computed ONCE per row before the pair join — sqrt(norm2(·)) is an
@@ -60,29 +103,23 @@ def cosine_topk(
     q = queries.select(
         F.col(query_id_col).alias("qid"),
         F.col(vec_col).alias("qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("__nq"),
+        vec_norm(F.col(vec_col)).alias("__nq"),
     )
     c = corpus.select(
         F.col(id_col),
         F.col(vec_col),
-        F.sqrt(_norm2(F.col(vec_col))).alias("__nv"),
+        vec_norm(F.col(vec_col)).alias("__nv"),
     )
     pairs = c.alias("c").join(F.broadcast(q), F.col("qid") != F.col(id_col))
     scored = pairs.select(
         "qid",
         F.col(id_col).alias("neighbor_id"),
         F.round(
-            _dot(F.col("qvec"), F.col(vec_col))
-            / (F.col("__nq") * F.col("__nv")),
+            cosine(F.col("qvec"), F.col(vec_col), F.col("__nq"), F.col("__nv")),
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "neighbor_id", "cosine", "rnk")
-    )
+    return topk_per_query(scored, k)
 
 
 def lsh_plane_weights(tbl: int, plane: int, dim: int, seed: int = 42) -> list[int]:
@@ -156,18 +193,20 @@ def hyperplane_lsh_buckets(
 
 
 class IVFIndex:
-    """Persistable IVF index: inverted lists (corpus bucketed by nearest
-    centroid) + the tiny centroid table.
+    """Persistable IVF index from :func:`build_ivf_index_exact`:
+    inverted lists (corpus bucketed by nearest centroid) + the tiny
+    centroid table, held as integer component sums.
 
-    At 100 TB the index is built ONCE (one k-means fit + one map-side
-    assignment pass), written partitioned by ``list_id``, and every
-    subsequent query batch probes it without refitting — probe reads
-    prune to n_probe/n_lists of the corpus via partition pruning.
+    At 100 TB the index is built ONCE (two integer Lloyd passes),
+    written partitioned by ``list_id``, and every subsequent query
+    batch probes it with :func:`ivf_search_exact` without refitting —
+    probe reads prune to n_probe/n_lists of the corpus via partition
+    pruning.
     """
 
     def __init__(self, lists: DataFrame, cent_df: DataFrame, id_col: str, vec_col: str):
         self.lists = lists  # (id_col, vec_col, list_id)
-        self.cent_df = cent_df  # (list_id, centroid)
+        self.cent_df = cent_df  # (list_id, pos, s, n)
         self.id_col = id_col
         self.vec_col = vec_col
 
@@ -187,85 +226,14 @@ class IVFIndex:
         )
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_lists: int = 16,
-    seed: int = 42,
-) -> IVFIndex:
-    """Fit the k-means coarse quantizer and bucket the corpus into
-    inverted lists. Centroid assignment is a map-side transform."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    cv = corpus.withColumn("__v", array_to_vector(F.col(vec_col)))
-    km = KMeans(k=n_lists, seed=seed, featuresCol="__v", predictionCol="list_id")
-    model = km.fit(cv)
-    lists = model.transform(cv).select(id_col, vec_col, "list_id")
-    cents = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cent_df = corpus.sparkSession.createDataFrame(cents, ["list_id", "centroid"])
-    return IVFIndex(lists, cent_df, id_col, vec_col)
-
-
-def ivf_search(
-    index: IVFIndex,
-    queries: DataFrame,
-    query_id_col: str = "query_id",
-    k: int = 3,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Probe a (possibly loaded-from-disk) IVF index: each query visits
-    its ``n_probe`` nearest centroids' lists and reranks with exact
-    cosine. Recall is tuned by n_probe/n_lists."""
-    id_col, vec_col, cent_df = index.id_col, index.vec_col, index.cent_df
-    corpus_b = index.lists
-    q = queries.select(F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("qvec"),
-            F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    qc = q.crossJoin(F.broadcast(cent_df)).withColumn("dist", dist)
-    wq = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("list_id"))
-    probes = (
-        qc.withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= n_probe)
-        .select("qid", "qvec", "list_id")
-    )
-    pairs = corpus_b.join(F.broadcast(probes), "list_id").where(
-        F.col("qid") != F.col(id_col)
-    )
-    scored = pairs.select(
-        "qid",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            _dot(F.col("qvec"), F.col(vec_col))
-            / (F.sqrt(_norm2(F.col("qvec"))) * F.sqrt(_norm2(F.col(vec_col)))),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "neighbor_id", "cosine", "rnk")
-    )
-
-
-def _lloyd_assign(xe: DataFrame, cent: DataFrame) -> DataFrame:
-    """One integer-quantized Lloyd assignment pass (the
-    kmeans_cluster_stats recipe, queries/extensions.py): centroids ride
-    as un-normalized (list_id, pos, s, n) integer sums, the distance
-    numerator sum((x*n - s)^2) is an exact int, and num/n^2 is one
-    correctly-rounded double op — so the argmin (tie-broken by
-    list_id) is identical in Spark and DuckDB at any parallelism."""
+def _lloyd_dist(xe: DataFrame, cent: DataFrame) -> DataFrame:
+    """Quantized squared distance of every (``__id``, pos, x) vector to
+    every centroid (the kmeans_cluster_stats recipe,
+    queries/extensions.py): centroids ride as un-normalized
+    (list_id, pos, s, n) integer sums, the distance numerator
+    sum((x*n - s)^2) is an exact int, and num/n^2 is one
+    correctly-rounded double op — so any ranking by (dist, list_id) is
+    identical in Spark and DuckDB at any parallelism."""
     e = F.col("x") * F.col("n") - F.col("s")
     d = (
         xe.join(F.broadcast(cent), "pos")
@@ -276,8 +244,14 @@ def _lloyd_assign(xe: DataFrame, cent: DataFrame) -> DataFrame:
     dist = (F.col("num").cast("double") / (F.col("n") * F.col("n"))).alias(
         "dist"
     )
+    return d.select("__id", dist, "list_id")
+
+
+def _lloyd_assign(xe: DataFrame, cent: DataFrame) -> DataFrame:
+    """One Lloyd assignment pass: each vector's nearest centroid,
+    tie-broken by list_id."""
     return (
-        d.select("__id", dist, "list_id")
+        _lloyd_dist(xe, cent)
         .groupBy("__id")
         .agg(F.min(F.struct("dist", "list_id")).alias("m"))
         .select("__id", F.col("m.list_id").alias("list_id"))
@@ -294,9 +268,9 @@ def build_ivf_index_exact(
     """Deterministic IVF build: 2 integer-quantized Lloyd iterations
     seeded from the first ``n_lists`` ids — bit-reproducible on any
     cluster size AND replayable in plain SQL, which is what lets the
-    registered ivf_ann_topk query carry a DuckDB oracle (the MLlib
-    build in :func:`build_ivf_index` stays for generic use; its
-    float k-means|| init is not cross-engine reproducible).
+    registered ivf_ann_topk query carry a DuckDB oracle. This is the
+    only IVF build: a float k-means (MLlib's k-means|| init) is not
+    cross-engine reproducible.
 
     The returned index stores centroids as un-normalized integer
     (list_id, pos, s, n) component sums — never floats — so a saved
@@ -355,7 +329,7 @@ def ivf_search_exact(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qvec")
     )
     qxe = q.select(
-        "qid",
+        F.col("qid").alias("__id"),
         F.posexplode(
             F.transform(
                 F.col("qvec"),
@@ -363,62 +337,18 @@ def ivf_search_exact(
             )
         ).alias("pos", "x"),
     )
-    e = F.col("x") * F.col("n") - F.col("s")
-    d = (
-        qxe.join(F.broadcast(index.cent_df), "pos")
-        .select("qid", "list_id", "n", e.alias("e"))
-        .groupBy("qid", "list_id", "n")
-        .agg(F.sum(F.col("e") * F.col("e")).alias("num"))
-    )
-    dist = (F.col("num").cast("double") / (F.col("n") * F.col("n"))).alias(
-        "dist"
-    )
-    wq = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("list_id"))
-    probes = (
-        d.select("qid", dist, "list_id")
-        .withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= n_probe)
-        .select("qid", "list_id")
-    )
-    probes = probes.join(q, "qid")
+    d = _lloyd_dist(qxe, index.cent_df).withColumnRenamed("__id", "qid")
+    probes = topk_per_query(d, n_probe, F.asc("dist"), F.asc("list_id"))
+    probes = probes.select("qid", "list_id").join(q, "qid")
     pairs = index.lists.join(F.broadcast(probes), "list_id").where(
         F.col("qid") != F.col(id_col)
     )
     scored = pairs.select(
         "qid",
         F.col(id_col).alias("neighbor_id"),
-        F.round(
-            _dot(F.col("qvec"), F.col(vec_col))
-            / (F.sqrt(_norm2(F.col("qvec"))) * F.sqrt(_norm2(F.col(vec_col)))),
-            6,
-        ).alias("cosine"),
+        F.round(cosine(F.col("qvec"), F.col(vec_col)), 6).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "neighbor_id", "cosine", "rnk")
-    )
-
-
-def ivf_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    k: int = 3,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF ANN = build_ivf_index + ivf_search in one shot (the
-    registry's one-call form; persistent deployments build once via
-    :class:`IVFIndex` and search many times)."""
-    index = build_ivf_index(
-        corpus, vec_col=vec_col, id_col=id_col, n_lists=n_lists, seed=seed
-    )
-    return ivf_search(index, queries, query_id_col=query_id_col, k=k, n_probe=n_probe)
+    return topk_per_query(scored, k)
 
 
 def lsh_cosine_topk(
@@ -468,12 +398,12 @@ def lsh_cosine_topk(
     qv = queries.select(
         F.col(query_id_col).alias("qid"),
         F.col(vec_col).alias("qvec"),
-        F.sqrt(_norm2(F.col(vec_col))).alias("__nq"),
+        vec_norm(F.col(vec_col)).alias("__nq"),
     )
     cv = corpus.select(
         F.col(id_col),
         F.col(vec_col),
-        F.sqrt(_norm2(F.col(vec_col))).alias("__nv"),
+        vec_norm(F.col(vec_col)).alias("__nv"),
     )
     scored = (
         cand.join(cv, id_col)
@@ -482,15 +412,11 @@ def lsh_cosine_topk(
             "qid",
             F.col(id_col).alias("neighbor_id"),
             F.round(
-                _dot(F.col("qvec"), F.col(vec_col))
-                / (F.col("__nq") * F.col("__nv")),
+                cosine(
+                    F.col("qvec"), F.col(vec_col), F.col("__nq"), F.col("__nv")
+                ),
                 6,
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "neighbor_id", "cosine", "rnk")
-    )
+    return topk_per_query(scored, k)

@@ -20,22 +20,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table, spread
+from dissertation_iceberg_spark.functions.exact import R6_SQL, r6
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
 
-_R6_SQL = "CAST(round(({x}) * 1e6) AS BIGINT) / 1e6"
 
 # Daily-mean quantization grain (1e-4 of a value unit).  Deviations
 # D_t = n*x_q - sum(x_q) stay ~ n * 2e5, so sum(D^2) fits BIGINT for
 # any history up to ~1e4 years of days — 1e6 grain would not.
 _Q = 10_000
-
-
-def _r6(col):
-    return F.round(col * 1e6).cast("long") / 1e6
 
 
 # Shared day frame: day, exact quantized daily mean of `value`.
@@ -88,9 +84,9 @@ k AS (
   SELECT day, xq, n, t, u_t, k_stat,
          min(CASE WHEN abs(u_t) = k_stat THEN day END) OVER () AS cp_day
   FROM k0)
-SELECT day, {_R6_SQL.format(x=f"CAST(xq AS DOUBLE) / {_Q}")} AS daily_mean,
+SELECT day, {R6_SQL.format(x=f"CAST(xq AS DOUBLE) / {_Q}")} AS daily_mean,
        u_t, CAST(k_stat AS BIGINT) AS k_stat,
-       {_R6_SQL.format(x="2 * exp(-6.0 * k_stat * k_stat / (CAST(n AS DOUBLE) * n * n + CAST(n AS DOUBLE) * n))")} AS p_value,
+       {R6_SQL.format(x="2 * exp(-6.0 * k_stat * k_stat / (CAST(n AS DOUBLE) * n * n + CAST(n AS DOUBLE) * n))")} AS p_value,
        CAST(day = cp_day AS BIGINT) AS is_changepoint
 FROM k
 """
@@ -158,10 +154,10 @@ def pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     kd = F.col("k_stat").cast("double")
     return k.select(
         "day",
-        _r6(F.col("xq").cast("double") / _Q).alias("daily_mean"),
+        r6(F.col("xq").cast("double") / _Q).alias("daily_mean"),
         "u_t",
         F.col("k_stat").cast("long").alias("k_stat"),
-        _r6(2 * F.exp(-6.0 * kd * kd / (nd * nd * nd + nd * nd))).alias(
+        r6(2 * F.exp(-6.0 * kd * kd / (nd * nd * nd + nd * nd))).alias(
             "p_value"
         ),
         (F.col("day") == F.col("cp_day")).cast("long").alias("is_changepoint"),
@@ -198,10 +194,10 @@ k AS (
   SELECT day, xq, n, bridge, k_stat,
          min(CASE WHEN abs(bridge) = k_stat THEN day END) OVER () AS cp_day
   FROM k0)
-SELECT day, {_R6_SQL.format(x=f"CAST(xq AS DOUBLE) / {_Q}")} AS daily_mean,
-       {_R6_SQL.format(x="bridge")} AS bridge,
-       {_R6_SQL.format(x="k_stat")} AS k_stat,
-       {_R6_SQL.format(x="2 * exp(-2.0 * k_stat * k_stat)")} AS p_value,
+SELECT day, {R6_SQL.format(x=f"CAST(xq AS DOUBLE) / {_Q}")} AS daily_mean,
+       {R6_SQL.format(x="bridge")} AS bridge,
+       {R6_SQL.format(x="k_stat")} AS k_stat,
+       {R6_SQL.format(x="2 * exp(-2.0 * k_stat * k_stat)")} AS p_value,
        CAST(day = cp_day AS BIGINT) AS is_changepoint
 FROM k
 """
@@ -270,10 +266,10 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return k.select(
         "day",
-        _r6(F.col("xq").cast("double") / _Q).alias("daily_mean"),
-        _r6(F.col("bridge")).alias("bridge"),
-        _r6(F.col("k_stat")).alias("k_stat"),
-        _r6(2 * F.exp(-2.0 * F.col("k_stat") * F.col("k_stat"))).alias(
+        r6(F.col("xq").cast("double") / _Q).alias("daily_mean"),
+        r6(F.col("bridge")).alias("bridge"),
+        r6(F.col("k_stat")).alias("k_stat"),
+        r6(2 * F.exp(-2.0 * F.col("k_stat") * F.col("k_stat"))).alias(
             "p_value"
         ),
         (F.col("day") == F.col("cp_day")).cast("long").alias("is_changepoint"),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table, spread
+from dissertation_iceberg_spark.functions.exact import R6_SQL, r6
 from dissertation_iceberg_spark.functions.scalars import (
     bcast_params,
     with_scalars,
@@ -37,14 +38,6 @@ _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
 # overflow the Sxy sum at ~1e5 terms; 1e5 trades 10x headroom for a
 # 1e-5 quantization the 6-dp display rounding cannot see.
 _LOG_SCALE = 100_000
-
-_R6_SQL = "CAST(round(({x}) * 1e6) AS BIGINT) / 1e6"
-
-
-def _r6(col):
-    """Portable 6-dp rounding (round-to-integer of x*1e6 is bit-stable
-    across engines; round-to-scale is not — see microstructure._r6)."""
-    return F.round(col * 1e6).cast("long") / 1e6
 
 
 def _qlog(col):
@@ -82,8 +75,8 @@ gram AS (
          CAST(sum(xq * yq) AS BIGINT) AS sxy
   FROM ranked GROUP BY 1)
 SELECT lang, n_terms,
-  {_R6_SQL.format(x=_SLOPE_SQL)} AS zipf_slope,
-  {_R6_SQL.format(x="(CAST(sy AS DOUBLE) - " + _SLOPE_SQL + " * sx) / n_terms / " + str(_LOG_SCALE))} AS zipf_intercept
+  {R6_SQL.format(x=_SLOPE_SQL)} AS zipf_slope,
+  {R6_SQL.format(x="(CAST(sy AS DOUBLE) - " + _SLOPE_SQL + " * sx) / n_terms / " + str(_LOG_SCALE))} AS zipf_intercept
 FROM gram
 ORDER BY lang
 """
@@ -144,8 +137,8 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gram.select(
         "lang",
         "n_terms",
-        _r6(slope).alias("zipf_slope"),
-        _r6(intercept).alias("zipf_intercept"),
+        r6(slope).alias("zipf_slope"),
+        r6(intercept).alias("zipf_intercept"),
     )
 
 
@@ -243,7 +236,7 @@ led AS (
   FROM coc)
 SELECT CAST(r AS BIGINT) AS r, n_r,
   CASE WHEN r_next = r + 1
-       THEN {_R6_SQL.format(x="(r + 1) * CAST(n_next AS DOUBLE) / n_r")}
+       THEN {R6_SQL.format(x="(r + 1) * CAST(n_next AS DOUBLE) / n_r")}
        ELSE NULL END AS r_star,
   CASE WHEN r_next = r + 1
        THEN CAST(round((r + 1) * CAST(n_next AS DOUBLE) / n_r
@@ -293,7 +286,7 @@ def good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return led.transform(with_scalars, tot).select(
         F.col("r").cast("long").alias("r"),
         "n_r",
-        F.when(adjacent, _r6(r_star)).alias("r_star"),
+        F.when(adjacent, r6(r_star)).alias("r_star"),
         F.when(
             adjacent,
             F.round(r_star / F.col("n_tokens") * 1e9).cast("long"),

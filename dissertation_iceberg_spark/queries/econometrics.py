@@ -35,12 +35,10 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table, lob_events, spread
+from dissertation_iceberg_spark.functions.exact import CENTS_SQL, R6_SQL, r6
 from dissertation_iceberg_spark.queries.microstructure import (
-    _CENTS,
     _LN_MICRO_SQL,
-    _R6_SQL,
     _ln_micro,
-    _r6,
 )
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
@@ -55,9 +53,9 @@ _HOUR = 3600
 # for ADF and ARCH-LM. Bars with a non-positive close drop (no ln).
 _CLOSE_SQL = f"""
 SELECT user_id, {bin_end_sql("ts", _HOUR)} AS bin,
-       {_LN_MICRO_SQL.format(x="max_by(" + _CENTS + ", event_id)")} AS y
+       {_LN_MICRO_SQL.format(x="max_by(" + CENTS_SQL + ", event_id)")} AS y
 FROM ({EVENTS_LOB_SQL}) e
-WHERE {_CENTS} > 0
+WHERE {CENTS_SQL} > 0
 GROUP BY 1, 2
 """
 
@@ -118,8 +116,8 @@ f AS (
   WHERE n > 3 AND suu > 0 AND svv > 0
     AND (suu * svv - suv * suv) <> 0)
 SELECT user_id, n,
-       {_R6_SQL.format(x="rho")} AS rho,
-       {_R6_SQL.format(x="rho / sqrt(rss / (n - 3) * svv / det)")} AS adf_t
+       {R6_SQL.format(x="rho")} AS rho,
+       {R6_SQL.format(x="rho / sqrt(rss / (n - 3) * svv / det)")} AS adf_t
 FROM f WHERE rss > 0
 """
 
@@ -191,8 +189,8 @@ def adf_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             "n",
-            _r6(rho).alias("rho"),
-            _r6(
+            r6(rho).alias("rho"),
+            r6(
                 rho / F.sqrt(rss / (nd - 3) * svv / det)
             ).alias("adf_t"),
         )
@@ -232,8 +230,8 @@ c AS (
          CAST(s_uu AS DOUBLE) - CAST(su AS DOUBLE) * su / n AS suu
   FROM s WHERE n > 2)
 SELECT user_id, n,
-       {_R6_SQL.format(x="sxu * sxu / (sxx * suu)")} AS r2,
-       {_R6_SQL.format(x="n * sxu * sxu / (sxx * suu)")} AS lm_stat
+       {R6_SQL.format(x="sxu * sxu / (sxx * suu)")} AS r2,
+       {R6_SQL.format(x="n * sxu * sxu / (sxx * suu)")} AS lm_stat
 FROM c WHERE sxx > 0 AND suu > 0
 """
 
@@ -287,8 +285,8 @@ def arch_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             "n",
-            _r6(r2).alias("r2"),
-            _r6(nd * r2).alias("lm_stat"),
+            r6(r2).alias("r2"),
+            r6(nd * r2).alias("lm_stat"),
         )
     )
 
@@ -306,10 +304,10 @@ def _nw_series_sql() -> str:
     return f"""
 SELECT {bin_end_sql("ts", _HOUR)} AS bin,
        CAST(round({_oi_cents_sql("TRUE")} * 1e6) AS BIGINT) AS oi,
-       {_LN_MICRO_SQL.format(x="max_by(" + _CENTS + ", event_id)")}
-         - {_LN_MICRO_SQL.format(x="min_by(" + _CENTS + ", event_id)")} AS r
+       {_LN_MICRO_SQL.format(x="max_by(" + CENTS_SQL + ", event_id)")}
+         - {_LN_MICRO_SQL.format(x="min_by(" + CENTS_SQL + ", event_id)")} AS r
 FROM ({EVENTS_LOB_SQL}) e
-WHERE {_CENTS} > 0
+WHERE {CENTS_SQL} > 0
 GROUP BY 1
 """
 
@@ -369,10 +367,10 @@ f AS (
          (CAST(g0 AS DOUBLE) + 2 * ({wsum})) / 1e12 AS s_hac
   FROM co CROSS JOIN g)
 SELECT n,
-  {_R6_SQL.format(x="b")} AS beta,
-  {_R6_SQL.format(x="sqrt(rss / (n - 2) / sxxn)")} AS se_ols,
-  {_R6_SQL.format(x="sqrt(s_hac) / sxxn")} AS se_nw,
-  {_R6_SQL.format(x="b / (sqrt(s_hac) / sxxn)")} AS t_nw
+  {R6_SQL.format(x="b")} AS beta,
+  {R6_SQL.format(x="sqrt(rss / (n - 2) / sxxn)")} AS se_ols,
+  {R6_SQL.format(x="sqrt(s_hac) / sxxn")} AS se_nw,
+  {R6_SQL.format(x="b / (sqrt(s_hac) / sxxn)")} AS t_nw
 FROM f WHERE rss > 0 AND s_hac > 0
 """
 
@@ -484,12 +482,12 @@ def newey_west_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.filter((F.col("rss") > 0) & (F.col("s_hac") > 0)).select(
         "n",
-        _r6(F.col("bb")).alias("beta"),
-        _r6(F.sqrt(F.col("rss") / (F.col("n").cast("double") - 2) / F.col("sxxn"))).alias(
+        r6(F.col("bb")).alias("beta"),
+        r6(F.sqrt(F.col("rss") / (F.col("n").cast("double") - 2) / F.col("sxxn"))).alias(
             "se_ols"
         ),
-        _r6(F.sqrt(F.col("s_hac")) / F.col("sxxn")).alias("se_nw"),
-        _r6(F.col("bb") / (F.sqrt(F.col("s_hac")) / F.col("sxxn"))).alias("t_nw"),
+        r6(F.sqrt(F.col("s_hac")) / F.col("sxxn")).alias("se_nw"),
+        r6(F.col("bb") / (F.sqrt(F.col("s_hac")) / F.col("sxxn"))).alias("t_nw"),
     )
 
 
@@ -515,16 +513,16 @@ m AS (
 x AS (
   SELECT n, sum_c, ds_sq, (SELECT max_dd FROM dd) AS max_dd FROM m)
 SELECT CAST(n AS BIGINT) AS n_days,
-  {_R6_SQL.format(x="CAST(sum_c AS DOUBLE) / n / 100")} AS mean_daily,
-  {_R6_SQL.format(x="sqrt(CAST(ds_sq AS DOUBLE) / n)")} AS downside_dev,
+  {R6_SQL.format(x="CAST(sum_c AS DOUBLE) / n / 100")} AS mean_daily,
+  {R6_SQL.format(x="sqrt(CAST(ds_sq AS DOUBLE) / n)")} AS downside_dev,
   CASE WHEN ds_sq > 0 THEN
-    {_R6_SQL.format(
+    {R6_SQL.format(
         x="CAST(sum_c AS DOUBLE) / n / 100"
           " / sqrt(CAST(ds_sq AS DOUBLE) / n) * sqrt(252)")}
   END AS sortino_ann,
-  {_R6_SQL.format(x="CAST(max_dd AS DOUBLE) / 100")} AS max_drawdown,
+  {R6_SQL.format(x="CAST(max_dd AS DOUBLE) / 100")} AS max_drawdown,
   CASE WHEN max_dd > 0 THEN
-    {_R6_SQL.format(
+    {R6_SQL.format(
         x="CAST(sum_c AS DOUBLE) / n / 100 * 252"
           " / (CAST(max_dd AS DOUBLE) / 100)")}
   END AS calmar
@@ -588,13 +586,13 @@ def sortino_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
     mddd = F.col("max_dd").cast("double") / 100
     return x.select(
         F.col("n").cast("long").alias("n_days"),
-        _r6(mean_d).alias("mean_daily"),
-        _r6(ddev).alias("downside_dev"),
-        F.when(F.col("ds_sq") > 0, _r6(mean_d / ddev * F.sqrt(F.lit(252.0)))).alias(
+        r6(mean_d).alias("mean_daily"),
+        r6(ddev).alias("downside_dev"),
+        F.when(F.col("ds_sq") > 0, r6(mean_d / ddev * F.sqrt(F.lit(252.0)))).alias(
             "sortino_ann"
         ),
-        _r6(mddd).alias("max_drawdown"),
-        F.when(F.col("max_dd") > 0, _r6(mean_d * 252 / mddd)).alias("calmar"),
+        r6(mddd).alias("max_drawdown"),
+        F.when(F.col("max_dd") > 0, r6(mean_d * 252 / mddd)).alias("calmar"),
     )
 
 
@@ -866,9 +864,9 @@ def ledoit_wolf_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type_a",
         "type_b",
         F.col("t").cast("long").alias("n_days"),
-        _r6(s_dol).alias("cov_sample"),
-        _r6(shrink).alias("shrinkage"),
-        _r6(shrink * mu_diag + (1 - shrink) * s_dol).alias("cov_shrunk"),
+        r6(s_dol).alias("cov_sample"),
+        r6(shrink).alias("shrinkage"),
+        r6(shrink * mu_diag + (1 - shrink) * s_dol).alias("cov_shrunk"),
     )
 
 
@@ -1031,10 +1029,10 @@ df AS (
       AS s2, suu
   FROM s)
 SELECT o.n AS n_days,
-  {_R6_SQL.format(x="o.beta")} AS hedge_beta,
-  {_R6_SQL.format(x="o.alpha / 100.0")} AS alpha_dollars,
-  {_R6_SQL.format(x="d.rho")} AS rho,
-  {_R6_SQL.format(x="d.rho / sqrt(d.s2 / d.suu)")} AS eg_t_stat,
+  {R6_SQL.format(x="o.beta")} AS hedge_beta,
+  {R6_SQL.format(x="o.alpha / 100.0")} AS alpha_dollars,
+  {R6_SQL.format(x="d.rho")} AS rho,
+  {R6_SQL.format(x="d.rho / sqrt(d.s2 / d.suu)")} AS eg_t_stat,
   CAST('-3.37e0' AS DOUBLE) AS crit_5pct
 FROM ols o CROSS JOIN df d
 """
@@ -1132,10 +1130,10 @@ def engle_granger_coint(spark: SparkSession, sf_dir: str) -> DataFrame:
     se = s2 / F.col("suu")
     return ols.transform(with_scalars, s).select(
         F.col("n").alias("n_days"),
-        _r6(F.col("beta")).alias("hedge_beta"),
-        _r6(F.col("alpha") / 100.0).alias("alpha_dollars"),
-        _r6(rho).alias("rho"),
-        _r6(F.when(se != 0, rho / F.sqrt(se))).alias("eg_t_stat"),
+        r6(F.col("beta")).alias("hedge_beta"),
+        r6(F.col("alpha") / 100.0).alias("alpha_dollars"),
+        r6(rho).alias("rho"),
+        r6(F.when(se != 0, rho / F.sqrt(se))).alias("eg_t_stat"),
         F.expr("CAST('-3.37e0' AS DOUBLE)").alias("crit_5pct"),
     )
 
@@ -1172,10 +1170,10 @@ c AS (
     CAST(n AS DOUBLE) * szz - CAST(sz AS DOUBLE) * sz AS czz
   FROM s)
 SELECT n,
-  {_R6_SQL.format(x="cxy / cxx / 100.0")} AS beta_ols,
-  {_R6_SQL.format(x="czy / czx / 100.0")} AS beta_iv,
-  {_R6_SQL.format(x="(czy / czx - cxy / cxx) / 100.0")} AS iv_minus_ols,
-  {_R6_SQL.format(
+  {R6_SQL.format(x="cxy / cxx / 100.0")} AS beta_ols,
+  {R6_SQL.format(x="czy / czx / 100.0")} AS beta_iv,
+  {R6_SQL.format(x="(czy / czx - cxy / cxx) / 100.0")} AS iv_minus_ols,
+  {R6_SQL.format(
       x="(n - 2) * (czx * czx / (czz * cxx))"
         " / (1.0 - czx * czx / (czz * cxx))")} AS first_stage_f
 FROM c
@@ -1237,10 +1235,10 @@ def iv_wald_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     r2 = F.when(czz * cxx != 0, czx * czx / (czz * cxx))
     return s.select(
         F.col("n").cast("long").alias("n"),
-        _r6(b_ols / 100.0).alias("beta_ols"),
-        _r6(b_iv / 100.0).alias("beta_iv"),
-        _r6((b_iv - b_ols) / 100.0).alias("iv_minus_ols"),
-        _r6(
+        r6(b_ols / 100.0).alias("beta_ols"),
+        r6(b_iv / 100.0).alias("beta_iv"),
+        r6((b_iv - b_ols) / 100.0).alias("iv_minus_ols"),
+        r6(
             F.when(r2 != 1.0, (F.col("n") - 2) * r2 / (1.0 - r2))
         ).alias("first_stage_f"),
     )

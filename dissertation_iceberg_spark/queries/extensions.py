@@ -17,6 +17,11 @@ from dissertation_iceberg_spark.functions.hashing import (
     seeded_hash60_sql,
 )
 from dissertation_iceberg_spark.io import load_table, lob_events, spread
+from dissertation_iceberg_spark.operators.similarity import (
+    cosine,
+    int_dot,
+    topk_per_query,
+)
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     bcast_params,
@@ -55,18 +60,12 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs above a threshold — the exact
     baseline for embedding dedup (the LSH-bucketed variant in
     operators/similarity.py is the scale path)."""
-    from dissertation_iceberg_spark.operators.similarity import _dot, _norm2
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     a = emb.filter(F.col("vec_id") % PAIR_MOD == 0).select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("emb_a")
     )
     pairs = emb.join(F.broadcast(a), F.col("id_a") < F.col("vec_id"))
-    cos = F.round(
-        _dot(F.col("emb_a"), F.col("embedding"))
-        / (F.sqrt(_norm2(F.col("emb_a"))) * F.sqrt(_norm2(F.col("embedding")))),
-        6,
-    )
+    cos = F.round(cosine(F.col("emb_a"), F.col("embedding")), 6)
     return (
         pairs.select("id_a", F.col("vec_id").alias("id_b"), cos.alias("cosine"))
         .filter(F.col("cosine") >= NEAR_DUP_THRESHOLD)
@@ -633,9 +632,9 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe — build_ivf_index_exact), quantized-integer probe ranking,
     exact-cosine rerank inside the n_probe lists. The oracle replays
     build + probe + rerank in SQL, moving this off the rows-only list
-    (round-3 verdict item 3); the MLlib-built variant
-    (build_ivf_index) remains the generic operator, recall- and
-    persistence-tested in tests/test_clustering.py."""
+    (round-3 verdict item 3). This exact build is the only IVF
+    operator; its recall and save/load replay are tested in
+    tests/test_ml_streaming.py."""
     from dissertation_iceberg_spark.operators.similarity import (
         build_ivf_index_exact,
         ivf_search_exact,
@@ -1061,11 +1060,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # route every pin through an eager reliable checkpoint() on the
     # cluster FS — hash-equal-pinned by
     # test_pin_reliable_mode_hash_equal, overhead in SCALE.md.
-    nn = F.aggregate(
-        F.zip_with("qv", "qv", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    nn = int_dot(F.col("qv"), F.col("qv"))
     m = a2.join(base.select("vec_id", "qv"), "vec_id").select(
         "cluster", "vec_id", "qv", nn.alias("nn")
     ).transform(pin)
@@ -1082,11 +1077,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qv").alias("qb"),
         F.col("nn").alias("nb"),
     )
-    dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    dot = int_dot(F.col("qa"), F.col("qb"))
     cos_micro = F.round(
         dot.cast("double")
         / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
@@ -1603,28 +1594,13 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(arr.alias("gv"))
     )
     n = emb.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     return (
         la.join(n, "label")
         .transform(with_scalars, g)
         .select(
             "label",
             "n_vecs",
-            F.round(
-                dot(F.col("v"), F.col("gv"))
-                / (
-                    F.sqrt(dot(F.col("v"), F.col("v")))
-                    * F.sqrt(dot(F.col("gv"), F.col("gv")))
-                ),
-                6,
-            ).alias("cosine_to_corpus"),
+            F.round(cosine(F.col("v"), F.col("gv")), 6).alias("cosine_to_corpus"),
         )
     )
 
@@ -1794,8 +1770,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates (swap the label key for an IVF cell id and this same
     plan is IVF-blocked mining). Cosines round to 6 dp before ranking
     with id tiebreaks — the cosine_topk determinism recipe."""
-    from dissertation_iceberg_spark.operators.similarity import _dot, _norm2
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") % _HN_QUERY_MOD == 0).select(
         F.col("vec_id").alias("qid"),
@@ -1817,31 +1791,16 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             "cid",
             "c_label",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (
-                    F.sqrt(_norm2(F.col("qvec")))
-                    * F.sqrt(_norm2(F.col("cvec")))
-                ),
-                6,
-            ).alias("cosine"),
+            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("cid").asc()
-    )
-    pos = (
-        cos.filter(F.col("q_label") == F.col("c_label"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("qid", F.col("cid").alias("pos_id"), F.col("cosine").alias("pos_cos"))
-    )
-    neg = (
-        cos.filter(F.col("q_label") != F.col("c_label"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("qid", F.col("cid").alias("neg_id"), F.col("cosine").alias("neg_cos"))
-    )
+    by = (F.col("cosine").desc(), F.col("cid").asc())
+    pos = topk_per_query(
+        cos.filter(F.col("q_label") == F.col("c_label")), 1, *by
+    ).select("qid", F.col("cid").alias("pos_id"), F.col("cosine").alias("pos_cos"))
+    neg = topk_per_query(
+        cos.filter(F.col("q_label") != F.col("c_label")), 1, *by
+    ).select("qid", F.col("cid").alias("neg_id"), F.col("cosine").alias("neg_cos"))
     return pos.join(neg, "qid").select(
         "qid",
         "pos_id",

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.functions.scalars import bcast_params, with_scalars
+from dissertation_iceberg_spark.functions.exact import det4
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
@@ -142,30 +143,11 @@ def _sym(j: int, k: int) -> str:
     return f"A{min(j, k)}{max(j, k)}"
 
 
-def _det3(m: list[list[str]]) -> str:
-    return (
-        f"({m[0][0]} * ({m[1][1]} * {m[2][2]} - {m[1][2]} * {m[2][1]})"
-        f" - {m[0][1]} * ({m[1][0]} * {m[2][2]} - {m[1][2]} * {m[2][0]})"
-        f" + {m[0][2]} * ({m[1][0]} * {m[2][1]} - {m[1][1]} * {m[2][0]}))"
-    )
-
-
-def _det4(m: list[list[str]]) -> str:
-    minors = [
-        _det3([[m[r][c] for c in range(4) if c != j] for r in range(1, 4)])
-        for j in range(4)
-    ]
-    return (
-        f"({m[0][0]} * {minors[0]} - {m[0][1]} * {minors[1]}"
-        f" + {m[0][2]} * {minors[2]} - {m[0][3]} * {minors[3]})"
-    )
-
-
 _H_MAT = [[_sym(j, k) for k in range(4)] for j in range(4)]
-_DET = _det4(_H_MAT)
+_DET = det4(_H_MAT)
 # Cramer: delta_j = det(H with col j := G) / det(H)
 _DELTA = [
-    _det4([[(f"G{r}" if c == j else _H_MAT[r][c]) for c in range(4)] for r in range(4)])
+    det4([[(f"G{r}" if c == j else _H_MAT[r][c]) for c in range(4)] for r in range(4)])
     + f" / {_DET}"
     for j in range(4)
 ]

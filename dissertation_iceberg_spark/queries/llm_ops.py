@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.io import load_table, spread
 from dissertation_iceberg_spark.operators import dedup as dd
 from dissertation_iceberg_spark.operators import text as tx
-from dissertation_iceberg_spark.operators.similarity import cosine_topk
+from dissertation_iceberg_spark.operators.similarity import cosine, cosine_topk
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     bcast_params,
@@ -2459,8 +2459,6 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-rounded to BIGINT BEFORE summing/ranking (round-then-rank),
     item id breaks all rank ties, and RRF contributions are
     nano-rounded integers so the fused sum is exact."""
-    from dissertation_iceberg_spark.operators.similarity import _dot, _norm2
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     t = tx.tokens(F.col("text"))
     tf = (
@@ -2515,14 +2513,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(with_scalars, q)
         .select(
             F.col("vec_id").alias("item_id"),
-            F.round(
-                _dot(F.col("qvec"), F.col("embedding"))
-                / (
-                    F.sqrt(_norm2(F.col("qvec")))
-                    * F.sqrt(_norm2(F.col("embedding")))
-                )
-                * 1e6
-            )
+            F.round(cosine(F.col("qvec"), F.col("embedding")) * 1e6)
             .cast("long")
             .alias("score_micro"),
         )

@@ -25,18 +25,11 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import CENTS_SQL, R6_SQL, lob_cents, r6
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
-from dissertation_iceberg_spark.io import load_table, lob_events
+from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
-
-_CENTS = "CAST(round(value * 100) AS BIGINT)"
-
-
-def _lob_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
 
 
 def _ln_micro(col):
@@ -54,27 +47,12 @@ _LN_MICRO_SQL = (
 )
 
 
-def _r6(col):
-    """6-dp display rounding, cross-engine-stable form.
-
-    ``F.round(x, 6)`` diverges between engines near decimal midpoints
-    (Spark rounds the exact binary expansion via BigDecimal; DuckDB
-    multiplies by 1e6 and nearbyints) — observed 1-in-1e3 rows at
-    sf0.1. Round-to-INTEGER of the identical double is bit-stable, so
-    the portable form is round(x*1e6)::BIGINT / 1e6 on BOTH sides
-    (mirrored by :data:`_R6_SQL`)."""
-    return F.round(col * 1e6).cast("long") / 1e6
-
-
-_R6_SQL = "CAST(round(({x}) * 1e6) AS BIGINT) / 1e6"
-
-
 # --------------------------------------------------------------------------
 # Roll (1984) implied effective spread: 2*sqrt(-cov(dp_t, dp_{t-1}))
 # --------------------------------------------------------------------------
 
 _ROLL_ORACLE = f"""
-WITH lob AS (SELECT user_id, event_id, {_CENTS} AS cents
+WITH lob AS (SELECT user_id, event_id, {CENTS_SQL} AS cents
              FROM ({EVENTS_LOB_SQL}) e),
 d0 AS (
   SELECT user_id, event_id,
@@ -96,9 +74,9 @@ c AS (
            / (CAST(n AS DOUBLE) * n) AS cov
   FROM s)
 SELECT user_id, n,
-  {_R6_SQL.format(x="cov / 1e4")} AS dp_autocov,
+  {R6_SQL.format(x="cov / 1e4")} AS dp_autocov,
   CASE WHEN cov < 0
-       THEN {_R6_SQL.format(x="2 * sqrt(-cov) / 100")}
+       THEN {R6_SQL.format(x="2 * sqrt(-cov) / 100")}
   END AS roll_spread
 FROM c
 """
@@ -120,7 +98,7 @@ def roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-ticker LOBSTER deployment shuffles by exactly once), then a
     map-side-combinable per-key aggregate. Integer headroom: |Δp| ≤
     ~1e6 cents, products ≤ 1e12, safe to ~1e6 events/key/day."""
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("event_id")
     d = lob.select(
         "user_id",
@@ -143,8 +121,8 @@ def roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "user_id",
         "n",
-        _r6(cov / 1e4).alias("dp_autocov"),
-        F.when(cov < 0, _r6(2 * F.sqrt(-cov) / 100)).alias("roll_spread"),
+        r6(cov / 1e4).alias("dp_autocov"),
+        F.when(cov < 0, r6(2 * F.sqrt(-cov) / 100)).alias("roll_spread"),
     )
 
 
@@ -153,7 +131,7 @@ def roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _AMIHUD_ORACLE = f"""
-WITH lob AS (SELECT user_id, event_id, ts, {_CENTS} AS cents
+WITH lob AS (SELECT user_id, event_id, ts, {CENTS_SQL} AS cents
              FROM ({EVENTS_LOB_SQL}) e),
 d AS (
   SELECT user_id, date_trunc('day', ts) AS day,
@@ -172,7 +150,7 @@ r AS (
   WHERE first_cents > 0 AND last_cents > 0 AND dv_cents2 > 0)
 SELECT user_id, count(*) AS n_days,
        CAST(sum(illiq_micro) AS BIGINT) AS illiq_micro_sum,
-       {_R6_SQL.format(x="CAST(sum(illiq_micro) AS DOUBLE) / count(*) / 1e6")}
+       {R6_SQL.format(x="CAST(sum(illiq_micro) AS DOUBLE) / count(*) / 1e6")}
          AS amihud_illiq
 FROM r GROUP BY 1
 """
@@ -195,7 +173,7 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (key, day) map-side-combinable aggregate — the
     natural partition-pruned unit of a per-ticker-per-day LOBSTER
     layout — then an O(days) per-key rollup. No windows, no joins."""
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     d = lob.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
@@ -221,7 +199,7 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("illiq_micro").cast("long").alias("illiq_micro_sum"),
-        _r6(F.sum("illiq_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
+        r6(F.sum("illiq_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
             "amihud_illiq"
         ),
     )
@@ -234,7 +212,7 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KYLE_DELTA = 3600
 
 _KYLE_ORACLE = f"""
-WITH lob AS (SELECT user_id, event_id, ts, direction, {_CENTS} AS cents
+WITH lob AS (SELECT user_id, event_id, ts, direction, {CENTS_SQL} AS cents
              FROM ({EVENTS_LOB_SQL}) e),
 b AS (
   SELECT user_id, {bin_end_sql("ts", _KYLE_DELTA)} AS bin,
@@ -256,8 +234,8 @@ c AS (
   FROM s
   WHERE (CAST(n_bins AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) <> 0)
 SELECT user_id, n_bins,
-  {_R6_SQL.format(x="slope * 1e6")} AS kyle_lambda_x1e6,
-  {_R6_SQL.format(
+  {R6_SQL.format(x="slope * 1e6")} AS kyle_lambda_x1e6,
+  {R6_SQL.format(
       x="(CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))"
         " / CAST(n_bins AS DOUBLE) / 100")}
     AS intercept_dollars
@@ -286,7 +264,7 @@ def kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-ticker key; nothing global. Integer headroom: |sv| ≤ 1e8 per
     key-bin at test scale, Σsv² ≤ ~1e17; re-bin or rescale cents for
     ticks denser than ~1e4 events/key/hour."""
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     b = lob.groupBy(
         "user_id", bin_end("ts", _KYLE_DELTA).alias("bin")
     ).agg(
@@ -309,8 +287,8 @@ def kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.filter(den != 0).select(
         "user_id",
         "n_bins",
-        _r6(slope * 1e6).alias("kyle_lambda_x1e6"),
-        _r6(
+        r6(slope * 1e6).alias("kyle_lambda_x1e6"),
+        r6(
             (F.col("sy").cast("double") - slope * F.col("sx").cast("double"))
             / nd
             / 100
@@ -323,8 +301,8 @@ def kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _RBV_ORACLE = f"""
-WITH lob AS (SELECT user_id, event_id, ts, {_CENTS} AS cents
-             FROM ({EVENTS_LOB_SQL}) e WHERE {_CENTS} > 0),
+WITH lob AS (SELECT user_id, event_id, ts, {CENTS_SQL} AS cents
+             FROM ({EVENTS_LOB_SQL}) e WHERE {CENTS_SQL} > 0),
 r AS (
   SELECT user_id, date_trunc('day', ts) AS day,
          {_LN_MICRO_SQL.format(x="cents")}
@@ -345,11 +323,11 @@ s AS (
               AS BIGINT) AS bp_micro2
   FROM rr GROUP BY 1, 2)
 SELECT user_id, day, n_rets,
-       {_R6_SQL.format(x="CAST(rv_micro2 AS DOUBLE) / 1e12")} AS realized_var,
-       {_R6_SQL.format(x="pi() / 2 * CAST(bp_micro2 AS DOUBLE) / 1e12")}
+       {R6_SQL.format(x="CAST(rv_micro2 AS DOUBLE) / 1e12")} AS realized_var,
+       {R6_SQL.format(x="pi() / 2 * CAST(bp_micro2 AS DOUBLE) / 1e12")}
          AS bipower_var,
        CASE WHEN rv_micro2 > 0
-            THEN {_R6_SQL.format(
+            THEN {R6_SQL.format(
                 x="greatest(0.0, (CAST(rv_micro2 AS DOUBLE)"
                   " - pi() / 2 * CAST(bp_micro2 AS DOUBLE))"
                   " / CAST(rv_micro2 AS DOUBLE))")}
@@ -383,7 +361,7 @@ def realized_bipower_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key, day) — the LOBSTER per-ticker-per-day file unit — so state
     never crosses the natural shard boundary."""
     lob = (
-        _lob_cents(spark, sf_dir)
+        lob_cents(spark, sf_dir)
         .filter(F.col("cents") > 0)
         .withColumn("day", F.date_trunc("day", F.col("ts")))
     )
@@ -415,13 +393,13 @@ def realized_bipower_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "day",
         "n_rets",
-        _r6(F.col("rv_micro2").cast("double") / 1e12).alias("realized_var"),
-        _r6(half_pi * F.col("bp_micro2").cast("double") / 1e12).alias(
+        r6(F.col("rv_micro2").cast("double") / 1e12).alias("realized_var"),
+        r6(half_pi * F.col("bp_micro2").cast("double") / 1e12).alias(
             "bipower_var"
         ),
         F.when(
             F.col("rv_micro2") > 0,
-            _r6(
+            r6(
                 F.greatest(
                     F.lit(0.0),
                     (
@@ -443,8 +421,8 @@ _VR_Q = 4
 _VR_DELTA = 3600
 
 _VR_ORACLE = f"""
-WITH lob AS (SELECT user_id, event_id, ts, {_CENTS} AS cents
-             FROM ({EVENTS_LOB_SQL}) e WHERE {_CENTS} > 0),
+WITH lob AS (SELECT user_id, event_id, ts, {CENTS_SQL} AS cents
+             FROM ({EVENTS_LOB_SQL}) e WHERE {CENTS_SQL} > 0),
 b AS (
   SELECT user_id, {bin_end_sql("ts", _VR_DELTA)} AS bin,
          {_LN_MICRO_SQL.format(x="max_by(cents, event_id)")}
@@ -470,7 +448,7 @@ sq AS (
          CAST(sum(rq_micro * rq_micro) AS BIGINT) AS sqxx
   FROM q WHERE wn = {_VR_Q} GROUP BY 1)
 SELECT s1.user_id, n1, nq,
-  {_R6_SQL.format(
+  {R6_SQL.format(
       x=f"(CAST(nq AS DOUBLE) * sqxx - CAST(sqx AS DOUBLE) * sqx)"
         f" / (CAST(nq AS DOUBLE) * nq)"
         f" / ({_VR_Q} * (CAST(n1 AS DOUBLE) * s1xx"
@@ -498,7 +476,7 @@ def variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: (key, bin) aggregate, one per-key O(bins) rolling
     window, two per-key reductions, one per-key join of O(keys)
     frames. All state is per-key.""".format(q=_VR_Q)
-    lob = _lob_cents(spark, sf_dir).filter(F.col("cents") > 0)
+    lob = lob_cents(spark, sf_dir).filter(F.col("cents") > 0)
     b = lob.groupBy(
         "user_id", bin_end("ts", _VR_DELTA).alias("bin")
     ).agg(
@@ -552,7 +530,7 @@ def variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "n1",
             "nq",
-            _r6(varq / (_VR_Q * var1)).alias("variance_ratio"),
+            r6(varq / (_VR_Q * var1)).alias("variance_ratio"),
         )
     )
 
@@ -564,7 +542,7 @@ def variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VPIN_BUCKET_CENTS = 500_000  # $5,000 volume clock per bucket
 
 _VPIN_ORACLE = f"""
-WITH lob AS (SELECT user_id, event_id, direction, {_CENTS} AS cents
+WITH lob AS (SELECT user_id, event_id, direction, {CENTS_SQL} AS cents
              FROM ({EVENTS_LOB_SQL}) e),
 c AS (
   SELECT user_id, direction, cents,
@@ -585,7 +563,7 @@ b AS (
 SELECT user_id, count(*) AS n_buckets,
        CAST(sum(abs(buy_cents - sell_cents)) AS BIGINT) AS imb_cents,
        CAST(sum(buy_cents + sell_cents) AS BIGINT) AS vol_cents,
-       {_R6_SQL.format(
+       {R6_SQL.format(
            x="CAST(sum(abs(buy_cents - sell_cents)) AS DOUBLE)"
              " / sum(buy_cents + sell_cents)")} AS vpin
 FROM b GROUP BY 1
@@ -611,7 +589,7 @@ def vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition), then two map-side-combinable aggregates. The bucket
     constant is absolute (cents), so bucket counts grow with per-key
     volume, not row count."""
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     wcum = (
         Window.partitionBy("user_id")
         .orderBy("event_id")
@@ -652,7 +630,7 @@ def vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("buy_cents") + F.col("sell_cents"))
         .cast("long")
         .alias("vol_cents"),
-        _r6(
+        r6(
             F.sum(F.abs(F.col("buy_cents") - F.col("sell_cents"))).cast(
                 "double"
             )
@@ -714,7 +692,7 @@ e AS (
 SELECT CAST(max(n_k + lag_k) AS BIGINT) AS n_series,
        CAST({len(_LB_LAGS)} AS BIGINT) AS df,
        CAST(sum(contrib_pico) AS BIGINT) AS contrib_pico_sum,
-       {_R6_SQL.format(
+       {R6_SQL.format(
            x="CAST(max(n_k + lag_k) AS DOUBLE) * (max(n_k + lag_k) + 2)"
              " * (CAST(sum(contrib_pico) AS DOUBLE) / 1e12)")} AS lb_q
 FROM e
@@ -744,7 +722,7 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dissertation_iceberg_spark.operators.order_imbalance import densify
     from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
 
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     b = (
         lob.withColumn("bin", bin_end("ts", _LB_DELTA))
@@ -791,7 +769,7 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
         nmax.cast("long").alias("n_series"),
         F.lit(len(_LB_LAGS)).cast("long").alias("df"),
         F.sum("contrib_pico").cast("long").alias("contrib_pico_sum"),
-        _r6(
+        r6(
             nmax.cast("double")
             * (nmax + 2)
             * (F.sum("contrib_pico").cast("double") / 1e12)
@@ -806,7 +784,7 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MK_ORACLE = f"""
 WITH d AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum({_CENTS}) AS BIGINT) AS v
+         CAST(sum({CENTS_SQL}) AS BIGINT) AS v
   FROM events GROUP BY 1, 2),
 pairs AS (
   SELECT a.event_type,
@@ -827,9 +805,9 @@ v AS (
   FROM n JOIN pairs p ON n.event_type = p.event_type
   JOIN ties t ON n.event_type = t.event_type)
 SELECT event_type, n_days, s AS s_stat,
-       {_R6_SQL.format(x="var_s")} AS var_s,
+       {R6_SQL.format(x="var_s")} AS var_s,
        CASE WHEN var_s > 0 THEN
-         {_R6_SQL.format(
+         {R6_SQL.format(
              x="CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1) / sqrt(var_s)"
                " WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1) / sqrt(var_s)"
                " ELSE 0.0 END")}
@@ -904,8 +882,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_days",
             F.col("s").alias("s_stat"),
-            _r6(var_s).alias("var_s"),
-            F.when(var_s > 0, _r6(z)).alias("mk_z"),
+            r6(var_s).alias("var_s"),
+            F.when(var_s > 0, r6(z)).alias("mk_z"),
         )
     )
 
@@ -970,7 +948,7 @@ xy AS (
               AS BIGINT) AS ly
   FROM sizes WHERE rs_micro_sum > 0)
 SELECT m, n_blocks, mean_rs,
-  {_R6_SQL.format(
+  {R6_SQL.format(
       x="(CAST(count(*) OVER () AS DOUBLE) * sum(CAST(lx AS DOUBLE) * ly)"
         " OVER () - CAST(sum(lx) OVER () AS DOUBLE) * sum(ly) OVER ())"
         " / (CAST(count(*) OVER () AS DOUBLE)"
@@ -1006,7 +984,7 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dissertation_iceberg_spark.operators.order_imbalance import densify
     from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
 
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     b = (
         lob.withColumn("bin", bin_end("ts", _HURST_DELTA))
@@ -1092,7 +1070,7 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = (nd * sxy - sx.cast("double") * sy) / (
         nd * sxx - sx.cast("double") * sx
     )
-    return xy.select("m", "n_blocks", "mean_rs", _r6(slope).alias("hurst"))
+    return xy.select("m", "n_blocks", "mean_rs", r6(slope).alias("hurst"))
 
 
 # --------------------------------------------------------------------------
@@ -1102,7 +1080,7 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TAU_ORACLE = f"""
 WITH d AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum({_CENTS}) AS BIGINT) AS x, count(*) AS y
+         CAST(sum({CENTS_SQL}) AS BIGINT) AS x, count(*) AS y
   FROM events GROUP BY 1, 2),
 p AS (
   SELECT a.event_type,
@@ -1129,7 +1107,7 @@ j AS (
   JOIN ty ON n.event_type = ty.event_type)
 SELECT event_type, n_days, c AS n_concordant, disc AS n_discordant,
        CASE WHEN n0 - n1 > 0 AND n0 - n2 > 0 THEN
-         {_R6_SQL.format(
+         {R6_SQL.format(
              x="CAST(c - disc AS DOUBLE)"
                " / sqrt(CAST(n0 - n1 AS DOUBLE) * (n0 - n2))")}
        END AS tau_b
@@ -1217,7 +1195,7 @@ def kendall_tau_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("disc").alias("n_discordant"),
         F.when(
             (F.col("n0") - F.col("n1") > 0) & (F.col("n0") - F.col("n2") > 0),
-            _r6(tau),
+            r6(tau),
         ).alias("tau_b"),
     )
 
@@ -1235,9 +1213,9 @@ def _gc_oracle() -> str:
     def block(tag: str, y: str, v: str) -> str:
         return f"""
 SELECT '{tag}' AS direction, n,
-  {_R6_SQL.format(x="(syv * suu - syu * suv) / (suu * svv - suv * suv)")}
+  {R6_SQL.format(x="(syv * suu - syu * suv) / (suu * svv - suv * suv)")}
     AS beta_cross,
-  {_R6_SQL.format(
+  {R6_SQL.format(
       x="((syy - syu * syu / suu)"
         " - (syy - (syu * syu * svv - 2 * syu * syv * suv"
         "          + syv * syv * suu) / (suu * svv - suv * suv)))"
@@ -1268,8 +1246,8 @@ WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT {bin_end_sql("ts", _GC_DELTA)} AS bin,
          CAST(round({_oi_cents_sql("TRUE")} * 1e6) AS BIGINT) AS oi_micro,
-         {_LN_MICRO_SQL.format(x="max_by(" + _CENTS + ", event_id)")}
-           - {_LN_MICRO_SQL.format(x="min_by(" + _CENTS + ", event_id)")}
+         {_LN_MICRO_SQL.format(x="max_by(" + CENTS_SQL + ", event_id)")}
+           - {_LN_MICRO_SQL.format(x="min_by(" + CENTS_SQL + ", event_id)")}
            AS r_micro
   FROM lob GROUP BY 1),
 l AS (
@@ -1306,7 +1284,7 @@ def granger_oi_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition class, like oi_acf)."""
     from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
 
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     b = (
         lob.withColumn("bin", bin_end("ts", _GC_DELTA))
@@ -1360,8 +1338,8 @@ def granger_oi_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         return s.filter((suu > 0) & (det != 0)).select(
             F.lit(tag).alias("direction"),
             "n",
-            _r6((syv * suu - syu * suv) / det).alias("beta_cross"),
-            _r6((rss_r - rss_u) * (F.col("n") - 3) / rss_u).alias("f_stat"),
+            r6((syv * suu - syu * suv) / det).alias("beta_cross"),
+            r6((rss_r - rss_u) * (F.col("n") - 3) / rss_u).alias("f_stat"),
         )
 
     return block("oi_to_ret", "r_micro", "lag_r", "lag_oi").unionByName(
@@ -1376,8 +1354,8 @@ def granger_oi_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CS_K = "(3.0 - 2.0 * sqrt(2.0))"
 
 _CS_ORACLE = f"""
-WITH lob AS (SELECT user_id, ts, {_CENTS} AS cents
-             FROM ({EVENTS_LOB_SQL}) e WHERE {_CENTS} > 0),
+WITH lob AS (SELECT user_id, ts, {CENTS_SQL} AS cents
+             FROM ({EVENTS_LOB_SQL}) e WHERE {CENTS_SQL} > 0),
 d AS (
   SELECT user_id, date_trunc('day', ts) AS day,
          CAST(max(cents) AS BIGINT) AS hi, CAST(min(cents) AS BIGINT) AS lo
@@ -1408,9 +1386,9 @@ m AS (
            AS s_micro
   FROM a)
 SELECT user_id, count(*) AS n_pairs,
-       {_R6_SQL.format(x="CAST(sum(s_micro) AS DOUBLE) / count(*) / 1e6")}
+       {R6_SQL.format(x="CAST(sum(s_micro) AS DOUBLE) / count(*) / 1e6")}
          AS cs_spread,
-       {_R6_SQL.format(
+       {R6_SQL.format(
            x="CAST(sum(greatest(s_micro, 0)) AS DOUBLE) / count(*) / 1e6")}
          AS cs_spread_clamped
 FROM m GROUP BY 1
@@ -1436,7 +1414,7 @@ def corwin_schultz_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one (key, day) map-side aggregate, one per-key lag
     window over O(days), one per-key rollup. Nothing global."""
-    lob = _lob_cents(spark, sf_dir).filter(F.col("cents") > 0)
+    lob = lob_cents(spark, sf_dir).filter(F.col("cents") > 0)
     d = lob.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
@@ -1469,10 +1447,10 @@ def corwin_schultz_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
-        _r6(F.sum("s_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
+        r6(F.sum("s_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
             "cs_spread"
         ),
-        _r6(
+        r6(
             F.sum(F.greatest(F.col("s_micro"), F.lit(0))).cast("double")
             / F.count(F.lit(1))
             / 1e6
@@ -1520,8 +1498,8 @@ z AS (
   FROM grid g LEFT JOIN b ON g.bin = b.bin),
 ks AS ({k_blocks})
 SELECT k, n_series,
-  {_R6_SQL.format(x="CAST(n_series AS DOUBLE) / k")} AS period_hours,
-  {_R6_SQL.format(
+  {R6_SQL.format(x="CAST(n_series AS DOUBLE) / k")} AS period_hours,
+  {R6_SQL.format(
       x="((CAST(sc_pico AS DOUBLE) / 1e12) * (CAST(sc_pico AS DOUBLE) / 1e12)"
         " + (CAST(ss_pico AS DOUBLE) / 1e12) * (CAST(ss_pico AS DOUBLE) / 1e12))"
         " / n_series * 1e3")} AS power_x1e3
@@ -1551,7 +1529,7 @@ def oi_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dissertation_iceberg_spark.operators.order_imbalance import densify
     from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
 
-    lob = _lob_cents(spark, sf_dir)
+    lob = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     b = (
         lob.withColumn("bin", bin_end("ts", _PG_DELTA))
@@ -1590,10 +1568,10 @@ def oi_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks.select(
         "k",
         "n_series",
-        _r6(F.col("n_series").cast("double") / F.col("k")).alias(
+        r6(F.col("n_series").cast("double") / F.col("k")).alias(
             "period_hours"
         ),
-        _r6((sc * sc + ss * ss) / F.col("n_series") * 1e3).alias("power_x1e3"),
+        r6((sc * sc + ss * ss) / F.col("n_series") * 1e3).alias("power_x1e3"),
     )
 
 
@@ -1606,7 +1584,7 @@ WITH d AS (
   SELECT event_type,
          CAST(datediff('day', DATE '1970-01-01', date_trunc('day', ts))
               AS BIGINT) AS day_num,
-         CAST(sum({_CENTS}) AS BIGINT) AS v
+         CAST(sum({CENTS_SQL}) AS BIGINT) AS v
   FROM events GROUP BY 1, 2),
 dw AS (
   SELECT event_type, day_num, (day_num + 3) % 7 AS dow, v FROM d),
@@ -1638,9 +1616,9 @@ agg AS (
          sum(var_g) AS var_s
   FROM per GROUP BY 1)
 SELECT event_type, n_days, s_stat,
-       {_R6_SQL.format(x="var_s")} AS var_s,
+       {R6_SQL.format(x="var_s")} AS var_s,
        CASE WHEN var_s > 0 THEN
-         {_R6_SQL.format(
+         {R6_SQL.format(
              x="CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1) / sqrt(var_s)"
                " WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1) / sqrt(var_s)"
                " ELSE 0.0 END")}
@@ -1744,6 +1722,6 @@ def seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_days",
         "s_stat",
-        _r6(var_s).alias("var_s"),
-        F.when(var_s > 0, _r6(z)).alias("smk_z"),
+        r6(var_s).alias("var_s"),
+        F.when(var_s > 0, r6(z)).alias("smk_z"),
     )

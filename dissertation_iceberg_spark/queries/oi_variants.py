@@ -12,20 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import CENTS_SQL, lob_cents
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
-from dissertation_iceberg_spark.io import load_table, lob_events
+from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
 DELTA = 21_600  # 6-hour bins for variant queries (denser per-bin counts)
-
-_CENTS = "CAST(round(value * 100) AS BIGINT)"
-
-
-def _lob_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
 
 
 def _oi_cents(dir_col, cents, pred):
@@ -35,8 +28,8 @@ def _oi_cents(dir_col, cents, pred):
 
 
 def _oi_cents_sql(pred: str) -> str:
-    sell = f"sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-    buy = f"sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END)"
+    sell = f"sum(CASE WHEN direction=-1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)"
+    buy = f"sum(CASE WHEN direction=1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)"
     return (
         f"CASE WHEN ({sell} + {buy}) <> 0 "
         f"THEN CAST({sell} - {buy} AS DOUBLE) / ({sell} + {buy}) END"
@@ -63,7 +56,7 @@ def combined_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: visible-OI ⨝ hidden-OI per bin (order_imbalance.py:328-335)
     — one predicate-split pass; inner-merge semantics = both legs
     present."""
-    df = _lob_cents(spark, sf_dir)
+    df = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     return (
         df.withColumn("bin", bin_end("ts", DELTA))
@@ -95,7 +88,7 @@ WHERE oi_vis IS NOT NULL
 def vhi_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: vis-OI left-joined with hid-OI, missing hid leg -> 0
     (order_imbalance.py:408-414)."""
-    df = _lob_cents(spark, sf_dir)
+    df = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     return (
         df.withColumn("bin", bin_end("ts", DELTA))
@@ -153,7 +146,7 @@ FROM t GROUP BY 1
 def conditional_oi_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/J6: conditional OI per size class in one pass — replaces the
     reference's loop-of-merges (order_imbalance.py:452-475)."""
-    df = _lob_cents(spark, sf_dir)
+    df = lob_cents(spark, sf_dir)
     w = Window.partitionBy(F.date_trunc("day", F.col("ts"))).orderBy(
         "value", "event_id"
     )
@@ -278,10 +271,10 @@ def factor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RESAMPLE_ORACLE = f"""
 SELECT {bin_end_sql("ts", DELTA)} AS bin,
        count(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_vis,
-       sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END) / 100.0
+       sum(CASE WHEN event_type = 'purchase' THEN {CENTS_SQL} ELSE 0 END) / 100.0
            AS sum_vis,
        round(CASE WHEN count(CASE WHEN event_type = 'purchase' THEN 1 END) > 0
-             THEN (sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END)
+             THEN (sum(CASE WHEN event_type = 'purchase' THEN {CENTS_SQL} ELSE 0 END)
                    / 100.0)
                   / count(CASE WHEN event_type = 'purchase' THEN 1 END) END, 6)
            AS mean_vis
@@ -315,9 +308,9 @@ def resample_mean_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RATIO_ORACLE = f"""
 SELECT {bin_end_sql("ts", DELTA)} AS bin,
-  round(CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END) <> 0
-        THEN CAST(sum(CASE WHEN event_type = 'error' THEN {_CENTS} ELSE 0 END) AS DOUBLE)
-             / sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END) END, 6)
+  round(CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN {CENTS_SQL} ELSE 0 END) <> 0
+        THEN CAST(sum(CASE WHEN event_type = 'error' THEN {CENTS_SQL} ELSE 0 END) AS DOUBLE)
+             / sum(CASE WHEN event_type = 'purchase' THEN {CENTS_SQL} ELSE 0 END) END, 6)
       AS hid_vis_ratio
 FROM events GROUP BY 1
 """
@@ -374,7 +367,7 @@ def multi_delta_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(deltas x bins) partially-aggregated rows, and the fact is read
     once — at 100 TB that is 1/3 the I/O for the identical result set
     (same groups, same exact integer-cents aggregation per group)."""
-    df = _lob_cents(spark, sf_dir)
+    df = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     keys = F.explode(
         F.array(
@@ -433,7 +426,7 @@ def oi_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the already-tiny binned frame."""
     from dissertation_iceberg_spark.operators.order_imbalance import densify
 
-    df = _lob_cents(spark, sf_dir)
+    df = lob_cents(spark, sf_dir)
     d, c = F.col("direction"), F.col("cents")
     b = (
         df.withColumn("bin", bin_end("ts", 3600))

@@ -8,10 +8,10 @@ run-parity iterative kernels (kmeans, BPE, gbm_stumps) the rounds are
 unrolled and the DuckDB oracle replays them exactly.
 
 Parity: relevance and candidate-pair cosines are rounded to 6 dp once
-(same kernel as cosine_topk — element-wise double casts, identical op
-shape); the MMR score 0.7·rel − 0.3·maxsim is IEEE arithmetic on
-those rounded inputs with a vec_id tiebreak, so every round's argmax
-matches bit-for-bit.
+(operators.similarity.cosine, the kernel behind cosine_topk —
+element-wise double casts, identical op shape); the MMR score
+0.7·rel − 0.3·maxsim is IEEE arithmetic on those rounded inputs with a
+vec_id tiebreak, so every round's argmax matches bit-for-bit.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table, spread
+from dissertation_iceberg_spark.operators.similarity import cosine
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
@@ -94,20 +95,6 @@ SELECT * FROM pick1"""
 )
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm2(a):
-    return F.aggregate(
-        a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-    )
-
-
 @register("mmr_rerank", oracle=_MMR_ORACLE)
 def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversified re-ranking: from the top-{pool} cosine
@@ -134,14 +121,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "embedding",
-            F.round(
-                _dot(F.col("qvec"), F.col("embedding"))
-                / (
-                    F.sqrt(_norm2(F.col("qvec")))
-                    * F.sqrt(_norm2(F.col("embedding")))
-                ),
-                6,
-            ).alias("rel"),
+            F.round(cosine(F.col("qvec"), F.col("embedding")), 6).alias("rel"),
         )
     )
     # Round 9 (§5): the pool is referenced by EVERY unrolled greedy
@@ -169,11 +149,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a",
             "b",
-            F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.sqrt(_norm2(F.col("va"))) * F.sqrt(_norm2(F.col("vb")))),
-                6,
-            ).alias("sim"),
+            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
         )
     )
     pool_slim = pool.select("vec_id", "rel")

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.operators import text as tx
-from dissertation_iceberg_spark.queries.microstructure import _R6_SQL, _r6
+from dissertation_iceberg_spark.functions.exact import R6_SQL, r6
 from dissertation_iceberg_spark.operators.strategy import cross_sectional_select
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
@@ -2845,9 +2845,9 @@ q AS (
            OVER () AS i_star
   FROM r)
 SELECT event_type, CAST(bucket AS BIGINT) AS bucket, n_c AS n_events,
-       {_R6_SQL.format(x="zv")} AS z_score,
+       {R6_SQL.format(x="zv")} AS z_score,
        p_micro, CAST(i AS BIGINT) AS p_rank,
-       {_R6_SQL.format(x="qv")} AS q_value,
+       {R6_SQL.format(x="qv")} AS q_value,
        CAST(CASE WHEN i <= i_star THEN 1 ELSE 0 END AS BIGINT) AS rejected
 FROM q
 """
@@ -2962,10 +2962,10 @@ def bh_fdr_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("bucket").cast("long").alias("bucket"),
         F.col("n_c").cast("long").alias("n_events"),
-        _r6(F.col("zv")).alias("z_score"),
+        r6(F.col("zv")).alias("z_score"),
         "p_micro",
         F.col("i").cast("long").alias("p_rank"),
-        _r6(F.col("qv")).alias("q_value"),
+        r6(F.col("qv")).alias("q_value"),
         F.when(F.col("i") <= F.col("i_star"), F.lit(1))
         .otherwise(F.lit(0))
         .cast("long")

@@ -2116,6 +2116,8 @@ def projection_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable histogram pass, everything after on the
     O(distinct projections) frame.
     """.format(a=_PKS_LA, b=_PKS_LB)
+    from dissertation_iceberg_spark.operators.similarity import int_dot
+
     w = _pks_weights()
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("label").isin(_PKS_LA, _PKS_LB)
@@ -2126,11 +2128,7 @@ def projection_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     wlit = F.array(*[F.lit(v).cast("long") for v in w])
     proj = e.select(
         "label",
-        F.aggregate(
-            F.zip_with(xq, wlit, lambda x, ww: x * ww),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("p"),
+        int_dot(xq, wlit).alias("p"),
     )
     h = proj.groupBy("p").agg(
         F.sum((F.col("label") == _PKS_LA).cast("long"))

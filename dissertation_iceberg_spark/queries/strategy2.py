@@ -292,23 +292,22 @@ def percentile_sweep_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import lob_events
+from dissertation_iceberg_spark.functions.exact import CENTS_SQL
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
 _XC_DELTAS = (3600, 21600)
-
-_CENTS = "CAST(round(value * 100) AS BIGINT)"
 
 
 def _xc_oracle() -> str:
     parts = []
     for d in _XC_DELTAS:
         oi = lambda pred: (  # noqa: E731
-            f"CASE WHEN (sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-            f" + sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END)) <> 0 "
-            f"THEN CAST(sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-            f" - sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END) AS DOUBLE)"
-            f" / (sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-            f" + sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END)) END"
+            f"CASE WHEN (sum(CASE WHEN direction=-1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)"
+            f" + sum(CASE WHEN direction=1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)) <> 0 "
+            f"THEN CAST(sum(CASE WHEN direction=-1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)"
+            f" - sum(CASE WHEN direction=1 AND {pred} THEN {CENTS_SQL} ELSE 0 END) AS DOUBLE)"
+            f" / (sum(CASE WHEN direction=-1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)"
+            f" + sum(CASE WHEN direction=1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)) END"
         )
         parts.append(
             f"""

@@ -36,6 +36,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import det3, det4
 from dissertation_iceberg_spark.queries.core import ICEBERG_TOL_US
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
@@ -47,23 +48,6 @@ E1_DELTAS = (3600, 21600)
 # 4x4 symmetric Cramer solve, generated once as SQL strings shared by
 # both engines (identical op shape => identical doubles)
 # ---------------------------------------------------------------------------
-
-
-def _det3(m: list[list[str]]) -> str:
-    return (
-        f"({m[0][0]}*({m[1][1]}*{m[2][2]} - {m[1][2]}*{m[2][1]})"
-        f" - {m[0][1]}*({m[1][0]}*{m[2][2]} - {m[1][2]}*{m[2][0]})"
-        f" + {m[0][2]}*({m[1][0]}*{m[2][1]} - {m[1][1]}*{m[2][0]}))"
-    )
-
-
-def _det4(m: list[list[str]]) -> str:
-    terms = []
-    for j in range(4):
-        minor = [[m[r][c] for c in range(4) if c != j] for r in range(1, 4)]
-        sign = "-" if j % 2 else "+"
-        terms.append(f"{sign} {m[0][j]}*{_det3(minor)}")
-    return "(" + " ".join(terms) + ")"
 
 
 _M = [
@@ -97,16 +81,16 @@ _E1_STATS = {
     "v4": "CAST(sum(ym) AS DOUBLE) / 1e6",
     "syy": "CAST(sum(ym*ym) AS DOUBLE) / 1e12",
 }
-_E1_DET = {"det": _det4(_M)}
+_E1_DET = {"det": det4(_M)}
 _E1_SOLVE = {
-    "b1": f"{_det4(_replace_col(0))} / det",
-    "b2": f"{_det4(_replace_col(1))} / det",
-    "b3": f"{_det4(_replace_col(2))} / det",
-    "b4": f"{_det4(_replace_col(3))} / det",
+    "b1": f"{det4(_replace_col(0))} / det",
+    "b2": f"{det4(_replace_col(1))} / det",
+    "b3": f"{det4(_replace_col(2))} / det",
+    "b4": f"{det4(_replace_col(3))} / det",
     # diagonal of (X'X)^-1 = principal cofactors / det (symmetric M)
-    "i11": f"{_det3([[_M[r][c] for c in range(4) if c != 0] for r in range(4) if r != 0])} / det",
-    "i22": f"{_det3([[_M[r][c] for c in range(4) if c != 1] for r in range(4) if r != 1])} / det",
-    "i33": f"{_det3([[_M[r][c] for c in range(4) if c != 2] for r in range(4) if r != 2])} / det",
+    "i11": f"{det3([[_M[r][c] for c in range(4) if c != 0] for r in range(4) if r != 0])} / det",
+    "i22": f"{det3([[_M[r][c] for c in range(4) if c != 1] for r in range(4) if r != 1])} / det",
+    "i33": f"{det3([[_M[r][c] for c in range(4) if c != 2] for r in range(4) if r != 2])} / det",
 }
 _E1_RSS = {
     "rss": (

@@ -29,7 +29,6 @@ and buckets are bit-identical to ``ccnet_doc_scores_frame``.
 
 from __future__ import annotations
 
-import math
 from typing import Any, Iterator
 
 import pandas as pd
@@ -42,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dissertation_iceberg_spark.functions.exact import round_half_up
 from dissertation_iceberg_spark.queries.pipeline_audit import (
     _ccnet_cuts,
     _ccnet_ds,
@@ -88,12 +88,6 @@ def train_ccnet_artifact(docs: DataFrame) -> dict[str, Any]:
     }
 
 
-def _round_half_up(x: float) -> int:
-    """Spark's F.round on DOUBLE: HALF_UP = half away from zero
-    (Python round() is banker's — wrong twin)."""
-    return int(math.copysign(math.floor(abs(x) + 0.5), x))
-
-
 def ccnet_gate(
     docs: DataFrame, artifact: dict[str, Any], text_col: str = "text"
 ) -> DataFrame:
@@ -117,7 +111,7 @@ def ccnet_gate(
                     continue
                 fl = floor.get(lang, 0)
                 s = sum(lm.get((lang, t), fl) for t in toks)
-                mean_micro = _round_half_up(s / len(toks))
+                mean_micro = round_half_up(s / len(toks))
                 c = cuts.get(lang)
                 if c is None:
                     bucket = "unscored"

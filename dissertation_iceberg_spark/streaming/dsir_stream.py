@@ -25,7 +25,6 @@ bit-identical to ``dsir_doc_scores_frame`` on the training corpus.
 
 from __future__ import annotations
 
-import math
 from typing import Any, Iterator
 
 import pandas as pd
@@ -39,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dissertation_iceberg_spark.functions.exact import round_half_up
 from dissertation_iceberg_spark.functions.hashing import hash60_py
 from dissertation_iceberg_spark.queries.pipeline_audit import (
     DSIR_B,
@@ -85,12 +85,6 @@ def train_dsir_artifact(docs: DataFrame) -> dict[str, Any]:
     }
 
 
-def _round_half_up(x: float) -> int:
-    """Spark's F.round on DOUBLE: HALF_UP = half away from zero
-    (Python round() is banker's — wrong twin)."""
-    return int(math.copysign(math.floor(abs(x) + 0.5), x))
-
-
 def dsir_gate(
     docs: DataFrame, artifact: dict[str, Any], text_col: str = "text"
 ) -> DataFrame:
@@ -118,7 +112,7 @@ def dsir_gate(
                     lr.get(hash60_py(ng) % DSIR_B, floor)
                     for ng in ngrams
                 )
-                mean_micro = _round_half_up(s / len(ngrams))
+                mean_micro = round_half_up(s / len(ngrams))
                 out.append(
                     (
                         doc_id,

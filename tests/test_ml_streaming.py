@@ -161,28 +161,29 @@ def test_decode_image_guard(spark):
 
 
 def test_ivf_index_roundtrip(spark, sf_dir, tmp_path):
-    """IVF index persists (lists partitioned by list_id + centroids)
-    and a loaded index answers identically to the in-memory one — the
-    build-once/search-many path for repeated query batches."""
+    """IVF index persists (lists partitioned by list_id + integer
+    centroid sums) and a loaded index answers identically to the
+    in-memory one — the build-once/search-many path for repeated query
+    batches."""
     from dissertation_iceberg_spark.io import load_table
     from dissertation_iceberg_spark.operators.similarity import (
         IVFIndex,
-        build_ivf_index,
-        ivf_search,
+        build_ivf_index_exact,
+        ivf_search_exact,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 17 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    index = build_ivf_index(emb, n_lists=8, seed=42)
-    fresh = ivf_search(index, queries, k=3, n_probe=3).toPandas()
+    index = build_ivf_index_exact(emb, n_lists=8)
+    fresh = ivf_search_exact(index, queries, k=3, n_probe=3).toPandas()
     assert len(fresh) > 0
 
     path = str(tmp_path / "ivf")
     index.save(path)
     loaded = IVFIndex.load(spark, path)
-    replay = ivf_search(loaded, queries, k=3, n_probe=3).toPandas()
+    replay = ivf_search_exact(loaded, queries, k=3, n_probe=3).toPandas()
 
     key = ["qid", "rnk"]
     a = fresh.sort_values(key).reset_index(drop=True)
@@ -301,8 +302,9 @@ def test_streaming_oi_matches_batch(spark, sf_dir, tmp_path):
 def test_ivf_ann_recall(spark, sf_dir):
     from dissertation_iceberg_spark.io import load_table
     from dissertation_iceberg_spark.operators.similarity import (
+        build_ivf_index_exact,
         cosine_topk,
-        ivf_cosine_topk,
+        ivf_search_exact,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -310,7 +312,8 @@ def test_ivf_ann_recall(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = cosine_topk(emb, queries, k=5).toPandas()
-    ann = ivf_cosine_topk(emb, queries, k=5, n_lists=8, n_probe=4).toPandas()
+    index = build_ivf_index_exact(emb, n_lists=8)
+    ann = ivf_search_exact(index, queries, k=5, n_probe=4).toPandas()
     exact_pairs = set(zip(exact.qid, exact.neighbor_id))
     ann_pairs = set(zip(ann.qid, ann.neighbor_id))
     assert ann_pairs

@@ -146,6 +146,26 @@ def test_connected_components_chain_triangle(spark):
                    20: 20, 21: 20}
 
 
+def test_connected_components_scaled_decimal_ids(spark):
+    """decimal(10,2) ids that all round to the same integer: a 4-chain
+    needs three sweeps, but the rounded label sum never moves, so the
+    label-sum convergence check would stop after the first sweep.
+    Scaled decimals must take the changed-row check."""
+    from decimal import Decimal
+
+    from dissertation_iceberg_spark.operators.dedup import connected_components
+
+    ids = [Decimal(x) for x in ("1.10", "1.20", "1.30", "1.40")]
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "id_a decimal(10,2), id_b decimal(10,2)"
+    )
+    got = {
+        r["id"]: r["label"]
+        for r in connected_components(edges, max_iter=10).collect()
+    }
+    assert got == {i: ids[0] for i in ids}
+
+
 @settings(max_examples=10, deadline=None)
 @given(
     st.dictionaries(

@@ -81,8 +81,8 @@ def main() -> None:
     from dissertation_iceberg_spark.operators.iceberg import asof_next_within
     from dissertation_iceberg_spark.operators.order_imbalance import oi_pipeline
     from dissertation_iceberg_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_search,
+        build_ivf_index_exact,
+        ivf_search_exact,
     )
 
     lob = lob_events(spark, sf_dir)
@@ -1987,18 +1987,21 @@ def main() -> None:
         # ~sqrt(N) at fixed n_probe — that is the curve we measure
         n_lists = 16 * int(r**0.5)
         t0 = time.time()
-        idx = build_ivf_index(e, n_lists=n_lists, id_col="vec_id",
-                              vec_col="embedding")
+        idx = build_ivf_index_exact(e, n_lists=n_lists, id_col="vec_id",
+                                    vec_col="embedding")
         idx.lists.persist().count()
+        idx.cent_df.persist().count()
         build_s = time.time() - t0
         t, rows = timed(
-            lambda: ivf_search(idx, queries, k=3, n_probe=4), action="count"
+            lambda: ivf_search_exact(idx, queries, k=3, n_probe=4),
+            action="count",
         )
         print(json.dumps({"kernel": "ivf_probe", "factor": r,
                           "input_rows": n_vec, "out_rows": rows,
                           "n_lists": n_lists,
                           "build_sec": round(build_s, 3), "sec": round(t, 3)}))
         idx.lists.unpersist()
+        idx.cent_df.unpersist()
         e.unpersist()
 
     # ----------------------------------------------------------------

@@ -4,7 +4,9 @@ CLI: python tools/time_registry.py [--json OUT.json] [sf_dir] [n_runs]
 
 Spark-only (no oracle) — the optimization-round outlier finder: one
 warm-up run of the first query, then ``n_runs`` noop-timed runs per
-query (best + median recorded). Queries ordered by registry insertion.
+query (``best`` and ``lower_median`` recorded: the lower median,
+rs[(n-1)//2] of the sorted runs, which is the best run when n_runs=2).
+Queries ordered by registry insertion.
 """
 
 from __future__ import annotations
@@ -57,12 +59,14 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
         if runs:
             rs = sorted(runs)
-            # LOWER median (ADVICE round 9): with the default n_runs=2,
-            # rs[len//2] recorded the WORSE run under the key "median";
-            # the lower median is the contention-robust choice
+            # LOWER median (ADVICE round 9): the contention-robust
+            # choice, named for what it is — with the default n_runs=2
+            # it equals "best". Older sweeps store a "median" key:
+            # SWEEP_r08_before.json holds the upper median rs[len//2]
+            # (the worse of two runs), the r09 sweeps this lower median
             results[name] = {
                 "best": round(rs[0], 3),
-                "median": round(rs[(len(rs) - 1) // 2], 3),
+                "lower_median": round(rs[(len(rs) - 1) // 2], 3),
                 "n": len(rs),
             }
         else:
