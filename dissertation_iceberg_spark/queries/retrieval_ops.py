@@ -3,20 +3,22 @@ diversified re-ranking — the standard redundancy-removal step between
 a similarity search (cosine_topk / lsh_ann_topk / ivf_ann_topk /
 rrf_fusion, all registered) and what a RAG-style consumer actually
 reads. Greedy selection is inherently sequential, but each round
-touches only the O(pool) candidate frame, so like the other
-run-parity iterative kernels (kmeans, BPE, gbm_stumps) the rounds are
-unrolled and the DuckDB oracle replays them exactly.
+touches only the O(pool) candidate set: the pool is collected into one
+row and the rounds run as one array fold inside the plan, while the
+DuckDB oracle replays the same rounds as unrolled CTEs.
 
-Parity: relevance and candidate-pair cosines are rounded to 6 dp once
+Parity: relevance and candidate-pick cosines are rounded to 6 dp
 (operators.similarity.cosine, the kernel behind cosine_topk —
 element-wise double casts, identical op shape); the MMR score
-0.7·rel − 0.3·maxsim is IEEE arithmetic on those rounded inputs with a
-vec_id tiebreak, so every round's argmax matches bit-for-bit.
+0.7·rel − 0.3·maxsim is IEEE arithmetic on those rounded inputs, and
+every round's argmax is taken under a total order (score desc, vec_id
+asc), so it matches bit-for-bit whatever order the pool was collected
+in.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table, spread
@@ -25,7 +27,6 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
-from dissertation_iceberg_spark.session import pin
 
 _MMR_QUERY_ID = 0  # the query vector
 _MMR_POOL = 20  # relevance-ranked candidate pool size
@@ -95,6 +96,39 @@ SELECT * FROM pick1"""
 )
 
 
+def _argmax(arr: Column, key) -> Column:
+    """The element of ``arr`` with the largest ``key(element)``, ties
+    to the smallest ``vec_id``: array_max compares (key, -vec_id) in
+    Spark's sort order, the same order as ``ORDER BY key DESC, vec_id
+    ASC`` (NaN above every number). NULL when ``arr`` is empty."""
+    return F.array_max(
+        F.transform(
+            arr,
+            lambda x: F.struct(
+                key(x).alias("k"), (-x["vec_id"]).alias("i"), x.alias("x")
+            ),
+        )
+    )["x"]
+
+
+def _mmr(c: Column) -> Column:
+    """λ·rel − (1−λ)·msim, unrounded: the order key of every round."""
+    return F.lit(_MMR_LAMBDA) * c["rel"] - F.lit(1.0 - _MMR_LAMBDA) * c["msim"]
+
+
+def _pick(rank: Column, c: Column) -> Column:
+    """One pick of the fold: an output row plus the embedding that
+    later rounds' msim needs."""
+    return F.struct(
+        rank.cast("long").alias("rank"),
+        c["vec_id"].alias("vec_id"),
+        c["rel"].alias("rel"),
+        c["msim"].alias("msim"),
+        F.round(_mmr(c), 6).alias("score"),
+        c["embedding"].alias("embedding"),
+    )
+
+
 @register("mmr_rerank", oracle=_MMR_ORACLE)
 def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversified re-ranking: from the top-{pool} cosine
@@ -105,100 +139,62 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE corpus pass scores relevance (the same broadcast
     kernel as cosine_topk — the registered ANN paths substitute at
-    bulk scale); everything after runs on the O(pool²) = {pool}×{pool}
-    pair frame and {k} unrolled greedy rounds over O(pool) rows —
-    bounded state regardless of corpus size. Determinism: rel/sim
-    rounded to 6 dp once, score tiebreak by vec_id, so the oracle's
-    unrolled-CTE replay matches every round exactly.
+    bulk scale) and keeps the top-{pool} pool, collected into one row.
+    Pick 1 is the most relevant candidate (msim 0); rounds 2..{k} are
+    one ``aggregate(sequence(2, k), array(pick1), step)`` fold whose
+    state is the array of picks: each step drops the picked ids, sets
+    msim to the max 6-dp cosine against the picks so far and appends
+    the argmax of λ·rel − (1−λ)·msim. So the query is one plan: no
+    job runs while it is built, and the state is O(pool·k) whatever
+    the corpus size.
     """.format(pool=_MMR_POOL, k=_MMR_K, lam=_MMR_LAMBDA)
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    q = emb.filter(F.col("vec_id") == _MMR_QUERY_ID).select(
+    raw = load_table(spark, sf_dir, "embeddings")
+    q = raw.filter(F.col("vec_id") == _MMR_QUERY_ID).select(
         F.col("embedding").alias("qvec")
     )
     scored = (
-        emb.filter(F.col("vec_id") != _MMR_QUERY_ID)
+        spread(raw)
+        .filter(F.col("vec_id") != _MMR_QUERY_ID)
         .transform(with_scalars, q)
         .select(
             "vec_id",
-            "embedding",
             F.round(cosine(F.col("qvec"), F.col("embedding")), 6).alias("rel"),
-        )
-    )
-    # Round 9 (§5): the pool is referenced by EVERY unrolled greedy
-    # round, directly and through the nested sel/pick lineages — and
-    # its lineage is the full corpus-scoring scan (interpreted cosine
-    # folds) behind a TakeOrdered. Unpinned, the final unioned plan
-    # carried 924 Exchange references and re-derived the corpus scan
-    # per reference (~8.6 s at sf0.1 for a 20-row pool). One pin of the
-    # O(pool) frame collapses every downstream round to tiny local
-    # frames; the corpus is scanned exactly once.
-    pool = pin(scored.orderBy(F.desc("rel"), F.asc("vec_id")).limit(_MMR_POOL))
-    pa = pool.select(
-        F.col("vec_id").alias("a"), F.col("embedding").alias("va")
-    )
-    pb = pool.select(
-        F.col("vec_id").alias("b"), F.col("embedding").alias("vb")
-    )
-    # sims is likewise referenced by every greedy round — even over the
-    # pinned pool, each reference re-planned and re-ran the O(pool²)
-    # non-equi join (the after-plan still carried 400 Exchange refs
-    # with only the pool pinned). A second pin of the O(pool²)=380-row
-    # frame makes every round a join of two tiny checkpoint scans.
-    sims = pin(
-        pa.join(pb, F.col("a") != F.col("b"))
-        .select(
-            "a",
-            "b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
-        )
-    )
-    pool_slim = pool.select("vec_id", "rel")
-    lam, mu = _MMR_LAMBDA, 1.0 - _MMR_LAMBDA
-    pick = (
-        pool_slim.orderBy(F.desc("rel"), F.asc("vec_id"))
-        .limit(1)
-        .select(
-            F.lit(1).cast("long").alias("rank"),
-            "vec_id",
-            "rel",
             F.lit(0.0).alias("msim"),
-            F.round(F.lit(lam) * F.col("rel"), 6).alias("score"),
+            "embedding",
         )
     )
-    # each pick is itself pinned (a 1-row job per round): pick_k's
-    # lineage nests every earlier round through sel, so even over
-    # pinned pool/sims the unioned final plan re-planned and re-ran
-    # the whole greedy recursion per reference (320 Exchange refs with
-    # only pool+sims pinned; 24 after)
-    pick = pin(pick)
-    out = pick
-    sel = pick.select("vec_id")
-    for k in range(2, _MMR_K + 1):
-        cand = pool_slim.join(sel, "vec_id", "left_anti")
-        ms = (
-            cand.join(sims, cand["vec_id"] == sims["a"])
-            .join(sel.select(F.col("vec_id").alias("b_sel")),
-                  F.col("b") == F.col("b_sel"))
-            .groupBy(cand["vec_id"].alias("vec_id"), "rel")
-            .agg(F.max("sim").alias("msim"))
-        )
-        pick = (
-            ms.orderBy(
-                F.desc(F.lit(lam) * F.col("rel") - F.lit(mu) * F.col("msim")),
-                F.asc("vec_id"),
+    pool = F.col("pool")
+    # every pick is built whole before its argmax, and each argmax is
+    # used once: reading fields off a shared argmax Column would repeat
+    # the whole round in the plan once per field
+    pick1 = _argmax(
+        F.transform(pool, lambda c: _pick(F.lit(1), c)), lambda p: p["rel"]
+    )
+
+    def step(picks: Column, rank: Column) -> Column:
+        def msim(c: Column) -> Column:
+            return F.array_max(
+                F.transform(
+                    picks,
+                    lambda p: F.round(cosine(c["embedding"], p["embedding"]), 6),
+                )
             )
-            .limit(1)
-            .select(
-                F.lit(k).cast("long").alias("rank"),
-                "vec_id",
-                "rel",
-                "msim",
-                F.round(
-                    F.lit(lam) * F.col("rel") - F.lit(mu) * F.col("msim"), 6
-                ).alias("score"),
-            )
+
+        cands = F.filter(
+            pool,
+            lambda c: ~F.exists(picks, lambda p: p["vec_id"] == c["vec_id"]),
         )
-        pick = pin(pick)
-        out = out.unionByName(pick)
-        sel = sel.unionByName(pick.select("vec_id"))
-    return out
+        sims = F.transform(cands, lambda c: c.withField("msim", msim(c)))
+        best = _argmax(F.transform(sims, lambda c: _pick(rank, c)), _mmr)
+        return F.concat(picks, F.array(best))
+
+    picks = F.aggregate(F.sequence(F.lit(2), F.lit(_MMR_K)), F.array(pick1), step)
+    return (
+        scored.orderBy(F.desc("rel"), F.asc("vec_id"))
+        .limit(_MMR_POOL)
+        .agg(F.collect_list(F.struct(*scored.columns)).alias("pool"))
+        # a pool smaller than k runs out of candidates: its later
+        # rounds pick NULL and are sliced off
+        .select(F.explode(F.slice(picks, 1, F.size(pool))).alias("p"))
+        .select("p.rank", "p.vec_id", "p.rel", "p.msim", "p.score")
+    )

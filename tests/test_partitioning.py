@@ -235,7 +235,14 @@ def test_shuffle_width_knob_hash_equal(spark, sf_dir, monkeypatch):
     # (b) non-default width => hash-equal output (runtime-settable conf
     # on a sibling session sharing the SparkContext)
     _ensure_loaded()
-    names = ("order_revenue", "regional_supplier_revenue", "token_stats")
+    # mmr_rerank: its greedy fold must not depend on the order
+    # collect_list gathers the candidate pool in
+    names = (
+        "order_revenue",
+        "regional_supplier_revenue",
+        "token_stats",
+        "mmr_rerank",
+    )
 
     def run_all(s):
         return {

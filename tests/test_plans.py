@@ -114,11 +114,10 @@ INTENTIONAL_BNLJ = {
     "cosine_topk",
     "embedding_near_dups",
     "knn_classify",
-    # (round 9: retrieval_eval/mmr_rerank pin their brute-force arms,
-    # so the BNLJ executes inside the pin and no longer appears in the
-    # FINAL plan — entries kept for the documented baseline inside)
+    # (round 9: retrieval_eval pins its brute-force arm, so the BNLJ
+    # executes inside the pin and no longer appears in the FINAL plan —
+    # entry kept for the documented baseline inside)
     "retrieval_eval",
-    "mmr_rerank",
     # (b) iterative bcast_params chains (see functions/scalars.py)
     "bpe_merge_training",
     "gbm_stumps",
@@ -320,6 +319,21 @@ def test_plan_red_flag_sweep(spark, sf_dir):
     with ThreadPoolExecutor(max_workers=8) as pool:
         failures = [m for m in pool.map(check, sorted(REGISTRY)) if m]
     assert not failures, "\n".join(failures)
+
+
+def test_mmr_rerank_build_fires_at_most_the_loader_job(spark, sf_dir):
+    """Building mmr_rerank runs no Spark job of its own: the greedy
+    rounds are an array fold inside the plan, not pinned frames. The
+    one job allowed is the table loader's parquet schema inference."""
+    sc = spark.sparkContext
+    group = "test_plans.mmr_rerank_build"
+    sc.setJobGroup(group, "build mmr_rerank")
+    try:
+        REGISTRY["mmr_rerank"].fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 1, f"{len(jobs)} jobs fired while building"
 
 
 def test_q3_pushdown_broadcast_topk(spark, sf_dir):

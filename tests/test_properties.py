@@ -2461,6 +2461,97 @@ def test_mmr_rerank_greedy_replay_and_diversity(spark, sf_dir):
     assert pdf["vec_id"].is_unique
 
 
+def _write_embeddings(path, ids, vecs):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(
+                    [v.tolist() for v in vecs], pa.list_(pa.float32())
+                ),
+                "label": pa.array([0] * len(ids), pa.int32()),
+            }
+        ),
+        path,
+    )
+
+
+@pytest.mark.parametrize("shape", ["triplets", "short_pool"])
+def test_mmr_rerank_vec_id_breaks_ties_like_oracle(spark, tmp_path, shape):
+    """mmr_rerank on a corpus of exact duplicates equals _MMR_ORACLE in
+    DuckDB over the same file. ``triplets``: every vector appears three
+    times under scattered ids, written in shuffled order, so in every
+    round the best score is shared by a whole triplet and only vec_id
+    picks the winner (the pool boundary splits a triplet by vec_id too).
+    ``short_pool``: three candidates, fewer than k, so the later rounds
+    find nothing to pick."""
+    import duckdb
+    import numpy as np
+
+    from dissertation_iceberg_spark.queries.retrieval_ops import (
+        _MMR_ORACLE,
+        _MMR_QUERY_ID,
+        mmr_rerank,
+    )
+    from tools.parity import compare_frames
+
+    rng = np.random.default_rng(7)
+    n_groups, copies = (12, 3) if shape == "triplets" else (3, 1)
+    base = rng.standard_normal((n_groups, 64)).astype("float32")
+    ids = [_MMR_QUERY_ID] + [
+        1 + g + n_groups * c for c in range(copies) for g in range(n_groups)
+    ]
+    vecs = [rng.standard_normal(64).astype("float32")] + [
+        base[g] for _ in range(copies) for g in range(n_groups)
+    ]
+    order = rng.permutation(len(ids))
+    _write_embeddings(
+        tmp_path / "embeddings.parquet",
+        [ids[i] for i in order],
+        [vecs[i] for i in order],
+    )
+
+    sp = mmr_rerank(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"'{tmp_path / 'embeddings.parquet'}'"
+    )
+    du = con.execute(_MMR_ORACLE).fetchdf()
+    ok, msg = compare_frames(sp, du)
+    assert ok, msg
+    if shape == "short_pool":
+        assert sorted(sp["rank"]) == [1, 2, 3]
+        return
+    assert len(sp) == 5
+    group = {i: (i - 1) % n_groups for i in ids[1:]}
+    picked = [group[i] for i in sp["vec_id"]]
+    # each round won by a different triplet, through its smallest id
+    assert len(set(picked)) == len(picked)
+    assert all(i - 1 < n_groups for i in sp["vec_id"])
+
+
+def test_mmr_argmax_ties_to_smallest_id_in_any_order(spark):
+    """The fold's argmax gives the same element whatever order the
+    array holds: highest key, then smallest vec_id, NaN above every
+    number as in ``ORDER BY key DESC``."""
+    from dissertation_iceberg_spark.queries.retrieval_ops import _argmax
+
+    rows = [(5, 0.5), (3, 0.5), (9, 0.25), (4, 0.5), (8, -1.0)]
+    for items, want in ((rows, 3), (rows[::-1], 3), (rows + [(11, float("nan"))], 11)):
+        arr = F.array(
+            *[
+                F.struct(F.lit(i).cast("long").alias("vec_id"), F.lit(k).alias("k"))
+                for i, k in items
+            ]
+        )
+        got = spark.range(1).select(_argmax(arr, lambda x: x["k"])["vec_id"])
+        assert got.first()[0] == want, items
+
+
 def test_kruskal_wallis_matches_numpy_replay(spark, sf_dir):
     """kruskal_wallis equals a numpy midrank replay (scipy-free):
     pooled average ranks, per-group rank sums, tie-corrected H."""
