@@ -2541,10 +2541,13 @@ def test_mmr_argmax_ties_to_smallest_id_in_any_order(spark):
     from dissertation_iceberg_spark.queries.retrieval_ops import _argmax
 
     rows = [(5, 0.5), (3, 0.5), (9, 0.25), (4, 0.5), (8, -1.0)]
-    for items, want in ((rows, 3), (rows[::-1], 3), (rows + [(11, float("nan"))], 11)):
+    cases = ((rows, 3), (rows[::-1], 3), (rows + [(11, float("nan"))], 11))
+    for items, want in cases:
         arr = F.array(
             *[
-                F.struct(F.lit(i).cast("long").alias("vec_id"), F.lit(k).alias("k"))
+                F.struct(
+                    F.lit(i).cast("long").alias("vec_id"), F.lit(k).alias("k")
+                )
                 for i, k in items
             ]
         )
