@@ -10,6 +10,11 @@
 - LSH-bucketed variant (scale path): random-hyperplane signs bucket
   vectors; candidates only within a bucket. Hyperplanes are a tiny
   literal array (deterministic seed), applied JVM-side.
+- the exact integer Lloyd kernel (:func:`quantize`,
+  :func:`seed_centroids`, :func:`lloyd_num`, :func:`lloyd_argmin`,
+  :func:`lloyd_recenter`, composed by :func:`lloyd2`): the ONE
+  definition of each Lloyd step, behind IVF, k-means, SemDeDup, ARI,
+  PQ and the label-centroid audits.
 - IVF (scale path): a deterministic integer-quantized Lloyd build
   (:func:`build_ivf_index_exact`) and its probe
   (:func:`ivf_search_exact`) — the only IVF operator; it is
@@ -192,6 +197,108 @@ def hyperplane_lsh_buckets(
     ).select(id_col, vec_col, "tb.tbl", "tb.bucket")
 
 
+# --------------------------------------------------------------------------
+# The exact integer Lloyd kernel: the ONE definition of quantization,
+# first-k seeding, the distance numerator, the argmin and recentering,
+# shared by the IVF build/probe, k-means (kmeans_cluster_stats,
+# semdedup_prune, ari_kmeans_vs_labels), product quantization and the
+# label-centroid audits. Vectors ride long-form (..., pos, x) on the
+# integer grid; centroids ride as un-normalized (..., pos, s, n)
+# integer sums — never floats — so every step is exact integer
+# arithmetic plus one correctly-rounded double division, and each
+# DuckDB oracle replays it bit for bit at any parallelism.
+# --------------------------------------------------------------------------
+
+QSCALE = 10_000  # quantization grid: |x| <= 0.53 -> |xq| <= 5300
+
+
+def quantize(x: Column) -> Column:
+    """One component on the integer 1e-4 grid: round(x * QSCALE) as
+    BIGINT over a double cast (the oracles' CAST(round(...) AS BIGINT))."""
+    return F.round(x.cast("double") * QSCALE).cast("long")
+
+
+def seed_centroids(
+    base: DataFrame, k: int, cluster: str, id_col: str = "vec_id"
+) -> DataFrame:
+    """First-k-by-id seeding: the ``k`` lowest-``id_col`` rows of
+    ``base`` (which carries the quantized ``qv`` array) as unit-count
+    centroids (cluster, pos, s, n=1), numbered 0..k-1 by id —
+    TakeOrderedAndProject, never a global window over the corpus."""
+    seeds = (
+        base.orderBy(id_col)
+        .limit(k)
+        .select(
+            (F.row_number().over(Window.orderBy(id_col)) - 1).alias(cluster), "qv"
+        )
+    )
+    return seeds.select(cluster, F.posexplode("qv").alias("pos", "s")).withColumn(
+        "n", F.lit(1).cast("long")
+    )
+
+
+def lloyd_num(
+    xe: DataFrame, cent: DataFrame, by: list[str], keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Quantized squared distance of every vector to every centroid:
+    ``xe ⋈ broadcast(cent)`` on ``keys`` + pos, then
+    num = Σ (x·n − s)² per (``by``, ``keys``, n) and dist = num / n².
+
+    ``by`` names the vector id and the centroid id; ``keys`` are the
+    columns both sides share (PQ's subspace ``sub``, or a label when
+    each vector meets only its own centroid). num accumulates as
+    decimal(38,0): each squared term is still a BIGINT (it needs
+    |x·n − s| < 3.03e9), but their sum grows with list size n and
+    overflows int64 on large lists (DuckDB sums BIGINT into HUGEINT,
+    so the oracles agree). dist is one
+    correctly-rounded double op, so any ranking by (dist, cluster) is
+    identical in Spark and DuckDB."""
+    e = F.col("x") * F.col("n") - F.col("s")
+    return (
+        xe.join(F.broadcast(cent), [*keys, "pos"])
+        .groupBy(*by, *keys, "n")
+        .agg(F.sum((e * e).cast("decimal(38,0)")).alias("num"))
+        .withColumn("dist", F.col("num").cast("double") / (F.col("n") * F.col("n")))
+    )
+
+
+def lloyd_argmin(d: DataFrame, ids: list[str], cluster: str) -> DataFrame:
+    """Nearest centroid per ``ids`` row of a :func:`lloyd_num` frame:
+    min(struct(dist, cluster, n, num)), so ties go to the lower
+    cluster id. (dist, cluster) is unique per row, so n and num ride
+    along without changing the pick. Output: ids, cluster, n, num."""
+    m = F.min(F.struct("dist", cluster, "n", "num")).alias("m")
+    return d.groupBy(*ids).agg(m).select(*ids, f"m.{cluster}", "m.n", "m.num")
+
+
+def lloyd_recenter(
+    assigned: DataFrame, cluster: str, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """New centroids from long-form assigned vectors: (``keys``,
+    cluster, pos) -> s = Σ x, n = count, the un-normalized integer
+    form :func:`lloyd_num` consumes."""
+    return assigned.groupBy(*keys, cluster, "pos").agg(
+        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
+    )
+
+
+def lloyd2(
+    xe: DataFrame,
+    c0: DataFrame,
+    id_col: str,
+    cluster: str,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Two exact Lloyd passes from the centroids ``c0``: assign,
+    recenter, assign. Returns the final assignment (id_col, keys,
+    cluster, n, num). Each pass is one broadcast join + one int-sum
+    shuffle keyed on (cluster, pos)."""
+    ids = [id_col, *keys]
+    a1 = lloyd_argmin(lloyd_num(xe, c0, [id_col, cluster], keys), ids, cluster)
+    c1 = lloyd_recenter(a1.select(*ids, cluster).join(xe, ids), cluster, keys)
+    return lloyd_argmin(lloyd_num(xe, c1, [id_col, cluster], keys), ids, cluster)
+
+
 class IVFIndex:
     """Persistable IVF index from :func:`build_ivf_index_exact`:
     inverted lists (corpus bucketed by nearest centroid) + the tiny
@@ -226,85 +333,30 @@ class IVFIndex:
         )
 
 
-def _lloyd_dist(xe: DataFrame, cent: DataFrame) -> DataFrame:
-    """Quantized squared distance of every (``__id``, pos, x) vector to
-    every centroid (the kmeans_cluster_stats recipe,
-    queries/extensions.py): centroids ride as un-normalized
-    (list_id, pos, s, n) integer sums, the distance numerator
-    sum((x*n - s)^2) is an exact int, and num/n^2 is one
-    correctly-rounded double op — so any ranking by (dist, list_id) is
-    identical in Spark and DuckDB at any parallelism."""
-    e = F.col("x") * F.col("n") - F.col("s")
-    d = (
-        xe.join(F.broadcast(cent), "pos")
-        .select("__id", "list_id", "n", e.alias("e"))
-        .groupBy("__id", "list_id", "n")
-        .agg(F.sum(F.col("e") * F.col("e")).alias("num"))
-    )
-    dist = (F.col("num").cast("double") / (F.col("n") * F.col("n"))).alias(
-        "dist"
-    )
-    return d.select("__id", dist, "list_id")
-
-
-def _lloyd_assign(xe: DataFrame, cent: DataFrame) -> DataFrame:
-    """One Lloyd assignment pass: each vector's nearest centroid,
-    tie-broken by list_id."""
-    return (
-        _lloyd_dist(xe, cent)
-        .groupBy("__id")
-        .agg(F.min(F.struct("dist", "list_id")).alias("m"))
-        .select("__id", F.col("m.list_id").alias("list_id"))
-    )
-
-
 def build_ivf_index_exact(
     corpus: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_lists: int = 16,
-    scale: int = 10_000,
 ) -> IVFIndex:
     """Deterministic IVF build: 2 integer-quantized Lloyd iterations
-    seeded from the first ``n_lists`` ids — bit-reproducible on any
-    cluster size AND replayable in plain SQL, which is what lets the
-    registered ivf_ann_topk query carry a DuckDB oracle. This is the
-    only IVF build: a float k-means (MLlib's k-means|| init) is not
-    cross-engine reproducible.
+    (:func:`lloyd2`) seeded from the first ``n_lists`` ids —
+    bit-reproducible on any cluster size AND replayable in plain SQL,
+    which is what lets the registered ivf_ann_topk query carry a DuckDB
+    oracle. This is the only IVF build: a float k-means (MLlib's
+    k-means|| init) is not cross-engine reproducible.
 
     The returned index stores centroids as un-normalized integer
     (list_id, pos, s, n) component sums — never floats — so a saved
     index reloads bit-identically. Scale shape per iteration: one
     broadcast join + one int-sum shuffle keyed on (list_id, pos),
     identical to kmeans_cluster_stats."""
-    qv = F.transform(
-        F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long")
+    base = corpus.select(
+        F.col(id_col).alias("__id"), F.transform(F.col(vec_col), quantize).alias("qv")
     )
-    base = corpus.select(F.col(id_col).alias("__id"), qv.alias("qv"))
     xe = base.select("__id", F.posexplode("qv").alias("pos", "x"))
-    seeds = (
-        base.orderBy("__id")
-        .limit(n_lists)
-        .select(
-            (F.row_number().over(Window.orderBy("__id")) - 1).alias("list_id"),
-            "qv",
-        )
-    )
-    c0 = seeds.select(
-        "list_id", F.posexplode("qv").alias("pos", "s")
-    ).withColumn("n", F.lit(1).cast("long"))
-    a1 = _lloyd_assign(xe, c0)
-    c1 = (
-        a1.join(xe, "__id")
-        .groupBy("list_id", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    a2 = _lloyd_assign(xe, c1)
-    c2 = (
-        a2.join(xe, "__id")
-        .groupBy("list_id", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
+    a2 = lloyd2(xe, seed_centroids(base, n_lists, "list_id", "__id"), "__id", "list_id")
+    c2 = lloyd_recenter(a2.select("__id", "list_id").join(xe, "__id"), "list_id")
     lists = corpus.join(
         a2.select(F.col("__id").alias(id_col), "list_id"), id_col
     ).select(id_col, vec_col, "list_id")
@@ -317,27 +369,21 @@ def ivf_search_exact(
     query_id_col: str = "query_id",
     k: int = 3,
     n_probe: int = 4,
-    scale: int = 10_000,
 ) -> DataFrame:
-    """Probe an exact-build IVF index: quantized integer distance to
-    the (s, n) centroids picks each query's ``n_probe`` lists (same
-    exact argmin arithmetic as the build), then the probed lists
-    rerank with the standard exact cosine (double casts, 6dp round,
-    neighbor-id tiebreak). Self-matches are excluded."""
+    """Probe an exact-build IVF index: the Lloyd distance
+    (:func:`lloyd_num`) to the (s, n) centroids picks each query's
+    ``n_probe`` lists, ties to the lower list_id (same exact
+    arithmetic as the build), then the probed lists rerank with the
+    standard exact cosine (double casts, 6dp round, neighbor-id
+    tiebreak). Self-matches are excluded."""
     id_col, vec_col = index.id_col, index.vec_col
     q = queries.select(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qvec")
     )
     qxe = q.select(
-        F.col("qid").alias("__id"),
-        F.posexplode(
-            F.transform(
-                F.col("qvec"),
-                lambda x: F.round(x.cast("double") * scale).cast("long"),
-            )
-        ).alias("pos", "x"),
+        "qid", F.posexplode(F.transform("qvec", quantize)).alias("pos", "x")
     )
-    d = _lloyd_dist(qxe, index.cent_df).withColumnRenamed("__id", "qid")
+    d = lloyd_num(qxe, index.cent_df, ["qid", "list_id"])
     probes = topk_per_query(d, n_probe, F.asc("dist"), F.asc("list_id"))
     probes = probes.select("qid", "list_id").join(q, "qid")
     pairs = index.lists.join(F.broadcast(probes), "list_id").where(

@@ -20,6 +20,11 @@ from dissertation_iceberg_spark.io import load_table, lob_events, spread
 from dissertation_iceberg_spark.operators.similarity import (
     cosine,
     int_dot,
+    lloyd2,
+    lloyd_num,
+    lloyd_recenter,
+    quantize,
+    seed_centroids,
     topk_per_query,
 )
 from dissertation_iceberg_spark.functions.scalars import (
@@ -628,8 +633,9 @@ QUALIFY rnk <= {_IVF_K}
 @register("ivf_ann_topk", oracle=_IVF_ORACLE)
 def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k: inverted lists from a DETERMINISTIC
-    integer-quantized 2-iteration Lloyd build (the kmeans_cluster_stats
-    recipe — build_ivf_index_exact), quantized-integer probe ranking,
+    integer-quantized 2-iteration Lloyd build (build_ivf_index_exact on
+    the shared Lloyd kernel, operators/similarity.py), quantized-integer
+    probe ranking,
     exact-cosine rerank inside the n_probe lists. The oracle replays
     build + probe + rerank in SQL, moving this off the rows-only list
     (round-3 verdict item 3). This exact build is the only IVF
@@ -718,7 +724,6 @@ def trading_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KM_K = 8  # FLOOR on the cluster count, not the deployment k
 KM_TARGET_CLUSTER = 256  # target mean cluster size that derives k
-KM_SCALE = 10_000  # quantization: |x| <= 0.53 -> |xq| <= 5300
 
 # Corpus-scaled seed selection (round 7, judge item 1 — the jaccard-cap
 # move applied to the last quadratic registration): k is DERIVED from
@@ -758,57 +763,29 @@ def _km_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
 
     Round-8 optimization (guide §2.4 — remove shuffles outright): the
     parallelism-restoring repartition hashes on ``vec_id`` instead of
-    round-robin. Every per-``vec_id`` aggregation in ``_km_assign``
-    (``groupBy(vec_id, cluster, n)`` then ``groupBy(vec_id)``) and the
-    centroid-rebuild join (``a1.join(xe, "vec_id")``) are then
-    satisfied by this ONE exchange — the executed 2-iteration Lloyd
+    round-robin. Every per-``vec_id`` aggregation of the Lloyd pass
+    (``lloyd_num``'s ``groupBy(vec_id, cluster, n)`` then
+    ``lloyd_argmin``'s ``groupBy(vec_id)``) and the centroid-rebuild
+    join (``a1.join(xe, "vec_id")``) are then satisfied by this ONE
+    exchange — the executed 2-iteration Lloyd
     drops from 12 Exchange nodes to 8 (plans/r08/), and the three
     remaining non-broadcast exchanges are O(k x dims) centroid frames,
     not corpus-scaled. k comes from a footer count of the raw table."""
     raw = load_table(spark, sf_dir, "embeddings")
     k = km_k_for(raw)
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * KM_SCALE).cast("long"),
-    )
+    qv = F.transform(F.col("embedding"), quantize)
     base = raw.select("vec_id", "label", qv.alias("qv")).repartition(
         spark.sparkContext.defaultParallelism, "vec_id"
     )
     return base, k
 
 
-def _km_seeds(base, k: int | None = None) -> "DataFrame":
-    """First-k-by-vec_id seed frame (cluster, qv) with corpus-scaled k —
-    TakeOrderedAndProject, never a global window over the corpus."""
-    from pyspark.sql import Window
-
-    return (
-        base.orderBy("vec_id")
-        .limit(km_k_for(base) if k is None else k)
-        .select(
-            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias(
-                "cluster"
-            ),
-            "qv",
-        )
-    )
-
-
-def _lloyd2(base: DataFrame, k: int, keep_stats: bool = False) -> DataFrame:
-    """The exact 2-iteration integer Lloyd assignment shared by
-    kmeans_cluster_stats / semdedup_prune / ari_kmeans_vs_labels."""
+def _lloyd2(base: DataFrame, k: int) -> DataFrame:
+    """The exact 2-iteration integer Lloyd assignment (vec_id, cluster,
+    n, num) shared by kmeans_cluster_stats / semdedup_prune /
+    ari_kmeans_vs_labels, seeded from the first k vec_ids."""
     xe = base.select("vec_id", F.posexplode("qv").alias("pos", "x"))
-    seeds = _km_seeds(base, k)
-    c0 = seeds.select(
-        "cluster", F.posexplode("qv").alias("pos", "s")
-    ).withColumn("n", F.lit(1).cast("long"))
-    a1 = _km_assign(xe, c0, keep_stats=False)
-    c1 = (
-        a1.join(xe, "vec_id")
-        .groupBy("cluster", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    return _km_assign(xe, c1, keep_stats=keep_stats)
+    return lloyd2(xe, seed_centroids(base, k, "cluster"), "vec_id", "cluster")
 
 
 _KM_ORACLE = f"""
@@ -866,33 +843,6 @@ FROM stats s JOIN maj m USING (cluster_id)
 """
 
 
-def _km_assign(xe: DataFrame, cent: DataFrame, keep_stats: bool) -> DataFrame:
-    """One Lloyd assignment pass against centroids held as (cluster,
-    pos, s, n) — i.e. un-normalized integer component sums. Distance
-    comparison uses sum_d (x*n - s)^2 / n^2: the numerator is an exact
-    int64 (quantized inputs), the division is a single correctly-
-    rounded double op, so argmin ties and order agree across engines
-    and partitionings."""
-    e = F.col("x") * F.col("n") - F.col("s")
-    d = (
-        xe.join(F.broadcast(cent), "pos")
-        .select("vec_id", "cluster", "n", e.alias("e"))
-        .groupBy("vec_id", "cluster", "n")
-        .agg(F.sum(F.col("e") * F.col("e")).alias("num"))
-    )
-    dist = (F.col("num").cast("double") / (F.col("n") * F.col("n"))).alias("dist")
-    fields = ["dist", "cluster", "n", "num"] if keep_stats else ["dist", "cluster"]
-    picked = (
-        d.select("vec_id", dist, "cluster", "n", "num")
-        .groupBy("vec_id")
-        .agg(F.min(F.struct(*fields)).alias("m"))
-    )
-    out = [F.col("vec_id"), F.col("m.cluster").alias("cluster")]
-    if keep_stats:
-        out += [F.col("m.n").alias("n"), F.col("m.num").alias("num")]
-    return picked.select(*out)
-
-
 @register("kmeans_cluster_stats", oracle=_KM_ORACLE)
 def kmeans_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means (2 Lloyd iterations, corpus-scaled k =
@@ -910,11 +860,11 @@ def kmeans_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a2 feeds TWO rollups (stats and the label join) — pin once so the
     # 2-iteration Lloyd is not re-derived per consumer (the semdedup
     # precedent; O(N) narrow rows, write volume linear in the corpus)
-    a2 = _lloyd2(base, k, keep_stats=True).transform(pin)
+    a2 = _lloyd2(base, k).transform(pin)
 
     stats = a2.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        F.sum(F.col("num").cast("decimal(38,0)")).alias("sum_num"),
+        F.sum("num").alias("sum_num"),
         F.max("n").alias("n"),
     )
     lab = (
@@ -1229,69 +1179,19 @@ FROM a2 GROUP BY 1, 2
 
 def _pq_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared PQ trainer: returns (xe, a2) — the long-form quantized
-    (vec, sub, pos, x) frame and the final assignment table carrying
-    (vec_id, sub, cw, n, num) after one Lloyd refinement. Consumed by
-    `pq_codebooks` (codebook health) and `pq_adc_topk` (ADC search)."""
+    (vec_id, pos, x, sub) frame and the final assignment table carrying
+    (vec_id, sub, cw, n, num) after one Lloyd refinement: the shared
+    Lloyd kernel with the subspace ``sub`` as one more key column.
+    Consumed by `pq_codebooks` (codebook health) and `pq_adc_topk`
+    (ADC search)."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    q = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * KM_SCALE).cast("long"),
-        ).alias("qv"),
+    q = emb.select("vec_id", F.transform("embedding", quantize).alias("qv"))
+    sub = F.expr(f"pos div {PQ_D}").alias("sub")
+    xe = q.select("vec_id", F.posexplode("qv").alias("pos", "x")).withColumn(
+        "sub", sub
     )
-    xe = q.select(
-        "vec_id",
-        F.posexplode("qv").alias("pos0", "x"),
-    ).select(
-        "vec_id",
-        F.expr(f"pos0 div {PQ_D}").alias("sub"),
-        (F.col("pos0") + 1).alias("pos"),
-        "x",
-    )
-    seeds = (
-        q.orderBy("vec_id")
-        .limit(PQ_K)
-        .withColumn(
-            "cw",
-            F.row_number().over(Window.orderBy("vec_id")) - 1,
-        )
-    )
-    c0 = seeds.select(
-        "cw", F.posexplode("qv").alias("pos0", "s")
-    ).select(
-        F.expr(f"pos0 div {PQ_D}").alias("sub"),
-        "cw",
-        (F.col("pos0") + 1).alias("pos"),
-        "s",
-        F.lit(1).cast("long").alias("n"),
-    )
-
-    def assign(cent: DataFrame) -> DataFrame:
-        e = F.col("x") * F.col("n") - F.col("s")
-        d = (
-            xe.join(F.broadcast(cent), ["sub", "pos"])
-            .groupBy("vec_id", "sub", "cw", "n")
-            .agg(F.sum(e * e).alias("num"))
-        )
-        w = Window.partitionBy("vec_id", "sub").orderBy(
-            F.col("num").cast("double") / (F.col("n") * F.col("n")),
-            F.col("cw"),
-        )
-        return (
-            d.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    a1 = assign(c0).select("vec_id", "sub", "cw")
-    c1 = (
-        a1.join(xe, ["vec_id", "sub"])
-        .groupBy("sub", "cw", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    a2 = assign(c1)
-    return xe, a2
+    c0 = seed_centroids(q, PQ_K, "cw").withColumn("sub", sub)
+    return xe, lloyd2(xe, c0, "vec_id", "cw", keys=("sub",))
 
 
 @register("pq_codebooks", oracle=_PQ_ORACLE)
@@ -1304,7 +1204,8 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ivf_ann_topk) is the standard 100 TB ANN memory layout (IVF-PQ):
     the residual rerank reads 4-byte codes, not raw vectors.
 
-    Determinism is the kmeans_cluster_stats recipe per subspace:
+    Determinism is the shared integer Lloyd kernel
+    (operators/similarity.py) with the subspace as a key column:
     integer-quantized components, centroids as un-normalized (sum, n)
     pairs, distances compared as exact-int numerator over n^2 with a
     single correctly-rounded double division, argmin tie-broken by
@@ -1663,33 +1564,19 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so each ADC sum is an exact 8-term integer sum; ranks tie-break on
     neighbor id.""".format(m=PQ_M, k=PQ_ADC_K, k_cw=PQ_K)
     xe, a2 = _pq_fit(spark, sf_dir)
-    c2 = (
-        a2.join(xe, ["vec_id", "sub"])
-        .groupBy("sub", "cw", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
+    codes = a2.select("vec_id", "sub", "cw")
+    c2 = lloyd_recenter(codes.join(xe, ["vec_id", "sub"]), "cw", ("sub",))
     qxe = xe.filter(F.col("vec_id") % PQ_ADC_QUERY_MOD == 0).select(
         F.col("vec_id").alias("qid"), "sub", "pos", "x"
     )
-    e = F.col("x") * F.col("n") - F.col("s")
-    dtab = (
-        qxe.join(F.broadcast(c2), ["sub", "pos"])
-        .groupBy("qid", "sub", "cw", "n")
-        .agg(F.sum(e * e).alias("num"))
-    )
-    dmicro = dtab.select(
+    dmicro = lloyd_num(qxe, c2, ["qid", "cw"], ("sub",)).select(
         "qid",
         "sub",
         "cw",
-        F.round(
-            F.col("num").cast("double") / (F.col("n") * F.col("n")) / 1e8 * 1e6
-        )
-        .cast("long")
-        .alias("d_micro"),
+        F.round(F.col("dist") / 1e8 * 1e6).cast("long").alias("d_micro"),
     )
     adc = (
-        a2.select("vec_id", "sub", "cw")
-        .join(F.broadcast(dmicro), ["sub", "cw"])
+        codes.join(F.broadcast(dmicro), ["sub", "cw"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d_micro").cast("long").alias("adc_micro"))
@@ -1851,7 +1738,7 @@ def embedding_prefix_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     x = emb.select(F.posexplode("embedding").alias("dim", "v")).select(
         "dim",
-        F.round(F.col("v").cast("double") * 1e4).cast("long").alias("q"),
+        quantize(F.col("v")).alias("q"),
     )
     d = x.groupBy("dim").agg(F.sum(F.col("q") * F.col("q")).alias("e"))
     tot = d.agg(F.sum("e").alias("te"))
@@ -1980,10 +1867,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterations as CTEs. Headroom: |w| <= d*max|G|*VSCALE ~ 1e18 at
     50k vectors — above that, drop VSCALE a decade."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * 1e4).cast("long"),
-    )
+    qv = F.transform(F.col("embedding"), quantize)
     xe = emb.select("vec_id", qv.alias("qv")).select(
         "vec_id", F.posexplode("qv").alias("pos0", "x")
     ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "x")
@@ -2135,33 +2019,16 @@ def silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     stated in the name).
 
     Parity: quantized components make every distance numerator an
-    exact BIGINT ((x*n - s)^2 over common denominator n^2); a, b and
+    exact integer (the shared Lloyd numerator: (x*n - s)^2 over common
+    denominator n^2, operators/similarity.py); a, b and
     the silhouette ratio are identical double expressions; s_i
     micro-rounds ONCE so the per-label mean is an exact integer sum.
     Residual: accepted half-ulp class on sqrt/division ties."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * 1e4).cast("long"),
-    )
-    xe = emb.select("vec_id", "label", qv.alias("qv")).select(
-        "vec_id",
-        "label",
-        F.posexplode("qv").alias("pos0", "x"),
-    ).select("vec_id", "label", (F.col("pos0") + 1).alias("pos"), "x")
-    cent = xe.groupBy(F.col("label").alias("c"), "pos").agg(
-        F.sum("x").cast("long").alias("s"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    err = F.col("x") * F.col("n") - F.col("s")
-    d = (
-        xe.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "c", "n")
-        .agg(
-            F.any_value("label").alias("label"),
-            F.sum(err * err).cast("long").alias("num"),
-        )
-    )
+    qv = F.transform(F.col("embedding"), quantize)
+    xe = emb.select("vec_id", "label", F.posexplode(qv).alias("pos", "x"))
+    cent = lloyd_recenter(xe, "label").withColumnRenamed("label", "c")
+    d = lloyd_num(xe, cent, ["vec_id", "label", "c"])
     dist = F.sqrt(F.col("num").cast("double")) / F.col("n")
     ab = d.groupBy("vec_id", "label").agg(
         F.min(F.when(F.col("c") == F.col("label"), dist)).alias("a"),
@@ -2869,8 +2736,9 @@ def geometric_median_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     not magnitude). Companion to label_centroid_drift (means).
 
     Run parity (the integer-quantized-iteration recipe): vectors live
-    on the 1e-4 grid; every distance numerator is an exact BIGINT sum
-    of squares; sqrt / the single division per weight are IEEE
+    on the 1e-4 grid; every distance numerator is the shared Lloyd
+    numerator (operators/similarity.py), an exact integer sum of
+    squares; sqrt / the single division per weight are IEEE
     exactly-rounded with identical shape in both engines; the
     Weiszfeld weights quantize to integers (round(1e8/(d+1)) — the +1
     grid unit is the standard singularity guard) so the weighted
@@ -2891,10 +2759,7 @@ def geometric_median_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kmeans_cluster_stats shape; nothing global, no iteration
     driver loop (iterations are unrolled in the plan)."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * KM_SCALE).cast("long"),
-    )
+    qv = F.transform(F.col("embedding"), quantize)
     xe = emb.select(
         "vec_id", "label", F.posexplode(qv).alias("pos", "x")
     ).withColumn("pos", F.col("pos") + 1)
@@ -2905,15 +2770,11 @@ def geometric_median_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (2 * den_col.cast("double"))
         ).cast("long")
 
-    m0 = xe.groupBy("label", "pos").agg(
-        F.sum("x").cast("long").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    e0 = F.col("x") * F.col("n") - F.col("s")
-    d1 = (
-        xe.join(F.broadcast(m0), ["label", "pos"])
-        .groupBy("vec_id", "label", "n")
-        .agg(F.sum(e0 * e0).cast("long").alias("num"))
-    )
+    def dist_num(cent: DataFrame) -> DataFrame:
+        # each vector against its OWN label's centroid: label is a key
+        return lloyd_num(xe, cent, ["vec_id"], ("label",))
+
+    d1 = dist_num(lloyd_recenter(xe, "label"))
     w1 = d1.select(
         "vec_id",
         F.round(
@@ -2933,17 +2794,16 @@ def geometric_median_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("w").cast("long").alias("tw"),
             )
         )
+        # the snapped median as a unit-count centroid (s = y, n = 1)
         return agg.select(
-            "label", "pos", rounddiv2(F.col("sw"), F.col("tw")).alias("y")
+            "label",
+            "pos",
+            rounddiv2(F.col("sw"), F.col("tw")).alias("s"),
+            F.lit(1).cast("long").alias("n"),
         )
 
     y1 = next_y(w1)
-    ey = F.col("x") - F.col("y")
-    d2 = (
-        xe.join(F.broadcast(y1), ["label", "pos"])
-        .groupBy("vec_id", "label")
-        .agg(F.sum(ey * ey).cast("long").alias("num"))
-    )
+    d2 = dist_num(y1)
     w2 = d2.select(
         "vec_id",
         F.round(
@@ -2953,18 +2813,13 @@ def geometric_median_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("w"),
     )
     y2 = next_y(w2)
-    d3 = (
-        xe.join(F.broadcast(y2), ["label", "pos"])
-        .groupBy("vec_id", "label")
-        .agg(
-            F.round(F.sqrt(F.sum(ey * ey).cast("double")))
-            .cast("long")
-            .alias("d_q")
-        )
+    d3 = dist_num(y2).select(
+        "label",
+        F.round(F.sqrt(F.col("num").cast("double"))).cast("long").alias("d_q"),
     )
     gm = y2.groupBy("label").agg(
         *[
-            F.max(F.when(F.col("pos") == j + 1, F.col("y"))).alias(f"g{j}")
+            F.max(F.when(F.col("pos") == j + 1, F.col("s"))).alias(f"g{j}")
             for j in range(4)
         ]
     )

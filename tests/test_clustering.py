@@ -95,3 +95,88 @@ def test_corpus_scaled_k_parity(spark, tmp_path):
     rows = REGISTRY["kmeans_cluster_stats"].fn(spark, d).collect()
     assert sum(r["n_vecs"] for r in rows) == n
     assert 8 < len(rows) <= 12
+
+
+def _write_embeddings(d, emb) -> None:
+    """A tmp sf dir holding only ``embeddings.parquet`` (vec_id = row
+    number, label = id mod 10) — enough for the embedding queries."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(d)
+    n = len(emb)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array(
+                    np.asarray(emb, "float32").tolist(), pa.list_(pa.float32())
+                ),
+                "label": pa.array((np.arange(n) % 10).tolist(), pa.int32()),
+            }
+        ),
+        f"{d}/embeddings.parquet",
+    )
+
+
+def _oracle_check(spark, d, name):
+    import duckdb
+
+    from tools.parity import compare_frames
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet'")
+    sp = REGISTRY[name].fn(spark, d).toPandas()
+    return compare_frames(sp, con.execute(REGISTRY[name].oracle).fetchdf())
+
+
+def test_lloyd_numerator_survives_int64_overflow(spark, tmp_path):
+    """The Lloyd distance numerator Σ(x·n − s)² is accumulated wider
+    than BIGINT. 16 planted groups of 4 vectors with components ±25000
+    (2.5e8 on the integer grid): every squared term (≤ (4 · 5e8)²)
+    fits in a BIGINT, but a vector's sum against another group's
+    centroid is ~1e20 and overflows int64 (ANSI: long overflow). The
+    IVF build must recover the planted groups as its lists, and the
+    registered ivf_ann_topk must match its DuckDB oracle (HUGEINT sum)."""
+    import numpy as np
+
+    from dissertation_iceberg_spark.io import load_table
+    from dissertation_iceberg_spark.operators.similarity import (
+        build_ivf_index_exact,
+    )
+
+    rng = np.random.default_rng(11)
+    signs = rng.choice([-1.0, 1.0], size=(16, 64))
+    group = np.arange(64) % 16  # ids 0..15 (the seeds) hit every group
+    emb = 25_000.0 * signs[group] + rng.integers(-50, 50, size=(64, 64))
+    d = str(tmp_path / "overflow")
+    _write_embeddings(d, emb)
+
+    index = build_ivf_index_exact(load_table(spark, d, "embeddings"))
+    got = {r["vec_id"]: r["list_id"] for r in index.lists.collect()}
+    assert got == {i: int(group[i]) for i in range(64)}
+
+    ok, msg = _oracle_check(spark, d, "ivf_ann_topk")
+    assert ok, msg
+
+
+def test_lloyd_argmin_ties_go_to_lower_id(spark, tmp_path):
+    """Seed ids 0..15 come in duplicate pairs (2c, 2c+1), so every
+    first-pass assignment ties between two clusters (k-means, IVF) or
+    two codewords in each subspace (PQ). The struct argmin must break
+    every tie to the lower id exactly as the oracles' row_number over
+    (dist, id) does."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    emb = rng.normal(0, 0.1, size=(100, 64))
+    emb[1:16:2] = emb[0:16:2]
+    d = str(tmp_path / "ties")
+    _write_embeddings(d, emb)
+
+    for name in ("kmeans_cluster_stats", "pq_codebooks", "ivf_ann_topk"):
+        ok, msg = _oracle_check(spark, d, name)
+        assert ok, (name, msg)

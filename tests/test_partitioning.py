@@ -236,12 +236,16 @@ def test_shuffle_width_knob_hash_equal(spark, sf_dir, monkeypatch):
     # on a sibling session sharing the SparkContext)
     _ensure_loaded()
     # mmr_rerank: its greedy fold must not depend on the order
-    # collect_list gathers the candidate pool in
+    # collect_list gathers the candidate pool in; pq_codebooks and
+    # ivf_ann_topk: the shared Lloyd argmin (a struct min) must pick
+    # the same centroid at any width
     names = (
         "order_revenue",
         "regional_supplier_revenue",
         "token_stats",
         "mmr_rerank",
+        "pq_codebooks",
+        "ivf_ann_topk",
     )
 
     def run_all(s):

@@ -5748,8 +5748,8 @@ def test_semdedup_prune_properties(spark, sf_dir):
     import numpy as np
 
     from dissertation_iceberg_spark.io import load_table, spread
+    from dissertation_iceberg_spark.operators.similarity import QSCALE
     from dissertation_iceberg_spark.queries.extensions import (
-        KM_SCALE,
         SD_TAU_MICRO,
         semdedup_prune,
     )
@@ -5766,7 +5766,7 @@ def test_semdedup_prune_properties(spark, sf_dir):
     # rebuild assignments via the same quantized 2-pass Lloyd
     q = np.array(
         [
-            np.round(np.asarray(v, dtype="float64") * KM_SCALE)
+            np.round(np.asarray(v, dtype="float64") * QSCALE)
             for v in emb["embedding"]
         ],
         dtype="int64",

@@ -1112,10 +1112,9 @@ def main() -> None:
 
             emb0 = _lt(spark, sf_dir, "embeddings").select("vec_id", "embedding")
             embr = replicate(emb0, r, {"vec_id": 10_000_000}).drop("__rep")
-            qvx = F.transform(
-                F.col("embedding"),
-                lambda x: F.round(x.cast("double") * 1e4).cast("long"),
-            )
+            from dissertation_iceberg_spark.operators.similarity import quantize
+
+            qvx = F.transform(F.col("embedding"), quantize)
             xeg = embr.select("vec_id", qvx.alias("qv")).select(
                 "vec_id", F.posexplode("qv").alias("pos", "x")
             ).persist()
@@ -1139,29 +1138,23 @@ def main() -> None:
             xeg.unpersist()
 
         if _want("adc_scan"):
+            from dissertation_iceberg_spark.operators.similarity import (
+                lloyd_num,
+                lloyd_recenter,
+            )
             from dissertation_iceberg_spark.queries.extensions import _pq_fit
 
             xe1, a21 = _pq_fit(spark, sf_dir)
             codes1 = a21.select("vec_id", "sub", "cw")
-            c2 = (
-                a21.join(xe1, ["vec_id", "sub"])
-                .groupBy("sub", "cw", "pos")
-                .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-            )
+            c2 = lloyd_recenter(codes1.join(xe1, ["vec_id", "sub"]), "cw", ("sub",))
             qxe = xe1.filter(F.col("vec_id") % 250 == 0).select(
                 F.col("vec_id").alias("qid"), "sub", "pos", "x"
             )
-            err = F.col("x") * F.col("n") - F.col("s")
             dmicro = (
-                qxe.join(F.broadcast(c2), ["sub", "pos"])
-                .groupBy("qid", "sub", "cw", "n")
-                .agg(F.sum(err * err).alias("num"))
+                lloyd_num(qxe, c2, ["qid", "cw"], ("sub",))
                 .select(
                     "qid", "sub", "cw",
-                    F.round(
-                        F.col("num").cast("double")
-                        / (F.col("n") * F.col("n")) / 1e8 * 1e6
-                    ).cast("long").alias("d_micro"),
+                    F.round(F.col("dist") / 1e8 * 1e6).cast("long").alias("d_micro"),
                 )
                 .persist()
             )
@@ -1198,12 +1191,17 @@ def main() -> None:
         # form of semdedup_prune's 100 TB story (the registered query
         # pins k=8 for the oracle; the knob is the deployment story)
         if _want("semdedup"):
-            from pyspark.sql import Window as W
-
+            from dissertation_iceberg_spark.operators.similarity import (
+                int_dot,
+                lloyd2,
+                lloyd_argmin,
+                lloyd_num,
+                lloyd_recenter,
+                quantize,
+                seed_centroids,
+            )
             from dissertation_iceberg_spark.queries.extensions import (
-                KM_SCALE,
                 SD_TAU_MICRO,
-                _km_assign,
             )
 
             es = replicate(emb, r, {"vec_id": 10_000_000})
@@ -1220,56 +1218,33 @@ def main() -> None:
             es = es.drop("__rep").persist()
             n_es = es.count()
             k_r = 8 * r
+            base = es.select(
+                "vec_id", F.transform("embedding", quantize).alias("qv")
+            )
+            xe2 = base.select("vec_id", F.posexplode("qv").alias("pos", "x"))
+            # seeds spread ACROSS replica blocks (8 per block —
+            # replicate() shifts vec_id by 10M per replica, so
+            # vec_id % 10M is the original id): first-k-by-id
+            # seeding would take every seed from block 0, leaving
+            # the displaced blocks to pile into megaclusters — and no
+            # real deployment seeds k-means from one corner of the
+            # corpus
+            c0 = seed_centroids(
+                base.filter(F.col("vec_id") % 10_000_000 < 8), k_r, "cluster"
+            )
+            nn = int_dot(F.col("qv"), F.col("qv")).alias("nn")
 
-            def semdedup():
-                qvv = F.transform(
-                    F.col("embedding"),
-                    lambda x: F.round(x.cast("double") * KM_SCALE).cast(
-                        "long"
-                    ),
+            def assign(xe, cent):
+                d = lloyd_num(xe, cent, ["vec_id", "cluster"])
+                return lloyd_argmin(d, ["vec_id"], "cluster")
+
+            def members(a):
+                return a.select("vec_id", "cluster").join(base, "vec_id").select(
+                    "cluster", "vec_id", "qv", nn
                 )
-                base = es.select("vec_id", qvv.alias("qv"))
-                xe2 = base.select(
-                    "vec_id", F.posexplode("qv").alias("pos", "x")
-                )
-                # seeds spread ACROSS replica blocks (8 per block —
-                # replicate() shifts vec_id by 10M per replica, so
-                # vec_id % 10M is the original id): first-k-by-id
-                # seeding would take every seed from block 0, leaving
-                # the displaced blocks to pile into megaclusters whose
-                # (x*n - s)^2 overflows int64 — and no real deployment
-                # seeds k-means from one corner of the corpus
-                seeds = (
-                    base.filter(F.col("vec_id") % 10_000_000 < 8)
-                    .orderBy("vec_id")
-                    .limit(k_r)
-                    .select(
-                        (
-                            F.row_number().over(W.orderBy("vec_id")) - 1
-                        ).alias("cluster"),
-                        "qv",
-                    )
-                )
-                c0 = seeds.select(
-                    "cluster", F.posexplode("qv").alias("pos", "s")
-                ).withColumn("n", F.lit(1).cast("long"))
-                a1 = _km_assign(xe2, c0, keep_stats=False)
-                c1 = (
-                    a1.join(xe2, "vec_id")
-                    .groupBy("cluster", "pos")
-                    .agg(
-                        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-                    )
-                )
-                a2 = _km_assign(xe2, c1, keep_stats=False)
-                nn2 = F.aggregate(
-                    F.zip_with("qv", "qv", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                mm = a2.join(base, "vec_id").select(
-                    "cluster", "vec_id", "qv", nn2.alias("nn")
-                )
+
+            def prune(mm):
+                # within-cluster pairs at cosine >= tau (micro-rounded)
                 lhs = mm.select(
                     "cluster",
                     F.col("vec_id").alias("id_a"),
@@ -1282,13 +1257,8 @@ def main() -> None:
                     F.col("qv").alias("qb"),
                     F.col("nn").alias("nb"),
                 )
-                dotc = F.aggregate(
-                    F.zip_with("qa", "qb", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
                 cm = F.round(
-                    dotc.cast("double")
+                    int_dot(F.col("qa"), F.col("qb")).cast("double")
                     / (
                         F.sqrt(F.col("na").cast("double"))
                         * F.sqrt(F.col("nb").cast("double"))
@@ -1307,6 +1277,9 @@ def main() -> None:
                     .distinct()
                 )
 
+            def semdedup():
+                return prune(members(lloyd2(xe2, c0, "vec_id", "cluster")))
+
             t, pruned = timed(semdedup, action="count")
             print(json.dumps({"kernel": "semdedup", "factor": r,
                               "input_rows": n_es, "n_clusters": k_r,
@@ -1319,90 +1292,9 @@ def main() -> None:
             # inferring it from the end-to-end number (which the
             # O(N*k) assignment dominates at 100x)
             if _want("semdedup_prune"):
-                qvv = F.transform(
-                    F.col("embedding"),
-                    lambda x: F.round(x.cast("double") * KM_SCALE).cast(
-                        "long"
-                    ),
-                )
-                base = es.select("vec_id", qvv.alias("qv"))
-                xe2 = base.select(
-                    "vec_id", F.posexplode("qv").alias("pos", "x")
-                )
-                seeds = (
-                    base.filter(F.col("vec_id") % 10_000_000 < 8)
-                    .orderBy("vec_id")
-                    .limit(k_r)
-                    .select(
-                        (
-                            F.row_number().over(W.orderBy("vec_id")) - 1
-                        ).alias("cluster"),
-                        "qv",
-                    )
-                )
-                c0 = seeds.select(
-                    "cluster", F.posexplode("qv").alias("pos", "s")
-                ).withColumn("n", F.lit(1).cast("long"))
-                a1 = _km_assign(xe2, c0, keep_stats=False)
-                c1 = (
-                    a1.join(xe2, "vec_id")
-                    .groupBy("cluster", "pos")
-                    .agg(
-                        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-                    )
-                )
-                a2 = _km_assign(xe2, c1, keep_stats=False)
-                nn2 = F.aggregate(
-                    F.zip_with("qv", "qv", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                mm = (
-                    a2.join(base, "vec_id")
-                    .select("cluster", "vec_id", "qv", nn2.alias("nn"))
-                    .persist()
-                )
+                mm = members(lloyd2(xe2, c0, "vec_id", "cluster")).persist()
                 n_assigned = mm.count()  # materialize OUTSIDE the timer
-
-                def prune_stage():
-                    lhs = mm.select(
-                        "cluster",
-                        F.col("vec_id").alias("id_a"),
-                        F.col("qv").alias("qa"),
-                        F.col("nn").alias("na"),
-                    )
-                    rhs = mm.select(
-                        F.col("cluster").alias("c2"),
-                        F.col("vec_id").alias("id_b"),
-                        F.col("qv").alias("qb"),
-                        F.col("nn").alias("nb"),
-                    )
-                    dotc = F.aggregate(
-                        F.zip_with("qa", "qb", lambda a, b: a * b),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: acc + v,
-                    )
-                    cm = F.round(
-                        dotc.cast("double")
-                        / (
-                            F.sqrt(F.col("na").cast("double"))
-                            * F.sqrt(F.col("nb").cast("double"))
-                        )
-                        * 1e6
-                    ).cast("long")
-                    return (
-                        lhs.join(
-                            rhs,
-                            (F.col("cluster") == F.col("c2"))
-                            & (F.col("id_a") < F.col("id_b")),
-                        )
-                        .select("id_b", cm.alias("cm"))
-                        .filter(F.col("cm") >= SD_TAU_MICRO)
-                        .select("id_b")
-                        .distinct()
-                    )
-
-                t, pruned_i = timed(prune_stage, action="count")
+                t, pruned_i = timed(lambda: prune(mm), action="count")
                 print(json.dumps({"kernel": "semdedup_prune_stage",
                                   "factor": r, "input_rows": n_assigned,
                                   "n_clusters": k_r, "out_rows": pruned_i,
@@ -1421,37 +1313,10 @@ def main() -> None:
             g_r = max(4, int(round(k_r ** 0.5)))
 
             def semdedup_2level():
-                qvv = F.transform(
-                    F.col("embedding"),
-                    lambda x: F.round(x.cast("double") * KM_SCALE).cast(
-                        "long"
-                    ),
-                )
-                base = es.select("vec_id", qvv.alias("qv"))
-                xe2 = base.select(
-                    "vec_id", F.posexplode("qv").alias("pos", "x")
-                )
-                seeds = (
-                    base.filter(F.col("vec_id") % 10_000_000 < 8)
-                    .orderBy("vec_id")
-                    .limit(k_r)
-                    .select(
-                        (
-                            F.row_number().over(W.orderBy("vec_id")) - 1
-                        ).alias("cluster"),
-                        "qv",
-                    )
-                )
-                c0 = seeds.select(
-                    "cluster", F.posexplode("qv").alias("pos", "s")
-                ).withColumn("n", F.lit(1).cast("long"))
-                a1 = _km_assign(xe2, c0, keep_stats=False)
-                c1 = (
-                    a1.join(xe2, "vec_id")
-                    .groupBy("cluster", "pos")
-                    .agg(
-                        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-                    )
+                a1 = assign(xe2, c0)
+                c1 = lloyd_recenter(
+                    a1.select("vec_id", "cluster").join(xe2, "vec_id"),
+                    "cluster",
                 )
                 # snap refined centroids to the grid -> a centroid
                 # TABLE we can cluster at the super level
@@ -1465,104 +1330,38 @@ def main() -> None:
                     .cast("long")
                     .alias("y"),
                 )
-                sc0 = (
-                    cy.filter(F.col("cluster") < g_r)
-                    .select(
-                        F.col("cluster").alias("cluster_s"),
-                        "pos",
-                        F.col("y").alias("s"),
-                    )
-                    .withColumnRenamed("cluster_s", "cluster")
-                    .withColumn("n", F.lit(1).cast("long"))
+                sc0 = cy.filter(F.col("cluster") < g_r).select(
+                    "cluster",
+                    "pos",
+                    F.col("y").alias("s"),
+                    F.lit(1).cast("long").alias("n"),
                 )
                 ce = cy.select(
                     F.col("cluster").alias("vec_id"),
                     "pos",
                     F.col("y").alias("x"),
                 )
-                cmap = _km_assign(ce, sc0, keep_stats=False).select(
+                cmap = assign(ce, sc0).select(
                     F.col("vec_id").alias("cl"),
                     F.col("cluster").alias("sup"),
                 )
                 # stage A: every vector -> 1 of g supers
-                va = _km_assign(xe2, sc0, keep_stats=False).select(
+                va = assign(xe2, sc0).select(
                     "vec_id", F.col("cluster").alias("sup")
                 )
-                # stage B: rank ONLY the chosen super's centroids
+                # stage B: rank ONLY the chosen super's centroids — the
+                # candidate cluster rides as a key column
                 cand = va.join(F.broadcast(cmap), "sup").select(
                     "vec_id", "cl"
                 )
-                dxe = xe2.join(cand, "vec_id").join(
-                    F.broadcast(
-                        c1.select(
-                            F.col("cluster").alias("cl"), "pos", "s", "n"
-                        )
-                    ),
-                    ["cl", "pos"],
+                d2l = lloyd_num(
+                    xe2.join(cand, "vec_id"),
+                    c1.withColumnRenamed("cluster", "cl"),
+                    ["vec_id"],
+                    ("cl",),
                 )
-                ee = F.col("x") * F.col("n") - F.col("s")
-                d2l = dxe.groupBy("vec_id", "cl", "n").agg(
-                    F.sum(ee * ee).alias("num")
-                )
-                a2 = (
-                    d2l.select(
-                        "vec_id",
-                        (
-                            F.col("num").cast("double")
-                            / (F.col("n") * F.col("n"))
-                        ).alias("dist"),
-                        F.col("cl").alias("cluster"),
-                    )
-                    .groupBy("vec_id")
-                    .agg(F.min(F.struct("dist", "cluster")).alias("m"))
-                    .select(
-                        "vec_id", F.col("m.cluster").alias("cluster")
-                    )
-                )
-                nn2 = F.aggregate(
-                    F.zip_with("qv", "qv", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                mm = a2.join(base, "vec_id").select(
-                    "cluster", "vec_id", "qv", nn2.alias("nn")
-                )
-                lhs = mm.select(
-                    "cluster",
-                    F.col("vec_id").alias("id_a"),
-                    F.col("qv").alias("qa"),
-                    F.col("nn").alias("na"),
-                )
-                rhs = mm.select(
-                    F.col("cluster").alias("c2"),
-                    F.col("vec_id").alias("id_b"),
-                    F.col("qv").alias("qb"),
-                    F.col("nn").alias("nb"),
-                )
-                dotc = F.aggregate(
-                    F.zip_with("qa", "qb", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                cm = F.round(
-                    dotc.cast("double")
-                    / (
-                        F.sqrt(F.col("na").cast("double"))
-                        * F.sqrt(F.col("nb").cast("double"))
-                    )
-                    * 1e6
-                ).cast("long")
-                return (
-                    lhs.join(
-                        rhs,
-                        (F.col("cluster") == F.col("c2"))
-                        & (F.col("id_a") < F.col("id_b")),
-                    )
-                    .select("id_b", cm.alias("cm"))
-                    .filter(F.col("cm") >= SD_TAU_MICRO)
-                    .select("id_b")
-                    .distinct()
-                )
+                a2 = lloyd_argmin(d2l, ["vec_id"], "cl")
+                return prune(members(a2.withColumnRenamed("cl", "cluster")))
 
             t, pruned2 = timed(semdedup_2level, action="count")
             print(json.dumps({"kernel": "semdedup_2level", "factor": r,
@@ -1579,25 +1378,6 @@ def main() -> None:
             # is still O(N*k*64) multiply-adds, but as expression
             # evaluation instead of rows.
             def semdedup_fold():
-                qvv = F.transform(
-                    F.col("embedding"),
-                    lambda x: F.round(x.cast("double") * KM_SCALE).cast(
-                        "long"
-                    ),
-                )
-                base = es.select("vec_id", qvv.alias("qv"))
-                seeds = (
-                    base.filter(F.col("vec_id") % 10_000_000 < 8)
-                    .orderBy("vec_id")
-                    .limit(k_r)
-                    .select(
-                        (
-                            F.row_number().over(W.orderBy("vec_id")) - 1
-                        ).cast("long").alias("cluster"),
-                        F.col("qv").alias("yv"),
-                    )
-                )
-
                 def dist2(ct):
                     return F.aggregate(
                         F.zip_with(
@@ -1609,15 +1389,29 @@ def main() -> None:
                         lambda acc, v: acc + v,
                     )
 
-                def fold_assign(df, cent_df):
-                    # scalar subqueries are rejected inside
-                    # higher-order functions, so the 1-row centroid
-                    # array rides a broadcast crossJoin (the
-                    # bcast_params class)
-                    cs_df = cent_df.agg(
-                        F.sort_array(
-                            F.collect_list(F.struct("cluster", "yv"))
-                        ).alias("cs")
+                def fold_assign(df, cent):
+                    # centroids (cluster, pos, s, n) snapped to the grid
+                    # and collected into ONE row; scalar subqueries are
+                    # rejected inside higher-order functions, so the
+                    # 1-row centroid array rides a broadcast crossJoin
+                    # (the bcast_params class)
+                    y = F.floor(
+                        (2 * F.col("s").cast("double") + F.col("n"))
+                        / (2 * F.col("n").cast("double"))
+                    ).cast("long")
+                    yv = F.transform(
+                        F.sort_array(F.collect_list(F.struct("pos", "y"))),
+                        lambda p: p["y"],
+                    )
+                    cs_df = (
+                        cent.select("cluster", "pos", y.alias("y"))
+                        .groupBy("cluster")
+                        .agg(yv.alias("yv"))
+                        .agg(
+                            F.sort_array(
+                                F.collect_list(F.struct("cluster", "yv"))
+                            ).alias("cs")
+                        )
                     )
                     best = F.array_min(
                         F.transform(
@@ -1634,81 +1428,11 @@ def main() -> None:
                         .drop("cs")
                     )
 
-                a1 = fold_assign(base, seeds)
-                # refine: per-cluster per-dim mean, snapped to grid
-                xm = a1.select(
-                    "cluster", F.posexplode("qv").alias("pos", "x")
-                )
-                c1 = (
-                    xm.groupBy("cluster", "pos")
-                    .agg(
-                        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-                    )
-                    .select(
-                        "cluster",
-                        "pos",
-                        F.floor(
-                            (2 * F.col("s").cast("double") + F.col("n"))
-                            / (2 * F.col("n").cast("double"))
-                        )
-                        .cast("long")
-                        .alias("y"),
-                    )
-                    .groupBy("cluster")
-                    .agg(
-                        F.transform(
-                            F.sort_array(
-                                F.collect_list(F.struct("pos", "y"))
-                            ),
-                            lambda p: p["y"],
-                        ).alias("yv")
-                    )
-                )
-                a2 = fold_assign(base.select("vec_id", "qv"), c1)
-                nn2 = F.aggregate(
-                    F.zip_with("qv", "qv", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                mm = a2.select(
-                    "cluster", "vec_id", "qv", nn2.alias("nn")
-                )
-                lhs = mm.select(
-                    "cluster",
-                    F.col("vec_id").alias("id_a"),
-                    F.col("qv").alias("qa"),
-                    F.col("nn").alias("na"),
-                )
-                rhs = mm.select(
-                    F.col("cluster").alias("c2"),
-                    F.col("vec_id").alias("id_b"),
-                    F.col("qv").alias("qb"),
-                    F.col("nn").alias("nb"),
-                )
-                dotc = F.aggregate(
-                    F.zip_with("qa", "qb", lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                cm = F.round(
-                    dotc.cast("double")
-                    / (
-                        F.sqrt(F.col("na").cast("double"))
-                        * F.sqrt(F.col("nb").cast("double"))
-                    )
-                    * 1e6
-                ).cast("long")
-                return (
-                    lhs.join(
-                        rhs,
-                        (F.col("cluster") == F.col("c2"))
-                        & (F.col("id_a") < F.col("id_b")),
-                    )
-                    .select("id_b", cm.alias("cm"))
-                    .filter(F.col("cm") >= SD_TAU_MICRO)
-                    .select("id_b")
-                    .distinct()
-                )
+                a1 = fold_assign(base, c0)
+                # refine: per-cluster per-dim sums (snapped in the fold)
+                xm = a1.select("cluster", F.posexplode("qv").alias("pos", "x"))
+                a2 = fold_assign(base, lloyd_recenter(xm, "cluster"))
+                return prune(a2.select("cluster", "vec_id", "qv", nn))
 
             t, pruned3 = timed(semdedup_fold, action="count")
             print(json.dumps({"kernel": "semdedup_fold", "factor": r,
@@ -1992,13 +1716,23 @@ def main() -> None:
         idx.lists.persist().count()
         idx.cent_df.persist().count()
         build_s = time.time() - t0
+        # list-size distribution: first-k-by-id seeding puts every seed
+        # in replica block 0 — do the displaced blocks pile into a few
+        # megalists?
+        sizes = sorted(
+            row["count"] for row in idx.lists.groupBy("list_id").count().collect()
+        )
         t, rows = timed(
             lambda: ivf_search_exact(idx, queries, k=3, n_probe=4),
             action="count",
         )
         print(json.dumps({"kernel": "ivf_probe", "factor": r,
                           "input_rows": n_vec, "out_rows": rows,
-                          "n_lists": n_lists,
+                          "n_lists": n_lists, "nonempty_lists": len(sizes),
+                          "list_size_min_p50_max": [
+                              sizes[0], sizes[len(sizes) // 2], sizes[-1]
+                          ],
+                          "largest_lists": sizes[::-1][:5],
                           "build_sec": round(build_s, 3), "sec": round(t, 3)}))
         idx.lists.unpersist()
         idx.cent_df.unpersist()
