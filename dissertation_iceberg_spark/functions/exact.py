@@ -1,10 +1,14 @@
-"""Exact-arithmetic helpers shared by the query modules: integer cents,
-cross-engine-stable 6-dp rounding, Cramer determinants generated as
-SQL strings, and Spark's HALF_UP rounding for Python-side twins.
+"""Exact-arithmetic helpers shared by the query modules: the one
+DOUBLE -> BIGINT rounding kernel, integer cents, cross-engine-stable
+6-dp rounding, Cramer determinants generated as SQL strings, and
+Spark's HALF_UP rounding for Python-side twins.
 
 Each Column helper has a SQL mirror used by the DuckDB oracles, and
 both sides evaluate the identical op shape, so results match bit for
-bit.
+bit. :func:`round_long` is the one exception to "identical op shape":
+it returns exactly what ``CAST(round(x) AS BIGINT)`` returns on a
+DOUBLE, without the per-row ``java.math.BigDecimal`` that Spark's
+``round`` builds, so the oracles keep the plain SQL form.
 """
 
 from __future__ import annotations
@@ -20,12 +24,35 @@ CENTS_SQL = "CAST(round(value * 100) AS BIGINT)"
 
 R6_SQL = "CAST(round(({x}) * 1e6) AS BIGINT) / 1e6"
 
+# From 2**52 up every double is an integer, so rounding is the identity.
+_INTEGRAL_FROM = float(2**52)
+
+
+def round_long(x):
+    """``F.round(x).cast("long")`` for a DOUBLE ``x``, in floor
+    arithmetic: HALF_UP (half away from zero) on the exact binary value.
+
+    Below 2**52, ``a - floor(a)`` is the exact fraction of ``a = |x|``,
+    so comparing it with 0.5 decides the tie the way Spark's BigDecimal
+    rounding does (0.49999999999999994 stays 0, where the naive
+    ``floor(a + 0.5)`` makes it 1). From 2**52 up, and for NaN and
+    ±inf (NaN sorts above every double), ``x`` goes to the same cast
+    ``round(x)`` would reach, so overflow behaves the same, ANSI errors
+    included. NULL stays NULL. DECIMAL arguments keep ``F.round``: a
+    large DECIMAL is not integral, and this cast would truncate it."""
+    a = F.abs(x)
+    t = F.floor(a)
+    r = t + (a - t >= 0.5).cast("long")
+    return F.when(a < _INTEGRAL_FROM, F.when(x < 0, -r).otherwise(r)).otherwise(
+        x.cast("long")
+    )
+
 
 def lob_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LOB event frame plus ``cents`` = round(value * 100) as
     BIGINT (mirrored by :data:`CENTS_SQL`)."""
     return lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
+        "cents", round_long(F.col("value") * 100)
     )
 
 
@@ -38,7 +65,7 @@ def r6(col):
     sf0.1. Round-to-INTEGER of the identical double is bit-stable, so
     the portable form is round(x*1e6)::BIGINT / 1e6 on BOTH sides
     (mirrored by :data:`R6_SQL`)."""
-    return F.round(col * 1e6).cast("long") / 1e6
+    return round_long(col * 1e6) / 1e6
 
 
 def det3(m: list[list[str]]) -> str:

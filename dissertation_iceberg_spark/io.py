@@ -5,11 +5,23 @@ CSV/archive decompression is an ingest-edge job, not the engine hot path.
 Column pruning and predicate pushdown are automatic once the plan is
 declarative (reference's manual ``usecols=[0..3]`` disappears).
 
-The ``events`` table needs special handling: the testdata parquet stores
-``ts`` as TIMESTAMP(NANOS) which Spark reads (under
-``spark.sql.legacy.parquet.nanosAsLong``) as int64 nanoseconds. We
-convert with ``timestamp_micros(ts div 1000)`` — identical to DuckDB's
-ns->us truncation, so oracle comparisons are exact.
+The ``events`` table needs special handling: its ``ts`` is stored
+either as TIMESTAMP(MICROS), which Spark reads as ``timestamp_ntz``, or as
+TIMESTAMP(NANOS), which Spark reads (under
+``spark.sql.legacy.parquet.nanosAsLong``) as int64 nanoseconds. The
+nanosecond form is converted with ``timestamp_micros(ts div 1000)`` —
+identical to DuckDB's ns->us truncation, so oracle comparisons are
+exact.
+
+Schema reuse: :func:`load_table` infers a file's parquet schema (one
+footer-reading Spark job) the first time it sees the file in this
+process, keeps the ``StructType`` in :data:`_SCHEMAS` keyed on
+``(path, st_mtime_ns, st_size)``, and reads with that schema from then
+on, so later loads fire no job. Only metadata is kept: the rows are read
+again by every query, and rewriting the file changes its key, so the
+next load infers afresh. Reusing the inferred schema rather than
+declaring one keeps the types identical to a plain
+``spark.read.parquet`` by construction, including both ``ts`` forms.
 """
 
 from __future__ import annotations
@@ -18,6 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 from dissertation_iceberg_spark.session import apply_runtime_conf
 
@@ -96,11 +109,37 @@ def validate_contract(
     return bad
 
 
+# (path, st_mtime_ns, st_size) -> the schema Spark inferred for it
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The file's inferred parquet schema, inferred once per file
+    version in this process (see the module docstring). A path the
+    local filesystem cannot stat (a cluster URI, a missing file) is
+    inferred on every call, with Spark's own errors."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing types for engine use."""
     apply_runtime_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if (
+        name == "events"
+        and "ts" in schema.fieldNames()
+        and isinstance(schema["ts"].dataType, LongType)
+    ):
         # ns int64 -> microsecond timestamp (truncating), DuckDB-identical
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

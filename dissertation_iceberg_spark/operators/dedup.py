@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.operators.text import TOKEN_SEP
 from dissertation_iceberg_spark.session import pin
+from dissertation_iceberg_spark.functions.exact import round_long
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -795,9 +796,9 @@ def containment_near_dup_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     cont = (
-        F.round(
+        round_long(
             F.col("n_inter") / F.least("size_a", "size_b") * 1e6
-        ).cast("long")
+        )
         / 1e6
     )
     return (

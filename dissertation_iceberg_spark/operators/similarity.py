@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from dissertation_iceberg_spark.functions.exact import round_long
 
 
 def vec_norm(a: Column) -> Column:
@@ -215,7 +216,7 @@ QSCALE = 10_000  # quantization grid: |x| <= 0.53 -> |xq| <= 5300
 def quantize(x: Column) -> Column:
     """One component on the integer 1e-4 grid: round(x * QSCALE) as
     BIGINT over a double cast (the oracles' CAST(round(...) AS BIGINT))."""
-    return F.round(x.cast("double") * QSCALE).cast("long")
+    return round_long(x.cast("double") * QSCALE)
 
 
 def seed_centroids(

@@ -29,6 +29,7 @@ from dissertation_iceberg_spark.operators.strategy import (
     cross_sectional_select,
     portfolio_pnl,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 
 def tagged_lob(
@@ -132,7 +133,7 @@ def single_strategy_workflow(
     e = lob_events(spark, sf_dir)
     fut = (
         e.groupBy("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg((F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("gross"))
+        .agg((F.sum(round_long(F.col("value") * 100)) / 100.0).alias("gross"))
         .withColumn(
             "fut_gross",
             F.lead("gross", 1).over(Window.partitionBy("user_id").orderBy("day")),
@@ -164,7 +165,7 @@ def portfolio_strategy_workflow(
     e = lob_events(spark, sf_dir)
     fut = (
         e.groupBy("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg((F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("gross"))
+        .agg((F.sum(round_long(F.col("value") * 100)) / 100.0).alias("gross"))
         .withColumn(
             "fut_gross",
             F.lead("gross", 1).over(Window.partitionBy("user_id").orderBy("day")),

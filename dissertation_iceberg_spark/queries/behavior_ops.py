@@ -21,6 +21,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # Ordered funnel: view -> click -> purchase (first-touch sequencing)
@@ -637,7 +638,7 @@ def lasttouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents until the final division."""
     e = load_table(spark, sf_dir, "events")
     us = micros("ts")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     touches = (
         e.filter(F.col("event_type").isin("click", "view"))
         .groupBy("user_id", us.alias("us"))
@@ -788,7 +789,7 @@ def position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n") == 1, F.lit(1_000_000))
         .when(F.col("n") == 2, F.lit(500_000))
         .when((F.col("rn") == 1) | (F.col("rn") == F.col("n")), F.lit(400_000))
-        .otherwise(F.round(F.lit(200000.0) / (F.col("n") - 2)).cast("long"))
+        .otherwise(round_long(F.lit(200000.0) / (F.col("n") - 2)))
     )
     return (
         r.select("touch_type", c.alias("c"))
@@ -968,10 +969,10 @@ def timedecay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bin"),
     )
     tb = t.withColumn("bin", bin_of(F.col("t_us")))
-    w = F.round(
+    w = round_long(
         F.exp(-((F.col("p_us") - F.col("t_us")).cast("double") / _TD_TAU_US))
         * 1e6
-    ).cast("long")
+    )
     agg = (
         p_bins.join(
             tb,
@@ -1054,7 +1055,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(micros("ts")).alias("last_us"),
             F.count(F.lit(1)).alias("n_purchases"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(round_long(F.col("value") * 100))
             .cast("long")
             .alias("cents"),
         )
@@ -1511,7 +1512,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(
                 F.datediff(day, F.col("cohort_day")) / 7
             ).alias("age_week"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
     )
     wk = spend.groupBy("cohort_day", "age_week").agg(
@@ -1850,27 +1851,25 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "channel",
         (
-            F.round((F.col("p_base").cast("double") / _MKV_P1) * 1e6).cast(
-                "long"
-            )
+            round_long((F.col("p_base").cast("double") / _MKV_P1) * 1e6)
             / F.lit(1e6)
         ).alias("p_conv_base"),
         (
-            F.round(
+            round_long(
                 (F.col("p_removed_micro").cast("double") / _MKV_P1) * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("p_conv_removed"),
-        (F.round(F.col("effect") * 1e6).cast("long") / F.lit(1e6)).alias(
+        (round_long(F.col("effect") * 1e6) / F.lit(1e6)).alias(
             "removal_effect"
         ),
         (
-            F.round(
+            round_long(
                 F.when(
                     F.col("tot_eff") > 0, F.col("effect") / F.col("tot_eff")
                 ).otherwise(F.lit(0.0))
                 * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("attribution_share"),
     )
@@ -2059,24 +2058,24 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "channel",
         "n_touched",
         (
-            F.round(
+            round_long(
                 (
                     F.col("phi_num").cast("double")
                     / F.factorial(F.col("k").cast("int"))
                     / F.lit(1e6)
                 )
                 * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("shapley_value"),
         (
-            F.round(
+            round_long(
                 F.when(
                     F.col("tot_num") != 0,
                     F.col("phi_num").cast("double") / F.col("tot_num"),
                 ).otherwise(F.lit(0.0))
                 * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("attribution_share"),
     )
@@ -2151,7 +2150,7 @@ def topk_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         e0.select(
             F.unix_micros(F.date_trunc("week", F.col("ts"))).alias("week_us"),
             "user_id",
-            F.round(F.col("value") * 100).cast("long").alias("c"),
+            round_long(F.col("value") * 100).alias("c"),
         )
         .groupBy("week_us", "user_id")
         .agg(F.sum("c").cast("long").alias("cents"))
@@ -2204,12 +2203,12 @@ def topk_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_curr",
         "n_next",
         "retained",
-        (F.round(jac * 1e6).cast("long") / F.lit(1e6)).alias("jaccard"),
+        (round_long(jac * 1e6) / F.lit(1e6)).alias("jaccard"),
         F.when(
             F.col("retained") > 0,
-            F.round(
+            round_long(
                 (F.col("disp_sum").cast("double") / F.col("retained")) * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6),
         ).alias("mean_rank_displacement"),
     )
@@ -2289,7 +2288,7 @@ def transition_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ns = tr.agg(F.sum("n_xy").cast("long").alias("n"))
 
     def lnm(c):
-        return F.round(F.log(c.cast("double")) * 1e6).cast("long")
+        return round_long(F.log(c.cast("double")) * 1e6)
 
     hc = (
         tr.join(F.broadcast(xs), "x")
@@ -2308,23 +2307,21 @@ def transition_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("n").alias("n_transitions"),
         (
-            F.round((F.col("hcond_ev").cast("double") / F.col("n") / 1e6) * 1e6)
-            .cast("long")
+            round_long((F.col("hcond_ev").cast("double") / F.col("n") / 1e6) * 1e6)
             / F.lit(1e6)
         ).alias("entropy_rate_nats"),
         (
-            F.round((F.col("hmarg_ev").cast("double") / F.col("n") / 1e6) * 1e6)
-            .cast("long")
+            round_long((F.col("hmarg_ev").cast("double") / F.col("n") / 1e6) * 1e6)
             / F.lit(1e6)
         ).alias("marginal_entropy_nats"),
         (
-            F.round(
+            round_long(
                 F.when(
                     F.col("hmarg_ev") > 0,
                     1.0 - F.col("hcond_ev").cast("double") / F.col("hmarg_ev"),
                 ).otherwise(F.lit(0.0))
                 * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("predictability_gain"),
     )
@@ -2403,9 +2400,9 @@ def eb_rate_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = per_user.withColumn(
         "rq",
-        F.round(
+        round_long(
             F.col("n_purch").cast("double") / F.col("n_events") * 1e6
-        ).cast("long"),
+        ),
     )
     mom = q.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
@@ -2431,7 +2428,7 @@ def eb_rate_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(ok, m * scale).otherwise(F.lit(1.0)).alias("alpha"),
         F.when(ok, (1 - m) * scale).otherwise(F.lit(1.0)).alias("beta"),
     )
-    r6 = lambda c: F.round(c * 1e6).cast("long") / 1e6  # noqa: E731
+    r6 = lambda c: round_long(c * 1e6) / 1e6  # noqa: E731
     return q.transform(with_scalars, ab).select(
         "user_id",
         "n_events",
@@ -2512,7 +2509,7 @@ def frequent_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 3)
         .agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     )
-    r6 = lambda c: F.round(c * 1e6).cast("long") / 1e6  # noqa: E731
+    r6 = lambda c: round_long(c * 1e6) / 1e6  # noqa: E731
     return pat.transform(with_scalars, denom).select(
         "t1",
         "t2",
@@ -2617,11 +2614,11 @@ def item_cf_topk(
         "rec",
         F.col("n_both").cast("long").alias("n_both"),
         (
-            F.round(
+            round_long(
                 F.col("n_both")
                 / F.sqrt(F.col("n_i").cast("double") * F.col("n_r"))
                 * 1e6
-            ).cast("long")
+            )
             / 1e6
         ).alias("cosine"),
     )
@@ -2762,11 +2759,9 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tot",
         "y_tot",
         "sq_tot",
-        F.round(F.col("n") * (pbar - obs_k) * (pbar - obs_k) * 1e6)
-        .cast("long")
+        round_long(F.col("n") * (pbar - obs_k) * (pbar - obs_k) * 1e6)
         .alias("rel_micro"),
-        F.round(F.col("n") * (obs_k - obs) * (obs_k - obs) * 1e6)
-        .cast("long")
+        round_long(F.col("n") * (obs_k - obs) * (obs_k - obs) * 1e6)
         .alias("res_micro"),
     )
     w = Window.partitionBy()
@@ -2784,7 +2779,7 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "resolution"
         ),
         (
-            F.round(obs * (F.lit(1.0) - obs) * 1e6).cast("long") / 1e6
+            round_long(obs * (F.lit(1.0) - obs) * 1e6) / 1e6
         ).alias("uncertainty"),
         (F.col("sq_tot") / F.col("n_tot") / 1e12).alias("brier"),
     )
@@ -2876,10 +2871,9 @@ def retention_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cohort_day",
         "age",
         "n0",
-        F.round(
+        round_long(
             F.log(F.col("active").cast("double") / F.col("n0")) * 1e6
         )
-        .cast("long")
         .alias("ly"),
     )
     g = (
@@ -3108,7 +3102,7 @@ def shift_share_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = e.agg(
         F.min(us).cast("long").alias("lo"), F.max(us).cast("long").alias("hi")
     )
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     first = us * 2 < F.col("lo") + F.col("hi")
     halves = (
         e.transform(with_scalars, bounds)
@@ -3398,13 +3392,12 @@ def recsys_coverage_audit(
         recs.join(marg, recs["rec"] == marg["l_partkey"])
         .transform(with_scalars, n)
         .select(
-            F.round(
+            round_long(
                 F.log(
                     F.col("n_orders").cast("double") / F.col("n_part")
                 )
                 * 1e6
             )
-            .cast("long")
             .alias("lp")
         )
     )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table, spread
-from dissertation_iceberg_spark.functions.exact import R6_SQL, r6
+from dissertation_iceberg_spark.functions.exact import R6_SQL, r6, round_long
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     with_scalars,
@@ -47,7 +47,7 @@ def _daily_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(load_table(spark, sf_dir, "events"))
     return e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
         F.round(
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(round_long(F.col("value") * 100))
             / F.count(F.lit(1)).cast("double")
             / 100
             * _Q
@@ -411,7 +411,7 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         o.groupBy(F.col("o_orderdate").alias("day"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(round_long(F.col("o_totalprice") * 100))
             .cast("long")
             .alias("cents")
         )
@@ -841,7 +841,7 @@ def causal_impact_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.transform(with_scalars, bounds)
         .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(round_long(F.col("value") * 100))
             .cast("long")
             .alias("cents"),
             F.max((us * 2 >= F.col("lo") + F.col("hi")).cast("long"))
@@ -974,7 +974,7 @@ def hmm_forward_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(s=_HMM_STAY, e=_HMM_EMIT)
     e = spread(load_table(spark, sf_dir, "events"))
     daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -1003,8 +1003,8 @@ def hmm_forward_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
         u1 = e1 * (a1 * stay + (1 - a1) * (1 - stay))
         u2 = e2 * (a1 * (1 - stay) + (1 - a1) * stay)
         return F.struct(
-            F.round(u1 / (u1 + u2) * 1e6).cast("long").alias("a1q"),
-            (acc["ll"] + F.round(F.log(u1 + u2) * 1e6).cast("long")).alias(
+            round_long(u1 / (u1 + u2) * 1e6).alias("a1q"),
+            (acc["ll"] + round_long(F.log(u1 + u2) * 1e6)).alias(
                 "ll"
             ),
         )
@@ -1015,11 +1015,11 @@ def hmm_forward_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sequence), mirrored in the oracle's CASE guards
     ll0 = F.when(
         F.col("n_up") > 0,
-        F.col("n_up") * F.round(F.log(p_up) * 1e6).cast("long"),
+        F.col("n_up") * round_long(F.log(p_up) * 1e6),
     ).otherwise(F.lit(0).cast("long")) + F.when(
         F.col("n") - F.col("n_up") > 0,
         (F.col("n") - F.col("n_up"))
-        * F.round(F.log(1.0 - p_up) * 1e6).cast("long"),
+        * round_long(F.log(1.0 - p_up) * 1e6),
     ).otherwise(
         F.lit(0).cast("long")
     )
@@ -1104,7 +1104,7 @@ def hmm_viterbi_regimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = spread(load_table(spark, sf_dir, "events"))
     daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -1236,7 +1236,7 @@ def matrix_profile_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = spread(load_table(spark, sf_dir, "events"))
     daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -1341,7 +1341,7 @@ def record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -1376,14 +1376,14 @@ def record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
         rec.transform(explode_grid, grid).filter(F.col("i") <= F.col("n_days"))
         .groupBy("event_type", "n_days", "n_records")
         .agg(
-            F.sum(F.round(1e9 / F.col("i")).cast("long"))
+            F.sum(round_long(1e9 / F.col("i")))
             .cast("long")
             .alias("h_nano"),
             F.sum(
-                F.round(1e9 / F.col("i")).cast("long")
-                - F.round(
+                round_long(1e9 / F.col("i"))
+                - round_long(
                     1e9 / (F.col("i").cast("double") * F.col("i"))
-                ).cast("long")
+                )
             )
             .cast("long")
             .alias("v_nano"),
@@ -1484,7 +1484,7 @@ def broken_stick_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = spread(load_table(spark, sf_dir, "events"))
     daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("y")
     )
@@ -1624,7 +1624,7 @@ def decompose_residual_anomaly(
     daily = (
         o.groupBy(F.col("o_orderdate").alias("day"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(round_long(F.col("o_totalprice") * 100))
             .cast("long")
             .alias("cents")
         )
@@ -1757,7 +1757,7 @@ def croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("day_num"),
         )
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(round_long(F.col("value") * 100))
             .cast("long")
             .alias("cents")
         )
@@ -1911,9 +1911,9 @@ def theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = series.join(F.broadcast(st), "event_type")
     lm = F.transform(
         F.col("s"),
-        lambda el: F.round(
+        lambda el: round_long(
             (el["y"].cast("double") * 2 - (a + b * el["x"])) * 1e6
-        ).cast("long"),
+        ),
     )
     j = j.withColumn("lm", lm)
     ses = F.aggregate(

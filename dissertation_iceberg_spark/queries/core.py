@@ -20,6 +20,7 @@ from dissertation_iceberg_spark.operators.iceberg import asof_next_within
 from dissertation_iceberg_spark.operators.order_imbalance import oi_pipeline
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
+from dissertation_iceberg_spark.functions.exact import round_long
 
 DELTA_SEC = 3600  # 1-hour bins over the month-long events table
 ICEBERG_TOL_US = 6 * 3600 * 1_000_000  # forward as-of tolerance
@@ -377,7 +378,7 @@ def daily_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = load_table(spark, sf_dir, "events")
     return df.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("total_value"),
+        (F.sum(round_long(F.col("value") * 100)) / 100.0).alias("total_value"),
     )
 
 

@@ -29,6 +29,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
 
@@ -84,14 +85,13 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lp = counts.transform(with_scalars, corpus).select(
         "term",
-        F.round(
+        round_long(
             F.log(
                 (F.col("c") + 1).cast("double")
                 / (F.col("n_total") + F.col("vocab"))
             )
             * 1e6
         )
-        .cast("long")
         .alias("lp_micro"),
     )
     return (
@@ -209,7 +209,7 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("amax") > 0
     )
     scale = F.col("amax") / 127
-    q = F.transform(F.col("xs"), lambda v: F.round(v / scale).cast("long"))
+    q = F.transform(F.col("xs"), lambda v: round_long(v / scale))
     # squared errors are quantized to integer 1e-16 units PER ELEMENT
     # before the reduction: each element value is a chain of exact /
     # correctly-rounded IEEE ops (identical across engines), but the
@@ -217,7 +217,7 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is not strictly sequential) and a 1-ulp sum difference landed
     # exactly on a 9-dp rounding tie. Integer sums are order-free.
     err = F.transform(F.col("xs"), lambda v: v - F.round(v / scale) * scale)
-    err2 = F.transform(err, lambda e: F.round(e * e * 1e16).cast("long"))
+    err2 = F.transform(err, lambda e: round_long(e * e * 1e16))
     zero = F.lit(0).cast("long")
     return e.select(
         "vec_id",
@@ -329,7 +329,7 @@ def asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     inclusive >=."""
     e = load_table(spark, sf_dir, "events")
     us = micros("ts")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     # Two views by one user in the same microsecond would make both the
     # window's F.last and the oracle ASOF's tie choice arbitrary — a
     # latent parity flake. Dedupe to one view per (user_id, us) with a
@@ -451,13 +451,12 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(with_scalars, vocab)
         .select(
             "pair",
-            F.round(
+            round_long(
                 F.log(
                     (F.col("c2") + 1).cast("double") / (F.col("c1") + F.col("v"))
                 )
                 * 1e6
             )
-            .cast("long")
             .alias("lp_micro"),
         )
     )
@@ -569,7 +568,7 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(with_scalars, types)
         .select(
             "pair",
-            F.round(
+            round_long(
                 F.log(
                     (F.col("c2") - F.lit(_KN_D)) / F.col("c1")
                     + F.lit(_KN_D)
@@ -582,7 +581,6 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 * 1e6
             )
-            .cast("long")
             .alias("lp_micro"),
         )
     )
@@ -864,14 +862,13 @@ def softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lp = counts.transform(with_scalars, corpus).select(
         "term",
-        F.round(
+        round_long(
             F.log(
                 (F.col("c") + 1).cast("double")
                 / (F.col("n_total") + F.col("vocab"))
             )
             * 1e6
         )
-        .cast("long")
         .alias("lp_micro"),
     )
     pd = (
@@ -885,17 +882,16 @@ def softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "source",
             "n_tokens",
-            F.round(F.col("s").cast("double") / F.col("n_tokens"))
-            .cast("long")
+            round_long(F.col("s").cast("double") / F.col("n_tokens"))
             .alias("lp_mean_micro"),
         )
     )
     inv_commonness = F.exp(F.col("lp_mean_micro").cast("double") / -1e6)
     tm = pd.withColumn(
         "term_q",
-        F.round(
+        round_long(
             F.col("n_tokens").cast("double") * inv_commonness * 1e3
-        ).cast("long"),
+        ),
     )
     st = tm.agg(
         F.sum("term_q").cast("long").alias("s_q"),

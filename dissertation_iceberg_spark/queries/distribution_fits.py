@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table, spread
-from dissertation_iceberg_spark.functions.exact import R6_SQL, r6
+from dissertation_iceberg_spark.functions.exact import R6_SQL, r6, round_long
 from dissertation_iceberg_spark.functions.scalars import (
     bcast_params,
     with_scalars,
@@ -42,7 +42,7 @@ _LOG_SCALE = 100_000
 
 def _qlog(col):
     """ln(col) quantized to the shared integer grain."""
-    return F.round(F.log(col.cast("double")) * _LOG_SCALE).cast("long")
+    return round_long(F.log(col.cast("double")) * _LOG_SCALE)
 
 
 _QLOG_SQL = f"CAST(round(ln(CAST({{x}} AS DOUBLE)) * {_LOG_SCALE}) AS BIGINT)"
@@ -289,7 +289,7 @@ def good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(adjacent, r6(r_star)).alias("r_star"),
         F.when(
             adjacent,
-            F.round(r_star / F.col("n_tokens") * 1e9).cast("long"),
+            round_long(r_star / F.col("n_tokens") * 1e9),
         ).alias("p_gt_nano"),
     )
 
@@ -344,7 +344,7 @@ def powerlaw_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = h.select(
         "d",
         "cnt",
-        F.round(F.log(2.0 * F.col("d")) * 1e6).cast("long").alias("log_micro"),
+        round_long(F.log(2.0 * F.col("d")) * 1e6).alias("log_micro"),
     )
     t = terms.agg(
         F.sum("cnt").cast("long").alias("n_users"),
@@ -422,7 +422,7 @@ def evt_gumbel_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.max(F.round(F.col("value") * 100).cast("long"))
+        F.max(round_long(F.col("value") * 100))
         .cast("long")
         .alias("mx")
     )
@@ -619,7 +619,7 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented micro-round-once libm pattern.
     """.format(it=_GMM_ITERS)
     e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     pre = (
         e.filter(F.col("event_type") == "purchase")
         .agg(
@@ -631,7 +631,7 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs = _pow10_scale(int(pre["n"] or 0), int(pre["mx"] or 0), _GMM_SQ_BUDGET)
     hist = (
         e.filter(F.col("event_type") == "purchase")
-        .select(F.round(cents / F.lit(vs)).cast("long").alias("v"))
+        .select(round_long(cents / F.lit(vs)).alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -664,10 +664,10 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.5).alias("w1d"),
             (F.col("mu_q1") * 10_000).cast("long").alias("mu1q"),
             (F.col("mu_q3") * 10_000).cast("long").alias("mu2q"),
-            F.greatest(F.round(var0 * 1e2).cast("long"), F.lit(1)).alias(
+            F.greatest(round_long(var0 * 1e2), F.lit(1)).alias(
                 "v1q"
             ),
-            F.greatest(F.round(var0 * 1e2).cast("long"), F.lit(1)).alias(
+            F.greatest(round_long(var0 * 1e2), F.lit(1)).alias(
                 "v2q"
             ),
         )
@@ -678,12 +678,11 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         va1 = F.col("v1q") / 1e2
         va2 = F.col("v2q") / 1e2
         lnw = (
-            F.round(F.log((1.0 - F.col("w1d")) / F.col("w1d")) * 1e6)
-            .cast("long")
+            round_long(F.log((1.0 - F.col("w1d")) / F.col("w1d")) * 1e6)
             / 1e6
         )
         lnv = (
-            F.round(0.5 * F.log(va1 / va2) * 1e6).cast("long") / 1e6
+            round_long(0.5 * F.log(va1 / va2) * 1e6) / 1e6
         )
         ell = (
             lnw
@@ -694,7 +693,7 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         resp = hist.transform(bcast_params, params).select(
             "v",
             "cnt",
-            F.round(_GMM_RQ / (1.0 + F.exp(ell))).cast("long").alias("rq"),
+            round_long(_GMM_RQ / (1.0 + F.exp(ell))).alias("rq"),
         )
         rq2 = _GMM_RQ - F.col("rq")
         sums = resp.agg(
@@ -717,20 +716,20 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n1q").cast("double") / (F.col("n1q") + F.col("n2q"))).alias(
                 "w1d"
             ),
-            F.round(m1 * 1e4).cast("long").alias("mu1q"),
-            F.round(m2 * 1e4).cast("long").alias("mu2q"),
+            round_long(m1 * 1e4).alias("mu1q"),
+            round_long(m2 * 1e4).alias("mu2q"),
             F.greatest(
-                F.round(
+                round_long(
                     (F.col("ss1").cast("double") / F.col("n1q") - m1 * m1)
                     * 1e2
-                ).cast("long"),
+                ),
                 F.lit(1),
             ).alias("v1q"),
             F.greatest(
-                F.round(
+                round_long(
                     (F.col("ss2").cast("double") / F.col("n2q") - m2 * m2)
                     * 1e2
-                ).cast("long"),
+                ),
                 F.lit(1),
             ).alias("v2q"),
         )
@@ -821,7 +820,7 @@ def gpd_pot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     v = e.filter(F.col("event_type") == "purchase").select(
-        F.round(F.col("value") * 100).cast("long").alias("c")
+        round_long(F.col("value") * 100).alias("c")
     )
     h = v.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     cw = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
@@ -855,7 +854,7 @@ def gpd_pot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     xi = 0.5 * (1.0 - m * m / vv)
     beta = 0.5 * m * (m * m / vv + 1.0)
     powq = (
-        F.round(
+        round_long(
             F.pow(
                 F.col("n").cast("double")
                 / nu
@@ -863,7 +862,7 @@ def gpd_pot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 -xi,
             )
             * 1e6
-        ).cast("long")
+        )
         / 1e6
     )
     return s.select(
@@ -948,7 +947,7 @@ def hill_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n",
         "richness",
-        F.round(-p * F.log(p) * 1e9).cast("long").alias("h_nano"),
+        round_long(-p * F.log(p) * 1e9).alias("h_nano"),
         (F.col("f") * F.col("f")).alias("f2"),
     )
     agg = terms.groupBy("source").agg(
@@ -1033,7 +1032,7 @@ def hill_tail_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     v = e.filter(
         (F.col("event_type") == "purchase") & (F.col("value") > 0)
-    ).select(F.round(F.col("value") * 100).cast("long").alias("c"))
+    ).select(round_long(F.col("value") * 100).alias("c"))
     h = v.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     dw = Window.orderBy(F.desc("c")).rowsBetween(
         Window.unboundedPreceding, -1
@@ -1066,10 +1065,9 @@ def hill_tail_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("c") > F.col("x_k")) & (F.col("above") < F.col("k")))
         .select(
             F.least(F.col("cnt"), F.col("k") - F.col("above")).alias("w"),
-            F.round(
+            round_long(
                 F.log(F.col("c").cast("double") / F.col("x_k")) * 1e9
             )
-            .cast("long")
             .alias("l_nano"),
         )
     )

@@ -34,8 +34,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
-from dissertation_iceberg_spark.io import load_table, lob_events, spread
-from dissertation_iceberg_spark.functions.exact import CENTS_SQL, R6_SQL, r6
+from dissertation_iceberg_spark.io import load_table, spread
+from dissertation_iceberg_spark.functions.exact import (
+    CENTS_SQL,
+    R6_SQL,
+    lob_cents,
+    r6,
+    round_long,
+)
 from dissertation_iceberg_spark.queries.microstructure import (
     _LN_MICRO_SQL,
     _ln_micro,
@@ -61,9 +67,7 @@ GROUP BY 1, 2
 
 
 def _close_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lob = lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
+    lob = lob_cents(spark, sf_dir)
     return (
         lob.filter(F.col("cents") > 0)
         .withColumn("bin", bin_end("ts", _HOUR))
@@ -397,18 +401,15 @@ def newey_west_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient broadcast is an intentional BNLJ."""
     from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
 
-    lob = lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
+    lob = lob_cents(spark, sf_dir)
     b = (
         lob.filter(F.col("cents") > 0)
         .withColumn("bin", bin_end("ts", _HOUR))
         .groupBy("bin")
         .agg(
-            F.round(
+            round_long(
                 _oi_cents(F.col("direction"), F.col("cents"), F.lit(True)) * 1e6
             )
-            .cast("long")
             .alias("oi"),
             (
                 _ln_micro(F.max_by("cents", "event_id"))
@@ -442,12 +443,11 @@ def newey_west_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sc = d.transform(with_scalars, co.select("a", "b", "mx")).select(
         "bin",
-        F.round(
+        round_long(
             (F.col("y").cast("double") - F.col("a") - F.col("b") * F.col("x"))
             * (F.col("x") - F.col("mx"))
             / 1e6
         )
-        .cast("long")
         .alias("s"),
     )
     g = sc.select(
@@ -564,7 +564,7 @@ def sortino_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
         ).alias("pnl")
     )
-    c = p.select("day", F.round(F.col("pnl") * 100).cast("long").alias("cents"))
+    c = p.select("day", round_long(F.col("pnl") * 100).alias("cents"))
     wd = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     dd = c.select(
         (F.max(F.sum("cents").over(wd)).over(wd) - F.sum("cents").over(wd)).alias(
@@ -721,7 +721,7 @@ def ledoit_wolf_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             F.date_trunc("day", F.col("ts")).alias("day"),
             F.col("event_type").alias("et"),
-            F.round(F.col("value") * 100).cast("long").alias("c"),
+            round_long(F.col("value") * 100).alias("c"),
         )
         .groupBy("day", "et")
         .agg(F.sum("c").cast("long").alias("cents"))
@@ -760,8 +760,7 @@ def ledoit_wolf_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = grid.join(cell, ["day", "et"], "left").select(
         "day",
         "et",
-        F.round(F.coalesce("cents", F.lit(0)) / F.lit(cs))
-        .cast("long")
+        round_long(F.coalesce("cents", F.lit(0)) / F.lit(cs))
         .alias("cents"),
     )
     tk = x.agg(
@@ -931,7 +930,7 @@ def spearman_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             F.date_trunc("day", F.col("ts")).alias("day"),
             F.col("event_type").alias("et"),
-            F.round(F.col("value") * 100).cast("long").alias("c"),
+            round_long(F.col("value") * 100).alias("c"),
         )
         .groupBy("day", "et")
         .agg(F.sum("c").cast("long").alias("cents"))
@@ -971,7 +970,7 @@ def spearman_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type_a",
         "type_b",
         F.col("t").alias("n_days"),
-        (F.round((num / den) * 1e6).cast("long") / F.lit(1e6)).alias(
+        (round_long((num / den) * 1e6) / F.lit(1e6)).alias(
             "spearman_rho"
         ),
     )
@@ -1056,7 +1055,7 @@ def engle_granger_coint(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages run on the O(days) frame.
     """
     e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     daily = (
         e.filter(F.col("event_type").isin(_EG_A, _EG_B))
         .groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
@@ -1099,8 +1098,7 @@ def engle_granger_coint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     resid = daily.transform(with_scalars, ols).select(
         "day",
-        F.round(F.col("yc") - F.col("alpha") - F.col("beta") * F.col("xc"))
-        .cast("long")
+        round_long(F.col("yc") - F.col("alpha") - F.col("beta") * F.col("xc"))
         .alias("e"),
     )
     w = Window.orderBy("day")
@@ -1204,7 +1202,7 @@ def iv_wald_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = per.join(
         o.select(
             F.col("o_orderkey").alias("ok"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("y"),
+            round_long(F.col("o_totalprice") * 100).alias("y"),
         ),
         "ok",
     )
@@ -1312,7 +1310,7 @@ def twfe_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("x"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("y"),
     )
@@ -1336,7 +1334,7 @@ def twfe_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(dm), "day")
         .transform(with_scalars, gm)
         .select(
-            F.round(
+            round_long(
                 (
                     F.col("x")
                     - F.col("usx").cast("double") / F.col("un")
@@ -1345,9 +1343,8 @@ def twfe_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 * 1e6
             )
-            .cast("long")
             .alias("xt"),
-            F.round(
+            round_long(
                 (
                     F.col("y")
                     - F.col("usy").cast("double") / F.col("un")
@@ -1356,7 +1353,6 @@ def twfe_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 * 1e2
             )
-            .cast("long")
             .alias("yt"),
         )
     )
@@ -1457,7 +1453,7 @@ def effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("y")
     )
@@ -1512,7 +1508,7 @@ def effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rho = lags.join(base, "event_type").select(
         "event_type",
-        F.round(
+        round_long(
             (
                 F.col("sxy").cast("double")
                 - F.col("sa").cast("double") * F.col("sb") / F.col("n_k")
@@ -1524,7 +1520,6 @@ def effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.col("n").cast("double") / F.col("n_k"))
             * 1e6
         )
-        .cast("long")
         .alias("rho_micro"),
     )
     agg = rho.groupBy("event_type").agg(

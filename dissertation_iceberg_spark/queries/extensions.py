@@ -34,6 +34,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # Embedding-cosine near-duplicate pairs (exact, oracle-matched)
@@ -1028,11 +1029,11 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nn").alias("nb"),
     )
     dot = int_dot(F.col("qa"), F.col("qb"))
-    cos_micro = F.round(
+    cos_micro = round_long(
         dot.cast("double")
         / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
         * 1e6
-    ).cast("long")
+    )
     # the threshold predicate is stated IN the join condition, AFTER
     # the cheap id check: written as a post-select filter it is pushed
     # into the SortMergeJoin condition anyway, but Catalyst prepends it
@@ -1481,7 +1482,7 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "label",
         (F.col("pos0") + 1).alias("pos"),
-        F.round(F.col("x").cast("double") * 1e6).cast("long").alias("q"),
+        round_long(F.col("x").cast("double") * 1e6).alias("q"),
     )
     lc = ex.groupBy("label", "pos").agg(F.sum("q").cast("long").alias("s"))
     arr = F.transform(
@@ -1573,7 +1574,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid",
         "sub",
         "cw",
-        F.round(F.col("dist") / 1e8 * 1e6).cast("long").alias("d_micro"),
+        round_long(F.col("dist") / 1e8 * 1e6).alias("d_micro"),
     )
     adc = (
         codes.join(F.broadcast(dmicro), ["sub", "cw"])
@@ -1936,22 +1937,20 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("j").cast("long").alias("pos"),
         (
-            F.round(
+            round_long(
                 (F.col("v").cast("double") / F.sqrt(F.col("vtv").cast("double")))
                 * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("pc1_component"),
         (
-            F.round(
+            round_long(
                 (F.col("num") / F.col("vtv") / F.col("n") / F.lit(1e8)) * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("eigenvalue"),
         (
-            F.round((F.col("num") / F.col("vtv") / F.col("tr")) * 1e6).cast(
-                "long"
-            )
+            round_long((F.col("num") / F.col("vtv") / F.col("tr")) * 1e6)
             / F.lit(1e6)
         ).alias("variance_share"),
     )
@@ -2036,12 +2035,11 @@ def silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = ab.filter(F.greatest(F.col("a"), F.col("b")) > 0).select(
         "label",
-        F.round(
+        round_long(
             (F.col("b") - F.col("a"))
             / F.greatest(F.col("a"), F.col("b"))
             * 1e6
         )
-        .cast("long")
         .alias("s_micro"),
     )
     return s.groupBy(F.col("label").cast("long").alias("label")).agg(
@@ -2174,7 +2172,7 @@ def cluster_validity_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "pos",
-        F.round(F.col("x").cast("double") * 1e6).cast("long").alias("xq"),
+        round_long(F.col("x").cast("double") * 1e6).alias("xq"),
     )
     cen = pts.groupBy("label", "pos").agg(
         F.sum("xq").cast("long").alias("sq_sum"),
@@ -2191,15 +2189,14 @@ def cluster_validity_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(diff * diff * 1e6).cast("long").alias("term"),
+            round_long(diff * diff * 1e6).alias("term"),
         )
         .groupBy("vec_id", "label")
         .agg(F.sum("term").cast("long").alias("sq_micro"))
     )
     pt_d = pt_sq.select(
         "label",
-        F.round(F.sqrt(F.col("sq_micro") / 1e6) * 1e6)
-        .cast("long")
+        round_long(F.sqrt(F.col("sq_micro") / 1e6) * 1e6)
         .alias("d_micro"),
         "sq_micro",
     )
@@ -2224,8 +2221,7 @@ def cluster_validity_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "la",
             "lb",
-            F.round((F.col("ca") - F.col("cb")) * (F.col("ca") - F.col("cb")) * 1e6)
-            .cast("long")
+            round_long((F.col("ca") - F.col("cb")) * (F.col("ca") - F.col("cb")) * 1e6)
             .alias("term"),
         )
         .groupBy("la", "lb")
@@ -2237,8 +2233,7 @@ def cluster_validity_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             "n",
-            F.round((cexpr - gexpr) * (cexpr - gexpr) * 1e6)
-            .cast("long")
+            round_long((cexpr - gexpr) * (cexpr - gexpr) * 1e6)
             .alias("term"),
         )
         .groupBy("label")
@@ -2379,7 +2374,7 @@ def embedding_mmd_quadratic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "vid",
         "pos",
-        F.round(F.col("x").cast("double") * 1e6).cast("long").alias("xq"),
+        round_long(F.col("x").cast("double") * 1e6).alias("xq"),
     )
     a = pts.select("label", "vid", F.col("pos").alias("i"), F.col("xq").alias("xa"))
     b = pts.select(
@@ -2407,7 +2402,7 @@ def embedding_mmd_quadratic(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("sb").cast("double") / F.col("nb") / 1e12
     )
     cells = ga.join(gb, ["i", "j"]).select(
-        F.round(d * d * 1e12).cast("long").alias("d_pico")
+        round_long(d * d * 1e12).alias("d_pico")
     )
     sizes = emb.agg(
         F.sum((F.col("label") == _MMD_LA).cast("long"))
@@ -2777,11 +2772,10 @@ def geometric_median_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d1 = dist_num(lloyd_recenter(xe, "label"))
     w1 = d1.select(
         "vec_id",
-        F.round(
+        round_long(
             F.lit(GM_W_SCALE)
             / (F.sqrt(F.col("num").cast("double")) / F.col("n") + 1)
         )
-        .cast("long")
         .alias("w"),
     )
 
@@ -2806,16 +2800,15 @@ def geometric_median_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = dist_num(y1)
     w2 = d2.select(
         "vec_id",
-        F.round(
+        round_long(
             F.lit(GM_W_SCALE) / (F.sqrt(F.col("num").cast("double")) + 1)
         )
-        .cast("long")
         .alias("w"),
     )
     y2 = next_y(w2)
     d3 = dist_num(y2).select(
         "label",
-        F.round(F.sqrt(F.col("num").cast("double"))).cast("long").alias("d_q"),
+        round_long(F.sqrt(F.col("num").cast("double"))).alias("d_q"),
     )
     gm = y2.groupBy("label").agg(
         *[

@@ -23,6 +23,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _PR_ITERS = 3
 _PR_TOPK = 30
@@ -775,12 +776,12 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m").alias("n_directed_edges"),
         "n_nodes",
         (
-            F.round(
+            round_long(
                 (F.col("deg_total").cast("double") / F.col("n_nodes")) * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("mean_degree"),
-        (F.round((num / den) * 1e6).cast("long") / F.lit(1e6)).alias(
+        (round_long((num / den) * 1e6) / F.lit(1e6)).alias(
             "assortativity"
         ),
     )

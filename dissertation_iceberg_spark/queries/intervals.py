@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.functions.time_bins import micros
 from dissertation_iceberg_spark.io import load_table, spread
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _EPOCH = "1970-01-01"
 _BAND_DAYS = 512  # band width ~ median interval span: ≤3 buckets/interval
@@ -341,7 +342,7 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches the output."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_long(F.col("value") * 100).alias("cents"),
         F.pmod(F.col("event_id"), F.lit(_SALT)).cast("int").alias("salt"),
     )
     dim = (

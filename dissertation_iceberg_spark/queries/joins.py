@@ -15,6 +15,7 @@ from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # TPC-H Q1-style pricing summary (scan -> filter -> agg)
@@ -41,11 +42,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: predicate pushdown into the parquet scan +
     map-side-combinable conditional aggregation (A-family)."""
     li = load_table(spark, sf_dir, "lineitem")
-    qty_c = F.round(F.col("l_quantity") * 100).cast("long")
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000).cast(
-        "long"
-    )
+    qty_c = round_long(F.col("l_quantity") * 100)
+    price_c = round_long(F.col("l_extendedprice") * 100)
+    disc_c = round_long(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000)
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -91,7 +90,7 @@ def customer_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            (F.sum(F.round(F.col("c_acctbal") * 100).cast("long")) / 100.0).alias(
+            (F.sum(round_long(F.col("c_acctbal") * 100)) / 100.0).alias(
                 "total_acctbal"
             ),
         )
@@ -120,9 +119,7 @@ def order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew); filter pushed below the join."""
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     li = load_table(spark, sf_dir, "lineitem")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000).cast(
-        "long"
-    )
+    rev = round_long(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000)
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy("o_orderpriority")
@@ -232,9 +229,9 @@ def regional_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    rev = F.round(F.col("l_extendedprice") * 100).cast("long") * F.round(
+    rev = round_long(F.col("l_extendedprice") * 100) * round_long(
         (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
@@ -281,9 +278,9 @@ def part_type_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the total exact either way)."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
-    rev = F.round(F.col("l_extendedprice") * 100).cast("long") * F.round(
+    rev = round_long(F.col("l_extendedprice") * 100) * round_long(
         (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
     agg = (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_type")
@@ -387,9 +384,9 @@ def top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == _Q3_SEGMENT
     )
-    cents = F.round(
+    cents = round_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -533,9 +530,9 @@ def nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = n.select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
-    cents = F.round(
+    cents = round_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
     pair = (
         (F.col("supp_nation") == _Q7_N1) & (F.col("cust_nation") == _Q7_N2)
     ) | ((F.col("supp_nation") == _Q7_N2) & (F.col("cust_nation") == _Q7_N1))

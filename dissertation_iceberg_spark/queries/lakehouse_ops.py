@@ -19,6 +19,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # CDC latest-state merge (MERGE INTO snapshot semantics)
@@ -55,7 +56,7 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         micros("ts").alias("us"),
         (F.col("event_type") == "error").alias("is_delete"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_long(F.col("value") * 100).alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("us"), F.desc("event_id"))
     return (
@@ -113,7 +114,7 @@ def scd2_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", micros("ts").alias("us"))
         .agg(
             F.max_by(
-                F.round(F.col("value") * 100).cast("long"), F.col("event_id")
+                round_long(F.col("value") * 100), F.col("event_id")
             ).alias("cents")
         )
     )
@@ -173,7 +174,7 @@ def scd2_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a BroadcastNestedLoop interval join."""
     e = load_table(spark, sf_dir, "events")
     us = micros("ts")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     chg = (
         e.filter(F.col("event_type") == "signup")
         .groupBy("user_id", us.alias("us"))
@@ -262,7 +263,7 @@ def zorder_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.select(
         (F.col("user_id") % 256).alias("u8"),
         (F.floor(micros("ts") / F.lit(86_400_000_000)) % 256).alias("d8"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_long(F.col("value") * 100).alias("cents"),
     )
     zval = None
     for i in range(_ZBITS):
@@ -327,7 +328,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         micros("ts").alias("us"),
         (F.col("event_type") == "error").alias("is_delete"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_long(F.col("value") * 100).alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("us"), F.desc("event_id"))
     return (
@@ -403,7 +404,7 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             micros("ts").alias("us"),
             (F.col("event_type") == "error").alias("is_delete"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         w = Window.partitionBy("user_id").orderBy(
             F.desc("us"), F.desc("event_id")
@@ -645,7 +646,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.round(F.col("value") * 100).cast("long"))
+                F.sum(round_long(F.col("value") * 100))
                 .cast("long")
                 .alias("sum_cents"),
                 F.max(micros("ts")).alias("last_us"),
@@ -782,7 +783,7 @@ def range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     c = load_table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+        round_long(F.col("o_totalprice") * 100).alias("cents")
     )
     dv = c.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
     cum = bucketed_exclusive_cumsums(dv, "cents", ["cnt"]).select(
@@ -1206,7 +1207,7 @@ def file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.to_date("l_shipdate"), F.lit("1970-01-01").cast("date"))
         .cast("long")
         .alias("ship_day"),
-        F.round("l_quantity").cast("long").alias("qty"),
+        round_long(F.col("l_quantity")).alias("qty"),
     )
     files = li.groupBy("file_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -1427,9 +1428,9 @@ def incremental_join_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") > F.lit(_IJM_T1))
         & (F.col("l_shipdate") <= F.lit(_IJM_T2))
     )
-    cents = F.round(
+    cents = round_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
 
     def term(a: DataFrame, b: DataFrame) -> DataFrame:
         return (

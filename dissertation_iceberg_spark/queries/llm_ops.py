@@ -22,6 +22,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # Exact dedup (hash-groupBy)
@@ -940,7 +941,7 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size("t")).cast("long").alias("n_tokens"),
     )
     w = per_lang.withColumn(
-        "wq", F.round(F.sqrt(F.col("n_tokens")) * 1e6).cast("long")
+        "wq", round_long(F.sqrt(F.col("n_tokens")) * 1e6)
     )
     total = w.agg(F.sum("wq").alias("__tot"))
     share = F.col("wq").cast("double") / F.col("__tot")
@@ -1313,21 +1314,19 @@ def nb_lang_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "term",
             "lang",
-            F.round(
+            round_long(
                 F.log(
                     (F.coalesce(F.col("c"), F.lit(0)) + 1).cast("double")
                     / (F.col("n_l") + F.col("v"))
                 )
                 * 1e6
             )
-            .cast("long")
             .alias("lp_micro"),
         )
     )
     priors = langs.transform(with_scalars, nd).select(
         "lang",
-        F.round(F.log(F.col("n_docs").cast("double") / F.col("nd")) * 1e6)
-        .cast("long")
+        round_long(F.log(F.col("n_docs").cast("double") / F.col("nd")) * 1e6)
         .alias("prior_micro"),
     )
     scores = (
@@ -1940,8 +1939,8 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.select(
         "event_type",
         "true_count",
-        F.round(lap * 1e6).cast("long").alias("noise_micro"),
-        (F.col("true_count") + F.round(lap).cast("long")).alias(
+        round_long(lap * 1e6).alias("noise_micro"),
+        (F.col("true_count") + round_long(lap)).alias(
             "noisy_count"
         ),
     )
@@ -2306,14 +2305,14 @@ def edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
 
     lev = F.levenshtein(_bytes_view("text_a"), _bytes_view("text_b"))
-    sim = F.round(
+    sim = round_long(
         (
             1.0
             - lev.cast("double")
             / F.greatest(F.octet_length("text_a"), F.octet_length("text_b"))
         )
         * 1e6
-    ).cast("long") / 1e6
+    ) / 1e6
     return j.select(
         "id_a",
         "id_b",
@@ -2490,7 +2489,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(with_scalars, corpus)
         .groupBy("doc_id")
         .agg(
-            F.sum(F.round(term_score * 1e6).cast("long"))
+            F.sum(round_long(term_score * 1e6))
             .cast("long")
             .alias("score_micro")
         )
@@ -2513,8 +2512,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(with_scalars, q)
         .select(
             F.col("vec_id").alias("item_id"),
-            F.round(cosine(F.col("qvec"), F.col("embedding")) * 1e6)
-            .cast("long")
+            round_long(cosine(F.col("qvec"), F.col("embedding")) * 1e6)
             .alias("score_micro"),
         )
         .orderBy(F.desc("score_micro"), F.asc("item_id"))
@@ -2530,7 +2528,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_arms"),
         F.max(F.when(F.col("arm") == "bm25", F.col("rnk"))).alias("bm25_rank"),
         F.max(F.when(F.col("arm") == "cos", F.col("rnk"))).alias("cos_rank"),
-        F.sum(F.round(F.lit(1e9) / (F.lit(RRF_C) + F.col("rnk"))).cast("long"))
+        F.sum(round_long(F.lit(1e9) / (F.lit(RRF_C) + F.col("rnk"))))
         .cast("long")
         .alias("rrf_nano"),
     )
@@ -2679,10 +2677,9 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             "df",
             "n_docs",
-            F.round(
+            round_long(
                 F.col("tf") * F.log(F.col("n_docs") / F.col("df")) * 1e3
             )
-            .cast("long")
             .alias("w"),
         )
     )
@@ -2726,9 +2723,9 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     na = norms.select(F.col("doc_id").alias("id_a"), F.col("n2").alias("na2"))
     nb = norms.select(F.col("doc_id").alias("id_b"), F.col("n2").alias("nb2"))
     cos = (
-        F.round(
+        round_long(
             F.col("dot") / (F.sqrt("na2") * F.sqrt("nb2")) * 1e6
-        ).cast("long")
+        )
         / 1e6
     )
     return (
@@ -3278,7 +3275,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     hod = (micros("ts") / F.lit(3_600_000_000)).cast("long") % 24
     band = (
-        F.round(F.col("value") * 100).cast("long") / F.lit(1000)
+        round_long(F.col("value") * 100) / F.lit(1000)
     ).cast("long")
     g = (
         e.select(

@@ -25,7 +25,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dissertation_iceberg_spark.functions.exact import CENTS_SQL, R6_SQL, lob_cents, r6
+from dissertation_iceberg_spark.functions.exact import (
+    CENTS_SQL,
+    R6_SQL,
+    lob_cents,
+    r6,
+    round_long,
+)
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
@@ -34,7 +40,7 @@ from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
 def _ln_micro(col):
     """round(ln(x)*1e6) as BIGINT — the repo's exact-evidence unit."""
-    return F.round(F.log(col.cast("double")) * 1e6).cast("long")
+    return round_long(F.log(col.cast("double")) * 1e6)
 
 
 # null-guarded to MATCH Spark's F.log semantics (NULL for x <= 0):
@@ -190,10 +196,9 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("dv_cents2") > 0)
     ).select(
         "user_id",
-        F.round(
+        round_long(
             ret_micro.cast("double") / (F.col("dv_cents2").cast("double") / 1e4) * 1e6
         )
-        .cast("long")
         .alias("illiq_micro"),
     )
     return r.groupBy("user_id").agg(
@@ -730,7 +735,7 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
     )
     m = densify(b, _LB_DELTA, zero_fill=("oi",)).select(
-        "bin", F.round(F.col("oi") * 1e6).cast("long").alias("oi_micro")
+        "bin", round_long(F.col("oi") * 1e6).alias("oi_micro")
     )
     w = Window.orderBy("bin")
     parts = []
@@ -760,7 +765,7 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = lags.select(
         "lag_k",
         "n_k",
-        F.round(rho * rho / F.col("n_k") * 1e12).cast("long").alias(
+        round_long(rho * rho / F.col("n_k") * 1e12).alias(
             "contrib_pico"
         ),
     )
@@ -838,7 +843,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).cast("long").alias("v"))
+        .agg(F.sum(round_long(F.col("value") * 100)).cast("long").alias("v"))
     )
     a = d.select("event_type", F.col("day").alias("day_a"), F.col("v").alias("v_a"))
     b = d.select("event_type", F.col("day").alias("day_b"), F.col("v").alias("v_b"))
@@ -994,7 +999,7 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = (
         densify(b, _HURST_DELTA, zero_fill=("oi",))
         .select(
-            F.round(F.col("oi") * 1e6).cast("long").alias("x"),
+            round_long(F.col("oi") * 1e6).alias("x"),
             (F.row_number().over(Window.orderBy("bin")) - 1).alias("rn"),
         )
         .withColumn("n_total", F.count(F.lit(1)).over(Window.partitionBy()))
@@ -1026,10 +1031,9 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m2var"),
         )
         rs = g.filter(F.col("m2var") > 0).select(
-            F.round(
+            round_long(
                 F.col("rng").cast("double") / F.sqrt(F.col("m2var")) * 1e6
             )
-            .cast("long")
             .alias("rs_micro")
         )
         parts.append(
@@ -1045,20 +1049,17 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m",
         "n_blocks",
         (
-            F.round(F.col("rs_micro_sum").cast("double") / F.col("n_blocks"))
-            .cast("long")
+            round_long(F.col("rs_micro_sum").cast("double") / F.col("n_blocks"))
             / 1e6
         ).alias("mean_rs"),
-        F.round(F.log(F.col("m").cast("double")) * 1e6)
-        .cast("long")
+        round_long(F.log(F.col("m").cast("double")) * 1e6)
         .alias("lx"),
-        F.round(
+        round_long(
             F.log(
                 F.col("rs_micro_sum").cast("double") / F.col("n_blocks") / 1e6
             )
             * 1e6
         )
-        .cast("long")
         .alias("ly"),
     )
     wg = Window.partitionBy()
@@ -1135,7 +1136,7 @@ def kendall_tau_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(round_long(F.col("value") * 100))
             .cast("long")
             .alias("x"),
             F.count(F.lit(1)).alias("y"),
@@ -1290,8 +1291,7 @@ def granger_oi_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         lob.withColumn("bin", bin_end("ts", _GC_DELTA))
         .groupBy("bin")
         .agg(
-            F.round(_oi_cents(d, c, F.lit(True)) * 1e6)
-            .cast("long")
+            round_long(_oi_cents(d, c, F.lit(True)) * 1e6)
             .alias("oi_micro"),
             (
                 _ln_micro(F.max_by("cents", "event_id"))
@@ -1441,8 +1441,7 @@ def corwin_schultz_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha = (F.sqrt(2 * beta) - F.sqrt(beta)) / k - F.sqrt(gamma / k)
     m = p.select(
         "user_id",
-        F.round(2 * (F.exp(alpha) - 1) / (1 + F.exp(alpha)) * 1e6)
-        .cast("long")
+        round_long(2 * (F.exp(alpha) - 1) / (1 + F.exp(alpha)) * 1e6)
         .alias("s_micro"),
     )
     return m.groupBy("user_id").agg(
@@ -1537,7 +1536,7 @@ def oi_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
     )
     z = densify(b, _PG_DELTA, zero_fill=("oi",)).select(
-        F.round(F.col("oi") * 1e6).cast("long").alias("x"),
+        round_long(F.col("oi") * 1e6).alias("x"),
         (F.row_number().over(Window.orderBy("bin")) - 1).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
     )
@@ -1549,12 +1548,12 @@ def oi_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             z.agg(
                 F.max("n").cast("long").alias("n_series"),
                 F.sum(
-                    F.col("x") * F.round(F.cos(theta) * 1e6).cast("long")
+                    F.col("x") * round_long(F.cos(theta) * 1e6)
                 )
                 .cast("long")
                 .alias("sc_pico"),
                 F.sum(
-                    F.col("x") * F.round(F.sin(theta) * 1e6).cast("long")
+                    F.col("x") * round_long(F.sin(theta) * 1e6)
                 )
                 .cast("long")
                 .alias("ss_pico"),
@@ -1646,7 +1645,7 @@ def seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = e.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("v")
     )

@@ -18,6 +18,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 DELTA = 21_600
 
@@ -44,7 +45,7 @@ def weighted_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted imbalance with pred_prob = (props.k % 100)/100 — integer
     arithmetic end-to-end."""
     e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     k = (F.get_json_object("props", "$.k").cast("long")) % 100
     e = e.withColumn("cents", cents).withColumn("k", k)
     return (
@@ -503,7 +504,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct(c).alias(f"{c}_nd"),
             F.min(c).alias(f"{c}_min"),
             F.max(c).alias(f"{c}_max"),
-            F.sum(F.round(F.col(c) * 1e6).cast("long")).alias(f"{c}_sum"),
+            F.sum(round_long(F.col(c) * 1e6)).alias(f"{c}_sum"),
         ]
     a = li.agg(*aggs)
     arms = []
@@ -643,7 +644,7 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ords = load_table(spark, sf_dir, "orders")
     d = ords.filter(F.col("o_totalprice") > 0).select(
         F.substring(
-            F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
+            round_long(F.col("o_totalprice") * 100).cast("string"),
             1,
             1,
         )
@@ -717,7 +718,7 @@ def ewma_hourly_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     h = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("bin")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -898,7 +899,7 @@ def ewma_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = e.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -990,7 +991,7 @@ def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     h = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )

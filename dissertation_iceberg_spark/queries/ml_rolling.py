@@ -25,6 +25,7 @@ from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 TRAIN_DAYS = 5
 
@@ -81,7 +82,7 @@ def rolling_refit_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("x"))
+    ).agg(F.sum(round_long(F.col("value") * 100)).alias("x"))
     wl = Window.partitionBy("user_id").orderBy("day")
     xy = daily.withColumn("y", F.lead("x", 1).over(wl))
     has_y = F.col("y").isNotNull()
@@ -574,7 +575,7 @@ def rolling_refit_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("x"))
+    ).agg(F.sum(round_long(F.col("value") * 100)).alias("x"))
     wl = Window.partitionBy("user_id").orderBy("day")
     dm = daily.withColumn(
         "m", F.sum("x").over(wl.rowsBetween(-MOM_DAYS, -1))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dissertation_iceberg_spark.functions.exact import CENTS_SQL, lob_cents
+from dissertation_iceberg_spark.functions.exact import CENTS_SQL, lob_cents, round_long
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
@@ -249,8 +249,8 @@ def factor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
         .agg(ret.alias("day_ret"))
     )
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    half_cents = F.round(F.col("o_totalprice") * (1 - 0.5) * 100).cast("long")
+    cents = round_long(F.col("o_totalprice") * 100)
+    half_cents = round_long(F.col("o_totalprice") * (1 - 0.5) * 100)
     f = o.groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day")).agg(
         (F.sum(cents) / 100.0 / F.count(F.lit(1))).alias("mkt_factor"),
         (F.sum(half_cents) / 100.0 / F.count(F.lit(1))).alias("smb_factor"),
@@ -287,7 +287,7 @@ def resample_mean_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: resample(delta).sum()/.mean() of a class's sizes
     (EDA_initial.ipynb cell 2) — conditional agg on the shared bin."""
     e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     is_vis = F.col("event_type") == "purchase"
     n_vis = F.count(F.when(is_vis, F.lit(1)))
     s_vis = F.sum(F.when(is_vis, cents).otherwise(F.lit(0))) / 100.0
@@ -321,7 +321,7 @@ def hid_vis_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16: binned hidden volume ÷ visible volume (EDA.ipynb cell 41)
     — two conditional sums, one pass."""
     e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     hid = F.sum(F.when(F.col("event_type") == "error", cents).otherwise(F.lit(0)))
     vis = F.sum(F.when(F.col("event_type") == "purchase", cents).otherwise(F.lit(0)))
     return (

@@ -47,6 +47,7 @@ from dissertation_iceberg_spark.operators import dedup as dd
 from dissertation_iceberg_spark.operators import text as tx
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
 
@@ -171,10 +172,9 @@ def jl_audit_frame(emb: DataFrame) -> DataFrame:
         base.filter(F.col("qn") > 0).select(
             "vec_id",
             "label",
-            F.round(
+            round_long(
                 pn.cast("double") / F.col("qn").cast("double") * F.lit(625e2)
             )
-            .cast("long")
             .alias("dm"),
         )
     )
@@ -361,7 +361,7 @@ def lsh_band_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b, r in SCURVE_GRID:
         sr = _pow_col(s, r)
         tb = _pow_col(F.lit(1e0) - sr, b)
-        p = F.round((F.lit(1e0) - tb) * 1e6).cast("long")
+        p = round_long((F.lit(1e0) - tb) * 1e6)
         arms.append(
             F.struct(
                 F.lit(b).alias("bands"),
@@ -476,7 +476,7 @@ def _ccnet_lp_micro(c):
     column — the ONE expression shape both the batch scorer and the
     streaming artifact trainer compile, so they can never disagree."""
     return (
-        F.round(
+        round_long(
             F.log(
                 (F.coalesce(c, F.lit(0)) + 1).cast("double")
                 / (
@@ -487,7 +487,6 @@ def _ccnet_lp_micro(c):
             )
             * 1e6
         )
-        .cast("long")
         .alias("lp_micro")
     )
 
@@ -512,8 +511,7 @@ def _ccnet_ds(docs: DataFrame) -> DataFrame:
             "doc_id",
             "lang",
             "source",
-            F.round(F.col("s").cast("double") / F.col("n_tokens"))
-            .cast("long")
+            round_long(F.col("s").cast("double") / F.col("n_tokens"))
             .alias("lp_mean_micro"),
         )
     )
@@ -719,10 +717,9 @@ def minhash_estimator_frame(docs: DataFrame) -> DataFrame:
         .join(sb, "id_b")
         .select(
             F.floor(F.col("jaccard") * 10).cast("long").alias("j_decile"),
-            F.round(n_match / F.lit(MH_EST_HASHES) * 1e6)
-            .cast("long")
+            round_long(n_match / F.lit(MH_EST_HASHES) * 1e6)
             .alias("est_micro"),
-            F.round(F.col("jaccard") * 1e6).cast("long").alias("j_micro"),
+            round_long(F.col("jaccard") * 1e6).alias("j_micro"),
         )
     )
     err = F.abs(F.col("est_micro") - F.col("j_micro"))
@@ -853,7 +850,7 @@ def _dsir_lr_micro(c_t, c_r):
     can never disagree. Expects ``n_t`` / ``n_r`` scalar columns in
     scope."""
     return (
-        F.round(
+        round_long(
             (
                 F.log(
                     (F.coalesce(c_t, F.lit(0)) + 1).cast("double")
@@ -866,7 +863,6 @@ def _dsir_lr_micro(c_t, c_r):
             )
             * 1e6
         )
-        .cast("long")
         .alias("lr_micro")
     )
 
@@ -921,9 +917,9 @@ def _dsir_perdoc(docs: DataFrame) -> DataFrame:
         )
         .withColumn(
             "lr_mean_micro",
-            F.round(
+            round_long(
                 F.col("logw_micro").cast("double") / F.col("n_feats")
-            ).cast("long"),
+            ),
         )
     )
 

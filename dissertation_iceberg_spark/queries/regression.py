@@ -20,6 +20,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
+from dissertation_iceberg_spark.functions.exact import round_long
 
 
 @register(
@@ -175,9 +176,9 @@ def ols2_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     inp = li.select(
         "l_returnflag",
-        F.round(F.col("l_discount") * 100).cast("long").alias("x1c"),
-        F.round(F.col("l_tax") * 100).cast("long").alias("x2c"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("yc"),
+        round_long(F.col("l_discount") * 100).alias("x1c"),
+        round_long(F.col("l_tax") * 100).alias("x2c"),
+        round_long(F.col("l_extendedprice") * 100).alias("yc"),
     )
     g = inp.groupBy("l_returnflag").agg(
         *[F.expr(expr).alias(k) for k, expr in _STATS_SQL.items()]
@@ -331,8 +332,8 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = pin(
         li.select(
             F.col("l_returnflag").alias("flag"),
-            F.round(F.col("l_quantity") * 100).cast("long").alias("qc"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+            round_long(F.col("l_quantity") * 100).alias("qc"),
+            round_long(F.col("l_extendedprice") * 100).alias("cents"),
             "l_orderkey",
             "l_linenumber",
         )
@@ -440,9 +441,9 @@ def ridge_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     inp = li.select(
         "l_returnflag",
-        F.round(F.col("l_discount") * 100).cast("long").alias("x1c"),
-        F.round(F.col("l_tax") * 100).cast("long").alias("x2c"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("yc"),
+        round_long(F.col("l_discount") * 100).alias("x1c"),
+        round_long(F.col("l_tax") * 100).alias("x2c"),
+        round_long(F.col("l_extendedprice") * 100).alias("yc"),
     )
     g = inp.groupBy("l_returnflag").agg(
         *[F.expr(expr).alias(k) for k, expr in _STATS_SQL.items()]
@@ -554,7 +555,7 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = li.select(
         ((F.col("l_orderkey") * 8 + F.col("l_linenumber")) % 4).alias("part"),
         F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
+        round_long(F.col("l_extendedprice") * 100).alias("y"),
     )
     tr = src.filter(F.col("part") <= 1).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -574,9 +575,9 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("n").alias("n_train"),
     )
-    resid = F.round(
+    resid = round_long(
         F.abs(F.col("y") - (F.col("b0") + F.col("b1") * F.col("x")))
-    ).cast("long")
+    )
     cal = (
         src.filter(F.col("part") == 2)
         .transform(with_scalars, beta)
@@ -619,17 +620,17 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_train",
         "n_cal",
         F.col("n_test").cast("long").alias("n_test"),
-        (F.round(F.col("b0") * 1e6).cast("long") / F.lit(1e6)).alias(
+        (round_long(F.col("b0") * 1e6) / F.lit(1e6)).alias(
             "beta0_cents"
         ),
-        (F.round(F.col("b1") * 1e6).cast("long") / F.lit(1e6)).alias(
+        (round_long(F.col("b1") * 1e6) / F.lit(1e6)).alias(
             "beta1_cents"
         ),
         F.col("q_cents").alias("q_hat_cents"),
         (
-            F.round(
+            round_long(
                 (F.col("n_cov").cast("double") / F.col("n_test")) * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("coverage"),
     )
@@ -733,7 +734,7 @@ def huber_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     src = li.select(
         F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
+        round_long(F.col("l_extendedprice") * 100).alias("y"),
     )
     s0 = src.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -757,8 +758,7 @@ def huber_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         "y",
         "n",
-        F.round(F.abs(F.col("y") - (F.col("b0") + F.col("b1") * F.col("x"))))
-        .cast("long")
+        round_long(F.abs(F.col("y") - (F.col("b0") + F.col("b1") * F.col("x"))))
         .alias("r"),
     )
     rv = (
@@ -775,14 +775,14 @@ def huber_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.min("r").alias("mad_c"))
     cc = mad.select(
         "mad_c",
-        F.round(F.lit(_HUBER_K) * F.col("mad_c")).cast("long").alias("c"),
+        round_long(F.lit(_HUBER_K) * F.col("mad_c")).alias("c"),
     )
     wts = res.transform(with_scalars, cc).select(
         "x",
         "y",
         F.when(F.col("r") <= F.col("c"), F.lit(1_000_000).cast("long"))
         .otherwise(
-            F.round(F.col("c").cast("double") * 1e6 / F.col("r")).cast("long")
+            round_long(F.col("c").cast("double") * 1e6 / F.col("r"))
         )
         .alias("w"),
     )
@@ -810,14 +810,14 @@ def huber_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("n_rows"),
         F.col("mad_c").alias("mad_cents"),
         F.col("c").alias("huber_c_cents"),
-        (F.round(F.col("b0") * 1e6).cast("long") / F.lit(1e6)).alias(
+        (round_long(F.col("b0") * 1e6) / F.lit(1e6)).alias(
             "beta0_ols"
         ),
-        (F.round(F.col("b1") * 1e6).cast("long") / F.lit(1e6)).alias(
+        (round_long(F.col("b1") * 1e6) / F.lit(1e6)).alias(
             "beta1_ols"
         ),
-        (F.round(b0h * 1e6).cast("long") / F.lit(1e6)).alias("beta0_huber"),
-        (F.round(b1h * 1e6).cast("long") / F.lit(1e6)).alias("beta1_huber"),
+        (round_long(b0h * 1e6) / F.lit(1e6)).alias("beta0_huber"),
+        (round_long(b1h * 1e6) / F.lit(1e6)).alias("beta1_huber"),
     )
 
 
@@ -887,13 +887,11 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(part), li["l_partkey"] == part["p_partkey"]
     ).select(
         "brand",
-        F.round(
+        round_long(
             F.log(F.col("l_extendedprice") / F.col("l_quantity")) * 1e3
         )
-        .cast("long")
         .alias("x"),
-        F.round(F.log(F.col("l_quantity")) * 1e3)
-        .cast("long")
+        round_long(F.log(F.col("l_quantity")) * 1e3)
         .alias("y"),
     )
     g = (

@@ -16,6 +16,7 @@ from dissertation_iceberg_spark.functions.time_bins import micros
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.operators import sessions as ss
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _GAP_US = 6 * 3600 * 1_000_000  # 6 hours, matches gap="6 hours" below
 
@@ -55,7 +56,7 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     return ss.sessionize(
         e,
-        value_cents=F.round(F.col("value") * 100).cast("long"),
+        value_cents=round_long(F.col("value") * 100),
         gap="6 hours",
     )
 
@@ -172,7 +173,7 @@ def trailing_hour_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     base = e.select(
         "event_id", "user_id", us.alias("us"), cents.alias("cents")
     )
@@ -241,7 +242,7 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "event_type",
             F.floor(micros("ts") / F.lit(_GF_DELTA_US)).alias("bi"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         .groupBy("event_type", "bi")
         .agg(F.sum("cents").alias("cents"))
@@ -282,7 +283,7 @@ def daily_value_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "event_type",
             F.date_trunc("day", F.col("ts")).alias("day"),
-            F.round(F.col("value") * 100).cast("long").alias("c"),
+            round_long(F.col("value") * 100).alias("c"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("cents"))
@@ -444,7 +445,7 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     lv = li.groupBy("l_returnflag", F.col("l_extendedprice").alias("p")).agg(
-        F.sum(F.round(F.col("l_quantity") * 100).cast("long"))
+        F.sum(round_long(F.col("l_quantity") * 100))
         .cast("long")
         .alias("w")
     )

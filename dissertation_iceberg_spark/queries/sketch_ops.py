@@ -28,6 +28,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
 
@@ -677,7 +678,7 @@ def tdigest_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     li = load_table(spark, sf_dir, "lineitem")
-    v = li.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"))
+    v = li.select(round_long(F.col("l_extendedprice") * 100).alias("c"))
     b = v.agg(
         F.min("c").alias("lo"), F.max("c").alias("hi"), F.count(F.lit(1)).alias("n")
     )
@@ -707,7 +708,7 @@ def tdigest_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     arg = (2 * F.col("cum_prev") + F.col("bin_n") - F.col("n")).cast(
         "double"
     ) / F.col("n")
-    asin_micro = F.round((F.asin(arg) + F.lit(math.pi / 2)) * 1e6).cast("long")
+    asin_micro = round_long((F.asin(arg) + F.lit(math.pi / 2)) * 1e6)
     return (
         c.withColumn("asin_micro", asin_micro)
         .select(
@@ -785,12 +786,12 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = spread(load_table(spark, sf_dir, "lineitem"))
     key = F.concat_ws(":", F.col("l_orderkey"), F.col("l_linenumber"))
     u = (hash60(key) + 1).cast("double") / F.lit(float(_TWO60))
-    lp_micro = F.round(-F.log(u) * 1e6).cast("long")
+    lp_micro = round_long(-F.log(u) * 1e6)
     return (
         li.select(
             "l_orderkey",
             "l_linenumber",
-            F.round(F.col("l_quantity")).cast("long").alias("w"),
+            round_long(F.col("l_quantity")).alias("w"),
             lp_micro.alias("lp_micro"),
         )
         .select(
@@ -878,7 +879,7 @@ def tdigest_quantile_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     li = load_table(spark, sf_dir, "lineitem")
-    v = li.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"))
+    v = li.select(round_long(F.col("l_extendedprice") * 100).alias("c"))
     b = v.agg(
         F.min("c").alias("lo"), F.max("c").alias("hi"), F.count(F.lit(1)).alias("n")
     )
@@ -907,7 +908,7 @@ def tdigest_quantile_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     arg = (2 * F.col("cum_prev") + F.col("bin_n") - F.col("n")).cast(
         "double"
     ) / F.col("n")
-    asin_micro = F.round((F.asin(arg) + F.lit(math.pi / 2)) * 1e6).cast("long")
+    asin_micro = round_long((F.asin(arg) + F.lit(math.pi / 2)) * 1e6)
     cent = (
         c.withColumn("asin_micro", asin_micro)
         .select(
@@ -1067,7 +1068,7 @@ def grouped_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     arg = (2 * F.col("cum_prev") + F.col("bin_n") - F.col("n")).cast(
         "double"
     ) / F.col("n")
-    asin_micro = F.round((F.asin(arg) + F.lit(math.pi / 2)) * 1e6).cast("long")
+    asin_micro = round_long((F.asin(arg) + F.lit(math.pi / 2)) * 1e6)
     return (
         c.withColumn("asin_micro", asin_micro)
         .select(
@@ -1166,7 +1167,7 @@ def poisson_bootstrap_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     ords = spread(load_table(spark, sf_dir, "orders"))
     x = ords.select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_long(F.col("o_totalprice") * 100).alias("cents"),
     )
     u = seeded_hash60_col(F.col("b"), F.col("o_orderkey").cast("string"))
     thresholds = F.array(*[F.lit(c).cast("long") for c in _POIS1_CDF60])
@@ -1369,7 +1370,7 @@ def kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def r6(col):
-        return F.round(col * 1e6).cast("long") / 1e6
+        return round_long(col * 1e6) / 1e6
 
     ea = te.select(
         F.col("event_type").alias("ta"),
@@ -1585,7 +1586,7 @@ def hdr_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(sub=_HDR_SUB)
     o = load_table(spark, sf_dir, "orders")
     v = o.filter(F.col("o_totalprice") > 0).select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("c")
+        round_long(F.col("o_totalprice") * 100).alias("c")
     )
     bkt = v.select(
         (F.length(F.bin(F.col("c"))) - 1).cast("long").alias("m"), "c"

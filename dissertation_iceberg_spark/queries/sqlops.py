@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
@@ -38,7 +39,7 @@ def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL dimension values from rolled-up levels — the standard SQL
     answer to the reference's loop-of-groupbys."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = round_long(F.col("o_totalprice") * 100)
     return (
         o.select("o_orderpriority", "o_orderstatus", cents.alias("cents"))
         .rollup("o_orderpriority", "o_orderstatus")
@@ -71,7 +72,7 @@ def status_year_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(
             F.year("o_orderdate").alias("order_year"),
             "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            round_long(F.col("o_totalprice") * 100).alias("cents"),
         )
         .cube("order_year", "o_orderstatus")
         .agg(
@@ -111,7 +112,7 @@ def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             F.date_trunc("day", F.col("ts")).alias("day"),
             "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         .groupBy("day")
         .pivot("event_type", _EVENT_TYPES)
@@ -198,7 +199,7 @@ def measure_unpivot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return long.groupBy("l_returnflag", "measure").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(F.round(F.col("val") * 1e4).cast("long")) / F.lit(1e4)).alias(
+        (F.sum(round_long(F.col("val") * 1e4)) / F.lit(1e4)).alias(
             "total"
         ),
         F.round(F.min("val"), 6).alias("min_val"),
@@ -228,7 +229,7 @@ def priority_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = o.select(
         "o_orderpriority",
         F.year("o_orderdate").alias("order_year"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_long(F.col("o_totalprice") * 100).alias("cents"),
     )
     return d.groupingSets(
         [
@@ -283,7 +284,7 @@ def salted_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "user_id",
             (F.col("event_id") % _SALT_BUCKETS).alias("salt"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         .groupBy("user_id", "salt")
         .agg(

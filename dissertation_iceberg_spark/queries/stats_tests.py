@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.operators import text as tx
-from dissertation_iceberg_spark.functions.exact import R6_SQL, r6
+from dissertation_iceberg_spark.functions.exact import R6_SQL, r6, round_long
 from dissertation_iceberg_spark.operators.strategy import cross_sectional_select
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
@@ -95,7 +95,7 @@ def max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
         ).alias("pnl")
     )
-    c = p.select("day", F.round(F.col("pnl") * 100).cast("long").alias("cents"))
+    c = p.select("day", round_long(F.col("pnl") * 100).alias("cents"))
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     dd = c.select(
         "day",
@@ -181,13 +181,12 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ct), "st")
         .transform(with_scalars, tot)
         .select(
-            F.round(
+            round_long(
                 num.cast("double")
                 * num.cast("double")
                 / (F.col("n").cast("double") * F.col("r_tot") * F.col("c_tot"))
                 * 1e6
             )
-            .cast("long")
             .alias("t_micro")
         )
     )
@@ -371,13 +370,13 @@ def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_risk",
         F.when(
             F.col("d") < F.col("n_risk"),
-            F.round(
+            round_long(
                 F.log(
                     (F.col("n_risk") - F.col("d")).cast("double")
                     / F.col("n_risk")
                 )
                 * 1e6
-            ).cast("long"),
+            ),
         )
         .otherwise(F.lit(-1000000000000).cast("long"))
         .alias("lm_micro"),
@@ -609,7 +608,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t1",
             "t2",
             "c12",
-            F.round(
+            round_long(
                 F.log(
                     F.col("c12").cast("double")
                     * F.col("n_docs")
@@ -617,7 +616,6 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 * 1e6
             )
-            .cast("long")
             .alias("pmi_micro"),
         )
     )
@@ -729,7 +727,7 @@ def var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
         ).alias("pnl")
     )
-    c = p.select("day", F.round(F.col("pnl") * 100).cast("long").alias("cents"))
+    c = p.select("day", round_long(F.col("pnl") * 100).alias("cents"))
     n = c.agg(F.count(F.lit(1)).alias("n_days"))
     r = c.select(
         "cents",
@@ -867,12 +865,11 @@ def link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a",
         "b",
         "cn",
-        F.round(
+        round_long(
             F.col("cn").cast("double")
             / (F.col("da") + F.col("db") - F.col("cn"))
             * 1e6
         )
-        .cast("long")
         .alias("jaccard_micro"),
     )
     return (
@@ -1015,9 +1012,9 @@ def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
-    rev_c2 = F.round(F.col("l_extendedprice") * 100).cast("long") * F.round(
+    rev_c2 = round_long(F.col("l_extendedprice") * 100) * round_long(
         (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
     rev = (
         li.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_nationkey", "l_suppkey")
@@ -1027,9 +1024,7 @@ def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c2").cast("long").alias("s"),
         F.count(F.lit(1)).alias("n_suppliers"),
     )
-    share_micro = F.round(F.col("c2").cast("double") / F.col("s") * 1e6).cast(
-        "long"
-    )
+    share_micro = round_long(F.col("c2").cast("double") / F.col("s") * 1e6)
     sq = (
         rev.join(F.broadcast(tot), "s_nationkey")
         .groupBy("s_nationkey")
@@ -1149,7 +1144,7 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "c0",
         "c1",
-        F.round((p0 - p1) * F.log(p0 / p1) * 1e6).cast("long").alias(
+        round_long((p0 - p1) * F.log(p0 / p1) * 1e6).alias(
             "psi_micro"
         ),
     )
@@ -1214,12 +1209,11 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "actual",
         "predicted",
-        F.round(
+        round_long(
             F.abs(F.col("actual") - F.col("predicted"))
             / F.col("actual").cast("double")
             * 1e6
         )
-        .cast("long")
         .alias("ape_micro"),
     )
     return scored.groupBy("event_type").agg(
@@ -1280,8 +1274,7 @@ def vwap_slippage(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
     lines = li.select(
         "l_partkey",
-        F.round(F.col("l_extendedprice") * 100 / F.col("l_quantity"))
-        .cast("long")
+        round_long(F.col("l_extendedprice") * 100 / F.col("l_quantity"))
         .alias("unit_cents"),
         F.col("l_quantity").cast("long").alias("qty"),
     )
@@ -1379,7 +1372,7 @@ def trimmed_winsorized_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     v = e.select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     dv = v.groupBy("event_type", "cents").agg(F.count(F.lit(1)).alias("f"))
     cum = bucketed_exclusive_cumsums(
@@ -1496,7 +1489,7 @@ def twap_user_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", F.col("ts")).alias("day"),
         us.alias("us"),
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_long(F.col("value") * 100).alias("cents"),
     )
     w = Window.partitionBy("user_id", "day").orderBy("us", "event_id")
     d = o.select(
@@ -1935,7 +1928,7 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(us * 2 < F.col("t0") + F.col("t1"), 0).otherwise(1).alias(
             "post"
         ),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_long(F.col("value") * 100).alias("cents"),
     )
     m = cells.groupBy("treated", "post").agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
@@ -2214,7 +2207,7 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     b = e.agg(F.min(us).alias("t0"), F.max(us).alias("t1"))
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     u = (
         e.transform(with_scalars, b)
         .groupBy("user_id", (F.col("user_id") % 2).alias("arm"))
@@ -2371,7 +2364,7 @@ def one_way_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition)."""
     e = load_table(spark, sf_dir, "events")
     v = e.select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     g = v.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2622,9 +2615,9 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    rev_c2 = F.round(F.col("l_extendedprice") * 100).cast("long") * F.round(
+    rev_c2 = round_long(F.col("l_extendedprice") * 100) * round_long(
         (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
     rev = li.groupBy("l_partkey").agg(F.sum(rev_c2).cast("long").alias("c2"))
     s = rev.agg(F.sum("c2").cast("long").alias("s")).scalar()
     r = bucketed_exclusive_cumsums(
@@ -2724,7 +2717,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.least(
             F.floor(
-                F.round(F.col("value") * 100).cast("long") / _ISO_BIN_CENTS
+                round_long(F.col("value") * 100) / _ISO_BIN_CENTS
             ),
             F.lit(_ISO_MAX_BIN),
         ).alias("bin"),
@@ -2760,12 +2753,11 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivals = pairs.join(j, "j_idx").select(
         "j_idx",
         "k_idx",
-        F.round(
+        round_long(
             (F.col("pk") - F.col("pj1")).cast("double")
             / (F.col("nk") - F.col("nj1"))
             * 1e6
         )
-        .cast("long")
         .alias("mean_micro"),
     )
     cover = ivals.select(
@@ -2782,7 +2774,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("den").alias("n"),
         F.col("num").alias("n_pos"),
         (
-            F.round(F.col("num").cast("double") / F.col("den") * 1e6).cast("long")
+            round_long(F.col("num").cast("double") / F.col("den") * 1e6)
             / 1e6
         ).alias("p_raw"),
         (F.col("iso_micro") / 1e6).alias("p_iso"),
@@ -2898,7 +2890,7 @@ def bh_fdr_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = e.select(
         "event_type",
         (F.col("user_id") % 10).alias("bucket"),
-        F.round(F.col("value") * 100).cast("long").alias("c"),
+        round_long(F.col("value") * 100).alias("c"),
     )
     g = src.agg(
         F.count(F.lit(1)).alias("n_g"),
@@ -2924,7 +2916,7 @@ def bh_fdr_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         "n_c",
         zv.alias("zv"),
-        F.round(_norm_p_two_sided(zv) * 1e6).cast("long").alias("p_micro"),
+        round_long(_norm_p_two_sided(zv) * 1e6).alias("p_micro"),
     )
     w_rank = Window.orderBy("p_micro", "event_type", "bucket")
     w_all = Window.partitionBy()
@@ -3058,7 +3050,7 @@ def mi_feature_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     single double expressions (same half-ulp libm residual class as
     unigram_logprob)."""
     e0 = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     feats = [
         e0.select(
             F.lit("value_mag").alias("feature"),
@@ -3096,7 +3088,7 @@ def mi_feature_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ns = xy.groupBy("feature").agg(F.sum("n_xy").cast("long").alias("n"))
 
     def lnm(c):
-        return F.round(F.log(c.cast("double")) * 1e6).cast("long")
+        return round_long(F.log(c.cast("double")) * 1e6)
 
     ev = (
         xy.join(xs, ["feature", "x"])
@@ -3132,18 +3124,17 @@ def mi_feature_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "feature",
         "n_levels",
         (
-            F.round((F.col("mi_ev").cast("double") / F.col("n") / 1e6) * 1e6)
-            .cast("long")
+            round_long((F.col("mi_ev").cast("double") / F.col("n") / 1e6) * 1e6)
             / F.lit(1e6)
         ).alias("mi_nats"),
         (
-            F.round(
+            round_long(
                 F.when(
                     F.col("hy_ev") > 0,
                     F.col("mi_ev").cast("double") / F.col("hy_ev"),
                 ).otherwise(F.lit(0.0))
                 * 1e6
-            ).cast("long")
+            )
             / F.lit(1e6)
         ).alias("nmi"),
     )
@@ -3223,11 +3214,9 @@ def woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_pos",
         "n_neg",
-        F.round(F.log(p_share / n_share) * 1e6)
-        .cast("long")
+        round_long(F.log(p_share / n_share) * 1e6)
         .alias("woe_micro"),
-        F.round((p_share - n_share) * F.log(p_share / n_share) * 1e6)
-        .cast("long")
+        round_long((p_share - n_share) * F.log(p_share / n_share) * 1e6)
         .alias("iv_micro"),
     )
     w = Window.partitionBy()
@@ -3317,7 +3306,7 @@ def decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_long(F.col("o_totalprice") * 100).alias("cents"),
         (F.col("o_orderstatus") == "F").cast("long").alias("pos"),
     )
     dv = o.groupBy("cents").agg(
@@ -3352,7 +3341,7 @@ def decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_pos",
         "right_n",
         "right_pos",
-        F.round(
+        round_long(
             (
                 F.lit(2) * lp * (ln - lp) / ln
                 + F.lit(2) * rp * (rn - rp) / rn
@@ -3360,9 +3349,8 @@ def decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_all")
             * 1e9
         )
-        .cast("long")
         .alias("gini_nano"),
-        F.round(
+        round_long(
             F.lit(2)
             * F.col("p_all")
             * (F.col("n_all") - F.col("p_all"))
@@ -3370,7 +3358,6 @@ def decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_all")
             * 1e9
         )
-        .cast("long")
         .alias("parent_nano"),
     )
     return (
@@ -3538,8 +3525,7 @@ def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "u",
             "v",
-            F.round(F.lit(1e6) / F.log(F.col("d")))
-            .cast("long")
+            round_long(F.lit(1e6) / F.log(F.col("d")))
             .alias("aa_w"),
         )
         .repartition(n_shuffle, "u")
@@ -3657,10 +3643,9 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n_name").alias("grp"),
             F.col("l_quantity").cast("long").alias("x"),
-            F.round(
+            round_long(
                 F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
             )
-            .cast("long")
             .alias("y"),
         )
     )
@@ -3689,7 +3674,7 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "double"
         ) * d(sx).cast("double")
         return (
-            F.round(
+            round_long(
                 F.when(
                     det != 0,
                     (
@@ -3700,7 +3685,6 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * 1e6,
                 )
             )
-            .cast("long")
         )
 
     scored = cells.transform(with_scalars, tot).select(
@@ -3880,8 +3864,7 @@ def _lgamma_table(spark: SparkSession, m: int) -> DataFrame:
 
     lgbase = spark.range(1, m + 1).select(
         F.col("id").alias("j"),
-        F.round(F.log(F.col("id").cast("double")) * 1e9)
-        .cast("long")
+        round_long(F.log(F.col("id").cast("double")) * 1e9)
         .alias("lnj"),
     )
     # materialize ONCE: the table is consumed by four probe joins plus
@@ -3913,9 +3896,9 @@ def _bayes_term_log(lt: DataFrame, lg: DataFrame, p: dict, l_const: int):
     part; returns the joined frame and the l_nano integer-log column.
     ``p`` carries the integer Beta parameters and ``n_terms`` (the i
     domain size) for the range pruning."""
-    l_nano = F.lit(int(l_const)) - F.round(
+    l_nano = F.lit(int(l_const)) - round_long(
         F.log((F.col("b1") + F.col("i")).cast("double")) * 1e9
-    ).cast("long")
+    )
     for name, base_key, sign in _BAYES_I_TERMS:
         lo = int(base_key(p))
         hi = lo + int(p["n_terms"]) - 1
@@ -3959,9 +3942,7 @@ def bayes_ab_posterior_frame(e: DataFrame) -> DataFrame:
         ],
     )
     lt, l_nano = _bayes_term_log(terms, lg, p, l_const)
-    t_q = F.round(F.exp(l_nano.cast("double") / 1e9) * F.lit(qq)).cast(
-        "long"
-    )
+    t_q = round_long(F.exp(l_nano.cast("double") / 1e9) * F.lit(qq))
     return (
         lt.withColumn("t_q", t_q)
         .groupBy("n0", "c0", "n1", "c1")
@@ -4157,9 +4138,9 @@ def bayes_ab_loss_frame(e: DataFrame) -> DataFrame:
             ],
         )
         lt, l_nano = _bayes_term_log(terms, lg, p, l_const)
-        t_q = F.round(
+        t_q = round_long(
             F.exp(l_nano.cast("double") / 1e9) * F.lit(qq)
-        ).cast("long")
+        )
         frames.append(
             lt.withColumn("t_q", t_q).select(
                 "n0", "c0", "n1", "c1", "lbl", "t_q"

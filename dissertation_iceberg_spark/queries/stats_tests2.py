@@ -30,6 +30,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # Brown-Forsythe (median-centered Levene) variance-homogeneity test
@@ -97,7 +98,7 @@ def levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     v = e.select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     hist = v.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -219,7 +220,7 @@ def welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(a=_GRP_A, b=_GRP_B)
     e = load_table(spark, sf_dir, "events")
     v = e.filter(F.col("event_type").isin(_GRP_A, _GRP_B)).select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     is_a = (F.col("event_type") == _GRP_A).cast("long")
     is_b = (F.col("event_type") == _GRP_B).cast("long")
@@ -387,8 +388,8 @@ def gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select(
         F.col("l_quantity").cast("long").alias("q"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("d"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
+        round_long(F.col("l_discount") * 100).alias("d"),
+        round_long(F.col("l_extendedprice") * 100).alias("y"),
     )
     f0 = base.agg(
         F.floor(
@@ -645,7 +646,7 @@ def tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     v = e.select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     g = v.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -767,7 +768,7 @@ def kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     v = e.select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     gh = v.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).cast("long").alias("cnt_g")
@@ -886,7 +887,7 @@ def friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", F.col("ts")).alias("day"), "event_type"
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("s"),
     )
@@ -1003,7 +1004,7 @@ def wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(a=_W1_A, b=_W1_B)
     e = load_table(spark, sf_dir, "events")
     v = e.filter(F.col("event_type").isin(_W1_A, _W1_B)).select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     h = v.groupBy("cents").agg(
         F.sum((F.col("event_type") == _W1_A).cast("long"))
@@ -1026,7 +1027,7 @@ def wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = cum.filter(F.col("next_cents").isNotNull()).select(
         "n_a",
         "n_b",
-        F.round(
+        round_long(
             F.abs(
                 F.col("cum_a").cast("double") / F.col("n_a")
                 - F.col("cum_b").cast("double") / F.col("n_b")
@@ -1034,7 +1035,6 @@ def wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.col("next_cents") - F.col("cents"))
             * 1e6
         )
-        .cast("long")
         .alias("term_micro"),
     )
     return terms.agg(
@@ -1144,7 +1144,7 @@ def psm_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("long"),
+                round_long(F.col("value") * 100),
             ).otherwise(F.lit(0))
         )
         .cast("long")
@@ -1200,10 +1200,9 @@ def psm_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "y",
         F.abs(F.col("score") - F.col("m_score")).alias("gap"),
-        F.round(
+        round_long(
             (F.col("y") - F.col("m_sc").cast("double") / F.col("m_nc")) * 1e2
         )
-        .cast("long")
         .alias("att_term"),
     )
     agg = terms.agg(
@@ -1306,7 +1305,7 @@ def rdd_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "o_orderkey",
         "o_orderdate",
-        (F.round(F.col("o_totalprice")).cast("long") - _RDD_CUTOFF).alias("x"),
+        (round_long(F.col("o_totalprice")) - _RDD_CUTOFF).alias("x"),
     )
     pts = li.join(band, li["l_orderkey"] == band["o_orderkey"]).select(
         "x",
@@ -1411,7 +1410,7 @@ def dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     v = e.select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     gh = v.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).cast("long").alias("cnt_g")
@@ -1551,7 +1550,7 @@ def effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(a=_GRP_A, b=_GRP_B)
     e = load_table(spark, sf_dir, "events")
     v = e.filter(F.col("event_type").isin(_GRP_A, _GRP_B)).select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", round_long(F.col("value") * 100).alias("cents")
     )
     h = v.groupBy("cents").agg(
         F.sum((F.col("event_type") == _GRP_A).cast("long"))
@@ -1685,7 +1684,7 @@ def runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -2123,7 +2122,7 @@ def projection_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").isin(_PKS_LA, _PKS_LB)
     )
     xq = F.transform(
-        F.col("embedding"), lambda x: F.round(x * 1e6).cast("long")
+        F.col("embedding"), lambda x: round_long(x * 1e6)
     )
     wlit = F.array(*[F.lit(v).cast("long") for v in w])
     proj = e.select(
@@ -2270,7 +2269,7 @@ def learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_long(F.col("o_totalprice") * 100).alias("cents"),
         (F.col("o_orderstatus") == "F").cast("long").alias("pos"),
         (hash60(F.col("o_orderkey").cast("string")) % 100).alias("h"),
     )
@@ -2781,10 +2780,10 @@ def log_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntd = F.col("nt").cast("double")
     terms = risk.filter(F.col("d") > 0).select(
         "d1",
-        F.round(dd * n1d / ntd * 1e6).cast("long").alias("e1_micro"),
+        round_long(dd * n1d / ntd * 1e6).alias("e1_micro"),
         F.when(
             F.col("nt") > 1,
-            F.round(
+            round_long(
                 dd
                 * n1d
                 / ntd
@@ -2793,7 +2792,7 @@ def log_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (ntd - dd)
                 / (ntd - 1)
                 * 1e6
-            ).cast("long"),
+            ),
         )
         .otherwise(F.lit(0))
         .alias("v_micro"),
@@ -2879,7 +2878,7 @@ def tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions.
     """
     e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     daily = (
         e.filter(F.col("event_type").isin(_TD_A, _TD_B))
         .groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
@@ -3174,8 +3173,8 @@ def nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         "c",
         "n_risk",
-        F.round(dd / nr * 1e9).cast("long").alias("h_nano"),
-        F.round(dd / (nr * nr) * 1e9).cast("long").alias("v_nano"),
+        round_long(dd / nr * 1e9).alias("h_nano"),
+        round_long(dd / (nr * nr) * 1e9).alias("v_nano"),
     )
     cw = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, 0)
     return terms.select(
@@ -3330,8 +3329,7 @@ def platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("y", F.lit(1))
     )
     scored = hist.join(fut, "user_id", "left").select(
-        F.round(F.expr("(n_p * 1000000 div n_ev)") / 1000.0)
-        .cast("long")
+        round_long(F.expr("(n_p * 1000000 div n_ev)") / 1000.0)
         .alias("xq"),
         F.coalesce(F.col("y"), F.lit(0)).alias("y"),
     )
@@ -3346,7 +3344,7 @@ def platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sigmoid_q():
         return (
-            F.round(
+            round_long(
                 _PLATT_PG
                 / (
                     1.0
@@ -3358,7 +3356,6 @@ def platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 )
             )
-            .cast("long")
             .alias("pq")
         )
 
@@ -3384,9 +3381,9 @@ def platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         hbb = F.col("hbb").cast("double") / (PG * PG) / (XG * XG)
         det = haa * hbb - hab * hab
         params = grad.select(
-            (F.col("aq") + F.round((ga * hbb - gb * hab) / det * 1e6).cast("long"))
+            (F.col("aq") + round_long((ga * hbb - gb * hab) / det * 1e6))
             .alias("aq"),
-            (F.col("bq") + F.round((haa * gb - hab * ga) / det * 1e6).cast("long"))
+            (F.col("bq") + round_long((haa * gb - hab * ga) / det * 1e6))
             .alias("bq"),
         )
     fin = shist.transform(bcast_params, params).select(
@@ -3489,7 +3486,7 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = e.agg(
         F.min(us).cast("long").alias("lo"), F.max(us).cast("long").alias("hi")
     )
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     first = us * 2 < F.col("lo") + F.col("hi")
     u = (
         e.transform(with_scalars, bounds)
@@ -3502,14 +3499,13 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     diffs = u.filter((F.col("n1") > 0) & (F.col("n2") > 0)).select(
-        F.round(
+        round_long(
             (
                 F.col("s2").cast("double") / F.col("n2")
                 - F.col("s1").cast("double") / F.col("n1")
             )
             * 100
         )
-        .cast("long")
         .alias("d")
     )
     nz = diffs.filter(F.col("d") != 0).select(
@@ -3633,10 +3629,9 @@ def taylor_power_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("s").cast("double") * F.col("s") / F.col("n")
         > 0
     ).select(
-        F.round(F.log(F.col("s").cast("double") / F.col("n")) * 1e6)
-        .cast("long")
+        round_long(F.log(F.col("s").cast("double") / F.col("n")) * 1e6)
         .alias("lx"),
-        F.round(F.log(var) * 1e6).cast("long").alias("ly"),
+        round_long(F.log(var) * 1e6).alias("ly"),
     )
     g = lm.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3726,7 +3721,7 @@ def ratio_metric_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("long"),
+                round_long(F.col("value") * 100),
             ).otherwise(0)
         )
         .cast("long")
@@ -3997,8 +3992,8 @@ def odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = s.filter((a > 0) & (b > 0) & (c > 0) & (d > 0))
     rr = (a.cast("double") / (a + b)) / (c.cast("double") / (c + d))
     orr = (a.cast("double") * d) / (b.cast("double") * c)
-    lrr = F.round(F.log(rr) * 1e6).cast("long") / 1e6
-    lor = F.round(F.log(orr) * 1e6).cast("long") / 1e6
+    lrr = round_long(F.log(rr) * 1e6) / 1e6
+    lor = round_long(F.log(orr) * 1e6) / 1e6
     se_lrr = F.sqrt(
         1.0 / a - 1.0 / (a + b) + 1.0 / c - 1.0 / (c + d)
     )
@@ -4006,7 +4001,7 @@ def odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = F.expr(f"CAST('{_RR_Z95}' AS DOUBLE)")
 
     def expq(x):
-        return F.round(F.exp(x) * 1e6).cast("long") / 1e6
+        return round_long(F.exp(x) * 1e6) / 1e6
 
     return s.select(
         a.alias("treat_pos"),
@@ -4085,7 +4080,7 @@ def covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     u = e.groupBy("user_id", (F.col("user_id") % 2).alias("arm")).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("total_cents"),
         F.sum((F.col("event_type") == "purchase").cast("long"))
@@ -4246,9 +4241,9 @@ def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("ece_micro"),
         F.max(
-            F.round(
+            round_long(
                 F.abs(F.col("s_sum") - F.col("pos") * 1_000_000.0) / F.col("n")
-            ).cast("long")
+            )
         )
         .cast("long")
         .alias("mce_micro"),
@@ -4328,7 +4323,7 @@ def zero_inflation_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("c") == 0).cast("long")).cast("long").alias("n_zero"),
     )
     lam = F.col("total").cast("double") / F.col("n")
-    pz = F.round(F.exp(-lam) * 1e9).cast("long") / 1e9
+    pz = round_long(F.exp(-lam) * 1e9) / 1e9
     # lambda large enough that the nano-rounded Poisson zero rate hits
     # exactly 0 (round-7 one_ticker fuzz: one user absorbs the whole
     # stream) -> the ratio is undefined -> NULL on both engines
@@ -4406,7 +4401,7 @@ def jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     v = e.select(
-        "event_type", F.round(F.col("value")).cast("long").alias("c")
+        "event_type", round_long(F.col("value")).alias("c")
     )
     c = F.col("c")
     s = v.groupBy("event_type").agg(
@@ -4529,8 +4524,7 @@ def sample_representativeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_full",
             "n_samp",
-            F.round((ps - pf) * F.log(ps / pf) * 1e9)
-            .cast("long")
+            round_long((ps - pf) * F.log(ps / pf) * 1e9)
             .alias("psi_nano"),
         )
     )
@@ -4657,7 +4651,7 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
                 "dow",
                 "n",
-                F.round(
+                round_long(
                     F.col("wq")
                     * (
                         (
@@ -4668,7 +4662,6 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / F.col("row_sum")
                     )
                 )
-                .cast("long")
                 .alias("wq"),
             )
         )
@@ -4680,7 +4673,7 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
                 "dow",
                 "n",
-                F.round(
+                round_long(
                     F.col("wq")
                     * (
                         (
@@ -4691,7 +4684,6 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / F.col("col_sum")
                     )
                 )
-                .cast("long")
                 .alias("wq"),
             )
         )
@@ -4803,7 +4795,7 @@ def decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        round_long(F.col("o_totalprice") * 100).alias("cents"),
         (F.col("o_orderstatus") == "F").cast("long").alias("pos"),
     )
 
@@ -4921,7 +4913,7 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     v = e.filter(F.col("event_type") == "purchase").select(
         (F.col("user_id") % 2).alias("arm"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        round_long(F.col("value") * 100).alias("cents"),
     )
     h = v.groupBy("arm", "cents").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -5197,13 +5189,13 @@ def weibull_plot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         F.when(
             F.col("d") < F.col("n_risk"),
-            F.round(
+            round_long(
                 F.log(
                     (F.col("n_risk") - F.col("d")).cast("double")
                     / F.col("n_risk")
                 )
                 * 1e6
-            ).cast("long"),
+            ),
         ).alias("lm_micro"),
     ).filter(F.col("lm_micro").isNotNull())
     cw = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, 0)
@@ -5215,11 +5207,9 @@ def weibull_plot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = surv.filter(
         (F.col("t_day") > 0) & (F.col("d") > 0) & (F.col("ls_micro") < 0)
     ).select(
-        F.round(F.log(F.col("t_day").cast("double")) * 1e6)
-        .cast("long")
+        round_long(F.log(F.col("t_day").cast("double")) * 1e6)
         .alias("lx"),
-        F.round(F.log(-(F.col("ls_micro") / 1e6)) * 1e6)
-        .cast("long")
+        round_long(F.log(-(F.col("ls_micro") / 1e6)) * 1e6)
         .alias("ly"),
     )
     g = pts.agg(
@@ -5236,7 +5226,7 @@ def weibull_plot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sy").cast("double") * F.col("sxx")
         - F.col("sx").cast("double") * F.col("sxy")
     ) / det
-    scale = F.round(F.exp(-intercept / slope / 1e6) * 1e6).cast("long") / 1e6
+    scale = round_long(F.exp(-intercept / slope / 1e6) * 1e6) / 1e6
     return g.select(
         F.col("n").alias("n_points"),
         F.round(slope, 6).alias("weibull_shape"),
@@ -5312,7 +5302,7 @@ def ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("long"),
+                round_long(F.col("value") * 100),
             ).otherwise(0)
         )
         .cast("long")
@@ -5333,7 +5323,7 @@ def ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("n_s").cast("double") / (F.col("n_s") - F.col("t_s")))
     )
     terms = u.join(F.broadcast(ok), "stratum").select(
-        F.round(ht * 1e2).cast("long").alias("term")
+        round_long(ht * 1e2).alias("term")
     )
     s = terms.agg(
         F.count(F.lit(1)).cast("long").alias("n_used"),
@@ -5422,7 +5412,7 @@ def aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("long"),
+                round_long(F.col("value") * 100),
             ).otherwise(0)
         )
         .cast("long")
@@ -5449,7 +5439,7 @@ def aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("n_s").cast("double") / (F.col("n_s") - F.col("t_s")))
     )
     terms = u.join(F.broadcast(ok), "stratum").select(
-        F.round((m1 - m0 + corr) * 1e2).cast("long").alias("term")
+        round_long((m1 - m0 + corr) * 1e2).alias("term")
     )
     s = terms.agg(
         F.count(F.lit(1)).cast("long").alias("n_used"),
@@ -5569,7 +5559,7 @@ def ucb1_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", F.col("ts")).alias("day"),
         F.col("event_type").alias("arm"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
+        F.sum(round_long(F.col("value") * 100))
         .cast("long")
         .alias("cents")
     )
@@ -5629,19 +5619,19 @@ def ucb1_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = F.sequence(F.lit(1), F.lit(5))
         scores = F.transform(
             idx,
-            lambda i: F.round(
+            lambda i: round_long(
                 F.element_at(acc["s"], i).cast("double")
                 / F.element_at(acc["n"], i)
                 * 1e6
-            ).cast("long")
-            + F.round(
+            )
+            + round_long(
                 F.sqrt(
                     2.0
                     * F.log(t_next.cast("double"))
                     / F.element_at(acc["n"], i)
                 )
                 * 1e6
-            ).cast("long"),
+            ),
         )
         pairs = F.transform(
             idx,
@@ -5815,24 +5805,24 @@ def km_greenwood_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_risk",
         F.when(
             F.col("d") < F.col("n_risk"),
-            F.round(
+            round_long(
                 F.log(
                     (F.col("n_risk") - F.col("d")).cast("double")
                     / F.col("n_risk")
                 )
                 * 1e6
-            ).cast("long"),
+            ),
         ).alias("lm_micro"),
         F.when(
             (F.col("d") < F.col("n_risk")) & (F.col("d") > 0),
-            F.round(
+            round_long(
                 F.col("d").cast("double")
                 / (
                     F.col("n_risk").cast("double")
                     * (F.col("n_risk") - F.col("d"))
                 )
                 * 1e9
-            ).cast("long"),
+            ),
         )
         .otherwise(F.lit(0))
         .alias("g_nano"),
@@ -5919,7 +5909,7 @@ def lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("long"),
+                round_long(F.col("value") * 100),
             ).otherwise(0)
         )
         .cast("long")

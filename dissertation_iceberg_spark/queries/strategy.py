@@ -17,6 +17,7 @@ from dissertation_iceberg_spark.operators.strategy import (
     top_k,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _SIGNAL_SQL = """
 SELECT date_trunc('day', ts) AS day, user_id,
@@ -32,7 +33,7 @@ def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (signal_df analog, trading_strategy.py:242-245)."""
     e = load_table(spark, sf_dir, "events")
     direction = F.when(F.col("event_id") % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     return e.groupBy(F.date_trunc("day", F.col("ts")).alias("day"), "user_id").agg(
         (F.sum(direction * cents) / 100.0).alias("signal"),
         (F.sum(cents) / 100.0).alias("gross"),
@@ -120,6 +121,6 @@ def topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ClOp_analysis.ipynb cell 9) — row_number, not a global sort."""
     e = load_table(spark, sf_dir, "events")
     totals = e.groupBy("user_id").agg(
-        (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("total_value")
+        (F.sum(round_long(F.col("value") * 100)) / 100.0).alias("total_value")
     )
     return top_k(totals, "total_value", "user_id", k=5)

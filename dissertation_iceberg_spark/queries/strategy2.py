@@ -291,8 +291,7 @@ def percentile_sweep_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
-from dissertation_iceberg_spark.io import lob_events
-from dissertation_iceberg_spark.functions.exact import CENTS_SQL
+from dissertation_iceberg_spark.functions.exact import CENTS_SQL, lob_cents
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
 _XC_DELTAS = (3600, 21600)
@@ -327,9 +326,7 @@ WHERE oi_vis IS NOT NULL AND oi_hid IS NOT NULL
 def oi_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12/time_series_OI: correlation between visible and hidden OI
     series per delta — one frame across deltas."""
-    lob = lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
+    lob = lob_cents(spark, sf_dir)
     from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
 
     d_, c_ = F.col("direction"), F.col("cents")

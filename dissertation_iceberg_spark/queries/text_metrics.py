@@ -24,6 +24,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # Zipf slope: log-log OLS over the top-K rank-frequency curve
@@ -95,8 +96,8 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r", F.row_number().over(Window.orderBy(F.desc("n"), F.asc("tok")))
     )
     xy = ranked.select(
-        F.round(F.log(F.col("r").cast("double")) * 1e6).cast("long").alias("x"),
-        F.round(F.log(F.col("n").cast("double")) * 1e6).cast("long").alias("y"),
+        round_long(F.log(F.col("r").cast("double")) * 1e6).alias("x"),
+        round_long(F.log(F.col("n").cast("double")) * 1e6).alias("y"),
     )
     s = xy.agg(
         F.count(F.lit(1)).alias("n_terms"),
@@ -275,7 +276,7 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("long").alias("n_chars"),
         F.count(F.lit(1)).alias("n_distinct_chars"),
         F.sum(
-            F.col("n") * F.round(F.log(F.col("n").cast("double")) * 1e6).cast("long")
+            F.col("n") * round_long(F.log(F.col("n").cast("double")) * 1e6)
         )
         .cast("long")
         .alias("s_micro"),
@@ -440,7 +441,7 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = w.agg(F.sum("n_w").cast("long").alias("n"))
 
     def ln_micro(c):
-        return F.round(F.log(c.cast("double")) * 1e6).cast("long")
+        return round_long(F.log(c.cast("double")) * 1e6)
 
     terms = (
         sw.join(w, "term")
@@ -679,7 +680,7 @@ def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def lnm(c):
-        return F.round(F.log(c.cast("double")) * 1e6).cast("long")
+        return round_long(F.log(c.cast("double")) * 1e6)
 
     mden = F.col("na") * F.col("tot_b") + F.col("nb") * F.col("tot_a")
     ev = pair.groupBy("source_a", "source_b").agg(
@@ -717,7 +718,7 @@ def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "source_a",
         "source_b",
-        (F.round(js * 1e6).cast("long") / F.lit(1e6)).alias("js_nats"),
+        (round_long(js * 1e6) / F.lit(1e6)).alias("js_nats"),
     )
 
 

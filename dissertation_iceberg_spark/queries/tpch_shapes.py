@@ -22,6 +22,7 @@ from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # Q21 shape: sole-blame suppliers (EXISTS + NOT EXISTS on the fact table)
@@ -155,7 +156,7 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = cust.select(
         "c_custkey",
         "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
+        round_long(F.col("c_acctbal") * 100).alias("cents"),
     )
     thr = c.filter(F.col("cents") > 0).agg(
         F.sum("cents").cast("long").alias("sum_pos"),
@@ -516,8 +517,8 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     q = li.select(
         "l_partkey",
-        F.round(F.col("l_quantity") * 100).cast("long").alias("qc"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("pc"),
+        round_long(F.col("l_quantity") * 100).alias("qc"),
+        round_long(F.col("l_extendedprice") * 100).alias("pc"),
     )
     a = q.groupBy("l_partkey").agg(
         F.sum("qc").cast("long").alias("sum_qc"),
@@ -578,7 +579,7 @@ def important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
         .groupBy("n_name")
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(round_long(F.col("l_extendedprice") * 100))
             .cast("long")
             .alias("value_cents")
         )
@@ -631,9 +632,9 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate — bounded output."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    rev = F.round(
+    rev = round_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-    ).cast("long")
+    )
     j = li.join(
         F.broadcast(part.select("p_partkey", "p_type")),
         li.l_partkey == part.p_partkey,

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # --------------------------------------------------------------------------
 # Q13 shape: customer order-count distribution (outer join + histogram)
@@ -122,9 +123,9 @@ def disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("p_size").between(1, sz)
         )
         arm = cond if arm is None else (arm | cond)
-    rev = F.round(
+    rev = round_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-    ).cast("long")
+    )
     return j.filter(arm).agg(
         F.count(F.lit(1)).alias("n_items"),
         F.sum(rev).cast("long").alias("revenue_e4"),
@@ -173,9 +174,9 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     sup = load_table(spark, sf_dir, "supplier")
     nat = load_table(spark, sf_dir, "nation")
-    rev = F.round(
+    rev = round_long(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-    ).cast("long")
+    )
     j = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
@@ -244,11 +245,11 @@ def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey", "p_retailprice"
     )
     amount = (
-        F.round(
+        round_long(
             F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("long")
-        - F.round(F.col("p_retailprice") * 5000).cast("long")
-        * F.round(F.col("l_quantity")).cast("long")
+        )
+        - round_long(F.col("p_retailprice") * 5000)
+        * round_long(F.col("l_quantity"))
     )
     j = (
         li.join(F.broadcast(fam), li.l_partkey == fam.p_partkey)
@@ -318,7 +319,7 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select(
             "l_partkey",
             "l_suppkey",
-            F.round(F.col("l_quantity")).cast("long").alias("q"),
+            round_long(F.col("l_quantity")).alias("q"),
         )
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum("q").cast("long").alias("pair_qty"))

@@ -25,6 +25,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 _REV_CENTS = (
     "CAST(round(l_extendedprice * 100) AS BIGINT)"
@@ -33,9 +34,9 @@ _REV_CENTS = (
 
 
 def _rev_cents() -> F.Column:
-    return F.round(F.col("l_extendedprice") * 100).cast("long") * F.round(
+    return round_long(F.col("l_extendedprice") * 100) * round_long(
         (1 - F.col("l_discount")) * 100
-    ).cast("long")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -111,7 +112,7 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a raw double BETWEEN on 0.02..0.04 would be representation-
     sensitive on both engines)."""
     li = load_table(spark, sf_dir, "lineitem")
-    disc_cents = F.round(F.col("l_discount") * 100).cast("long")
+    disc_cents = round_long(F.col("l_discount") * 100)
     return (
         li.filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -122,7 +123,7 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.sum(
-                    F.round(F.col("l_extendedprice") * 100).cast("long")
+                    round_long(F.col("l_extendedprice") * 100)
                     * disc_cents
                 )
                 / F.lit(1e4)
@@ -389,7 +390,7 @@ def order_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff(F.col("asof_d"), F.col("o_orderdate")).alias(
                 "age_days"
             ),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            round_long(F.col("o_totalprice") * 100).alias("cents"),
         )
     )
     bucket = (

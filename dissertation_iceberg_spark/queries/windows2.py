@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.functions.exact import round_long
 
 DELTA = 21_600
 
@@ -116,7 +117,7 @@ def ofi_event_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     flow keeps bin sums exact under any aggregation order."""
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = round_long(F.col("value") * 100)
     s = e.withColumn("cents", cents).withColumn(
         "prev_cents", F.lag(cents, 1).over(w)
     )
@@ -167,7 +168,7 @@ def rolling_top_performers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("day_cents"))
+    ).agg(F.sum(round_long(F.col("value") * 100)).alias("day_cents"))
     wt = Window.partitionBy("user_id").orderBy("day").rowsBetween(-7, -1)
     t = d.withColumn("trail_cents", F.sum("day_cents").over(wt)).filter(
         F.col("trail_cents").isNotNull()

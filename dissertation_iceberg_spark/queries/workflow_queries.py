@@ -36,7 +36,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dissertation_iceberg_spark.functions.exact import det3, det4
+from dissertation_iceberg_spark.functions.exact import det3, det4, round_long
 from dissertation_iceberg_spark.queries.core import ICEBERG_TOL_US
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
@@ -226,10 +226,10 @@ def regression_workflow_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("fut_log_ret").isNotNull()
         )
         f = fr.select(
-            F.round(F.col("oi_vis") * 1e6).cast("long").alias("x1m"),
-            F.round(F.col("oi_ib") * 1e6).cast("long").alias("x2m"),
-            F.round(F.col("oi_hid") * 1e6).cast("long").alias("x3m"),
-            F.round(F.col("fut_log_ret") * 1e6).cast("long").alias("ym"),
+            round_long(F.col("oi_vis") * 1e6).alias("x1m"),
+            round_long(F.col("oi_ib") * 1e6).alias("x2m"),
+            round_long(F.col("oi_hid") * 1e6).alias("x3m"),
+            round_long(F.col("fut_log_ret") * 1e6).alias("ym"),
         )
         g = f.agg(*[F.expr(e).alias(k) for k, e in _E1_STATS.items()])
         g = g.select("*", *[F.expr(e).alias(k) for k, e in _E1_DET.items()])
@@ -342,12 +342,12 @@ def single_strategy_workflow_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = rolling_refit_signal(spark, sf_dir).select(
         "day",
         "user_id",
-        F.round(F.col("signal_hat") * 1e6).cast("long").alias("sig_micro"),
+        round_long(F.col("signal_hat") * 1e6).alias("sig_micro"),
     )
     e = load_table(spark, sf_dir, "events")
     fut = (
         e.groupBy("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
+        .agg(F.sum(round_long(F.col("value") * 100)).alias("cents"))
         .withColumn(
             "fut_cents",
             F.lead("cents", 1).over(

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 # messages CSV columns (prediction_ML_pipeline.py:36): no header,
 # time = seconds after midnight (float, ns decimals)
@@ -83,7 +84,7 @@ def read_messages(spark: SparkSession, path: str) -> DataFrame:
     df = _with_file_meta(df)
     # round, don't truncate: 6-dp seconds × 1e6 can land a hair under
     # the integer (34200.123456*1e6 = ...455.999996)
-    us = F.round(F.col("time") * 1_000_000).cast("long")
+    us = round_long(F.col("time") * 1_000_000)
     base_us = F.unix_micros(F.to_timestamp("date_str", "yyyy-MM-dd"))
     return df.withColumn("datetime", F.timestamp_micros(base_us + us)).drop("time")
 

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 EWMA_A_NUM = 200
 EWMA_DEN = 1000
@@ -131,7 +132,7 @@ def streaming_daily_ewma_anomalies(
             "event_type",
             "ts",
             micros("ts").alias("ts_us"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         .groupBy("event_type")
         .applyInPandasWithState(

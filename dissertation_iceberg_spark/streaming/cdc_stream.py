@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from dissertation_iceberg_spark.functions.exact import round_long
 
 
 def streaming_cdc_latest(
@@ -37,7 +38,7 @@ def streaming_cdc_latest(
     row = F.struct(
         F.col("event_id").alias("last_event_id"),
         F.unix_micros(F.col("__ts")).alias("last_us"),
-        F.round(F.col("value") * 100).cast("long").alias("last_cents"),
+        round_long(F.col("value") * 100).alias("last_cents"),
         (F.col("event_type") == "error").alias("is_delete"),
     )
     return (

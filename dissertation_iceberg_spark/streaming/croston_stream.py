@@ -34,6 +34,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 DAY_US = 86_400_000_000
 
@@ -138,7 +139,7 @@ def streaming_croston_forecast(
             "user_id",
             "ts",
             micros("ts").alias("ts_us"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(

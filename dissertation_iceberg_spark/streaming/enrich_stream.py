@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from dissertation_iceberg_spark.functions.exact import round_long
 
 
 def segment_window_counts(
@@ -36,7 +37,7 @@ def segment_window_counts(
         joined.groupBy(F.window("ts", window).alias("w"), "segment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+            F.sum(round_long(F.col("value") * 100)).alias("cents"),
         )
         .select(
             F.col("w.start").alias("window_start"),

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 DAY_US = 86_400_000_000
 
@@ -121,7 +122,7 @@ def streaming_record_highs(
             "event_type",
             "ts",
             micros("ts").alias("ts_us"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         .groupBy("event_type")
         .applyInPandasWithState(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dissertation_iceberg_spark.queries.sketch_ops import _TD_PI_MICRO
+from dissertation_iceberg_spark.functions.exact import round_long
 
 TDS_PREBINS = 256  # fixed value-space cells per window
 TDS_K = 32  # centroids per window at read time
@@ -55,7 +56,7 @@ def window_tdigest_cells(
     e = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if e.isStreaming:
         e = e.withWatermark("ts", watermark)
-    c = F.round(F.col(value_col) * 100).cast("long")
+    c = round_long(F.col(value_col) * 100)
     span = hi_cents - lo_cents + 1
     return (
         e.select(
@@ -101,7 +102,7 @@ def tdigest_finalize(cells: DataFrame, k: int = TDS_K) -> DataFrame:
     arg = (2 * F.col("cum_prev") + F.col("n") - F.col("n_tot")).cast(
         "double"
     ) / F.col("n_tot")
-    asin_micro = F.round((F.asin(arg) + F.lit(math.pi / 2)) * 1e6).cast("long")
+    asin_micro = round_long((F.asin(arg) + F.lit(math.pi / 2)) * 1e6)
     return (
         c.withColumn("asin_micro", asin_micro)
         .select(

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from dissertation_iceberg_spark.functions.exact import round_long
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -151,7 +152,7 @@ def streaming_vpin_buckets(
             micros("ts").alias("ts_us"),
             "event_id",
             "direction",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            round_long(F.col("value") * 100).alias("cents"),
         )
         .groupBy("user_id")
         .applyInPandasWithState(

@@ -56,3 +56,17 @@ def test_flagship_observe_metrics(spark, sf_dir):
     got = obs.get
     assert got["n_bins"] == len(rows)
     assert got["n_events_total"] == sum(r["n_events"] for r in rows)
+
+
+def test_bench_contamination_rule():
+    """bench.py's env.contaminated follows the README rule: steal >= 3 %,
+    load1 at start > 2, or median/min > 1.5 on two or more queries."""
+    from bench import contamination
+
+    calm = {"a": {"median": 1.4, "min": 1.0}, "b": {"median": 2.0, "min": 1.0}}
+    assert contamination([0.5, 0.4, 0.3], 2.9, calm) == []
+    assert contamination(None, None, {}) == []
+    noisy = {**calm, "c": {"median": 1.6, "min": 1.0}}
+    reasons = contamination([2.5, 1.0, 1.0], 3.0, noisy)
+    assert len(reasons) == 3
+    assert reasons[2].startswith("median/min > 1.5 on 2 queries: b, c")

@@ -56,6 +56,80 @@ def test_gzip_csv_ingest(spark, tmp_path):
     assert rows[49]["seq"] == 49
 
 
+def _jobs_fired(spark, group, fn):
+    """(fn(), number of Spark jobs fn fired)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_each_file_schema_once(spark, sf_dir, tmp_path):
+    """The first load of a file infers its schema (one footer job);
+    the next load of the same file reuses it and fires no job."""
+    import shutil
+
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), tmp_path / "orders.parquet")
+    first, n1 = _jobs_fired(
+        spark, "test_io.load_first", lambda: load_table(spark, str(tmp_path), "orders")
+    )
+    second, n2 = _jobs_fired(
+        spark, "test_io.load_second", lambda: load_table(spark, str(tmp_path), "orders")
+    )
+    assert n1 >= 1
+    assert n2 == 0, f"{n2} jobs fired by a repeat load"
+    assert second.schema == first.schema
+    assert second.count() == first.count()
+
+
+def test_load_table_follows_ts_unit_across_rewrites(spark, tmp_path):
+    """Rewriting ``events.parquet`` in place changes its cache key: a
+    TIMESTAMP(MICROS) file, then TIMESTAMP(NANOS) at the same path, then
+    MICROS again each take their own ``ts`` branch, and every load
+    matches DuckDB's ns->us truncation."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_600_000_000_123_456_789, 1_600_000_100_000_000_999, 1_600_003_600_999_999_001]
+    path = str(tmp_path / "events.parquet")
+
+    def write(unit):
+        ts = pa.array([v if unit == "ns" else v // 1000 for v in ns], pa.int64())
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([1, 2, 3], pa.int64()),
+                    "ts": ts.cast(pa.timestamp(unit)),
+                    "user_id": pa.array([7, 7, 8], pa.int64()),
+                    "event_type": ["view", "purchase", "view"],
+                    "value": [1.25, 2.5, 3.75],
+                }
+            ),
+            path,
+            coerce_timestamps=None,
+            allow_truncated_timestamps=False,
+        )
+
+    # Spark infers a MICROS column (not UTC-adjusted) as timestamp_ntz;
+    # the loader turns NANOS (bigint under nanosAsLong) into timestamp
+    dtype = {"us": "timestamp_ntz", "ns": "timestamp"}
+    con = duckdb.connect()
+    for unit in ("us", "ns", "us"):
+        write(unit)
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == dtype[unit]
+        us = F.unix_micros(F.col("ts").cast("timestamp"))
+        got = [r[0] for r in df.orderBy("event_id").select(us).collect()]
+        want = con.execute(
+            f"SELECT epoch_us(CAST(ts AS TIMESTAMP)) FROM '{path}' ORDER BY event_id"
+        ).fetchall()
+        assert got == [r[0] for r in want] == [v // 1000 for v in ns], unit
+
+
 def test_driver_fixtures_satisfy_non_null_contract(spark):
     """TESTDATA contract (round 6): the oracle-checked surface assumes
     the NON_NULL_CONTRACT columns are never NULL (NULL ordering and

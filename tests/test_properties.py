@@ -6481,3 +6481,72 @@ def test_bayes_posterior_accuracy_at_1e6_conversions(spark):
     )
     assert 0.2 < ref < 0.98  # mid-range by construction
     assert abs(float(r["p_b_beats_a"]) - ref) <= 1e-6
+
+
+def _ties_and_neighbours():
+    import math
+
+    vals = [0.49999999999999994, 2.0**52 - 1, 2.0**52 + 1, 2.0**53, 0.0, -0.0]
+    vals += [1e-300, -1e-300, 9.2e18, -9.2e18, 2.0**52 - 0.5, 2.0**51 + 0.5]
+    for k in (0, 1, 2, 7, 12345, 2**40):
+        for tie in (k + 0.5, -(k + 0.5)):
+            vals += [tie, math.nextafter(tie, math.inf), math.nextafter(tie, -math.inf)]
+    return vals
+
+
+def _rounded(spark, xs, ansi, kernel):
+    """``kernel(x)`` per row of ``xs`` (a DOUBLE column) with ANSI on
+    or off."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = spark.createDataFrame([(x,) for x in xs], "x double")
+        return [r[0] for r in df.select(kernel(F.col("x"))).collect()]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def _spark_round(x):
+    return F.round(x).cast("long")
+
+
+def _mismatches(spark, xs, ansi):
+    from dissertation_iceberg_spark.functions.exact import round_long
+
+    want = _rounded(spark, xs, ansi, _spark_round)
+    got = _rounded(spark, xs, ansi, round_long)
+    return [(x, w, g) for x, w, g in zip(xs, want, got) if w != g]
+
+
+DOUBLES = st.floats(
+    min_value=-9.2e18, max_value=9.2e18, allow_nan=False, allow_infinity=False
+)
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_round_long_matches_spark_round_on_edges(spark, ansi):
+    """round_long is F.round(x).cast("long") on DOUBLE, bit for bit:
+    HALF_UP ties, their nextafter neighbours, the largest double below
+    0.5, the 2**52 switch to plain casts, signed zeros, NULL."""
+    assert not _mismatches(spark, _ties_and_neighbours() + [None], ansi)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(DOUBLES, min_size=1, max_size=60), st.sampled_from(["true", "false"]))
+def test_round_long_matches_spark_round_property(spark, xs, ansi):
+    assert not _mismatches(spark, xs, ansi)
+
+
+@pytest.mark.parametrize("x", [float("nan"), float("inf"), float("-inf"), 1e19])
+def test_round_long_overflow_matches_spark_round(spark, x):
+    """Values no BIGINT holds reach the same cast on both forms: the
+    same value without ANSI, the same CAST_OVERFLOW error with it."""
+    from pyspark.errors import ArithmeticException
+
+    from dissertation_iceberg_spark.functions.exact import round_long
+
+    assert not _mismatches(spark, [x], "false")
+    for kernel in (_spark_round, round_long):
+        with pytest.raises(ArithmeticException) as err:
+            _rounded(spark, [x], "true", kernel)
+        assert err.value.getCondition() == "CAST_OVERFLOW"
