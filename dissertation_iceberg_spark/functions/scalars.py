@@ -24,13 +24,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def scalar_of(stats: DataFrame, col: str) -> Column:
-    """One column of a 1-row aggregate as a scalar-subquery Column."""
-    return stats.select(col).scalar()
 
 
 def with_scalars(

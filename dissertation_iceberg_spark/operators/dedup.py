@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.operators.text import TOKEN_SEP
 from dissertation_iceberg_spark.session import pin
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -674,69 +674,28 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .transform(pin)
     )
-    # NOTE (round 6): an Observation-fused convergence check was tried
-    # here (changed-count riding the label materialization) and
-    # REVERTED — Observation registers state on the session that later
-    # leaks into unrelated task closures (java.io.
-    # NotSerializableException: ObservationManager, reproducible when a
-    # Spark-ML fit runs after several CC invocations in one session),
-    # and it measured no faster than the two-job form. The edge-list
-    # localCheckpoint above is the load-bearing fix.
-    # Convergence check (round 8): labels are NON-INCREASING per id —
-    # each sweep takes min(old label, neighbor labels) — so "no label
-    # changed" is exactly "the label sum is unchanged". A 1-row sum
-    # aggregate over the just-pinned frame replaces the former
-    # join-old-vs-new + limit + count job per sweep (same sweep count,
-    # strictly less work per sweep; decimal(38) sum cannot overflow).
-    # The sum form requires INTEGER node ids — integer types and
-    # decimal(p,0) (a string label has no overflow-free exact sum, and
-    # ANSI would reject the cast; a scaled decimal ROUNDS in the
-    # decimal(38,0) cast, so a changed label can leave the sum equal
-    # and stop the loop early); for any other id type fall back to the
-    # type-generic changed-row check, so the operator's contract stays
-    # "any orderable id" (round 9, ADVICE). prev_sum is SEEDED from the
-    # initial identity labels (one 1-row agg on the just-pinned frame) so
-    # an already-converged graph — e.g. an empty edge set, which
-    # previously paid all max_iter sweeps because None never compared
-    # equal — breaks after ONE sweep instead of two (round 9, VERDICT
-    # item 4).
-    label_type = dict(labels.dtypes)["label"]
-    integer_labels = label_type in (
-        "tinyint", "smallint", "int", "bigint"
-    ) or (label_type.startswith("decimal(") and label_type.endswith(",0)"))
-
-    def _label_sum(frame):
-        return frame.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-
-    prev_sum = _label_sum(labels) if integer_labels else None
+    # Labels only fall (each sweep takes min(old label, neighbor
+    # labels)), so a row changed iff its new label is below the label
+    # it carried in as ``old``; the candidates carry no ``old``. A
+    # 1-row any-changed aggregate over the just-pinned frame is the
+    # stop test, for any orderable id type. On an empty graph it reads
+    # NULL and stops after one sweep.
     for _ in range(max_iter):
         cand = sym.join(labels, sym["dst"] == labels["id"]).select(
             F.col("src").alias("id"), "label"
         )
         new = (
-            labels.unionByName(cand)
+            labels.withColumn("old", F.col("label"))
+            .unionByName(cand, allowMissingColumns=True)
             .groupBy("id")
-            .agg(F.min("label").alias("label"))
+            .agg(
+                F.min("label").alias("label"),
+                (F.min("label") < F.max("old")).alias("changed"),
+            )
             .transform(pin)
         )
-        if integer_labels:
-            cur_sum = _label_sum(new)
-            converged = cur_sum == prev_sum
-            prev_sum = cur_sum
-        else:
-            converged = (
-                new.join(
-                    labels.select("id", F.col("label").alias("__old")), "id"
-                )
-                .filter(F.col("label") != F.col("__old"))
-                .limit(1)
-                .count()
-                == 0
-            )
-        labels = new
-        if converged:
+        labels = new.select("id", "label")
+        if not new.agg(F.bool_or("changed")).first()[0]:
             break
     return labels
 
@@ -796,10 +755,7 @@ def containment_near_dup_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     cont = (
-        round_long(
-            F.col("n_inter") / F.least("size_a", "size_b") * 1e6
-        )
-        / 1e6
+        r6(F.col("n_inter") / F.least("size_a", "size_b"))
     )
     return (
         inter.withColumn("containment", cont)

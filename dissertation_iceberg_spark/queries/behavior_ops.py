@@ -21,7 +21,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6, round_long
 
 # --------------------------------------------------------------------------
 # Ordered funnel: view -> click -> purchase (first-touch sequencing)
@@ -1851,26 +1851,20 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "channel",
         (
-            round_long((F.col("p_base").cast("double") / _MKV_P1) * 1e6)
-            / F.lit(1e6)
+            r6(F.col("p_base").cast("double") / _MKV_P1)
         ).alias("p_conv_base"),
         (
-            round_long(
-                (F.col("p_removed_micro").cast("double") / _MKV_P1) * 1e6
-            )
-            / F.lit(1e6)
+            r6(F.col("p_removed_micro").cast("double") / _MKV_P1)
         ).alias("p_conv_removed"),
-        (round_long(F.col("effect") * 1e6) / F.lit(1e6)).alias(
+        r6(F.col("effect")).alias(
             "removal_effect"
         ),
         (
-            round_long(
+            r6(
                 F.when(
                     F.col("tot_eff") > 0, F.col("effect") / F.col("tot_eff")
                 ).otherwise(F.lit(0.0))
-                * 1e6
             )
-            / F.lit(1e6)
         ).alias("attribution_share"),
     )
 
@@ -2058,25 +2052,19 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "channel",
         "n_touched",
         (
-            round_long(
-                (
-                    F.col("phi_num").cast("double")
-                    / F.factorial(F.col("k").cast("int"))
-                    / F.lit(1e6)
-                )
-                * 1e6
+            r6(
+                F.col("phi_num").cast("double")
+                / F.factorial(F.col("k").cast("int"))
+                / F.lit(1e6)
             )
-            / F.lit(1e6)
         ).alias("shapley_value"),
         (
-            round_long(
+            r6(
                 F.when(
                     F.col("tot_num") != 0,
                     F.col("phi_num").cast("double") / F.col("tot_num"),
                 ).otherwise(F.lit(0.0))
-                * 1e6
             )
-            / F.lit(1e6)
         ).alias("attribution_share"),
     )
 
@@ -2203,13 +2191,10 @@ def topk_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_curr",
         "n_next",
         "retained",
-        (round_long(jac * 1e6) / F.lit(1e6)).alias("jaccard"),
+        r6(jac).alias("jaccard"),
         F.when(
             F.col("retained") > 0,
-            round_long(
-                (F.col("disp_sum").cast("double") / F.col("retained")) * 1e6
-            )
-            / F.lit(1e6),
+            r6(F.col("disp_sum").cast("double") / F.col("retained")),
         ).alias("mean_rank_displacement"),
     )
 
@@ -2307,22 +2292,18 @@ def transition_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("n").alias("n_transitions"),
         (
-            round_long((F.col("hcond_ev").cast("double") / F.col("n") / 1e6) * 1e6)
-            / F.lit(1e6)
+            r6(F.col("hcond_ev").cast("double") / F.col("n") / 1e6)
         ).alias("entropy_rate_nats"),
         (
-            round_long((F.col("hmarg_ev").cast("double") / F.col("n") / 1e6) * 1e6)
-            / F.lit(1e6)
+            r6(F.col("hmarg_ev").cast("double") / F.col("n") / 1e6)
         ).alias("marginal_entropy_nats"),
         (
-            round_long(
+            r6(
                 F.when(
                     F.col("hmarg_ev") > 0,
                     1.0 - F.col("hcond_ev").cast("double") / F.col("hmarg_ev"),
                 ).otherwise(F.lit(0.0))
-                * 1e6
             )
-            / F.lit(1e6)
         ).alias("predictability_gain"),
     )
 
@@ -2428,7 +2409,6 @@ def eb_rate_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(ok, m * scale).otherwise(F.lit(1.0)).alias("alpha"),
         F.when(ok, (1 - m) * scale).otherwise(F.lit(1.0)).alias("beta"),
     )
-    r6 = lambda c: round_long(c * 1e6) / 1e6  # noqa: E731
     return q.transform(with_scalars, ab).select(
         "user_id",
         "n_events",
@@ -2509,7 +2489,6 @@ def frequent_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 3)
         .agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     )
-    r6 = lambda c: round_long(c * 1e6) / 1e6  # noqa: E731
     return pat.transform(with_scalars, denom).select(
         "t1",
         "t2",
@@ -2614,12 +2593,7 @@ def item_cf_topk(
         "rec",
         F.col("n_both").cast("long").alias("n_both"),
         (
-            round_long(
-                F.col("n_both")
-                / F.sqrt(F.col("n_i").cast("double") * F.col("n_r"))
-                * 1e6
-            )
-            / 1e6
+            r6(F.col("n_both") / F.sqrt(F.col("n_i").cast("double") * F.col("n_r")))
         ).alias("cosine"),
     )
     w = Window.partitionBy("item").orderBy(F.desc("cosine"), F.asc("rec"))
@@ -2779,7 +2753,7 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "resolution"
         ),
         (
-            round_long(obs * (F.lit(1.0) - obs) * 1e6) / 1e6
+            r6(obs * (F.lit(1.0) - obs))
         ).alias("uncertainty"),
         (F.col("sq_tot") / F.col("n_tot") / 1e12).alias("brier"),
     )

@@ -678,11 +678,10 @@ def gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         va1 = F.col("v1q") / 1e2
         va2 = F.col("v2q") / 1e2
         lnw = (
-            round_long(F.log((1.0 - F.col("w1d")) / F.col("w1d")) * 1e6)
-            / 1e6
+            r6(F.log((1.0 - F.col("w1d")) / F.col("w1d")))
         )
         lnv = (
-            round_long(0.5 * F.log(va1 / va2) * 1e6) / 1e6
+            r6(0.5 * F.log(va1 / va2))
         )
         ell = (
             lnw
@@ -854,16 +853,14 @@ def gpd_pot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     xi = 0.5 * (1.0 - m * m / vv)
     beta = 0.5 * m * (m * m / vv + 1.0)
     powq = (
-        round_long(
+        r6(
             F.pow(
                 F.col("n").cast("double")
                 / nu
                 * (1.0 - F.expr(f"CAST('{_GPD_VAR_LEVEL}' AS DOUBLE)")),
                 -xi,
             )
-            * 1e6
         )
-        / 1e6
     )
     return s.select(
         nu.alias("n_exceedances"),

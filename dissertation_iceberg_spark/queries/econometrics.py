@@ -970,7 +970,7 @@ def spearman_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type_a",
         "type_b",
         F.col("t").alias("n_days"),
-        (round_long((num / den) * 1e6) / F.lit(1e6)).alias(
+        r6(num / den).alias(
             "spearman_rho"
         ),
     )

@@ -34,7 +34,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6, round_long
 
 # --------------------------------------------------------------------------
 # Embedding-cosine near-duplicate pairs (exact, oracle-matched)
@@ -1937,21 +1937,13 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("j").cast("long").alias("pos"),
         (
-            round_long(
-                (F.col("v").cast("double") / F.sqrt(F.col("vtv").cast("double")))
-                * 1e6
-            )
-            / F.lit(1e6)
+            r6(F.col("v").cast("double") / F.sqrt(F.col("vtv").cast("double")))
         ).alias("pc1_component"),
         (
-            round_long(
-                (F.col("num") / F.col("vtv") / F.col("n") / F.lit(1e8)) * 1e6
-            )
-            / F.lit(1e6)
+            r6(F.col("num") / F.col("vtv") / F.col("n") / F.lit(1e8))
         ).alias("eigenvalue"),
         (
-            round_long((F.col("num") / F.col("vtv") / F.col("tr")) * 1e6)
-            / F.lit(1e6)
+            r6(F.col("num") / F.col("vtv") / F.col("tr"))
         ).alias("variance_share"),
     )
 

@@ -23,7 +23,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6
 
 _PR_ITERS = 3
 _PR_TOPK = 30
@@ -776,12 +776,9 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m").alias("n_directed_edges"),
         "n_nodes",
         (
-            round_long(
-                (F.col("deg_total").cast("double") / F.col("n_nodes")) * 1e6
-            )
-            / F.lit(1e6)
+            r6(F.col("deg_total").cast("double") / F.col("n_nodes"))
         ).alias("mean_degree"),
-        (round_long((num / den) * 1e6) / F.lit(1e6)).alias(
+        r6(num / den).alias(
             "assortativity"
         ),
     )

@@ -22,7 +22,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6, round_long
 
 # --------------------------------------------------------------------------
 # Exact dedup (hash-groupBy)
@@ -2305,14 +2305,11 @@ def edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
 
     lev = F.levenshtein(_bytes_view("text_a"), _bytes_view("text_b"))
-    sim = round_long(
-        (
-            1.0
-            - lev.cast("double")
-            / F.greatest(F.octet_length("text_a"), F.octet_length("text_b"))
-        )
-        * 1e6
-    ) / 1e6
+    sim = r6(
+        1.0
+        - lev.cast("double")
+        / F.greatest(F.octet_length("text_a"), F.octet_length("text_b"))
+    )
     return j.select(
         "id_a",
         "id_b",
@@ -2723,10 +2720,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     na = norms.select(F.col("doc_id").alias("id_a"), F.col("n2").alias("na2"))
     nb = norms.select(F.col("doc_id").alias("id_b"), F.col("n2").alias("nb2"))
     cos = (
-        round_long(
-            F.col("dot") / (F.sqrt("na2") * F.sqrt("nb2")) * 1e6
-        )
-        / 1e6
+        r6(F.col("dot") / (F.sqrt("na2") * F.sqrt("nb2")))
     )
     return (
         pairs.join(na, "id_a")

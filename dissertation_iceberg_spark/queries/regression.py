@@ -20,7 +20,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6, round_long
 
 
 @register(
@@ -620,18 +620,15 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_train",
         "n_cal",
         F.col("n_test").cast("long").alias("n_test"),
-        (round_long(F.col("b0") * 1e6) / F.lit(1e6)).alias(
+        r6(F.col("b0")).alias(
             "beta0_cents"
         ),
-        (round_long(F.col("b1") * 1e6) / F.lit(1e6)).alias(
+        r6(F.col("b1")).alias(
             "beta1_cents"
         ),
         F.col("q_cents").alias("q_hat_cents"),
         (
-            round_long(
-                (F.col("n_cov").cast("double") / F.col("n_test")) * 1e6
-            )
-            / F.lit(1e6)
+            r6(F.col("n_cov").cast("double") / F.col("n_test"))
         ).alias("coverage"),
     )
 
@@ -810,14 +807,14 @@ def huber_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("n_rows"),
         F.col("mad_c").alias("mad_cents"),
         F.col("c").alias("huber_c_cents"),
-        (round_long(F.col("b0") * 1e6) / F.lit(1e6)).alias(
+        r6(F.col("b0")).alias(
             "beta0_ols"
         ),
-        (round_long(F.col("b1") * 1e6) / F.lit(1e6)).alias(
+        r6(F.col("b1")).alias(
             "beta1_ols"
         ),
-        (round_long(b0h * 1e6) / F.lit(1e6)).alias("beta0_huber"),
-        (round_long(b1h * 1e6) / F.lit(1e6)).alias("beta1_huber"),
+        r6(b0h).alias("beta0_huber"),
+        r6(b1h).alias("beta1_huber"),
     )
 
 

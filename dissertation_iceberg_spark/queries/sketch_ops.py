@@ -28,7 +28,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6, round_long
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
 
@@ -135,13 +135,6 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOOM_BITS = 1 << 16
 _BLOOM_K = 4
 _BLOOM_BUILD_SOURCE = "src0"  # driver fixture sources: src0..src19
-
-
-def _bloom_positions_sql(expr: str) -> str:
-    return " UNION ALL ".join(
-        f"SELECT {_seeded_hash_sql(str(i), expr)} % {_BLOOM_BITS} AS bit"
-        for i in range(_BLOOM_K)
-    )
 
 
 _BLOOM_ORACLE = f"""
@@ -1368,9 +1361,6 @@ def kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(n < _KMV_K, n.cast("double")).otherwise(
             (_KMV_K - 1) * float(_KMV_H) / theta
         )
-
-    def r6(col):
-        return round_long(col * 1e6) / 1e6
 
     ea = te.select(
         F.col("event_type").alias("ta"),

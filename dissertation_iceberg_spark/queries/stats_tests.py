@@ -2774,8 +2774,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("den").alias("n"),
         F.col("num").alias("n_pos"),
         (
-            round_long(F.col("num").cast("double") / F.col("den") * 1e6)
-            / 1e6
+            r6(F.col("num").cast("double") / F.col("den"))
         ).alias("p_raw"),
         (F.col("iso_micro") / 1e6).alias("p_iso"),
     )
@@ -3124,18 +3123,15 @@ def mi_feature_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "feature",
         "n_levels",
         (
-            round_long((F.col("mi_ev").cast("double") / F.col("n") / 1e6) * 1e6)
-            / F.lit(1e6)
+            r6(F.col("mi_ev").cast("double") / F.col("n") / 1e6)
         ).alias("mi_nats"),
         (
-            round_long(
+            r6(
                 F.when(
                     F.col("hy_ev") > 0,
                     F.col("mi_ev").cast("double") / F.col("hy_ev"),
                 ).otherwise(F.lit(0.0))
-                * 1e6
             )
-            / F.lit(1e6)
         ).alias("nmi"),
     )
 

@@ -30,7 +30,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6, round_long
 
 # --------------------------------------------------------------------------
 # Brown-Forsythe (median-centered Levene) variance-homogeneity test
@@ -3992,8 +3992,8 @@ def odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = s.filter((a > 0) & (b > 0) & (c > 0) & (d > 0))
     rr = (a.cast("double") / (a + b)) / (c.cast("double") / (c + d))
     orr = (a.cast("double") * d) / (b.cast("double") * c)
-    lrr = round_long(F.log(rr) * 1e6) / 1e6
-    lor = round_long(F.log(orr) * 1e6) / 1e6
+    lrr = r6(F.log(rr))
+    lor = r6(F.log(orr))
     se_lrr = F.sqrt(
         1.0 / a - 1.0 / (a + b) + 1.0 / c - 1.0 / (c + d)
     )
@@ -4001,7 +4001,7 @@ def odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = F.expr(f"CAST('{_RR_Z95}' AS DOUBLE)")
 
     def expq(x):
-        return round_long(F.exp(x) * 1e6) / 1e6
+        return r6(F.exp(x))
 
     return s.select(
         a.alias("treat_pos"),
@@ -5226,7 +5226,7 @@ def weibull_plot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sy").cast("double") * F.col("sxx")
         - F.col("sx").cast("double") * F.col("sxy")
     ) / det
-    scale = round_long(F.exp(-intercept / slope / 1e6) * 1e6) / 1e6
+    scale = r6(F.exp(-intercept / slope / 1e6))
     return g.select(
         F.col("n").alias("n_points"),
         F.round(slope, 6).alias("weibull_shape"),

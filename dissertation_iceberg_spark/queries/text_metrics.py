@@ -24,7 +24,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6, round_long
 
 # --------------------------------------------------------------------------
 # Zipf slope: log-log OLS over the top-K rank-frequency curve
@@ -718,7 +718,7 @@ def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "source_a",
         "source_b",
-        (round_long(js * 1e6) / F.lit(1e6)).alias("js_nats"),
+        r6(js).alias("js_nats"),
     )
 
 

@@ -1,42 +1,38 @@
-"""Streaming position-based (U-shaped) multi-touch attribution via
-applyInPandasWithState — the streaming twin of
-queries/behavior_ops.position_attribution.
+"""Streaming position-based (U-shaped) multi-touch attribution — the
+streaming twin of queries/behavior_ops.position_attribution.
 
 Batch needs the whole history to pair each purchase with its 30-minute
-touch lookback; on a stream, per-user state buffers both sides across
-micro-batches:
+touch lookback; on a stream, the sealed fold (streaming/sealed.py)
+buffers touches and purchases until the WATERMARK passes their event
+time (only then can no older event still arrive), then folds them in
+(ts, kind, event_id) order: a touch joins the per-user window, a
+purchase is credited against the window's touches and emitted. A
+purchase sorts after the touches of its own microsecond, which its
+lookback includes. Each folded event first evicts the window's touches
+older than its ts - lookback: every later purchase sits at or after
+it, so none can reach them.
 
-- touch (click/view) arrives  -> buffered in state
-- purchase arrives            -> buffered until the WATERMARK passes
-  its event time (only then can no older touch still arrive), then
-  credited against the buffered touches in its lookback and emitted
-- touches with ts + lookback < watermark can never enter a future
-  purchase's window (pending purchases all sit at/above the watermark
-  — anything below was just finalized) -> evicted
-
-So state per user is bounded by one (lookback + watermark-delay) span
-of touches plus the purchases inside the watermark delay — independent
-of stream length. Credit arithmetic replicates the batch operator's
-exactly: integer micro-units, with the one middle-split division
-rounded HALF_UP on the double quotient (Decimal replay of Spark's
-BigDecimal round), so emitted credits are bit-equal to batch.
+So state per user is bounded by one lookback span of touches plus the
+events inside the watermark delay — independent of stream length.
+Credit arithmetic replicates the batch operator's exactly: integer
+micro-units, with the one middle-split division rounded HALF_UP on
+the double quotient (Decimal replay of Spark's BigDecimal round), so
+emitted credits are bit-equal to batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 from decimal import ROUND_HALF_UP, Decimal
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from dissertation_iceberg_spark.streaming.sealed import sealed_fold
+
+# kind = 1-based position; purchase last, so it sorts after same-µs touches
+KINDS = ("click", "view", "purchase")
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -48,16 +44,8 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# touches: parallel arrays (ts_us, id, type); purchases: (ts_us, id)
-STATE_SCHEMA = StructType(
-    [
-        StructField("touch_ts", ArrayType(LongType()), True),
-        StructField("touch_id", ArrayType(LongType()), True),
-        StructField("touch_type", ArrayType(StringType()), True),
-        StructField("p_ts", ArrayType(LongType()), True),
-        StructField("p_id", ArrayType(LongType()), True),
-    ]
-)
+# the lookback window's touches as parallel (ts_us, event_id, kind)
+MODEL = {"win_ts": [], "win_id": [], "win_kind": []}
 
 
 def _credit(rank: int, n: int) -> int:
@@ -75,63 +63,21 @@ def _credit(rank: int, n: int) -> int:
     )
 
 
-def _make_attributor(lookback_us: int):
-    def attribute(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            t_ts, t_id, t_ty, p_ts, p_id = state.get
-            touches = sorted(zip(t_ts, t_id, t_ty))
-            purchases = sorted(zip(p_ts, p_id))
-        else:
-            touches, purchases = [], []
-
-        for pdf in pdfs:
-            for r in pdf.itertuples():
-                if r.event_type == "purchase":
-                    purchases.append((int(r.ts_us), int(r.event_id)))
-                else:
-                    touches.append((int(r.ts_us), int(r.event_id), r.event_type))
-        touches.sort()
-        purchases.sort()
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        out: list[tuple[int, int, int, str, int]] = []
-        still_pending = []
-        for p_us, pid in purchases:
-            if p_us >= wm_us:
-                still_pending.append((p_us, pid))
-                continue
-            window = [
-                t for t in touches if p_us - lookback_us <= t[0] <= p_us
-            ]
+def _make_step(lookback_us: int) -> Callable:
+    def step(model: tuple, event: tuple) -> tuple[tuple, list[tuple]]:
+        ts, kind, eid = event
+        window = [t for t in zip(*model) if t[0] >= ts - lookback_us]
+        rows = []
+        if KINDS[kind - 1] == "purchase":
             n = len(window)
-            for rank, (_, tid, tty) in enumerate(window, start=1):
-                out.append((user_id, pid, tid, tty, _credit(rank, n)))
-        purchases = still_pending
+            # rank by (ts, id), as batch does
+            for rank, (_, tid, tkind) in enumerate(sorted(window), start=1):
+                rows.append((eid, tid, KINDS[tkind - 1], _credit(rank, n)))
+        else:
+            window.append((ts, eid, kind))
+        return tuple([t[i] for t in window] for i in range(3)), rows
 
-        # a touch is dead once no future or pending purchase can reach
-        # it: future ones sit at/above wm; pendings do too (see module
-        # docstring), so wm alone bounds eviction
-        touches = [t for t in touches if t[0] + lookback_us >= wm_us]
-
-        state.update((
-            [t[0] for t in touches],
-            [t[1] for t in touches],
-            [t[2] for t in touches],
-            [p[0] for p in purchases],
-            [p[1] for p in purchases],
-        ))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "p_id", "t_id", "touch_type", "credit_micro"],
-            )
-
-    return attribute
+    return step
 
 
 def streaming_position_attribution(
@@ -144,25 +90,9 @@ def streaming_position_attribution(
     purchase. Append-mode; credits are bit-equal to the batch
     operator's for every sealed purchase (pinned in
     tests/test_stateful_streaming.py)."""
-    from pyspark.sql import functions as F
-
-    from dissertation_iceberg_spark.functions.time_bins import micros
-
-    df = (
-        events.filter(F.col("event_type").isin("purchase", "click", "view"))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("ts_us", micros("ts"))
-    )
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
-    return (
-        df.select("user_id", "ts", "ts_us", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_attributor(lookback_us),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    kind = F.array_position(F.array(*map(F.lit, KINDS)), F.col("event_type"))
+    return sealed_fold(
+        events.filter(F.col("event_type").isin(*KINDS)), "user_id",
+        [kind.alias("kind"), "event_id"], MODEL, _make_step(lookback_us),
+        OUTPUT_SCHEMA, watermark,
     )

@@ -1,24 +1,23 @@
-"""Streaming first-touch funnel (view -> click -> purchase) via
-``applyInPandasWithState`` — the streaming twin of
-queries/behavior_ops.funnel_conversion's per-user step frames.
+"""Streaming first-touch funnel (view -> click -> purchase) — the
+streaming twin of queries/behavior_ops.funnel_conversion's per-user
+step frames.
 
 Batch computes each user's step-conversion times with three chained
 min-aggregates (t1 = first view; t2 = first click at-or-after t1;
-t3 = first purchase at-or-after t2).  On a stream the same machine
-runs incrementally per user:
+t3 = first purchase at-or-after t2).  On a stream the sealed fold
+(streaming/sealed.py) runs the same machine incrementally per user:
 
 - events BELOW the watermark form a complete, immutable prefix, so
   they can be folded in event-time order; folded step times can never
-  be invalidated by later arrivals (anything older would be dropped)
-  -> each step time is FINAL the moment it is set, and is emitted
-  exactly once;
+  be invalidated by later arrivals (anything older is dropped at
+  ingest) -> each step time is FINAL the moment it is set, and is
+  emitted exactly once, right then;
 - events at-or-above the watermark are buffered in state (an
   out-of-order view could still precede them), bounded by one
   watermark-delay's worth of events per user;
-- the funnel register itself is three longs + an emit counter per
-  user — state is O(active users), independent of history length,
-  hash-partitioned on user across the cluster exactly like the batch
-  shuffle.
+- the funnel register itself is three longs per user — state is
+  O(active users), independent of history length, hash-partitioned on
+  user across the cluster exactly like the batch shuffle.
 
 Fold order (ts, step, event_id) is total, so a click landing on the
 same microsecond as the first view deterministically counts (view
@@ -28,18 +27,11 @@ sorts first via step rank), byte-identical to the batch twin's
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
+
+from dissertation_iceberg_spark.streaming.sealed import sealed_fold
 
 FUNNEL_STEPS = ("view", "click", "purchase")
 
@@ -51,68 +43,17 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# pending events (parallel arrays) + funnel register (t1, t2, t3 with
-# -1 = unset) + number of steps already emitted
-STATE_SCHEMA = StructType(
-    [
-        StructField("pend_ts", ArrayType(LongType()), True),
-        StructField("pend_step", ArrayType(LongType()), True),
-        StructField("pend_id", ArrayType(LongType()), True),
-        StructField("t1", LongType(), True),
-        StructField("t2", LongType(), True),
-        StructField("t3", LongType(), True),
-        StructField("n_emitted", LongType(), True),
-    ]
-)
-
-_STEP_RANK = {name: i for i, name in enumerate(FUNNEL_STEPS)}
+# step times t1..t3, -1 = not reached yet
+MODEL = {"t1": -1, "t2": -1, "t3": -1}
 
 
-def _fold(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        p_ts, p_step, p_id, t1, t2, t3, n_emitted = state.get
-        pending = list(zip(p_ts, p_step, p_id))
-    else:
-        pending, t1, t2, t3, n_emitted = [], -1, -1, -1, 0
-
-    for pdf in pdfs:
-        for r in pdf.itertuples():
-            pending.append((int(r.ts_us), _STEP_RANK[r.event_type], int(r.event_id)))
-
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    ready = sorted(e for e in pending if e[0] < wm_us)
-    pending = [e for e in pending if e[0] >= wm_us]
-
-    for ts, step, _eid in ready:
-        if step == 0 and t1 < 0:
-            t1 = ts
-        elif step == 1 and t1 >= 0 and t2 < 0:
-            t2 = ts
-        elif step == 2 and t2 >= 0 and t3 < 0:
-            t3 = ts
-
-    out = []
-    for i, t in enumerate((t1, t2, t3), start=1):
-        if t >= 0 and i > n_emitted:
-            out.append((user_id, i, t))
-            n_emitted = i
-
-    state.update((
-        [e[0] for e in pending],
-        [e[1] for e in pending],
-        [e[2] for e in pending],
-        t1,
-        t2,
-        t3,
-        n_emitted,
-    ))
-    if out:
-        yield pd.DataFrame(out, columns=["user_id", "step", "t_us"])
+def _step(model: tuple, event: tuple) -> tuple[tuple, list[tuple]]:
+    ts, step, _ = event
+    t = list(model)
+    if t[step - 1] >= 0 or (step > 1 and t[step - 2] < 0):
+        return model, []
+    t[step - 1] = ts
+    return tuple(t), [(step, ts)]
 
 
 def streaming_funnel(
@@ -122,24 +63,10 @@ def streaming_funnel(
     """readStream events -> append-mode (user_id, step, t_us) rows,
     one per finalized funnel step.  On a batch frame use
     :func:`batch_funnel_steps` — the twin the test pins against."""
-    e = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    e = e.withWatermark("ts", watermark)
-    e = e.filter(F.col("event_type").isin(*FUNNEL_STEPS)).select(
-        "user_id",
-        "event_type",
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "ts",
-    )
-    return (
-        e.groupBy("user_id")
-        .applyInPandasWithState(
-            _fold,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    step = F.array_position(F.array(*map(F.lit, FUNNEL_STEPS)), F.col("event_type"))
+    return sealed_fold(
+        events.filter(F.col("event_type").isin(*FUNNEL_STEPS)), "user_id",
+        [step.alias("step"), "event_id"], MODEL, _step, OUTPUT_SCHEMA, watermark,
     )
 
 

@@ -1,12 +1,12 @@
-"""Streaming per-key Holt (level + trend) forecaster via
-applyInPandasWithState — the streaming twin of
-queries/changepoint_ops.holt_linear_forecast, emitting a one-step
-forecast and its error for every sealed day.
+"""Streaming per-key Holt (level + trend) forecaster — the streaming
+twin of queries/changepoint_ops.holt_linear_forecast, emitting a
+one-step forecast and its error for every sealed day.
 
 Like the EWMA monitor (anomaly_stream.py), day cells accumulate
-order-free integer partial counts in state; a day is SEALED once the
-watermark passes its end, and sealed days drain through the exact
-integer-shift recursion in day order — identical to the batch fold:
+order-free integer partial counts in state (streaming/sealed.py); a
+day is SEALED once the watermark passes its end, and sealed days drain
+through the exact integer-shift recursion in day order — identical to
+the batch fold:
 
     l' = (y - 0 + l + b) >> 1        (no seasonal term in Holt)
     b' = (l' - l + b) >> 1           (alpha = beta = 1/2)
@@ -23,20 +23,11 @@ tests/test_stateful_streaming.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-DAY_US = 86_400_000_000
+from dissertation_iceberg_spark.streaming.sealed import sealed_fold
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -50,74 +41,19 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# seeded = 0 before the first sealed day; open days ride as parallel
-# (day_us, count) arrays
-STATE_SCHEMA = StructType(
-    [
-        StructField("seeded", LongType(), True),
-        StructField("l", LongType(), True),
-        StructField("b", LongType(), True),
-        StructField("open_day", ArrayType(LongType()), True),
-        StructField("open_y", ArrayType(LongType()), True),
-    ]
-)
+# seeded = 0 before the first sealed day
+MODEL = {"seeded": 0, "l": 0, "b": 0}
 
 
-def _forecaster(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (event_type,) = key
-    if state.exists:
-        seeded, l, b, days, ys = state.get
-        partial = dict(zip(days, ys))
-    else:
-        seeded, l, b, partial = 0, 0, 0, {}
-
-    # drop sub-watermark stragglers at ingest (round 6, all day-cell
-    # ops): applyInPandasWithState does not auto-drop them, and a row
-    # for an already-sealed day would re-create the cell and emit a
-    # duplicate (key, day_us) row corrupting the level/trend recursion
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    for pdf in pdfs:
-        for r in pdf.itertuples():
-            d = (int(r.ts_us) // DAY_US) * DAY_US
-            if d + DAY_US <= wm_us:
-                continue
-            partial[d] = partial.get(d, 0) + 1
-
-    out: list[tuple] = []
-    for d in sorted(partial):
-        if wm_us < d + DAY_US:
-            break
-        y = partial.pop(d)
-        if not seeded:
-            seeded, l, b = 1, y, 0
-            out.append((event_type, d, y, None, None, l, b))
-        else:
-            fc = l + b
-            l_new = (y + l + b) >> 1
-            b = (l_new - l + b) >> 1
-            l = l_new
-            out.append((event_type, d, y, fc, y - fc, l, b))
-
-    state.update(
-        (seeded, l, b, sorted(partial), [partial[d] for d in sorted(partial)])
-    )
-    if out:
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "event_type",
-                "day_us",
-                "y",
-                "forecast",
-                "error",
-                "level",
-                "trend",
-            ],
-        )
+def _step(model: tuple, cell: tuple) -> tuple[tuple, list[tuple]]:
+    seeded, l, b = model
+    day, y = cell
+    if not seeded:
+        return (1, y, 0), [(day, y, None, None, y, 0)]
+    fc = l + b
+    l_new = (y + l + b) >> 1
+    b_new = (l_new - l + b) >> 1
+    return (1, l_new, b_new), [(day, y, fc, y - fc, l_new, b_new)]
 
 
 def streaming_holt_forecast(
@@ -127,21 +63,7 @@ def streaming_holt_forecast(
     (event_type, day_us, y, forecast, error, level, trend),
     append-mode, bit-equal to the batch holt_linear_forecast
     integer-shift recursion for every sealed day."""
-    from pyspark.sql import functions as F
-
-    from dissertation_iceberg_spark.functions.time_bins import micros
-
-    df = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
-    return (
-        df.select("event_type", "ts", micros("ts").alias("ts_us"))
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _forecaster,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    return sealed_fold(
+        events, "event_type", [F.lit(1).alias("y")], MODEL, _step,
+        OUTPUT_SCHEMA, watermark, day_cells=True,
     )

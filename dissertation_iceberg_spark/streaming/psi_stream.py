@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from dissertation_iceberg_spark.functions.exact import round_long
+from dissertation_iceberg_spark.functions.exact import r6
 
 # Fixed bin edges over `value` (log-ish spacing; bin B-1 is the
 # overflow bin). In production these come from the training snapshot.
@@ -81,7 +81,7 @@ def psi_score(counts: DataFrame, baseline_counts: list[int]) -> DataFrame:
     for i in range(N_BINS):
         p = (F.col(f"c{i}") + 1) / (F.col("n") + N_BINS)
         psi = psi + (p - F.lit(q[i])) * F.log(p / F.lit(q[i]))
-    psi_r = round_long(psi * 1e6) / 1e6
+    psi_r = r6(psi)
     return counts.select(
         "window_start",
         "n",

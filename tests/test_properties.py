@@ -128,29 +128,38 @@ def test_asof_tolerance_monotone(spark, gap_us):
 def test_connected_components_chain_triangle(spark):
     """Min-label propagation reaches the exact fixpoint: a 4-chain
     (transitive closure beyond direct pairs), a triangle, and a
-    detached pair each collapse to their min id."""
+    detached pair each collapse to their min id; a string-id chain
+    collapses to its min string."""
     from dissertation_iceberg_spark.operators.dedup import connected_components
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4),      # chain: 1-2-3-4
-         (10, 11), (11, 12), (10, 12),  # triangle
-         (20, 21)],                   # pair
-        ["id_a", "id_b"],
-    )
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(edges, max_iter=10).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1,
-                   10: 10, 11: 10, 12: 10,
-                   20: 20, 21: 20}
+    cases = [
+        (
+            [(1, 2), (2, 3), (3, 4),      # chain: 1-2-3-4
+             (10, 11), (11, 12), (10, 12),  # triangle
+             (20, 21)],                   # pair
+            {1: 1, 2: 1, 3: 1, 4: 1,
+             10: 10, 11: 10, 12: 10,
+             20: 20, 21: 20},
+        ),
+        (
+            [("d", "c"), ("c", "b"), ("b", "a")],  # chain, min id last
+            {"a": "a", "b": "a", "c": "a", "d": "a"},
+        ),
+    ]
+    for pairs, want in cases:
+        edges = spark.createDataFrame(pairs, ["id_a", "id_b"])
+        got = {
+            r["id"]: r["label"]
+            for r in connected_components(edges, max_iter=10).collect()
+        }
+        assert got == want
 
 
 def test_connected_components_scaled_decimal_ids(spark):
     """decimal(10,2) ids that all round to the same integer: a 4-chain
-    needs three sweeps, but the rounded label sum never moves, so the
-    label-sum convergence check would stop after the first sweep.
-    Scaled decimals must take the changed-row check."""
+    needs three sweeps, but the rounded label sum never moves, so a
+    convergence check on rounded labels would stop after the first
+    sweep."""
     from decimal import Decimal
 
     from dissertation_iceberg_spark.operators.dedup import connected_components

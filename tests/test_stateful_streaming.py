@@ -1811,79 +1811,164 @@ def test_streaming_croston_matches_batch(spark, tmp_path):
     assert n_full > 0
 
 
-def test_croston_drops_sub_watermark_stragglers(spark, tmp_path):
-    """Round-6 straggler contract (all day-cell stateful ops): a row
-    arriving AFTER its demand day sealed must be dropped at ingest —
-    applyInPandasWithState does not auto-drop sub-watermark rows, and
-    before the fix such a straggler re-created the sealed day's cell,
-    emitting a duplicate (user_id, day_us) row with a negative
-    gap_days that corrupted the z/q recursion."""
-    import pandas as pd
+_T0 = pd.Timestamp("2024-01-01")
+_M, _H, _D = pd.Timedelta(minutes=1), pd.Timedelta(hours=1), pd.Timedelta(days=1)
+_D5 = _T0 + 5 * _D
+_SEAL_AT = _D5 + 11 * _H  # first sentinel: watermark moves to day 5, 10:30
+_FAR = _T0 + 30 * _D  # second sentinel and the last key row
 
-    from dissertation_iceberg_spark.streaming.croston_stream import (
-        streaming_croston_forecast,
+
+def _ev(ts, event_type="purchase", value=1.0, event_id=0, direction=1):
+    return {
+        "user_id": 0,
+        "event_type": event_type,
+        "ts": ts,
+        "event_id": event_id,
+        "direction": direction,
+        "value": value,
+    }
+
+
+# Per operator: the key's rows before the first sentinel, a filler row
+# above the advanced watermark, the straggler (below it, for an item the
+# watermark already sealed) and a live row sent with the straggler.
+_DAY_CELL_ROWS = (
+    [
+        _ev(_T0 + 10 * _H, value=10.0),
+        _ev(_T0 + _D + 10 * _H, value=20.0),
+        _ev(_T0 + 3 * _D + 10 * _H, value=40.0),
+    ],
+    _ev(_D5 + 10 * _H + 40 * _M, value=5.0),
+    _ev(_T0 + 10 * _H + _M, value=99.0),
+    _ev(_T0 + 6 * _D + 10 * _H, value=80.0),
+)
+_STRAGGLER_CASES = {
+    "anomaly": (
+        "anomaly_stream", "streaming_daily_ewma_anomalies", {},
+        "event_type", ["day_us"], _DAY_CELL_ROWS,
+    ),
+    "records": (
+        "records_stream", "streaming_record_highs", {},
+        "event_type", ["day_us"], _DAY_CELL_ROWS,
+    ),
+    "holt": (
+        "holt_stream", "streaming_holt_forecast", {},
+        "event_type", ["day_us"], _DAY_CELL_ROWS,
+    ),
+    "croston": (
+        "croston_stream", "streaming_croston_forecast", {},
+        "user_id", ["day_us"], _DAY_CELL_ROWS,
+    ),
+    # batch with the 3.00 sell: buckets (600, 300) / (900, 0); without
+    # it: (600, 0) / (900, 0); folding it late gave (600, 0) / (900, 300)
+    "vpin": (
+        "vpin_stream", "streaming_vpin_buckets", {"bucket_cents": 1000},
+        "user_id", ["bucket"],
+        (
+            [
+                _ev(_T0 + 10 * _H, value=6.0, event_id=1),
+                _ev(_T0 + 12 * _H, value=9.0, event_id=2),
+            ],
+            _ev(_D5 + 10 * _H + 40 * _M, value=10.0, event_id=3),
+            _ev(_T0 + 11 * _H, value=3.0, event_id=4, direction=-1),
+            _ev(_D5 + 13 * _H, value=1.0, event_id=5),
+        ),
+    ),
+    # a late 11:00 click after the sealed 12:00 view must not become
+    # step 2: batch gives the 13:00 click
+    "funnel": (
+        "funnel_stream", "streaming_funnel", {},
+        "user_id", ["step"],
+        (
+            [_ev(_T0 + 12 * _H, "view", event_id=1)],
+            _ev(_D5 + 10 * _H + 40 * _M, "view", event_id=2),
+            _ev(_T0 + 11 * _H, "click", event_id=3),
+            _ev(_D5 + 13 * _H, "click", event_id=4),
+        ),
+    ),
+    # the late 10:25 purchase's lookback holds the 09:58 click, which
+    # a sealed fold has already moved past
+    "attribution": (
+        "attribution_stream", "streaming_position_attribution", {},
+        "user_id", ["p_id", "t_id"],
+        (
+            [
+                _ev(_D5 + 9 * _H + 58 * _M, "click", event_id=1),
+                _ev(_D5 + 10 * _H + 10 * _M, "view", event_id=2),
+                _ev(_D5 + 10 * _H + 15 * _M, "purchase", event_id=3),
+            ],
+            _ev(_D5 + 10 * _H + 40 * _M, "view", event_id=4),
+            _ev(_D5 + 10 * _H + 25 * _M, "purchase", event_id=5),
+            _ev(_D5 + 10 * _H + 50 * _M, "purchase", event_id=6),
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_STRAGGLER_CASES))
+def test_sealed_ops_drop_sub_watermark_stragglers(spark, tmp_path, op):
+    """Late-data contract of every watermark-sealed operator: a row
+    arriving below the watermark, for an item or day the watermark has
+    already sealed, is dropped whole. applyInPandasWithState does not
+    drop such rows itself; folded in, one re-creates a sealed day (a
+    duplicate row) or lands in a later item (a value that matches no
+    batch result). Key "a"/1 gets the straggler, key "b"/2 the same
+    stream without it: both must emit the same rows.
+
+    Under NoTimeout a key runs only when it gets rows, so each key gets
+    a filler row under the advanced watermark before the straggler
+    arrives, and a last row after a second sentinel seals the rest."""
+    import importlib
+
+    module, fn_name, kwargs, key_col, item_cols, timeline = _STRAGGLER_CASES[op]
+    fn = getattr(
+        importlib.import_module(f"dissertation_iceberg_spark.streaming.{module}"),
+        fn_name,
     )
+    rows0, filler, straggler, live = timeline
+    a, b, s = ("a", "b", "s") if key_col == "event_type" else (1, 2, 99)
 
-    base = pd.Timestamp("2024-01-01 10:00:00")
-    day = pd.Timedelta(days=1)
+    def on(key, *rows):
+        return [{**r, key_col: key} for r in rows]
 
-    def mk(rows):
-        return pd.DataFrame(
-            {
-                "user_id": [r[0] for r in rows],
-                "ts": [r[1] for r in rows],
-                "event_type": "purchase",
-                "value": [float(r[2]) for r in rows],
-            }
-        )
-
-    # batch 0: three demand days for user 1
-    b0 = mk([(1, base, 10.0), (1, base + day, 20.0), (1, base + 3 * day, 40.0)])
-    # batch 1: sentinel far in the future -> watermark seals everything
-    b1 = mk([(99, base + 60 * day, 1.0)])
-    # batch 2: STRAGGLER for the long-sealed first day + a fresh live row
-    b2 = mk([(1, base + pd.Timedelta(minutes=1), 99.0),
-             (1, base + 61 * day, 80.0)])
-    # batch 3 advances max event time; batch 4 re-invokes user 1
-    # under the advanced watermark so the fresh day-61 row seals
-    b3 = mk([(99, base + 120 * day, 1.0)])
-    b4 = mk([(1, base + 180 * day, 1.0)])
+    last = _ev(_FAR, event_id=9)
+    batches = [
+        on(a, *rows0) + on(b, *rows0),
+        on(s, _ev(_SEAL_AT)),
+        on(a, filler) + on(b, filler),
+        on(a, straggler, live) + on(b, live),
+        on(s, _ev(_FAR)),
+        on(a, last) + on(b, last),
+    ]
     src = str(tmp_path / "strag_src")
-    for i, b in enumerate((b0, b1, b2, b3, b4)):
-        spark.createDataFrame(b).coalesce(1).write.parquet(f"{src}/f{i}")
-
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(pd.DataFrame(rows)).coalesce(1).write.parquet(
+            f"{src}/f{i}"
+        )
     stream = (
-        spark.readStream.schema(spark.createDataFrame(b0).schema)
+        spark.readStream.schema(spark.read.parquet(f"{src}/f0").schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f*")
     )
     q = (
-        streaming_croston_forecast(stream)
+        fn(stream, **kwargs)
         .writeStream.format("memory")
-        .queryName("croston_strag")
+        .queryName(f"strag_{op}")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    got = (
-        spark.table("croston_strag")
-        .toPandas()
-        .query("user_id == 1")
-        .sort_values("day_us")
-        .reset_index(drop=True)
-    )
-    # no duplicate day rows, no negative gaps, straggler cents ignored
-    assert not got.duplicated(["user_id", "day_us"]).any()
-    assert (got["gap_days"].dropna() >= 1).all()
-    DAY_US = 86_400_000_000
-    d0 = (base.value // 1000 // DAY_US) * DAY_US
-    first = got[got["day_us"] == d0]
-    assert len(first) == 1 and int(first.iloc[0]["cents"]) == 1000
-    # recursion unaffected: z after days 10.00/20.00/40.00/80.00 sealed
-    # = ((((1000)+2000)>>1 ... seeded z=1000 -> (2000+1000)>>1=1500 ->
-    # (4000+1500)>>1=2750 -> (8000+2750)>>1=5375
-    assert int(got.iloc[-1]["z_hat"]) == 5375
+    got = spark.table(f"strag_{op}").toPandas()
+    assert not got.duplicated([key_col, *item_cols]).any()
+
+    def rows_of(key):
+        out = got[got[key_col] == key].drop(columns=key_col)
+        return out.sort_values(list(out.columns)).reset_index(drop=True)
+
+    want = rows_of(b)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(rows_of(a), want)
 
 
 def _run_restartable(spark, make_stream, schema, src, sink, ckpt):

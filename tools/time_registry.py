@@ -7,12 +7,24 @@ warm-up run of the first query, then ``n_runs`` noop-timed runs per
 query (``best`` and ``lower_median`` recorded: the lower median,
 rs[(n-1)//2] of the sorted runs, which is the best run when n_runs=2).
 Queries ordered by registry insertion.
+
+Each run is split into the DataFrame build (the query function's call)
+and its execution (the noop write), each under its own Spark job group.
+From the last run, the warmest, each query also records:
+
+- ``build_s``: seconds spent building the DataFrame;
+- ``build_jobs``: Spark jobs fired while building (eager pins, scalar
+  collects);
+- ``exec_jobs``: Spark jobs fired by the noop write;
+- ``exchanges``: Exchange, BroadcastExchange and ReusedExchange nodes in
+  the DataFrame's executed plan, counted after the timed runs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -36,6 +48,8 @@ def main() -> None:
 
     _ensure_loaded()
     spark = get_spark("time-registry")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     results: dict[str, dict] = {}
     names = list(REGISTRY)
     # one throwaway pass to absorb JVM/codegen warm-up
@@ -47,17 +61,30 @@ def main() -> None:
         fn = REGISTRY[name].fn
         runs = []
         err = None
-        for _ in range(n_runs):
+        for r in range(n_runs):
+            group = f"time_registry|{name}|{r}"
             t0 = time.perf_counter()
             try:
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                sc.setJobGroup(f"{group}|build", name)
+                df = fn(spark, sf_dir)
+                t1 = time.perf_counter()
+                sc.setJobGroup(f"{group}|exec", name)
+                df.write.format("noop").mode("overwrite").save()
             except Exception as e:  # noqa: BLE001 - recorded, sweep continues
                 err = f"{type(e).__name__}: {e}"[:300]
                 break
             runs.append(time.perf_counter() - t0)
+            done = df
+            layers = {
+                "build_s": round(t1 - t0, 3),
+                "build_jobs": len(tracker.getJobIdsForGroup(f"{group}|build")),
+                "exec_jobs": len(tracker.getJobIdsForGroup(f"{group}|exec")),
+            }
         if runs:
+            plan = done._jdf.queryExecution().executedPlan().toString()
+            layers["exchanges"] = len(
+                re.findall(r"\b(?:Exchange|BroadcastExchange|ReusedExchange)\b", plan)
+            )
             rs = sorted(runs)
             # LOWER median (ADVICE round 9): the contention-robust
             # choice, named for what it is — with the default n_runs=2
@@ -68,6 +95,7 @@ def main() -> None:
                 "best": round(rs[0], 3),
                 "lower_median": round(rs[(len(rs) - 1) // 2], 3),
                 "n": len(rs),
+                **layers,
             }
         else:
             results[name] = {"error": err}
