@@ -3,11 +3,16 @@
 Beyond the reference surface (engine extension, SURVEY §7 step 9):
 - exact dedup: hash-groupBy on content (or md5 fingerprint at 100 TB so
   the shuffle key is 16 bytes, not the document)
-- n-gram Jaccard near-dup: shingle -> explode -> inverted-index
-  self-join -> Jaccard from intersection counts. Candidate pairs are
-  generated only for documents sharing >=1 shingle (never a cross
-  join); at 100 TB add a shingle-frequency cap to drop stop-shingles
-  (documented inline).
+- n-gram Jaccard near-dup: shingle -> sorted posting list per
+  shingle -> C(k,2) pair expansion -> Jaccard from intersection
+  counts. Candidate pairs are generated only for documents sharing
+  >=1 shingle (never a cross join); at 100 TB add a shingle-frequency
+  cap to drop stop-shingles (documented inline).
+- every set-similarity join (Jaccard, PPJoin prefix filter,
+  containment, winnowing, and ``queries/llm_ops.tfidf_cosine_pairs``)
+  expands its posting arrays through the one kernel
+  :func:`upper_pairs`; the callers differ only in the pair struct they
+  build and what they aggregate.
 - MinHash/SimHash variants live here too; MinHash uses exact permutation
   hashing expressed with built-in hash + transform (no UDF).
 
@@ -17,7 +22,9 @@ collects to the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.operators.text import TOKEN_SEP
@@ -95,10 +102,89 @@ def word_shingles(
     return out.filter(F.col("shingle").isNotNull())
 
 
+def upper_pairs(arr: str, pair: Callable[[Column, Column], Column]) -> Column:
+    """Every unordered pair of a posting array, map-side: for the
+    elements ``arr[i], arr[j]`` with ``i < j``, in (i, j) order,
+    ``pair(arr[i], arr[j])``. Over a sorted posting list (doc ids, or
+    structs led by the doc id) the lower id comes first. The C(k,2)
+    expansion behind every set-similarity join here: O(k²) per
+    posting list, which is what the callers' frequency caps bound.
+
+    Precondition: ``size(arr) >= 2``. Every caller filters its postings
+    to that first; a shorter array makes ``sequence(0, k-2)``
+    descending and yields bogus pairs.
+    """
+    k = F.size(arr)
+    return F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), k - 2),
+            lambda i: F.transform(
+                F.sequence(i + 1, k - 1),
+                lambda j: pair(F.col(arr)[i], F.col(arr)[j]),
+            ),
+        )
+    )
+
+
+def _sized_pair(a: Column, b: Column, *extra: Column) -> Column:
+    """Pair struct of two (doc_id, set_size, ...) posting entries."""
+    return F.struct(
+        a["doc_id"].alias("id_a"),
+        b["doc_id"].alias("id_b"),
+        a["set_size"].alias("size_a"),
+        b["set_size"].alias("size_b"),
+        *extra,
+    )
+
+
+def _ratio_ok(a: Column, b: Column, t: float) -> Column:
+    """Length-ratio prune: J(A, B) >= t implies t·|B| <= |A| <= |B|/t."""
+    return (a >= t * b) & (b >= t * a)
+
+
+def _jaccard() -> Column:
+    """|A∩B| / |A∪B| over a pair's n_inter / size_a / size_b, 6 dp."""
+    return F.round(
+        F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
+        6,
+    )
+
+
+def _counted_id_pairs(
+    posts: DataFrame,
+    n_parts: int,
+    count: Column,
+    sizes: DataFrame,
+    size_a: str,
+    size_b: str,
+) -> DataFrame:
+    """The ids-only pair tail: expand the ``ids`` posting arrays
+    (each of size >= 2), hash-repartition the pairs to ``n_parts``
+    when nonzero, count each pair with the aliased ``count``
+    aggregate, then join the (doc_id, size) frame ``sizes`` onto both
+    ends as ``size_a`` / ``size_b``."""
+    expanded = posts.select(
+        F.explode(
+            upper_pairs(
+                "ids", lambda a, b: F.struct(a.alias("id_a"), b.alias("id_b"))
+            )
+        ).alias("pr")
+    ).select("pr.id_a", "pr.id_b")
+    if n_parts:
+        expanded = expanded.repartition(n_parts, "id_a", "id_b")
+    doc, size = sizes.columns
+    sa = sizes.select(F.col(doc).alias("id_a"), F.col(size).alias(size_a))
+    sb = sizes.select(F.col(doc).alias("id_b"), F.col(size).alias(size_b))
+    return (
+        expanded.groupBy("id_a", "id_b").agg(count)
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+    )
+
+
 def _posting_shuffle_partitions(
     postings_src: DataFrame,
     key: str,
-    self_size: bool,
     rows_per_partition: int = 500_000,
 ) -> int:
     """Derived shuffle width for a posting-list pair expansion, or 0
@@ -109,8 +195,6 @@ def _posting_shuffle_partitions(
     the item_cf recipe). ``rows_per_partition`` is the per-reducer
     quota the exact volume is divided by — 500k (the item_cf SMJ
     sweet spot) unless the caller's expansion rows are narrower."""
-    if not self_size:
-        return 0
     from dissertation_iceberg_spark.functions.partitioning import (
         pair_expansion_partitions,
     )
@@ -178,7 +262,6 @@ def jaccard_near_dup_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = None,
-    self_size: bool = True,
     bound_src: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate-pair n-gram Jaccard similarity >= threshold.
@@ -219,7 +302,7 @@ def jaccard_near_dup_pairs(
     aggregate (two O(pairs) equi-joins). The uncapped path keeps the
     joinless one-pass shape with sizes riding the posting arrays.
 
-    ``self_size`` (capped path only — the declared 100 TB deployment
+    Self-sizing (capped path only — the declared 100 TB deployment
     shape): the posting-list and pair-count shuffles are pre-sized
     from the EXACT pre-cap candidate volume sum(df^2) via one cheap
     count pre-agg (``functions/partitioning.pair_expansion_partitions``
@@ -246,24 +329,25 @@ def jaccard_near_dup_pairs(
         # self-sizing gate: only pay the exact sum(df^2) pre-agg (a
         # second tokenize+shingle scan) when the length-arithmetic
         # worst case says the session default MIGHT not suffice
-        if self_size:
-            default = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        default = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        )
+        # bound_src (round 8): the length sum is row-order
+        # independent, so callers whose ``df`` sits on top of a
+        # parallelism-restoring repartition can hand the RAW scan
+        # here and the bound job skips that exchange (~0.2 s of a
+        # 0.3 s job at sf0.1)
+        bound = _capped_pair_volume_bound(
+            df if bound_src is None else bound_src,
+            text_col,
+            max_shingle_freq,
+        )
+        n_parts = (
+            _posting_shuffle_partitions(
+                sh, "shingle", rows_per_partition=_JACCARD_PAIRS_PER_PARTITION
             )
-            # bound_src (round 8): the length sum is row-order
-            # independent, so callers whose ``df`` sits on top of a
-            # parallelism-restoring repartition can hand the RAW scan
-            # here and the bound job skips that exchange (~0.2 s of a
-            # 0.3 s job at sf0.1)
-            bound = _capped_pair_volume_bound(
-                df if bound_src is None else bound_src,
-                text_col,
-                max_shingle_freq,
-            )
-            self_size = bound > _JACCARD_PAIRS_PER_PARTITION * default
-        n_parts = _posting_shuffle_partitions(
-            sh, "shingle", self_size,
-            rows_per_partition=_JACCARD_PAIRS_PER_PARTITION,
+            if bound > _JACCARD_PAIRS_PER_PARTITION * default
+            else 0
         )
         if n_parts:
             sh = sh.repartition(n_parts, "shingle")
@@ -282,61 +366,21 @@ def jaccard_near_dup_pairs(
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("set_size"))
         )
-        posts = posts.filter(F.size("ids") >= 2)
-        k = F.size("ids")
-        combos = F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), k - 2),
-                lambda i: F.transform(
-                    F.sequence(i + 1, k - 1),
-                    lambda j: F.struct(
-                        F.col("ids")[i].alias("id_a"),
-                        F.col("ids")[j].alias("id_b"),
-                    ),
-                ),
-            )
-        )
-        expanded = posts.select(F.explode(combos).alias("pr")).select(
-            "pr.id_a", "pr.id_b"
-        )
-        if n_parts:
-            expanded = expanded.repartition(n_parts, "id_a", "id_b")
-        inter = expanded.groupBy("id_a", "id_b").agg(
-            F.count(F.lit(1)).alias("n_inter")
-        )
-        sa = sizes.select(
-            F.col("doc_id").alias("id_a"), F.col("set_size").alias("size_a")
-        )
-        sb = sizes.select(
-            F.col("doc_id").alias("id_b"), F.col("set_size").alias("size_b")
-        )
-        inter = inter.join(sa, "id_a").join(sb, "id_b").filter(
-            (F.col("size_a") >= threshold * F.col("size_b"))
-            & (F.col("size_b") >= threshold * F.col("size_a"))
-        )
+        inter = _counted_id_pairs(
+            posts.filter(F.size("ids") >= 2),
+            n_parts,
+            F.count(F.lit(1)).alias("n_inter"),
+            sizes,
+            "size_a",
+            "size_b",
+        ).filter(_ratio_ok(F.col("size_a"), F.col("size_b"), threshold))
     else:
         posts = sh.groupBy("shingle").agg(
             F.sort_array(F.collect_list(F.struct("doc_id", "set_size"))).alias("ps")
         ).filter(F.size("ps") >= 2)
-        k = F.size("ps")
-        combos = F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), k - 2),
-                lambda i: F.transform(
-                    F.sequence(i + 1, k - 1),
-                    lambda j: F.struct(
-                        F.col("ps")[i]["doc_id"].alias("id_a"),
-                        F.col("ps")[j]["doc_id"].alias("id_b"),
-                        F.col("ps")[i]["set_size"].alias("size_a"),
-                        F.col("ps")[j]["set_size"].alias("size_b"),
-                    ),
-                ),
-            )
-        )
         pruned = F.filter(
-            combos,
-            lambda c: (c["size_a"] >= threshold * c["size_b"])
-            & (c["size_b"] >= threshold * c["size_a"]),
+            upper_pairs("ps", _sized_pair),
+            lambda c: _ratio_ok(c["size_a"], c["size_b"], threshold),
         )
         inter = (
             posts.select(F.explode(pruned).alias("pr"))
@@ -344,14 +388,7 @@ def jaccard_near_dup_pairs(
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     return (
-        inter.withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-                6,
-            ),
-        )
+        inter.withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "n_inter", "jaccard")
     )
@@ -437,40 +474,27 @@ def prefix_filter_near_dup_pairs(
         )
         .filter(F.size("ps") >= 2)
     )
-    k = F.size("ps")
-    combos = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), k - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, k - 1),
-                lambda j: F.struct(
-                    F.col("ps")[i]["doc_id"].alias("id_a"),
-                    F.col("ps")[j]["doc_id"].alias("id_b"),
-                    F.col("ps")[i]["set_size"].alias("size_a"),
-                    F.col("ps")[j]["set_size"].alias("size_b"),
-                    # PPJoin positional overlap bound for THIS shared
-                    # prefix shingle w: common shingles ordered <= w
-                    # sit at positions <= pos in both docs (<= min of
-                    # the positions, w included), common shingles > w
-                    # in the suffixes (<= min of the suffix lengths) —
-                    # so n_inter <= ub_w for every shared w
-                    (
-                        F.least(F.col("ps")[i]["pos"], F.col("ps")[j]["pos"])
-                        + F.least(
-                            F.col("ps")[i]["set_size"]
-                            - F.col("ps")[i]["pos"],
-                            F.col("ps")[j]["set_size"]
-                            - F.col("ps")[j]["pos"],
-                        )
-                    ).alias("ub"),
-                ),
-            ),
-        )
+    combos = upper_pairs(
+        "ps",
+        lambda a, b: _sized_pair(
+            a,
+            b,
+            # PPJoin positional overlap bound for THIS shared prefix
+            # shingle w: common shingles ordered <= w sit at positions
+            # <= pos in both docs (<= min of the positions, w
+            # included), common shingles > w in the suffixes (<= min
+            # of the suffix lengths) — so n_inter <= ub_w for every
+            # shared w
+            (
+                F.least(a["pos"], b["pos"])
+                + F.least(
+                    a["set_size"] - a["pos"], b["set_size"] - b["pos"]
+                )
+            ).alias("ub"),
+        ),
     )
     pruned = F.filter(
-        combos,
-        lambda c: (c["size_a"] >= threshold * c["size_b"])
-        & (c["size_b"] >= threshold * c["size_a"]),
+        combos, lambda c: _ratio_ok(c["size_a"], c["size_b"], threshold)
     )
     # a pair sharing several prefix shingles repeats — dedup on the id
     # pair (sizes are functionally dependent, kept as grouping keys).
@@ -508,14 +532,7 @@ def prefix_filter_near_dup_pairs(
         .withColumn(
             "n_inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
         )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
     return verified.select("id_a", "id_b", "n_inter", "jaccard")
@@ -715,9 +732,9 @@ def containment_near_dup_pairs(
     1.0; this is the dedup signal corpus pipelines use to drop
     boilerplate-wrapped copies and quoted reposts.
 
-    Same joinless posting-list expansion as
-    :func:`jaccard_near_dup_pairs` (uncapped path), with one
-    deliberate difference: NO length-ratio pruning — containment's
+    Joinless posting-list expansion through :func:`upper_pairs` over
+    (doc_id, set_size) postings, as in the uncapped Jaccard path, with
+    one deliberate difference: NO length-ratio pruning — containment's
     whole point is pairs with very different sizes, so the ratio
     prune would delete exactly the hits. The scale knob here is the
     stop-shingle frequency cap (same argument as the Jaccard path);
@@ -734,23 +751,8 @@ def containment_near_dup_pairs(
         )
         .filter(F.size("ps") >= 2)
     )
-    k = F.size("ps")
-    combos = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), k - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, k - 1),
-                lambda j: F.struct(
-                    F.col("ps")[i]["doc_id"].alias("id_a"),
-                    F.col("ps")[j]["doc_id"].alias("id_b"),
-                    F.col("ps")[i]["set_size"].alias("size_a"),
-                    F.col("ps")[j]["set_size"].alias("size_b"),
-                ),
-            ),
-        )
-    )
     inter = (
-        posts.select(F.explode(combos).alias("pr"))
+        posts.select(F.explode(upper_pairs("ps", _sized_pair)).alias("pr"))
         .groupBy("pr.id_a", "pr.id_b", "pr.size_a", "pr.size_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -831,18 +833,19 @@ def winnow_near_dup_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_fp_freq: int | None = None,
-    self_size: bool = True,
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints,
     scored by containment n_shared / min(|fp_a|, |fp_b|).
 
-    Matching is the posting-list expansion (the jaccard_near_dup_pairs
-    round-3 shape): fingerprints group by hash into sorted id lists,
-    C(df,2) pairs expand map-side, one pair-keyed count — no join
-    operator on the fingerprint table. ``max_fp_freq`` drops
-    boilerplate fingerprints shared by too many docs (the stop-shingle
-    analog) — at 100 TB run with a cap; per-hash fan-out is O(df^2).
-    Doc sizes join back keyed (two broadcast-able O(docs) equi-joins).
+    Matching is the ids-only posting-list tail of the capped Jaccard
+    path (:func:`upper_pairs` behind ``_counted_id_pairs``):
+    fingerprints group by hash into sorted id lists, C(df,2) pairs
+    expand map-side, one pair-keyed count — no join operator on the
+    fingerprint table. ``max_fp_freq`` drops boilerplate fingerprints
+    shared by too many docs (the stop-shingle analog) — at 100 TB run
+    with a cap; per-hash fan-out is O(df^2). Doc sizes (pre-cap
+    fingerprint counts) join back keyed (two broadcast-able O(docs)
+    equi-joins).
     """
     fps = winnowing_fingerprints(df, text_col, id_col, k=k, w=w).select(
         "doc_id", "h"
@@ -851,8 +854,8 @@ def winnow_near_dup_pairs(
     # capped = the declared 100 TB path: pre-size its posting/pair
     # shuffles from the exact candidate volume (jaccard's recipe;
     # returns 0 — plan unchanged — when the default suffices)
-    n_parts = _posting_shuffle_partitions(
-        fps, "h", self_size and max_fp_freq is not None
+    n_parts = (
+        _posting_shuffle_partitions(fps, "h") if max_fp_freq is not None else 0
     )
     fp_src = fps.repartition(n_parts, "h") if n_parts else fps
     posts = fp_src.groupBy("h").agg(
@@ -860,39 +863,16 @@ def winnow_near_dup_pairs(
     )
     if max_fp_freq is not None:
         posts = posts.filter(F.size("ids") <= max_fp_freq)
-    posts = posts.filter(F.size("ids") >= 2)
-    n = F.size("ids")
-    combos = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, n - 1),
-                lambda j: F.struct(
-                    F.col("ids")[i].alias("id_a"),
-                    F.col("ids")[j].alias("id_b"),
-                ),
-            ),
-        )
-    )
-    expanded = posts.select(F.explode(combos).alias("pr")).select(
-        "pr.id_a", "pr.id_b"
-    )
-    if n_parts:
-        expanded = expanded.repartition(n_parts, "id_a", "id_b")
-    inter = (
-        expanded.groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    sa = sizes.select(
-        F.col("doc_id").alias("id_a"), F.col("n_fp").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("id_b"), F.col("n_fp").alias("n_b")
-    )
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _counted_id_pairs(
+            posts.filter(F.size("ids") >= 2),
+            n_parts,
+            F.count(F.lit(1)).cast("long").alias("n_shared"),
+            sizes,
+            "n_a",
+            "n_b",
+        )
+        .filter(F.col("n_shared") >= min_shared)
         .select(
             "id_a",
             "id_b",

@@ -39,6 +39,19 @@ SELECT DISTINCT l_suppkey * 2 + 1 AS src, l_partkey * 2 AS dst FROM lineitem
 """
 
 
+def _part_supplier_edges(li: DataFrame) -> DataFrame:
+    """The undirected part↔supplier edge list (src, dst) of
+    ``_EDGES_SQL``: each distinct (part, supplier) pair of ``li``, once
+    in each direction."""
+    fwd = li.select(
+        (F.col("l_partkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
+    ).distinct()
+    return fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
 def _iter_sql(prev: str, out: str) -> str:
     return f"""
 {out} AS (
@@ -84,12 +97,7 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iteration count is fixed (not convergence-tested) precisely so the
     oracle can unroll it."""
     li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    edges = fwd.unionByName(rev)
+    edges = _part_supplier_edges(li)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(_SCALE).cast("long").alias("r")
@@ -126,6 +134,27 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _TRI_MIN_WEIGHT = 2  # strong edges: parts co-purchased in >= 2 orders
+
+
+def _strong_copurchase_edges(li: DataFrame) -> DataFrame:
+    """Strong co-purchase edges (pa, pb), pa < pb: part pairs bought
+    together in at least ``_TRI_MIN_WEIGHT`` distinct orders."""
+    assoc = li.select("l_orderkey", "l_partkey").distinct()
+    b = assoc.select(
+        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb")
+    )
+    return (
+        assoc.join(
+            b,
+            (F.col("l_orderkey") == F.col("o2"))
+            & (F.col("l_partkey") < F.col("pb")),
+        )
+        .groupBy(F.col("l_partkey").alias("pa"), "pb")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= _TRI_MIN_WEIGHT)
+        .select("pa", "pb")
+    )
+
 
 _TRI_ORACLE = f"""
 WITH assoc AS (
@@ -180,21 +209,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Wedge totals come from the degree frame (O(nodes)); the final
     report is one row.""".format(w=_TRI_MIN_WEIGHT)
     li = load_table(spark, sf_dir, "lineitem")
-    assoc = li.select("l_orderkey", "l_partkey").distinct()
-    b = assoc.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb")
-    )
-    edges = (
-        assoc.join(
-            b,
-            (F.col("l_orderkey") == F.col("o2"))
-            & (F.col("l_partkey") < F.col("pb")),
-        )
-        .groupBy(F.col("l_partkey").alias("pa"), "pb")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _TRI_MIN_WEIGHT)
-        .select("pa", "pb")
-    )
+    edges = _strong_copurchase_edges(li)
     deg = (
         edges.select(F.col("pa").alias("node"))
         .unionAll(edges.select(F.col("pb").alias("node")))
@@ -291,21 +306,7 @@ def triangle_count_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once, from its unique lowest-apex wedge. max_out_degree
     vs max_degree in the output row is the measured skew cap."""
     li = load_table(spark, sf_dir, "lineitem")
-    assoc = li.select("l_orderkey", "l_partkey").distinct()
-    b = assoc.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb")
-    )
-    edges = (
-        assoc.join(
-            b,
-            (F.col("l_orderkey") == F.col("o2"))
-            & (F.col("l_partkey") < F.col("pb")),
-        )
-        .groupBy(F.col("l_partkey").alias("pa"), "pb")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= _TRI_MIN_WEIGHT)
-        .select("pa", "pb")
-    )
+    edges = _strong_copurchase_edges(li)
     deg = (
         edges.select(F.col("pa").alias("node"))
         .unionAll(edges.select(F.col("pb").alias("node")))
@@ -413,12 +414,7 @@ def bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange). The output is the O(hops) distance histogram split by
     node type.""".format(h=_BFS_HOPS)
     li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    edges = fwd.unionByName(rev)
+    edges = _part_supplier_edges(li)
     dist = (
         edges.select("src")
         .distinct()
@@ -516,18 +512,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_KCORE_K, r=_KCORE_PEELS
     )
     li = load_table(spark, sf_dir, "lineitem")
-    assoc = li.select("l_orderkey", "l_partkey").distinct()
-    b = assoc.select(
-        F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("pb")
-    )
-    edges = (
-        assoc.join(b, (F.col("l_orderkey") == F.col("okey"))
-                   & (F.col("l_partkey") < F.col("pb")))
-        .groupBy(F.col("l_partkey").alias("pa"), "pb")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= _TRI_MIN_WEIGHT)
-        .select("pa", "pb")
-    )
+    edges = _strong_copurchase_edges(li)
 
     def stats(e: DataFrame, i: int) -> DataFrame:
         nodes = e.select(F.col("pa").alias("node")).union(
@@ -631,12 +616,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch.""".format(brand=_PPR_BRAND)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    fwd = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    edges = fwd.unionByName(rev)
+    edges = _part_supplier_edges(li)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     seeds = part.filter(F.col("p_brand") == _PPR_BRAND).select(
         (F.col("p_partkey") * 2).alias("node")
@@ -738,13 +718,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: degrees and all five moment sums are exact BIGINT; r is
     one identical double expression, 6-dp integer-rounded."""
     li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _part_supplier_edges(li)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
     pairs = (
         edges.join(deg.select("src", F.col("d").alias("dx")), "src")
@@ -840,16 +814,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     per-node fan-in beyond degree.  This is the textbook Pregel step
     expressed as joins; 100 TB runs raise iterations, not state size.
     """
-    fwd = (
+    edges = _part_supplier_edges(
         spread(load_table(spark, sf_dir, "lineitem"))
-        .select(
-            (F.col("l_partkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")

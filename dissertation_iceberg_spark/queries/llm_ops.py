@@ -2695,19 +2695,13 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "w"))).alias("ps"))
         .filter(F.size("ps") >= 2)
     )
-    k = F.size("ps")
-    combos = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), k - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, k - 1),
-                lambda j: F.struct(
-                    F.col("ps")[i]["doc_id"].alias("id_a"),
-                    F.col("ps")[j]["doc_id"].alias("id_b"),
-                    (F.col("ps")[i]["w"] * F.col("ps")[j]["w"]).alias("ww"),
-                ),
-            ),
-        )
+    combos = dd.upper_pairs(
+        "ps",
+        lambda a, b: F.struct(
+            a["doc_id"].alias("id_a"),
+            b["doc_id"].alias("id_b"),
+            (a["w"] * b["w"]).alias("ww"),
+        ),
     )
     pairs = (
         posts.select(F.explode(combos).alias("pr"))

@@ -49,14 +49,30 @@ STARTUP_CONF = {
 }
 
 
+# The directory that holds this package. Python workers import the
+# package when they unpickle a UDF defined in it, and they start from
+# their own cwd: a driver that only put the repo on its own sys.path
+# would leave them with ModuleNotFoundError.
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
+
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (driver-owned)."""
+    """Apply runtime-settable confs to an existing session (driver-owned)
+    and put this package's parent directory on the PYTHONPATH its
+    Python workers start with (read per UDF, so it also reaches a
+    session that is already running)."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             # non-settable in this context; defaults are acceptable
             pass
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
     return spark
 
 

@@ -70,3 +70,37 @@ def test_bench_contamination_rule():
     reasons = contamination([2.5, 1.0, 1.0], 3.0, noisy)
     assert len(reasons) == 3
     assert reasons[2].startswith("median/min > 1.5 on 2 queries: b, c")
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path, sf_dir):
+    """A mapInPandas query run from a process whose cwd is not the repo
+    and whose own ``sys.path`` alone holds it: the session must give
+    its Python workers the package's parent directory on PYTHONPATH,
+    or they fail to unpickle the UDF with ModuleNotFoundError."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from dissertation_iceberg_spark.session import get_spark\n"
+        "from dissertation_iceberg_spark.queries.extensions import (\n"
+        "    multimodal_features)\n"
+        "spark = get_spark('cwd-test', master='local[2]',"
+        " shuffle_partitions=2)\n"
+        f"print('ROWS', multimodal_features(spark, {sf_dir!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    rows = [ln for ln in run.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert rows and int(rows[0].split()[1]) > 0, run.stdout

@@ -6028,39 +6028,136 @@ def test_jaccard_cap_noop(spark, sf_dir):
 def test_posting_self_size_pin(spark, sf_dir):
     """Posting-list self-sizing (round-5): the capped jaccard/winnow
     paths derive their pair-expansion shuffle width from the exact
-    sum(df^2) pre-agg. Values must be identical with the sizing on or
-    off (it is physical layout only), fixture-scale inputs must NOT
-    trigger a repartition (width 0 = plan unchanged), and a skewed
-    posting table must derive a wider-than-default shuffle."""
+    sum(df^2) pre-agg. Fixture-scale inputs must NOT trigger a
+    repartition (width 0 = plan unchanged), and a skewed posting
+    table must derive a wider-than-default shuffle."""
     from pyspark.sql import functions as F
 
     from dissertation_iceberg_spark.io import load_table
     from dissertation_iceberg_spark.operators.dedup import (
         _posting_shuffle_partitions,
-        jaccard_near_dup_pairs,
         word_shingles,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    on = jaccard_near_dup_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5,
-        max_shingle_freq=3, self_size=True,
-    ).toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    off = jaccard_near_dup_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5,
-        max_shingle_freq=3, self_size=False,
-    ).toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    assert on.equals(off)
     # fixture scale: candidate volume far below one partition's quota
     sh = word_shingles(docs, "text", "doc_id", 3)
-    assert _posting_shuffle_partitions(sh, "shingle", True) == 0
-    assert _posting_shuffle_partitions(sh, "shingle", False) == 0
+    assert _posting_shuffle_partitions(sh, "shingle") == 0
     # skewed synthetic: one 80k-doc stop-shingle => sum(df^2) = 6.4e9
     # => ceil(/500k) = 12800 => clamped to 4096, above any default
     hot = spark.range(80_000).select(
         F.lit("the quick fox").alias("shingle"), F.col("id").alias("doc_id")
     )
-    assert _posting_shuffle_partitions(hot, "shingle", True) == 4096
+    assert _posting_shuffle_partitions(hot, "shingle") == 4096
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.lists(st.integers(-1000, 1000), min_size=2, max_size=8),
+        min_size=1,
+        max_size=6,
+    )
+)
+def test_upper_pairs_matches_combinations(spark, arrays):
+    """``upper_pairs`` emits exactly ``itertools.combinations(arr, 2)``,
+    in that order, for any array of length 2..8 (its precondition)."""
+    from itertools import combinations
+
+    from dissertation_iceberg_spark.operators.dedup import upper_pairs
+
+    df = spark.createDataFrame(
+        list(enumerate(arrays)), "row INT, arr ARRAY<BIGINT>"
+    )
+    got = df.select(
+        "row",
+        upper_pairs(
+            "arr", lambda a, b: F.struct(a.alias("a"), b.alias("b"))
+        ).alias("pairs"),
+    ).collect()
+    for r in got:
+        assert [(p["a"], p["b"]) for p in r["pairs"]] == list(
+            combinations(arrays[r["row"]], 2)
+        )
+    assert len(got) == len(arrays)
+
+
+def test_winnow_fp_cap_pandas_replay(spark):
+    """``winnow_near_dup_pairs(max_fp_freq=...)`` drops fingerprints
+    posted by more than the cap before pairing, while n_a / n_b stay
+    the docs' full fingerprint counts. Three docs share a boilerplate
+    sentence and two of them also share a passage; with cap 2 the
+    boilerplate fingerprints (posted by exactly cap + 1 docs) go,
+    which removes the boilerplate-only pairs and lowers the passage
+    pair's n_shared. The capped output is replayed in pandas from the
+    selected fingerprints."""
+    from itertools import combinations
+
+    from dissertation_iceberg_spark.operators.dedup import (
+        winnow_near_dup_pairs,
+        winnowing_fingerprints,
+    )
+
+    boiler = "copyright all rights reserved by the publisher of this page"
+    passage = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [
+            (1, f"{passage} {boiler}"),
+            (2, f"intro words here {passage} {boiler}"),
+            (3, f"{boiler} lorem ipsum dolor sit amet consectetur"),
+            (4, "quick brown fox jumps over the lazy dog"),
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    cap, min_shared = 2, 2
+    cols = ["id_a", "id_b", "n_shared", "n_a", "n_b", "score"]
+
+    def run(max_fp_freq):
+        return (
+            winnow_near_dup_pairs(
+                docs, "text", "doc_id", min_shared=min_shared,
+                max_fp_freq=max_fp_freq,
+            )
+            .toPandas()[cols]
+            .sort_values(["id_a", "id_b"])
+            .reset_index(drop=True)
+        )
+
+    capped, uncapped = run(cap), run(None)
+
+    fps = (
+        winnowing_fingerprints(docs, "text", "doc_id")
+        .select("doc_id", "h")
+        .distinct()
+        .toPandas()
+    )
+    n_fp = fps.groupby("doc_id").size()
+    posts = fps.groupby("h")["doc_id"].apply(sorted)
+    assert (posts.map(len) > cap).any()  # the cap really drops one
+    shared = {}
+    for ids in posts[posts.map(len) <= cap]:
+        for a, b in combinations(ids, 2):
+            shared[(a, b)] = shared.get((a, b), 0) + 1
+    rows = [
+        (a, b, n, n_fp[a], n_fp[b], round(n / min(n_fp[a], n_fp[b]), 6))
+        for (a, b), n in shared.items()
+        if n >= min_shared
+    ]
+    want = (
+        pd.DataFrame(rows, columns=cols)
+        .astype({c: "int64" for c in cols[:5]})
+        .sort_values(["id_a", "id_b"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(capped, want, check_dtype=False)
+
+    # the boilerplate-only pairs exist uncapped and vanish under the cap
+    assert {(1, 3), (2, 3)} <= set(zip(uncapped["id_a"], uncapped["id_b"]))
+    assert list(zip(capped["id_a"], capped["id_b"])) == [(1, 2)]
+    def n12(f):
+        return int(f.loc[(f.id_a == 1) & (f.id_b == 2), "n_shared"].iloc[0])
+
+    assert n12(capped) < n12(uncapped)
 
 
 def test_dsir_importance_resampling_properties(spark, sf_dir):
