@@ -76,7 +76,6 @@ def densify(
     bin_col: str = "bin",
     zero_fill: tuple[str, ...] = ("order_imbalance", "n_events"),
     group_cols: list[str] | None = None,
-    hint_broadcast: bool = True,
 ) -> DataFrame:
     """Left-join the binned frame onto its complete calendar grid.
 
@@ -89,9 +88,7 @@ def densify(
     Broadcast mechanics (round-2 clarification): the grid CANNOT be the
     build side — a grid-preserving left join only admits BuildRight, so
     the hint goes on the binned aggregate, which has at most one row per
-    non-empty bin and is therefore never larger than the grid. For long
-    spans at fine deltas (bin count beyond broadcast limits) pass
-    ``hint_broadcast=False`` and both sides shuffle on the bin key.
+    non-empty bin and is therefore never larger than the grid.
     """
     gc = group_cols or []
     interval = F.expr(f"INTERVAL {int(delta_sec)} SECONDS")
@@ -108,8 +105,7 @@ def densify(
         grid = bounds.select(
             F.explode(F.sequence("lo", "hi", interval)).alias(bin_col)
         )
-        right = F.broadcast(binned) if hint_broadcast else binned
-        out = grid.join(right, on=bin_col, how="left")
+        out = grid.join(F.broadcast(binned), on=bin_col, how="left")
     for c in zero_fill:
         if c in binned.columns:
             out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))

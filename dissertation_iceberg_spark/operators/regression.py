@@ -1,30 +1,70 @@
-"""Distributed OLS with t-stats and adjusted R² (SURVEY §2.10 A18-A20).
+"""Closed-form regression kernels (SURVEY §2.10 A18-A20).
 
 Reference parity: chunk_pipeline.py:201-243 accumulates RSS/TSS and the
 Gram matrix over 100-row chunks — the manual analogue of Spark's
-partial+final aggregation. We express the same mathematics as ONE
-aggregation pass producing the sufficient statistics
+partial+final aggregation; ClOp_calc.py:25-57 fits the daily
+single-regressor OLS. Both are expressed here as ONE aggregation pass
+over sufficient statistics, then closed-form arithmetic.
 
-    n, X'X, X'y, y'y, Σy
+- :func:`moment_sums` is the bivariate kernel: the six aggregates
+  ``n, sx, sy, sxx, sxy, syy`` of two columns. The registry's
+  single-regressor slopes, correlations and R² read their sums from
+  it, through one of the two derived forms — :func:`scaled_comoment`
+  (n·Σab − Σa·Σb) and :func:`centred_comoment` (Σab − Σa·Σb/n), both
+  in double. The kernel always emits all six sums: Catalyst prunes
+  the aggregates a caller never reads (and the no-op ``long`` cast of a
+  BIGINT sum), so a fit that reads four sums runs four.
+- :func:`simple_ols` is the single-feature fit fully inside Spark SQL
+  (slope, intercept, R², slope t-stat).
+- :func:`ols_fit` is the k-feature fit: one aggregation producing
+  n, X'X, X'y, y'y, Σy, then the k×k normal equations (k ≤ 10)
+  solved driver-side: β = (X'X)⁻¹X'y, σ² = RSS/(n−k),
+  se = sqrt(diag(σ²(X'X)⁻¹)), t = β/se,
+  adj-R² = 1 − (RSS/(n−k))/(TSS/(n−1)). This replaces the reference's
+  SGD path (chunk_pipeline.py:267-345) with the exact OLS the
+  reference itself uses for daily data (ClOp_calc.py:38-57) — SURVEY
+  §4's recommended decision.
 
-then solve the k×k normal equations (k ≤ 10) driver-side:
-β = (X'X)⁻¹X'y, σ² = RSS/(n−k), se = sqrt(diag(σ²(X'X)⁻¹)),
-t = β/se, adj-R² = 1 − (RSS/(n−k))/(TSS/(n−1)). This replaces the
-reference's SGD path (chunk_pipeline.py:267-345) with the exact OLS the
-reference itself uses for daily data (ClOp_calc.py:38-57) — SURVEY §4's
-recommended decision.
-
-Scale: the aggregation is map-side combinable (sums of outer products);
+Scale: every aggregation is map-side combinable (sums of products);
 the driver-side solve touches a k×k matrix only. Per-group batteries
-(A22) reuse the same kernel with groupBy keys.
+(A22) reuse the same kernels with groupBy keys.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def moment_sums(x: Column, y: Column) -> list[Column]:
+    """The bivariate sufficient statistics of ``x`` and ``y`` as six
+    aggregates named ``n, sx, sy, sxx, sxy, syy`` (count and sums; the
+    sum types follow the inputs — BIGINT for integer columns, double
+    for double ones). Spread into an ``agg`` beside any extra sums."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(x * y).alias("sxy"),
+        F.sum(y * y).alias("syy"),
+    ]
+
+
+def _d(name: str) -> Column:
+    return F.col(name).cast("double")
+
+
+def scaled_comoment(n: str, sab: str, sa: str, sb: str) -> Column:
+    """n·Σab − Σa·Σb in double, over the named count and sum columns."""
+    return _d(n) * _d(sab) - _d(sa) * _d(sb)
+
+
+def centred_comoment(n: str, sab: str, sa: str, sb: str) -> Column:
+    """Σab − Σa·Σb/n in double, over the named count and sum columns."""
+    return _d(sab) - _d(sa) * _d(sb) / _d(n)
 
 
 def _xtx_aggs(feature_cols: list[str], y_col: str):
@@ -141,18 +181,11 @@ def simple_ols(
     formula in DuckDB (see queries.regression)."""
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
-    g = df.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-    )
+    g = df.groupBy(*group_cols).agg(*moment_sums(x, y))
     n = F.col("n").cast("double")
-    ssx = F.col("sxx") - F.col("sx") * F.col("sx") / n
-    ssy = F.col("syy") - F.col("sy") * F.col("sy") / n
-    sxy_c = F.col("sxy") - F.col("sx") * F.col("sy") / n
+    ssx = centred_comoment("n", "sxx", "sx", "sx")
+    ssy = centred_comoment("n", "syy", "sy", "sy")
+    sxy_c = centred_comoment("n", "sxy", "sx", "sy")
     slope = sxy_c / ssx
     intercept = (F.col("sy") - slope * F.col("sx")) / n
     r2 = sxy_c * sxy_c / (ssx * ssy)

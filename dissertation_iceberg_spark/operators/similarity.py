@@ -42,23 +42,20 @@ def vec_norm(a: Column) -> Column:
     )
 
 
-def cosine(
-    a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | None = None
-) -> Column:
+def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     """Exact cosine of two array columns, UNROUNDED: dot / (|a|·|b|)
     over element-wise double casts, summed positionally — the op shape
     every DuckDB oracle replays. Callers round (6 dp, or micro-units)
-    before ranking. ``norm_a``/``norm_b`` take a :func:`vec_norm`
-    computed once per row in an earlier projection, so a pair join
-    pays only the dot fold per pair (same value, bit for bit)."""
+    before ranking. ``norm_a``/``norm_b`` are the :func:`vec_norm` of
+    ``a`` and ``b``: a pair join computes them once per row in an
+    earlier projection, so each pair pays only the dot fold (same
+    value, bit for bit); a one-sided caller passes ``vec_norm(col)``."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    na = vec_norm(a) if norm_a is None else norm_a
-    nb = vec_norm(b) if norm_b is None else norm_b
-    return dot / (na * nb)
+    return dot / (norm_a * norm_b)
 
 
 def int_dot(a: Column, b: Column) -> Column:
@@ -379,7 +376,9 @@ def ivf_search_exact(
     tiebreak). Self-matches are excluded."""
     id_col, vec_col = index.id_col, index.vec_col
     q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qvec")
+        F.col(query_id_col).alias("qid"),
+        F.col(vec_col).alias("qvec"),
+        vec_norm(F.col(vec_col)).alias("__nq"),
     )
     qxe = q.select(
         "qid", F.posexplode(F.transform("qvec", quantize)).alias("pos", "x")
@@ -387,13 +386,17 @@ def ivf_search_exact(
     d = lloyd_num(qxe, index.cent_df, ["qid", "list_id"])
     probes = topk_per_query(d, n_probe, F.asc("dist"), F.asc("list_id"))
     probes = probes.select("qid", "list_id").join(q, "qid")
-    pairs = index.lists.join(F.broadcast(probes), "list_id").where(
+    lists = index.lists.withColumn("__nv", vec_norm(F.col(vec_col)))
+    pairs = lists.join(F.broadcast(probes), "list_id").where(
         F.col("qid") != F.col(id_col)
     )
     scored = pairs.select(
         "qid",
         F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col("qvec"), F.col(vec_col)), 6).alias("cosine"),
+        F.round(
+            cosine(F.col("qvec"), F.col(vec_col), F.col("__nq"), F.col("__nv")),
+            6,
+        ).alias("cosine"),
     )
     return topk_per_query(scored, k)
 

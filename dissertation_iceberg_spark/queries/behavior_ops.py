@@ -19,6 +19,10 @@ from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     with_scalars,
 )
+from dissertation_iceberg_spark.operators.regression import (
+    moment_sums,
+    scaled_comoment,
+)
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
 from dissertation_iceberg_spark.functions.exact import r6, round_long
@@ -2854,21 +2858,12 @@ def retention_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts.groupBy("cohort_day")
         .agg(
             F.any_value("n0").cast("long").alias("n0"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("age").cast("long").alias("sx"),
-            F.sum("ly").cast("long").alias("sy"),
-            F.sum(F.col("age") * F.col("ly")).cast("long").alias("sxy"),
-            F.sum(F.col("age") * F.col("age")).cast("long").alias("sxx"),
+            *moment_sums(F.col("age"), F.col("ly")),
         )
         .filter(F.col("n") >= 3)
     )
-    n = F.col("n").cast("double")
-    det = n * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    decay = (
-        (n * F.col("sxy") - F.col("sx").cast("double") * F.col("sy"))
-        / det
-        / 1e6
-    )
+    det = scaled_comoment("n", "sxx", "sx", "sx")
+    decay = scaled_comoment("n", "sxy", "sx", "sy") / det / 1e6
     ln2 = F.expr("CAST('-6.93147180559945e-1' AS DOUBLE)")
     return g.filter(det > 0).select(
         "cohort_day",

@@ -25,6 +25,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     with_scalars,
 )
+from dissertation_iceberg_spark.operators.regression import moment_sums
 from dissertation_iceberg_spark.queries.registry import register
 
 
@@ -1888,11 +1889,7 @@ def theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = (
         xs.groupBy("event_type")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("x").cast("long").alias("sx"),
-            F.sum("y").cast("long").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+            *moment_sums(F.col("x"), F.col("y")),
             F.max("x").cast("long").alias("xn"),
         )
         .filter(F.col("n") >= 3)

@@ -27,6 +27,10 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.operators.regression import (
+    moment_sums,
+    scaled_comoment,
+)
 
 # DuckDB-side tokenizer shared with llm_ops (str_split on single space,
 # empties dropped) — mirrors Spark's split + filter exactly.
@@ -114,29 +118,21 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _qlog(F.col("c")).alias("yq"),
     )
     gram = ranked.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_terms"),
-        F.sum("xq").alias("sx"),
-        F.sum("yq").alias("sy"),
-        F.sum(F.col("xq") * F.col("xq")).alias("sxx"),
-        F.sum(F.col("xq") * F.col("yq")).alias("sxy"),
+        *moment_sums(F.col("xq"), F.col("yq"))
     )
-    nd = F.col("n_terms").cast("double")
-    sxd = F.col("sx").cast("double")
     # single-term vocabulary guard (round-7 tiny fuzz: one token in a
     # language): zero rank variance leaves the fit undefined — NULL
     # on both engines (DuckDB's division by zero is NULL-valued)
-    det = nd * F.col("sxx") - sxd * F.col("sx")
-    slope = F.when(
-        det != 0, (nd * F.col("sxy") - sxd * F.col("sy")) / det
-    )
+    det = scaled_comoment("n", "sxx", "sx", "sx")
+    slope = F.when(det != 0, scaled_comoment("n", "sxy", "sx", "sy") / det)
     intercept = (
         (F.col("sy").cast("double") - slope * F.col("sx"))
-        / F.col("n_terms")
+        / F.col("n")
         / F.lit(float(_LOG_SCALE))
     )
     return gram.select(
         "lang",
-        "n_terms",
+        F.col("n").alias("n_terms"),
         r6(slope).alias("zipf_slope"),
         r6(intercept).alias("zipf_intercept"),
     )

@@ -42,6 +42,11 @@ from dissertation_iceberg_spark.functions.exact import (
     r6,
     round_long,
 )
+from dissertation_iceberg_spark.operators.regression import (
+    centred_comoment,
+    moment_sums,
+    scaled_comoment,
+)
 from dissertation_iceberg_spark.queries.microstructure import (
     _LN_MICRO_SQL,
     _ln_micro,
@@ -422,23 +427,16 @@ def newey_west_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.select("bin", F.col("r").alias("y"), F.lag("oi").over(wb).alias("x"))
         .filter(F.col("x").isNotNull())
     )
-    m = d.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("s_xx"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("s_xy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("s_yy"),
-    )
+    m = d.agg(*moment_sums(F.col("x"), F.col("y")))
     nd = F.col("n").cast("double")
-    sxx = F.col("s_xx").cast("double") - F.col("sx").cast("double") * F.col("sx") / nd
-    sxy = F.col("s_xy").cast("double") - F.col("sx").cast("double") * F.col("sy") / nd
-    syy = F.col("s_yy").cast("double") - F.col("sy").cast("double") * F.col("sy") / nd
-    co = m.filter(sxx > 0).select(
+    cxx = centred_comoment("n", "sxx", "sx", "sx")
+    cxy = centred_comoment("n", "sxy", "sx", "sy")
+    cyy = centred_comoment("n", "syy", "sy", "sy")
+    co = m.filter(cxx > 0).select(
         "n", "sx", "sy",
-        sxx.alias("sxx"), sxy.alias("sxy"), syy.alias("syy"),
-        (sxy / sxx).alias("b"),
-        ((F.col("sy").cast("double") - sxy / sxx * F.col("sx")) / nd).alias("a"),
+        cxx.alias("cxx"), cxy.alias("cxy"), cyy.alias("cyy"),
+        (cxy / cxx).alias("b"),
+        ((F.col("sy").cast("double") - cxy / cxx * F.col("sx")) / nd).alias("a"),
         (F.col("sx").cast("double") / nd).alias("mx"),
     )
     sc = d.transform(with_scalars, co.select("a", "b", "mx")).select(
@@ -473,8 +471,8 @@ def newey_west_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / 1e12
     out = co.transform(with_scalars, g).select(
         "n",
-        (F.col("sxx") / 1e12).alias("sxxn"),
-        ((F.col("syy") - F.col("sxy") * F.col("sxy") / F.col("sxx")) / 1e12).alias(
+        (F.col("cxx") / 1e12).alias("sxxn"),
+        ((F.col("cyy") - F.col("cxy") * F.col("cxy") / F.col("cxx")) / 1e12).alias(
             "rss"
         ),
         s_hac.alias("s_hac"),
@@ -1068,25 +1066,13 @@ def engle_granger_coint(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("xc"),
         )
     )
-    g = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("xc").cast("long").alias("sx"),
-        F.sum("yc").cast("long").alias("sy"),
-        F.sum(F.col("xc") * F.col("xc")).cast("long").alias("sxx"),
-        F.sum(F.col("xc") * F.col("yc")).cast("long").alias("sxy"),
-    )
-    n = F.col("n")
-    det = n.cast("double") * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
+    g = daily.agg(*moment_sums(F.col("xc"), F.col("yc")))
+    det = scaled_comoment("n", "sxx", "sx", "sx")
     ols = g.select(
         "n",
-        F.when(
-            det != 0,
-            (
-                n.cast("double") * F.col("sxy")
-                - F.col("sx").cast("double") * F.col("sy")
-            )
-            / det,
-        ).alias("beta"),
+        F.when(det != 0, scaled_comoment("n", "sxy", "sx", "sy") / det).alias(
+            "beta"
+        ),
         F.when(
             det != 0,
             (
@@ -1207,22 +1193,17 @@ def iv_wald_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ok",
     )
     s = j.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
+        *moment_sums(F.col("x"), F.col("y")),
         F.sum("z").cast("long").alias("sz"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
         F.sum(F.col("z") * F.col("z")).cast("long").alias("szz"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
         F.sum(F.col("z") * F.col("x")).cast("long").alias("szx"),
         F.sum(F.col("z") * F.col("y")).cast("long").alias("szy"),
     )
-    n = F.col("n").cast("double")
-    cxy = n * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    cxx = n * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    czy = n * F.col("szy") - F.col("sz").cast("double") * F.col("sy")
-    czx = n * F.col("szx") - F.col("sz").cast("double") * F.col("sx")
-    czz = n * F.col("szz") - F.col("sz").cast("double") * F.col("sz")
+    cxy = scaled_comoment("n", "sxy", "sx", "sy")
+    cxx = scaled_comoment("n", "sxx", "sx", "sx")
+    czy = scaled_comoment("n", "szy", "sz", "sy")
+    czx = scaled_comoment("n", "szx", "sz", "sx")
+    czz = scaled_comoment("n", "szz", "sz", "sz")
     # degenerate-design guards (round-7 tiny fuzz): a constant
     # regressor (cxx = 0), an instrument uncorrelated with x
     # (czx = 0), a constant instrument (czz = 0), or a perfect first
@@ -1356,16 +1337,12 @@ def twfe_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("yt"),
         )
     )
-    s = dem.agg(
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.sum(F.col("xt") * F.col("yt")).cast("long").alias("sxy"),
-        F.sum(F.col("xt") * F.col("xt")).cast("long").alias("sxx"),
-    )
+    s = dem.agg(*moment_sums(F.col("xt"), F.col("yt")))
     # a single user (round-7 one_ticker fuzz) makes the user fixed
     # effect absorb ALL x variation (xt = 0 everywhere) — the within
     # estimator is undefined: NULL beta on both engines
     return s.select(
-        "n_cells",
+        F.col("n").alias("n_cells"),
         F.round(
             F.when(
                 F.col("sxx") > 0,

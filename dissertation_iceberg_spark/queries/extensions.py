@@ -26,6 +26,7 @@ from dissertation_iceberg_spark.operators.similarity import (
     quantize,
     seed_centroids,
     topk_per_query,
+    vec_norm,
 )
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
@@ -68,10 +69,20 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py is the scale path)."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     a = emb.filter(F.col("vec_id") % PAIR_MOD == 0).select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("emb_a")
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("emb_a"),
+        vec_norm(F.col("embedding")).alias("norm_a"),
     )
-    pairs = emb.join(F.broadcast(a), F.col("id_a") < F.col("vec_id"))
-    cos = F.round(cosine(F.col("emb_a"), F.col("embedding")), 6)
+    b = emb.select(
+        "vec_id", "embedding", vec_norm(F.col("embedding")).alias("norm_b")
+    )
+    pairs = b.join(F.broadcast(a), F.col("id_a") < F.col("vec_id"))
+    cos = F.round(
+        cosine(
+            F.col("emb_a"), F.col("embedding"), F.col("norm_a"), F.col("norm_b")
+        ),
+        6,
+    )
     return (
         pairs.select("id_a", F.col("vec_id").alias("id_b"), cos.alias("cosine"))
         .filter(F.col("cosine") >= NEAR_DUP_THRESHOLD)
@@ -1502,7 +1513,12 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             "n_vecs",
-            F.round(cosine(F.col("v"), F.col("gv")), 6).alias("cosine_to_corpus"),
+            F.round(
+                cosine(
+                    F.col("v"), F.col("gv"), vec_norm(F.col("v")), vec_norm(F.col("gv"))
+                ),
+                6,
+            ).alias("cosine_to_corpus"),
         )
     )
 
@@ -1662,6 +1678,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") % _HN_QUERY_MOD == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qvec"),
+        vec_norm(F.col("embedding")).alias("nq"),
         F.col("label").alias("q_label"),
     )
     labels = emb.select(F.col("label").alias("c_label")).distinct()
@@ -1669,6 +1686,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = emb.select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("cvec"),
+        vec_norm(F.col("embedding")).alias("nc"),
         F.col("label").alias("c_label"),
     )
     cos = (
@@ -1679,7 +1697,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             "cid",
             "c_label",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cosine"),
+            F.round(
+                cosine(F.col("qvec"), F.col("cvec"), F.col("nq"), F.col("nc")), 6
+            ).alias("cosine"),
         )
     )
     by = (F.col("cosine").desc(), F.col("cid").asc())

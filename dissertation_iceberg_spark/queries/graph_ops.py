@@ -21,6 +21,10 @@ from dissertation_iceberg_spark.functions.scalars import (
     bcast_params,
     with_scalars,
 )
+from dissertation_iceberg_spark.operators.regression import (
+    moment_sums,
+    scaled_comoment,
+)
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.session import pin
 from dissertation_iceberg_spark.functions.exact import r6
@@ -728,26 +732,18 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("dx", "dy")
     )
-    s = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.sum("dx").cast("long").alias("sx"),
-        F.sum("dy").cast("long").alias("sy"),
-        F.sum(F.col("dx") * F.col("dy")).cast("long").alias("sxy"),
-        F.sum(F.col("dx") * F.col("dx")).cast("long").alias("sxx"),
-        F.sum(F.col("dy") * F.col("dy")).cast("long").alias("syy"),
-    )
+    s = pairs.agg(*moment_sums(F.col("dx"), F.col("dy")))
     nn = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.sum("d").cast("long").alias("deg_total"),
     )
-    md = F.col("m").cast("double")
-    num = md * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
+    num = scaled_comoment("n", "sxy", "sx", "sy")
     den = F.sqrt(
-        (md * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
-        * (md * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
+        scaled_comoment("n", "sxx", "sx", "sx")
+        * scaled_comoment("n", "syy", "sy", "sy")
     )
     return s.transform(with_scalars, nn).select(
-        F.col("m").alias("n_directed_edges"),
+        F.col("n").alias("n_directed_edges"),
         "n_nodes",
         (
             r6(F.col("deg_total").cast("double") / F.col("n_nodes"))

@@ -15,7 +15,11 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.io import load_table, spread
 from dissertation_iceberg_spark.operators import dedup as dd
 from dissertation_iceberg_spark.operators import text as tx
-from dissertation_iceberg_spark.operators.similarity import cosine, cosine_topk
+from dissertation_iceberg_spark.operators.similarity import (
+    cosine,
+    cosine_topk,
+    vec_norm,
+)
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     bcast_params,
@@ -2509,7 +2513,15 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(with_scalars, q)
         .select(
             F.col("vec_id").alias("item_id"),
-            round_long(cosine(F.col("qvec"), F.col("embedding")) * 1e6)
+            round_long(
+                cosine(
+                    F.col("qvec"),
+                    F.col("embedding"),
+                    vec_norm(F.col("qvec")),
+                    vec_norm(F.col("embedding")),
+                )
+                * 1e6
+            )
             .alias("score_micro"),
         )
         .orderBy(F.desc("score_micro"), F.asc("item_id"))

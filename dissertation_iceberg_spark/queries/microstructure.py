@@ -34,6 +34,10 @@ from dissertation_iceberg_spark.functions.exact import (
 )
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table
+from dissertation_iceberg_spark.operators.regression import (
+    moment_sums,
+    scaled_comoment,
+)
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
@@ -114,15 +118,10 @@ def roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         d.filter(F.col("dp").isNotNull() & F.col("dp1").isNotNull())
         .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dp").cast("long").alias("sx"),
-            F.sum("dp1").cast("long").alias("sy"),
-            F.sum(F.col("dp") * F.col("dp1")).cast("long").alias("sxy"),
-        )
+        .agg(*moment_sums(F.col("dp"), F.col("dp1")))
     )
     nd = F.col("n").cast("double")
-    cov_num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
+    cov_num = scaled_comoment("n", "sxy", "sx", "sy")
     cov = cov_num / (nd * F.col("n"))
     return s.select(
         "user_id",
@@ -278,20 +277,14 @@ def kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dp"),
         F.sum(F.col("direction") * F.col("cents")).cast("long").alias("sv"),
     )
-    s = b.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_bins"),
-        F.sum("sv").cast("long").alias("sx"),
-        F.sum("dp").cast("long").alias("sy"),
-        F.sum(F.col("sv") * F.col("dp")).cast("long").alias("sxy"),
-        F.sum(F.col("sv") * F.col("sv")).cast("long").alias("sxx"),
-    )
-    nd = F.col("n_bins").cast("double")
-    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    den = nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
+    s = b.groupBy("user_id").agg(*moment_sums(F.col("sv"), F.col("dp")))
+    nd = F.col("n").cast("double")
+    num = scaled_comoment("n", "sxy", "sx", "sy")
+    den = scaled_comoment("n", "sxx", "sx", "sx")
     slope = num / den
     return s.filter(den != 0).select(
         "user_id",
-        "n_bins",
+        F.col("n").alias("n_bins"),
         r6(slope * 1e6).alias("kyle_lambda_x1e6"),
         r6(
             (F.col("sy").cast("double") - slope * F.col("sx").cast("double"))
@@ -745,27 +738,21 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lag("oi_micro", k).over(w).alias("y"),
         ).filter(F.col("y").isNotNull())
         parts.append(
-            q.agg(
-                F.count(F.lit(1)).alias("n_k"),
-                F.sum("x").cast("long").alias("sx"),
-                F.sum("y").cast("long").alias("sy"),
-                F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-                F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-                F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-            ).select(F.lit(k).alias("lag_k"), "*")
+            q.agg(*moment_sums(F.col("x"), F.col("y"))).select(
+                F.lit(k).alias("lag_k"), "*"
+            )
         )
     lags = parts[0]
     for p in parts[1:]:
         lags = lags.unionByName(p)
-    nd = F.col("n_k").cast("double")
-    rho = (nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")) / F.sqrt(
-        (nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
-        * (nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
+    rho = scaled_comoment("n", "sxy", "sx", "sy") / F.sqrt(
+        scaled_comoment("n", "sxx", "sx", "sx")
+        * scaled_comoment("n", "syy", "sy", "sy")
     )
     e = lags.select(
         "lag_k",
-        "n_k",
-        round_long(rho * rho / F.col("n_k") * 1e12).alias(
+        F.col("n").alias("n_k"),
+        round_long(rho * rho / F.col("n") * 1e12).alias(
             "contrib_pico"
         ),
     )

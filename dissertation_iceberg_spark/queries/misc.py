@@ -14,6 +14,10 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table
+from dissertation_iceberg_spark.operators.regression import (
+    centred_comoment,
+    moment_sums,
+)
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
@@ -250,20 +254,13 @@ def ols_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     x = F.col("user_id").cast("double")
     y = F.col("value")
-    g = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-    )
+    g = e.groupBy("event_type").agg(*moment_sums(x, y))
     n = F.col("n")
-    ssx = F.col("sxx") - F.col("sx") * F.col("sx") / n
-    sxy_c = F.col("sxy") - F.col("sx") * F.col("sy") / n
+    ssx = centred_comoment("n", "sxx", "sx", "sx")
+    sxy_c = centred_comoment("n", "sxy", "sx", "sy")
     slope = sxy_c / ssx
     intercept = (F.col("sy") - slope * F.col("sx")) / n
-    s2 = ((F.col("syy") - F.col("sy") * F.col("sy") / n) - slope * sxy_c) / (n - 2)
+    s2 = (centred_comoment("n", "syy", "sy", "sy") - slope * sxy_c) / (n - 2)
     # degenerate-group guard (round-7 one_ticker fuzz): constant x or
     # n <= 2 leaves the fit undefined — those groups' rows emit ZERO
     # rows on both engines; s2/leverage edge cases NULL the studentized
@@ -347,18 +344,11 @@ def clop_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("intraday_ret"),
     ).filter(F.col("clop_ret").isNotNull() & F.col("intraday_ret").isNotNull())
     x, y = F.col("intraday_ret"), F.col("clop_ret")
-    g = r.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-    )
+    g = r.agg(*moment_sums(x, y))
     n = F.col("n")
-    ssx = F.col("sxx") - F.col("sx") * F.col("sx") / n
-    sxy_c = F.col("sxy") - F.col("sx") * F.col("sy") / n
-    ssy = F.col("syy") - F.col("sy") * F.col("sy") / n
+    ssx = centred_comoment("n", "sxx", "sx", "sx")
+    sxy_c = centred_comoment("n", "sxy", "sx", "sy")
+    ssy = centred_comoment("n", "syy", "sy", "sy")
     slope = sxy_c / ssx
     return g.select(
         "n",

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table
+from dissertation_iceberg_spark.operators.regression import moment_sums
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
@@ -583,11 +584,9 @@ def rolling_refit_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_ok = dm.filter(F.col("m").isNotNull() & F.col("y").isNotNull())
     x, m_, y = F.col("x"), F.col("m"), F.col("y")
     day_gram = rows_ok.groupBy("day").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x * x).alias("sxx"), F.sum(x * m_).alias("sxm"),
-        F.sum(x).alias("sx"), F.sum(m_ * m_).alias("smm"),
-        F.sum(m_).alias("sm"), F.sum(x * y).alias("sxy"),
-        F.sum(m_ * y).alias("smy"), F.sum(y).alias("sy"),
+        *moment_sums(x, y),
+        F.sum(x * m_).alias("sxm"), F.sum(m_ * m_).alias("smm"),
+        F.sum(m_).alias("sm"), F.sum(m_ * y).alias("smy"),
     )
     wt = Window.orderBy("day").rowsBetween(-TRAIN_DAYS, -1)
     trail = day_gram.select(

@@ -14,7 +14,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table
-from dissertation_iceberg_spark.operators.regression import simple_ols, simple_ols_sql
+from dissertation_iceberg_spark.operators.regression import (
+    centred_comoment,
+    moment_sums,
+    scaled_comoment,
+    simple_ols,
+    simple_ols_sql,
+)
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
@@ -558,15 +564,10 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_long(F.col("l_extendedprice") * 100).alias("y"),
     )
     tr = src.filter(F.col("part") <= 1).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+        *moment_sums(F.col("x"), F.col("y"))
     )
-    nd = F.col("n").cast("double")
-    b1 = (nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")) / (
-        nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
+    b1 = scaled_comoment("n", "sxy", "sx", "sy") / scaled_comoment(
+        "n", "sxx", "sx", "sx"
     )
     beta = tr.select(
         b1.alias("b1"),
@@ -733,16 +734,9 @@ def huber_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("long").alias("x"),
         round_long(F.col("l_extendedprice") * 100).alias("y"),
     )
-    s0 = src.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    nd = F.col("n").cast("double")
-    b1 = (nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")) / (
-        nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
+    s0 = src.agg(*moment_sums(F.col("x"), F.col("y")))
+    b1 = scaled_comoment("n", "sxy", "sx", "sy") / scaled_comoment(
+        "n", "sxx", "sx", "sx"
     )
     beta = s0.select(
         "n",
@@ -893,21 +887,12 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = (
         r.groupBy("brand")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("x").cast("long").alias("sx"),
-            F.sum("y").cast("long").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-            F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        )
+        .agg(*moment_sums(F.col("x"), F.col("y")))
         .filter(F.col("n") >= 3)
     )
-    nd = F.col("n").cast("double")
-    sxd = F.col("sx").cast("double")
     syd = F.col("sy").cast("double")
-    b = (nd * F.col("sxy") - sxd * F.col("sy")) / (
-        nd * F.col("sxx") - sxd * F.col("sx")
+    b = scaled_comoment("n", "sxy", "sx", "sy") / scaled_comoment(
+        "n", "sxx", "sx", "sx"
     )
     return g.select(
         "brand",
@@ -918,8 +903,8 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.round(
             b
-            * (F.col("sxy").cast("double") - sxd * F.col("sy") / F.col("n"))
-            / (F.col("syy").cast("double") - syd * F.col("sy") / F.col("n")),
+            * centred_comoment("n", "sxy", "sx", "sy")
+            / centred_comoment("n", "syy", "sy", "sy"),
             6,
         ).alias("r_squared"),
     )

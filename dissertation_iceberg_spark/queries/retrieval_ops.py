@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.io import load_table, spread
-from dissertation_iceberg_spark.operators.similarity import cosine
+from dissertation_iceberg_spark.operators.similarity import cosine, vec_norm
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
@@ -158,7 +158,15 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(with_scalars, q)
         .select(
             "vec_id",
-            F.round(cosine(F.col("qvec"), F.col("embedding")), 6).alias("rel"),
+            F.round(
+                cosine(
+                    F.col("qvec"),
+                    F.col("embedding"),
+                    vec_norm(F.col("qvec")),
+                    vec_norm(F.col("embedding")),
+                ),
+                6,
+            ).alias("rel"),
             F.lit(0.0).alias("msim"),
             "embedding",
         )
@@ -176,7 +184,15 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             return F.array_max(
                 F.transform(
                     picks,
-                    lambda p: F.round(cosine(c["embedding"], p["embedding"]), 6),
+                    lambda p: F.round(
+                        cosine(
+                            c["embedding"],
+                            p["embedding"],
+                            vec_norm(c["embedding"]),
+                            vec_norm(p["embedding"]),
+                        ),
+                        6,
+                    ),
                 )
             )
 

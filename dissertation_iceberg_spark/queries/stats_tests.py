@@ -27,6 +27,11 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.operators import text as tx
 from dissertation_iceberg_spark.functions.exact import R6_SQL, r6, round_long
+from dissertation_iceberg_spark.operators.regression import (
+    centred_comoment,
+    moment_sums,
+    scaled_comoment,
+)
 from dissertation_iceberg_spark.operators.strategy import cross_sectional_select
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
@@ -2230,12 +2235,7 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     arm1 = F.col("arm") == 1
     s = u.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("pre_c").cast("long").alias("sx"),
-        F.sum("post_c").cast("long").alias("sy"),
-        F.sum(F.col("pre_c") * F.col("pre_c")).cast("long").alias("sxx"),
-        F.sum(F.col("pre_c") * F.col("post_c")).cast("long").alias("sxy"),
-        F.sum(F.col("post_c") * F.col("post_c")).cast("long").alias("syy"),
+        *moment_sums(F.col("pre_c"), F.col("post_c")),
         F.sum(F.when(arm1, F.col("post_c")).otherwise(0))
         .cast("long")
         .alias("sy1"),
@@ -2252,15 +2252,9 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~arm1, 1).otherwise(0)).cast("long").alias("n0"),
     )
     n = F.col("n")
-    cov = F.col("sxy").cast("double") - F.col("sx").cast("double") * F.col(
-        "sy"
-    ) / n
-    varx = F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col(
-        "sx"
-    ) / n
-    vary = F.col("syy").cast("double") - F.col("sy").cast("double") * F.col(
-        "sy"
-    ) / n
+    cov = centred_comoment("n", "sxy", "sx", "sy")
+    varx = centred_comoment("n", "sxx", "sx", "sx")
+    vary = centred_comoment("n", "syy", "sy", "sy")
     theta = cov / varx
     var_post = vary / (n - 1)
     var_adj = (vary - cov * cov / varx) / (n - 1)
@@ -3645,13 +3639,7 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
     )
-    cells = base.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
+    cells = base.groupBy("grp").agg(*moment_sums(F.col("x"), F.col("y")))
     tot = cells.agg(
         F.sum("n").cast("long").alias("n_t"),
         F.sum("sx").cast("long").alias("sx_t"),
@@ -3665,22 +3653,9 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # quantity group has zero x variance — NULL slope on both
         # engines (DuckDB's division by zero is NULL-valued); the
         # flip flag's CASE then reads 0 identically in both
-        d = F.col
-        det = d(n).cast("double") * d(sxx).cast("double") - d(sx).cast(
-            "double"
-        ) * d(sx).cast("double")
-        return (
-            round_long(
-                F.when(
-                    det != 0,
-                    (
-                        d(n).cast("double") * d(sxy).cast("double")
-                        - d(sx).cast("double") * d(sy).cast("double")
-                    )
-                    / det
-                    * 1e6,
-                )
-            )
+        det = scaled_comoment(n, sxx, sx, sx)
+        return round_long(
+            F.when(det != 0, scaled_comoment(n, sxy, sx, sy) / det * 1e6)
         )
 
     scored = cells.transform(with_scalars, tot).select(

@@ -31,6 +31,11 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.exact import r6, round_long
+from dissertation_iceberg_spark.operators.regression import (
+    centred_comoment,
+    moment_sums,
+    scaled_comoment,
+)
 
 # --------------------------------------------------------------------------
 # Brown-Forsythe (median-centered Levene) variance-homogeneity test
@@ -3046,28 +3051,20 @@ def adstock_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.x").alias("x"), F.col("r.y").alias("y"), F.col("r.a").alias("a")
     )
     s = rows.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
+        *moment_sums(F.col("x"), F.col("y")),
         F.sum("a").cast("long").alias("sa"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
         F.sum(F.col("a") * F.col("a")).cast("long").alias("saa"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
         F.sum(F.col("a") * F.col("y")).cast("long").alias("say"),
     )
-    n = F.col("n").cast("double")
 
     def corr(sxy_c, sx_c, sxx_c):
         # zero-variance series (round-7 one-type fuzz: no clicks or no
         # purchases at all) -> NULL correlation on both engines
-        den = (n * F.col(sxx_c) - F.col(sx_c).cast("double") * F.col(sx_c)) * (
-            n * F.col("syy") - F.col("sy").cast("double") * F.col("sy")
+        den = scaled_comoment("n", sxx_c, sx_c, sx_c) * scaled_comoment(
+            "n", "syy", "sy", "sy"
         )
         return F.when(
-            den > 0,
-            (n * F.col(sxy_c) - F.col(sx_c).cast("double") * F.col("sy"))
-            / F.sqrt(den),
+            den > 0, scaled_comoment("n", sxy_c, sx_c, "sy") / F.sqrt(den)
         )
 
     r_raw = corr("sxy", "sx", "sxx")
@@ -3633,22 +3630,13 @@ def taylor_power_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lx"),
         round_long(F.log(var) * 1e6).alias("ly"),
     )
-    g = lm.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("lx").cast("long").alias("sx"),
-        F.sum("ly").cast("long").alias("sy"),
-        F.sum(F.col("lx") * F.col("ly")).cast("long").alias("sxy"),
-        F.sum(F.col("lx") * F.col("lx")).cast("long").alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    det = n * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
+    g = lm.agg(*moment_sums(F.col("lx"), F.col("ly")))
+    det = scaled_comoment("n", "sxx", "sx", "sx")
     return g.select(
         F.col("n").alias("n_cells"),
-        F.round(
-            (n * F.col("sxy") - F.col("sx").cast("double") * F.col("sy"))
-            / det,
-            6,
-        ).alias("taylor_slope"),
+        F.round(scaled_comoment("n", "sxy", "sx", "sy") / det, 6).alias(
+            "taylor_slope"
+        ),
         F.round(
             (
                 F.col("sy").cast("double") * F.col("sxx")
@@ -3728,26 +3716,13 @@ def ratio_metric_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x"),
         F.count(F.lit(1)).cast("long").alias("y"),
     )
-    s = u.groupBy("arm").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
+    s = u.groupBy("arm").agg(*moment_sums(F.col("x"), F.col("y")))
     n = F.col("n")
     r = F.col("sx").cast("double") / F.col("sy")
     my = F.col("sy").cast("double") / n
-    vx = (F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col("sx") / n) / (
-        n - 1
-    )
-    vy = (F.col("syy").cast("double") - F.col("sy").cast("double") * F.col("sy") / n) / (
-        n - 1
-    )
-    cxy = (F.col("sxy").cast("double") - F.col("sx").cast("double") * F.col("sy") / n) / (
-        n - 1
-    )
+    vx = centred_comoment("n", "sxx", "sx", "sx") / (n - 1)
+    vy = centred_comoment("n", "syy", "sy", "sy") / (n - 1)
+    cxy = centred_comoment("n", "sxy", "sx", "sy") / (n - 1)
     # single-user arms (round-7 one_ticker fuzz) have no delta-method
     # variance — drop them (oracle: WHERE n > 1 in k); a missing arm
     # then empties the final frame via the NULL-scalar filter below
@@ -5212,16 +5187,9 @@ def weibull_plot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_long(F.log(-(F.col("ls_micro") / 1e6)) * 1e6)
         .alias("ly"),
     )
-    g = pts.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("lx").cast("long").alias("sx"),
-        F.sum("ly").cast("long").alias("sy"),
-        F.sum(F.col("lx") * F.col("ly")).cast("long").alias("sxy"),
-        F.sum(F.col("lx") * F.col("lx")).cast("long").alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    det = n * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    slope = (n * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")) / det
+    g = pts.agg(*moment_sums(F.col("lx"), F.col("ly")))
+    det = scaled_comoment("n", "sxx", "sx", "sx")
+    slope = scaled_comoment("n", "sxy", "sx", "sy") / det
     intercept = (
         F.col("sy").cast("double") * F.col("sxx")
         - F.col("sx").cast("double") * F.col("sxy")

@@ -25,6 +25,10 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.exact import r6, round_long
+from dissertation_iceberg_spark.operators.regression import (
+    moment_sums,
+    scaled_comoment,
+)
 
 # --------------------------------------------------------------------------
 # Zipf slope: log-log OLS over the top-K rank-frequency curve
@@ -99,21 +103,14 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_long(F.log(F.col("r").cast("double")) * 1e6).alias("x"),
         round_long(F.log(F.col("n").cast("double")) * 1e6).alias("y"),
     )
-    s = xy.agg(
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    nd = F.col("n_terms").cast("double")
-    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    denx = nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    deny = nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy")
+    s = xy.agg(*moment_sums(F.col("x"), F.col("y")))
+    nd = F.col("n").cast("double")
+    num = scaled_comoment("n", "sxy", "sx", "sy")
+    denx = scaled_comoment("n", "sxx", "sx", "sx")
+    deny = scaled_comoment("n", "syy", "sy", "sy")
     slope = num / denx
     return s.select(
-        "n_terms",
+        F.col("n").alias("n_terms"),
         F.round(slope, 6).alias("zipf_slope"),
         F.round(
             ((F.col("sy").cast("double") - slope * F.col("sx").cast("double")) / nd)

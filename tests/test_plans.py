@@ -70,6 +70,18 @@ def test_flagship_windows_all_partitioned(spark, sf_dir):
             assert len(groups) >= 3, f"{name}: unpartitioned window: {line.strip()}"
 
 
+def test_moment_sums_unread_aggregates_pruned(spark, sf_dir):
+    """moment_sums always emits all six sums; roll_spread reads n, Σdp,
+    Σdp1 and Σdp·dp1 only, so Σdp² and Σdp1² must not be computed."""
+    import re
+
+    df = REGISTRY["roll_spread"].fn(spark, sf_dir)
+    p = re.sub(r"#\d+L?", "", df._jdf.queryExecution().optimizedPlan().toString())
+    assert "sum((dp * dp1))" in p
+    assert "sum((dp * dp))" not in p
+    assert "sum((dp1 * dp1))" not in p
+
+
 def test_jaccard_no_cartesian(spark, sf_dir):
     p = _plan(spark, sf_dir, "jaccard_near_dups")
     assert "CartesianProduct" not in p

@@ -6656,3 +6656,46 @@ def test_round_long_overflow_matches_spark_round(spark, x):
         with pytest.raises(ArithmeticException) as err:
             _rounded(spark, [x], "true", kernel)
         assert err.value.getCondition() == "CAST_OVERFLOW"
+
+
+MOMENT_VALUES = st.integers(min_value=-999_999, max_value=999_999)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.tuples(MOMENT_VALUES, MOMENT_VALUES), min_size=1, max_size=50))
+def test_moment_sums_match_integer_arithmetic(spark, rows):
+    """The bivariate kernel's six sums and both co-moment forms equal
+    Python integer arithmetic: with |v| < 1e6 and n <= 50 every sum and
+    product is below 2**53, so each double operation is exact except
+    the centred form's one division, which both sides round the same."""
+    from dissertation_iceberg_spark.operators.regression import (
+        centred_comoment,
+        moment_sums,
+        scaled_comoment,
+    )
+
+    got = (
+        spark.createDataFrame(rows, "x long, y long")
+        .agg(*moment_sums(F.col("x"), F.col("y")))
+        .select(
+            "*",
+            scaled_comoment("n", "sxy", "sx", "sy").alias("scaled"),
+            centred_comoment("n", "sxy", "sx", "sy").alias("centred"),
+        )
+        .collect()[0]
+    )
+    n = len(rows)
+    sx = sum(x for x, _ in rows)
+    sy = sum(y for _, y in rows)
+    sxy = sum(x * y for x, y in rows)
+    want = {
+        "n": n,
+        "sx": sx,
+        "sy": sy,
+        "sxx": sum(x * x for x, _ in rows),
+        "sxy": sxy,
+        "syy": sum(y * y for _, y in rows),
+    }
+    assert {k: got[k] for k in want} == want
+    assert got["scaled"] == n * sxy - sx * sy
+    assert got["centred"] == sxy - sx * sy / n

@@ -18,6 +18,11 @@ From the last run, the warmest, each query also records:
 - ``exec_jobs``: Spark jobs fired by the noop write;
 - ``exchanges``: Exchange, BroadcastExchange and ReusedExchange nodes in
   the DataFrame's executed plan, counted after the timed runs.
+
+A query that raises is recorded as ``{"error": ...}`` and the sweep goes
+on. If the Spark JVM is gone after the failure, every later query would
+fail on the dead gateway, so the sweep stops instead: the JSON gets an
+``aborted`` entry (the query and its error) and the tool exits 1.
 """
 
 from __future__ import annotations
@@ -29,6 +34,16 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def jvm_alive(sc) -> bool:
+    """True while the SparkContext's JVM still answers on the gateway."""
+    from py4j.protocol import Py4JError
+
+    try:
+        return not sc._jsc.sc().isStopped()
+    except (Py4JError, ConnectionError):
+        return False
 
 
 def main() -> None:
@@ -51,6 +66,7 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     results: dict[str, dict] = {}
+    aborted = None
     names = list(REGISTRY)
     # one throwaway pass to absorb JVM/codegen warm-up
     REGISTRY[names[0]].fn(spark, sf_dir).write.format("noop").mode(
@@ -97,8 +113,11 @@ def main() -> None:
                 "n": len(rs),
                 **layers,
             }
-        else:
+        elif jvm_alive(sc):
             results[name] = {"error": err}
+        else:
+            aborted = {"query": name, "error": err}
+            break
         if (i + 1) % 25 == 0:
             print(
                 f"[{i + 1}/{len(names)}] {time.perf_counter() - t_all:.0f}s",
@@ -111,6 +130,8 @@ def main() -> None:
         "wall_sec": round(time.perf_counter() - t_all, 1),
         "queries": results,
     }
+    if aborted:
+        payload["aborted"] = aborted
     if out_path:
         with open(out_path, "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
@@ -128,6 +149,9 @@ def main() -> None:
     errs = {k: v["error"] for k, v in results.items() if "error" in v}
     if errs:
         print("ERRORS:", json.dumps(errs, indent=1))
+    if aborted:
+        print("ABORTED: the Spark JVM died:", json.dumps(aborted), file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":
