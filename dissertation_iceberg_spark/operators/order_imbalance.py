@@ -14,10 +14,15 @@ Reference parity (SURVEY §2.4 A1-A3, §2.3 J3, §2.5 W4):
 
 Scale notes: the OI aggregation is a single map-side-combinable
 groupBy — conditional sums, no UDF, fully inside whole-stage codegen.
-The densification grid is generated from the aggregated frame's own
-min/max via sequence()+explode — a few thousand rows per span, always
-the broadcast side of the join. At 100 TB the groupBy key would be
-(ticker, bin) and the grid a per-ticker sequence; no shape change.
+The densification grid spans the [min, max] bin via sequence()+explode —
+a few thousand rows per span. The min/max is written over the
+aggregated frame, but it reads only the grouping key, so Catalyst's
+RemoveRedundantAggregates drops the OI aggregate under it and computes
+the bounds from the event scan itself: the executed plan reads the
+fact table twice, once for the OI aggregate and once for the grid
+bounds (an open 100 TB item in ROADMAP.md). At 100 TB the groupBy key
+would be (ticker, bin) and the grid a per-ticker sequence; no shape
+change.
 """
 
 from __future__ import annotations
@@ -106,10 +111,13 @@ def densify(
             F.explode(F.sequence("lo", "hi", interval)).alias(bin_col)
         )
         out = grid.join(F.broadcast(binned), on=bin_col, how="left")
-    for c in zero_fill:
-        if c in binned.columns:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
-    return out
+    return out.withColumns(
+        {
+            c: F.coalesce(F.col(c), F.lit(0))
+            for c in zero_fill
+            if c in binned.columns
+        }
+    )
 
 
 def with_returns(
@@ -157,15 +165,17 @@ def oi_pipeline(
     b = binned_oi(df, delta_sec, group_cols=group_cols, **kw)
     dz = densify(b, delta_sec, group_cols=group_cols)
     r = with_returns(dz, group_cols=group_cols)
-    for c in ("order_imbalance", "first_price", "last_price", "log_ret", "fut_log_ret"):
-        r = r.withColumn(c, F.round(F.col(c), round_to))
+
+    def rounded(c: str) -> Column:
+        return F.round(F.col(c), round_to).alias(c)
+
     return r.select(
         *(group_cols or []),
         "bin",
-        "order_imbalance",
+        rounded("order_imbalance"),
         "n_events",
-        "first_price",
-        "last_price",
-        "log_ret",
-        "fut_log_ret",
+        rounded("first_price"),
+        rounded("last_price"),
+        rounded("log_ret"),
+        rounded("fut_log_ret"),
     ).orderBy(*(group_cols or []), "bin")

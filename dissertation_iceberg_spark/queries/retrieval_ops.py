@@ -117,8 +117,8 @@ def _mmr(c: Column) -> Column:
 
 
 def _pick(rank: Column, c: Column) -> Column:
-    """One pick of the fold: an output row plus the embedding that
-    later rounds' msim needs."""
+    """One pick of the fold: an output row plus the embedding and norm
+    that later rounds' msim needs."""
     return F.struct(
         rank.cast("long").alias("rank"),
         c["vec_id"].alias("vec_id"),
@@ -126,6 +126,7 @@ def _pick(rank: Column, c: Column) -> Column:
         c["msim"].alias("msim"),
         F.round(_mmr(c), 6).alias("score"),
         c["embedding"].alias("embedding"),
+        c["norm"].alias("norm"),
     )
 
 
@@ -140,6 +141,8 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE corpus pass scores relevance (the same broadcast
     kernel as cosine_topk — the registered ANN paths substitute at
     bulk scale) and keeps the top-{pool} pool, collected into one row.
+    Each pool row carries its ``vec_norm``, computed once per row, so
+    a round's pair cosines read norms instead of folding them again.
     Pick 1 is the most relevant candidate (msim 0); rounds 2..{k} are
     one ``aggregate(sequence(2, k), array(pick1), step)`` fold whose
     state is the array of picks: each step drops the picked ids, sets
@@ -156,6 +159,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(raw)
         .filter(F.col("vec_id") != _MMR_QUERY_ID)
         .transform(with_scalars, q)
+        .withColumn("norm", vec_norm(F.col("embedding")))
         .select(
             "vec_id",
             F.round(
@@ -163,12 +167,13 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("qvec"),
                     F.col("embedding"),
                     vec_norm(F.col("qvec")),
-                    vec_norm(F.col("embedding")),
+                    F.col("norm"),
                 ),
                 6,
             ).alias("rel"),
             F.lit(0.0).alias("msim"),
             "embedding",
+            "norm",
         )
     )
     pool = F.col("pool")
@@ -186,10 +191,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     picks,
                     lambda p: F.round(
                         cosine(
-                            c["embedding"],
-                            p["embedding"],
-                            vec_norm(c["embedding"]),
-                            vec_norm(p["embedding"]),
+                            c["embedding"], p["embedding"], c["norm"], p["norm"]
                         ),
                         6,
                     ),

@@ -9,6 +9,29 @@ Defaults are chosen for correctness-stable, cluster-portable behavior:
   which Spark cannot read natively; we read the raw int64 and convert to
   microsecond timestamps ourselves (see io.load_table), matching DuckDB's
   ns->us truncation exactly.
+- No per-call Python origin capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4.1
+  wraps every Column function in ``_with_origin``: with capture on,
+  each call looks up the active session, resolves a JVM class
+  reflectively, reads a conf, walks the Python stack (and tries
+  ``import IPython``) and sets and clears the JVM-side origin.
+  ``F.col("x")`` cost 5.0 ms on (0.9 ms off) over a session's first
+  200 calls and 1.7 ms on (0.5 ms off) once warm, on a 4-core host;
+  a query build is hundreds of such calls. PySpark's own comment names
+  the conf as the option "to reduce performance slowdown". What it
+  drops: the Python file:line call site in runtime error messages.
+  Error classes (``CAST_OVERFLOW``, ``DIVIDE_BY_ZERO``, ...) and the
+  SQL-expression context stay. The conf is static, so only a session
+  this module starts (:func:`get_spark`) gets it; a session handed to
+  :func:`apply_runtime_conf` keeps its own value. PySpark also reads
+  the flag once per process, at the first Column function call (as off
+  when no session is active yet), and caches it: a driver that built
+  Columns on a session with capture on keeps it on for the process.
+
+:func:`apply_runtime_conf` applies :data:`RUNTIME_CONF` once per JVM
+session (keyed on its ``sessionUUID``), so the loader, which calls it
+on every load, sends no conf command after the first and never undoes
+a setting the caller changed since (AQE off, another time zone).
 """
 
 from __future__ import annotations
@@ -46,6 +69,8 @@ STARTUP_CONF = {
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # static: see the module docstring for what origin capture costs
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -58,14 +83,26 @@ _PACKAGE_PARENT = os.path.dirname(
 )
 
 
+# sessionUUIDs of the JVM sessions apply_runtime_conf has configured
+_CONFIGURED: set[str] = set()
+
+
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (driver-owned)
     and put this package's parent directory on the PYTHONPATH its
     Python workers start with (read per UDF, so it also reaches a
-    session that is already running)."""
+    session that is already running).
+
+    Once per JVM session: a later call costs one gateway round trip
+    (the session's UUID) and changes nothing, so a conf the caller set
+    after the first call stands."""
+    key = spark._jsparkSession.sessionUUID()
+    if key in _CONFIGURED:
+        return spark
+    conf = spark.conf
     for k, v in RUNTIME_CONF.items():
         try:
-            spark.conf.set(k, v)
+            conf.set(k, v)
         except Exception:
             # non-settable in this context; defaults are acceptable
             pass
@@ -73,6 +110,7 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
     if _PACKAGE_PARENT not in paths:
         env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
+    _CONFIGURED.add(key)
     return spark
 
 

@@ -104,3 +104,23 @@ def test_python_workers_import_package_from_any_cwd(tmp_path, sf_dir):
     assert run.returncode == 0, run.stderr[-3000:]
     rows = [ln for ln in run.stdout.splitlines() if ln.startswith("ROWS ")]
     assert rows and int(rows[0].split()[1]) > 0, run.stdout
+
+
+def test_ansi_runtime_error_keeps_its_error_class(spark):
+    """With Python origin capture off (``session.STARTUP_CONF``), an
+    ANSI runtime failure still raises its error class: ``round_long``
+    of 1e19 overflows BIGINT."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    from dissertation_iceberg_spark.functions.exact import round_long
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame([(1e19,)], "x double").select(
+        round_long(F.col("x")).alias("r")
+    )
+    with pytest.raises(ArithmeticException) as err:
+        df.collect()
+    assert err.value.getCondition() == "CAST_OVERFLOW"

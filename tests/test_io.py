@@ -130,6 +130,45 @@ def test_load_table_follows_ts_unit_across_rewrites(spark, tmp_path):
         assert got == [r[0] for r in want] == [v // 1000 for v in ns], unit
 
 
+def test_load_table_keeps_caller_conf(spark, sf_dir, monkeypatch):
+    """The loader configures a session once: a conf the caller changes
+    afterwards (AQE off here) survives later loads, and a repeat load
+    sends the JVM no conf set at all."""
+    key = "spark.sql.adaptive.enabled"
+    load_table(spark, sf_dir, "orders")
+    prev = spark.conf.get(key)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def recorded(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    spark.conf.set(key, "false")
+    # restored after the test
+    monkeypatch.setattr(client, "send_command", recorded)
+    try:
+        load_table(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "events")
+        assert spark.conf.get(key) == "false"
+        # py4j encodes conf.set(k, v) as "c\n<id>\nset\ns<k>\ns<v>\ne\n"
+        assert sent and not [c for c in sent if "\nset\nsspark." in c], sent
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_first_load_configures_a_fresh_session(spark, sf_dir):
+    """A session the loader has not seen yet gets the runtime confs on
+    its first load: UTC and nanosAsLong replace its own values."""
+    fresh = spark.newSession()
+    fresh.conf.set("spark.sql.session.timeZone", "America/New_York")
+    fresh.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    load_table(fresh, sf_dir, "events")
+    assert fresh.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
 def test_driver_fixtures_satisfy_non_null_contract(spark):
     """TESTDATA contract (round 6): the oracle-checked surface assumes
     the NON_NULL_CONTRACT columns are never NULL (NULL ordering and

@@ -3,9 +3,10 @@
 CLI: python tools/time_registry.py [--json OUT.json] [sf_dir] [n_runs]
 
 Spark-only (no oracle) — the optimization-round outlier finder: one
-warm-up run of the first query, then ``n_runs`` noop-timed runs per
-query (``best`` and ``lower_median`` recorded: the lower median,
-rs[(n-1)//2] of the sorted runs, which is the best run when n_runs=2).
+untimed warm-up run of the first query (to absorb JVM and codegen
+start-up), then ``n_runs`` noop-timed runs per query (``best`` and
+``lower_median`` recorded: the lower median, rs[(n-1)//2] of the sorted
+runs, which is the best run when n_runs=2).
 Queries ordered by registry insertion.
 
 Each run is split into the DataFrame build (the query function's call)
@@ -15,14 +16,18 @@ From the last run, the warmest, each query also records:
 - ``build_s``: seconds spent building the DataFrame;
 - ``build_jobs``: Spark jobs fired while building (eager pins, scalar
   collects);
+- ``build_calls``: py4j commands the driver sent to the JVM while
+  building (see :class:`GatewayCommands`), the fixed per-call cost of
+  DataFrame construction that ``build_jobs`` does not show;
 - ``exec_jobs``: Spark jobs fired by the noop write;
 - ``exchanges``: Exchange, BroadcastExchange and ReusedExchange nodes in
   the DataFrame's executed plan, counted after the timed runs.
 
-A query that raises is recorded as ``{"error": ...}`` and the sweep goes
-on. If the Spark JVM is gone after the failure, every later query would
-fail on the dead gateway, so the sweep stops instead: the JSON gets an
-``aborted`` entry (the query and its error) and the tool exits 1.
+A query that raises, in the warm-up run too, is recorded as
+``{"error": ...}`` and the sweep goes on. If the Spark JVM is gone after
+the failure, every later query would fail on the dead gateway, so the
+sweep stops instead: the JSON gets an ``aborted`` entry (the query and
+its error) and the tool exits 1.
 """
 
 from __future__ import annotations
@@ -46,6 +51,31 @@ def jvm_alive(sc) -> bool:
         return False
 
 
+class GatewayCommands:
+    """Counts the py4j commands this process sends to the Spark JVM.
+
+    Wraps the gateway client's ``send_command`` in place, so every
+    JavaObject call made after construction is counted in ``n``. Object
+    deletes (``m\\nd\\n...``) are left out: py4j sends one when Python
+    garbage-collects a JavaObject, so when they fall follows the
+    collector, not the code being measured."""
+
+    def __init__(self, spark) -> None:
+        from py4j import protocol
+
+        delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+        self.n = 0
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+
+        def counted(command, *args, **kwargs):
+            if not command.startswith(delete):
+                self.n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counted
+
+
 def main() -> None:
     args = sys.argv[1:]
     out_path = None
@@ -65,35 +95,38 @@ def main() -> None:
     spark = get_spark("time-registry")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    calls = GatewayCommands(spark)
     results: dict[str, dict] = {}
     aborted = None
     names = list(REGISTRY)
-    # one throwaway pass to absorb JVM/codegen warm-up
-    REGISTRY[names[0]].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
     t_all = time.perf_counter()
     for i, name in enumerate(names):
         fn = REGISTRY[name].fn
         runs = []
         err = None
-        for r in range(n_runs):
+        # run 0 of the first query is the warm-up: guarded, not timed
+        for r in range(n_runs + (i == 0)):
             group = f"time_registry|{name}|{r}"
             t0 = time.perf_counter()
             try:
                 sc.setJobGroup(f"{group}|build", name)
+                n0 = calls.n
                 df = fn(spark, sf_dir)
                 t1 = time.perf_counter()
+                n1 = calls.n
                 sc.setJobGroup(f"{group}|exec", name)
                 df.write.format("noop").mode("overwrite").save()
             except Exception as e:  # noqa: BLE001 - recorded, sweep continues
                 err = f"{type(e).__name__}: {e}"[:300]
                 break
+            if i == 0 and r == 0:
+                continue
             runs.append(time.perf_counter() - t0)
             done = df
             layers = {
                 "build_s": round(t1 - t0, 3),
                 "build_jobs": len(tracker.getJobIdsForGroup(f"{group}|build")),
+                "build_calls": n1 - n0,
                 "exec_jobs": len(tracker.getJobIdsForGroup(f"{group}|exec")),
             }
         if runs:
