@@ -29,6 +29,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.session import pin
 from dissertation_iceberg_spark.functions.exact import round_long
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
@@ -773,7 +774,10 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = None
     for i in range(1, _BPE_ITERS + 1):
         best, seq = _bpe_merge_once(seq)
-        seq = seq.persist()
+        # three consumers (the tokens_after sum, the next round's pair
+        # count and its posexplode): pinned, not cached, so no cache
+        # entry outlives the call (the kcore rule)
+        seq = pin(seq)
         n_after = seq.agg(
             F.sum(F.size("toks")).cast("long").alias("tokens_after")
         )

@@ -39,6 +39,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.strategy import _SIGNAL_SQL, _signals
+from dissertation_iceberg_spark.session import pin
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
 
@@ -3842,14 +3843,12 @@ def _lgamma_table(spark: SparkSession, m: int) -> DataFrame:
     # the constant-key lookup, and the lambda-free-but-subquery-bearing
     # cumsum lineage defeats exchange reuse — without this the whole
     # O(trials) build re-runs per consumer (measured 9x before the
-    # round-7 restructure). At cluster scale prefer persist(DISK) /
-    # reliable checkpoint: localCheckpoint pins to executor storage,
-    # so an executor loss kills the lineage (SCALE.md, checkpoint
+    # round-7 restructure). ``pin`` picks the durability tier
+    # (SPARK_GRAFT_PIN=reliable on a cluster, SCALE.md checkpoint
     # durability note).
-    return (
+    return pin(
         bucketed_exclusive_cumsums(lgbase, "j", ["lnj"])
         .select("j", F.col("cum_lnj").alias("lgam"))
-        .localCheckpoint()
     )
 
 

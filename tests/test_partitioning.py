@@ -276,9 +276,10 @@ def test_pin_reliable_mode_hash_equal(spark, sf_dir, tmp_path, monkeypatch):
     lineage-pinning helper (``session.pin`` with SPARK_GRAFT_PIN=
     reliable => eager reliable ``checkpoint()``) is EXERCISED, not just
     documented, and produces bit-identical results to the default
-    ``localCheckpoint()`` tier for both pin-bearing plan families:
-    ``semdedup_prune`` (Lloyd assignment pin) and ``near_dup_clusters``
-    (connected-components edge/label pins)."""
+    ``localCheckpoint()`` tier for the pin-bearing plan families:
+    ``semdedup_prune`` (Lloyd assignment pin), ``near_dup_clusters``
+    (connected-components edge/label pins) and the two Bayes A/B
+    queries (lgamma table pin)."""
     from dissertation_iceberg_spark.queries.registry import (
         REGISTRY,
         _ensure_loaded,
@@ -296,12 +297,18 @@ def test_pin_reliable_mode_hash_equal(spark, sf_dir, tmp_path, monkeypatch):
             )
         )
 
+    names = (
+        "semdedup_prune",
+        "near_dup_clusters",
+        "bayes_ab_expected_loss",
+        "bayes_ab_posterior",
+    )
     monkeypatch.delenv("SPARK_GRAFT_PIN", raising=False)
-    local = {n: run(n) for n in ("semdedup_prune", "near_dup_clusters")}
+    local = {n: run(n) for n in names}
 
     monkeypatch.setenv("SPARK_GRAFT_PIN", "reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
-    reliable = {n: run(n) for n in ("semdedup_prune", "near_dup_clusters")}
+    reliable = {n: run(n) for n in names}
 
     for n in local:
         assert local[n] == reliable[n], n
@@ -311,3 +318,20 @@ def test_pin_reliable_mode_hash_equal(spark, sf_dir, tmp_path, monkeypatch):
     assert ckpt.exists() and any(ckpt.rglob("*")), (
         "reliable checkpoint dir is empty - checkpoint() path not taken"
     )
+
+
+def test_bpe_merge_training_leaves_no_cached_frame(spark, sf_dir):
+    """Each BPE round's sequence frame is pinned, not cached: after a
+    build and a write the session's cache holds nothing, so a later
+    call cannot reuse (or be slowed by) an earlier call's entries."""
+    from dissertation_iceberg_spark.queries.registry import (
+        REGISTRY,
+        _ensure_loaded,
+    )
+
+    _ensure_loaded()
+    spark.catalog.clearCache()
+    REGISTRY["bpe_merge_training"].fn(spark, sf_dir).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
