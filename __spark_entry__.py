@@ -22,7 +22,14 @@ from dissertation_iceberg_spark.session import apply_runtime_conf
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: hourly conditional order-imbalance with calendar
     densification, first/last prices and future returns (SURVEY §7
-    step 3) over /root/testdata/sf0.001."""
+    step 3) over /root/testdata/sf0.001.
+
+    On a session that ``get_spark`` did not start, PySpark's per-Column
+    origin capture (``spark.python.sql.dataFrameDebugging.enabled``)
+    stays on: the conf is static, so nothing at runtime can turn it
+    off. A warm build here then sends about 930 non-delete gateway
+    commands, against 389 on a ``get_spark`` session
+    (``tools/time_registry.GatewayCommands``)."""
     apply_runtime_conf(spark)
     from dissertation_iceberg_spark.queries.core import oi_hourly_densified
 

@@ -98,7 +98,9 @@ def ols_fit(
     group_cols: list[str] | None = None,
 ) -> list[dict]:
     """Exact OLS per group. Returns one dict per group with keys:
-    group values, beta (incl. 'const'), tvals, adj_r2, n.
+    group values, beta (incl. 'const'), tvals, adj_r2, n. A group with
+    n ≤ k rows or a singular Gram has no fit and gives no dict, the
+    zero-rows convention of the registered Gram fits.
 
     Distributed work: one aggregation. Driver work: k×k solve per group.
     """
@@ -121,7 +123,12 @@ def ols_fit(
                 xtx[i, j] = xtx[j, i] = v
             xty[i] = r[f"xy_{a}"]
         n = r["n"]
-        beta = np.linalg.solve(xtx, xty)
+        if n <= k:
+            continue
+        try:
+            beta = np.linalg.solve(xtx, xty)
+        except np.linalg.LinAlgError:
+            continue
         rss = float(r["yy"] - 2 * beta @ xty + beta @ xtx @ beta)
         tss = float(r["yy"] - r["sy"] ** 2 / n)
         dof = n - k

@@ -16,7 +16,7 @@ Scale: rank is one shuffle on the bin key; the per-bin cross-section
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -46,19 +46,23 @@ def cross_sectional_select(
     )
 
 
+def leg_pnl(ret_col: str) -> Column:
+    """The long-short aggregate over a selected frame: Σ returns over
+    top picks − Σ returns over bottom picks, unrounded
+    (trading_strategy.py:421-435)."""
+    return F.sum(F.when(F.col("is_top") == 1, F.col(ret_col)).otherwise(0.0)) - F.sum(
+        F.when(F.col("is_bottom") == 1, F.col(ret_col)).otherwise(0.0)
+    )
+
+
 def portfolio_pnl(
     selected: DataFrame,
     bin_col: str,
     ret_col: str,
 ) -> DataFrame:
-    """Per-bin PnL = Σ returns over top picks − Σ returns over bottom
-    picks, plus leg counts (trading_strategy.py:421-435)."""
+    """Per-bin PnL (:func:`leg_pnl`, rounded to 6 dp) plus leg counts."""
     return selected.groupBy(bin_col).agg(
-        F.round(
-            F.sum(F.when(F.col("is_top") == 1, F.col(ret_col)).otherwise(0.0))
-            - F.sum(F.when(F.col("is_bottom") == 1, F.col(ret_col)).otherwise(0.0)),
-            6,
-        ).alias("pnl"),
+        F.round(leg_pnl(ret_col), 6).alias("pnl"),
         F.sum("is_top").alias("n_top"),
         F.sum("is_bottom").alias("n_bottom"),
     )

@@ -97,29 +97,28 @@ def regression_workflow(
     (chunk_pipeline.py:129-143 inside the delta loop); the round-8 10x
     rehearsal showed the same barrier in the naive composed plan (each
     union arm re-ran the scan + tagging window sort), so the loop now
-    rides one materialization (SCALE.md: e1_workflow rows)."""
+    rides one materialization (SCALE.md: e1_workflow rows). A delta
+    whose OLS design is singular has no row (``ols_fit``)."""
     from dissertation_iceberg_spark.session import pin
 
     tg = pin(tagged_lob(spark, sf_dir))
+    names = ["oi_vis", "oi_ib", "oi_hid"]
+    coefs = [*names, "const"]
+    schema = ", ".join(
+        ["delta_sec BIGINT", "n BIGINT", "adj_r2 DOUBLE"]
+        + [f"{p}_{k} DOUBLE" for p in ("beta", "t") for k in coefs]
+    )
     rows = []
     for delta in deltas:
         frame = oi_frame(spark, sf_dir, delta, tagged=tg).filter(
             F.col("fut_log_ret").isNotNull()
         )
-        fits = ols_fit(
-            frame, ["oi_vis", "oi_ib", "oi_hid"], "fut_log_ret", group_cols=None
-        )
-        for fit in fits:
+        for fit in ols_fit(frame, names, "fut_log_ret", group_cols=None):
             rows.append(
-                {
-                    "delta_sec": delta,
-                    "n": fit["n"],
-                    "adj_r2": fit["adj_r2"],
-                    **{f"beta_{k}": v for k, v in fit["beta"].items()},
-                    **{f"t_{k}": v for k, v in fit["tvals"].items()},
-                }
+                (delta, fit["n"], fit["adj_r2"])
+                + tuple(fit[d][k] for d in ("beta", "tvals") for k in coefs)
             )
-    return spark.createDataFrame(rows)
+    return spark.createDataFrame(rows, schema)
 
 
 def single_strategy_workflow(

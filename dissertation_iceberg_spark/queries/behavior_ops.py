@@ -1159,6 +1159,35 @@ _CAL_SPLIT = "2024-01-16 00:00:00"
 _CAL_BINS = 10
 
 
+def _holdout_scores(e: DataFrame, value_floor: int | None = None) -> DataFrame:
+    """The holdout propensity frame (user_id, s_micro, y) the
+    calibration and uplift evals grade: each user active before
+    ``_CAL_SPLIT`` scores the exact integer micro-fraction
+    s_micro = (n_purchases * 1e6) div n_events over their pre-split
+    events; y = 1 when they purchase after the split (above
+    ``value_floor`` dollars when one is given), else 0."""
+    split = F.lit(_CAL_SPLIT).cast("timestamp_ntz")
+    hist = (
+        e.filter(F.col("ts") < split)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_ev"),
+            F.sum((F.col("event_type") == "purchase").cast("long")).alias(
+                "n_p"
+            ),
+        )
+    )
+    bought = (F.col("ts") >= split) & (F.col("event_type") == "purchase")
+    if value_floor is not None:
+        bought = bought & (F.col("value") > value_floor)
+    fut = e.filter(bought).select("user_id").distinct().withColumn("y", F.lit(1))
+    return hist.join(fut, "user_id", "left").select(
+        "user_id",
+        F.expr("(n_p * 1000000) div n_ev").alias("s_micro"),
+        F.coalesce(F.col("y"), F.lit(0)).alias("y"),
+    )
+
+
 _CALIBRATION_ORACLE = f"""
 WITH hist AS (
   SELECT user_id,
@@ -1205,29 +1234,7 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-semi over the future window, one broadcast-size LEFT
     join on user, one {b}-group aggregation. Temporal split pushes
     down to the scan as a timestamp predicate.""".format(b=_CAL_BINS)
-    e = load_table(spark, sf_dir, "events")
-    split = F.lit(_CAL_SPLIT).cast("timestamp")
-    hist = (
-        e.filter(F.col("ts") < split)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            F.count_if(F.col("event_type") == "purchase").alias("n_p"),
-        )
-    )
-    fut = (
-        e.filter((F.col("ts") >= split) & (F.col("event_type") == "purchase"))
-        .select("user_id")
-        .distinct()
-        .withColumn("y", F.lit(1))
-    )
-    scored = (
-        hist.join(fut, "user_id", "left")
-        .select(
-            F.expr("(n_p * 1000000) div n_ev").alias("s_micro"),
-            F.coalesce("y", F.lit(0)).alias("y"),
-        )
-    )
+    scored = _holdout_scores(load_table(spark, sf_dir, "events"))
     return (
         scored.select(
             F.expr(
@@ -2684,26 +2691,7 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator is exact; every ratio is a division of identical exact
     integers (IEEE-deterministic); the per-bin REL/RES terms are
     micro-rounded ONCE and their totals are exact integer sums."""
-    e = load_table(spark, sf_dir, "events")
-    split = F.lit(_CAL_SPLIT).cast("timestamp")
-    hist = (
-        e.filter(F.col("ts") < split)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            F.count_if(F.col("event_type") == "purchase").alias("n_p"),
-        )
-    )
-    fut = (
-        e.filter((F.col("ts") >= split) & (F.col("event_type") == "purchase"))
-        .select("user_id")
-        .distinct()
-        .withColumn("y", F.lit(1))
-    )
-    scored = hist.join(fut, "user_id", "left").select(
-        F.expr("(n_p * 1000000) div n_ev").alias("s_micro"),
-        F.coalesce("y", F.lit(0)).alias("y"),
-    )
+    scored = _holdout_scores(load_table(spark, sf_dir, "events"))
     err = F.col("s_micro") - F.col("y") * 1000000
     cells = (
         scored.select(

@@ -956,6 +956,25 @@ FROM fin f CROSS JOIN null_ll z
 """
 
 
+def _daily_cents(e: DataFrame) -> DataFrame:
+    """The daily total-value series (day, cents) in exact integer
+    cents."""
+    return e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
+        F.sum(round_long(F.col("value") * 100)).cast("long").alias("cents")
+    )
+
+
+def _daily_moves(e: DataFrame) -> DataFrame:
+    """The non-zero day-over-day moves of :func:`_daily_cents` as
+    (day, up): up = 1 on a rise, 0 on a fall; the first day and
+    unchanged days drop out."""
+    diff = F.col("cents") - F.lag("cents").over(Window.orderBy("day"))
+    mv = _daily_cents(e).select("day", diff.alias("diff"))
+    return mv.filter(F.col("diff").isNotNull() & (F.col("diff") != 0)).select(
+        "day", F.when(F.col("diff") > 0, 1).otherwise(0).alias("up")
+    )
+
+
 @register("hmm_forward_loglik", oracle=_HMM_ORACLE)
 def hmm_forward_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-state persistence-HMM forward log-likelihood of the daily
@@ -973,19 +992,8 @@ def hmm_forward_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE. Scale shape: one daily aggregate, then an O(days)
     sequential fold per series (bounded state, JVM-side).
     """.format(s=_HMM_STAY, e=_HMM_EMIT)
-    e = spread(load_table(spark, sf_dir, "events"))
-    daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(round_long(F.col("value") * 100))
-        .cast("long")
-        .alias("cents")
-    )
-    w = Window.orderBy("day")
-    mv = daily.select(
-        "day", (F.col("cents") - F.lag("cents").over(w)).alias("diff")
-    )
-    obs = mv.filter(F.col("diff").isNotNull() & (F.col("diff") != 0)).select(
-        "day", F.when(F.col("diff") > 0, 1).otherwise(0).alias("d")
-    )
+    obs = _daily_moves(spread(load_table(spark, sf_dir, "events")))
+    obs = obs.withColumnRenamed("up", "d")
     series = obs.agg(
         F.sort_array(F.collect_list(F.struct("day", "d"))).alias("arr"),
         F.sum("d").cast("long").alias("n_up"),
@@ -1103,19 +1111,8 @@ def hmm_viterbi_regimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: one daily aggregate, then an O(days) sequential fold with
     O(days) state (two scores + two candidate paths).
     """
-    e = spread(load_table(spark, sf_dir, "events"))
-    daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(round_long(F.col("value") * 100))
-        .cast("long")
-        .alias("cents")
-    )
-    w = Window.orderBy("day")
-    mv = daily.select(
-        "day", (F.col("cents") - F.lag("cents").over(w)).alias("diff")
-    )
-    obs = mv.filter(F.col("diff").isNotNull() & (F.col("diff") != 0)).select(
-        "day", F.when(F.col("diff") > 0, 1).otherwise(0).alias("d")
-    )
+    obs = _daily_moves(spread(load_table(spark, sf_dir, "events")))
+    obs = obs.withColumnRenamed("up", "d")
     series = obs.agg(
         F.sort_array(F.collect_list(F.struct("day", "d"))).alias("arr")
     )
@@ -1235,12 +1232,7 @@ def matrix_profile_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     history-bounded frame — the accepted O(days²) class
     (mann_kendall precedent), never row-scale.
     """
-    e = spread(load_table(spark, sf_dir, "events"))
-    daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(round_long(F.col("value") * 100))
-        .cast("long")
-        .alias("cents")
-    )
+    daily = _daily_cents(spread(load_table(spark, sf_dir, "events")))
     w = Window.orderBy("day").rowsBetween(0, _MP_W - 1)
     nwin = Window.partitionBy()
     idx = daily.select(

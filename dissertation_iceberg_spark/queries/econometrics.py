@@ -548,20 +548,9 @@ def sortino_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the existing parallel path; everything after runs on the
     O(days) daily frame — bounded single-partition class. The two
     1-row frames combine via an intentional broadcast."""
-    from dissertation_iceberg_spark.operators.strategy import (
-        cross_sectional_select,
-    )
-    from dissertation_iceberg_spark.queries.strategy import _signals
+    from dissertation_iceberg_spark.queries.strategy import _daily_pnl
 
-    sel = cross_sectional_select(
-        _signals(spark, sf_dir), "day", "signal", "user_id", 0.2
-    )
-    p = sel.groupBy("day").agg(
-        (
-            F.sum(F.when(F.col("is_top") == 1, F.col("gross")).otherwise(0.0))
-            - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
-        ).alias("pnl")
-    )
+    p = _daily_pnl(spark, sf_dir)
     c = p.select("day", round_long(F.col("pnl") * 100).alias("cents"))
     wd = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     dd = c.select(

@@ -56,6 +56,32 @@ def _part_supplier_edges(li: DataFrame) -> DataFrame:
     )
 
 
+def _pagerank(edges: DataFrame) -> DataFrame:
+    """Integer PageRank (node, r) over a symmetric (src, dst) edge list:
+    every node starts at ``_SCALE`` micro-units, and each of
+    ``_PR_ITERS`` rounds sets r = _BASE + 0.85·Σ floor(r_src / deg_src)
+    with the damping as an integer multiply-floor-divide."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    ranks = deg.select(
+        F.col("src").alias("node"), F.lit(_SCALE).cast("long").alias("r")
+    )
+    for _ in range(_PR_ITERS):
+        contrib = (
+            edges.join(ranks, edges["src"] == ranks["node"])
+            .join(deg, "src")
+            .select("dst", F.expr("r DIV d").alias("c"))
+        )
+        ranks = contrib.groupBy(F.col("dst").alias("node")).agg(
+            (
+                F.lit(_BASE)
+                + F.expr(f"({_DAMP_NUM} * sum(c)) DIV {_DAMP_DEN}")
+            )
+            .cast("long")
+            .alias("r")
+        )
+    return ranks
+
+
 def _iter_sql(prev: str, out: str) -> str:
     return f"""
 {out} AS (
@@ -100,26 +126,7 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     term is needed. Final top-k compiles to TakeOrderedAndProject.
     Iteration count is fixed (not convergence-tested) precisely so the
     oracle can unroll it."""
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = _part_supplier_edges(li)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(_SCALE).cast("long").alias("r")
-    )
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(deg, "src")
-            .select("dst", F.expr("r DIV d").alias("c"))
-        )
-        ranks = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.lit(_BASE)
-                + F.expr(f"({_DAMP_NUM} * sum(c)) DIV {_DAMP_DEN}")
-            )
-            .cast("long")
-            .alias("r")
-        )
+    ranks = _pagerank(_part_supplier_edges(load_table(spark, sf_dir, "lineitem")))
     return (
         ranks.orderBy(F.desc("r"), F.asc("node"))
         .limit(_PR_TOPK)

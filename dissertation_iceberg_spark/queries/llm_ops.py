@@ -25,6 +25,7 @@ from dissertation_iceberg_spark.functions.scalars import (
     bcast_params,
     with_scalars,
 )
+from dissertation_iceberg_spark.queries.graph_ops import _pagerank
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.exact import r6, round_long
 
@@ -2742,6 +2743,8 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TextRank keyword extraction (PageRank over the word-adjacency graph)
 # --------------------------------------------------------------------------
 
+# the oracle unrolls the rounds with these; the Spark side runs
+# graph_ops._pagerank, whose constants equal them
 _TR_ITERS = 3
 _TR_TOPK = 20
 _TR_SCALE = 1_000_000
@@ -2802,7 +2805,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank_top_nodes topology on string nodes). Top-k compiles to
     TakeOrderedAndProject.
 
-    Determinism (pagerank_top_nodes recipe, graph_ops.py:63): ranks
+    Determinism (graph_ops._pagerank, pagerank_top_nodes' step): ranks
     are integer micro-units, contributions floor-divide by degree,
     damping is integer multiply-floor-divide, iteration count fixed so
     the oracle unrolls it; term string breaks rank ties."""
@@ -2828,24 +2831,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(_TR_SCALE).cast("long").alias("r")
-    )
-    for _ in range(_TR_ITERS):
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(deg, "src")
-            .select("dst", F.expr("r DIV d").alias("c"))
-        )
-        ranks = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.lit(_TR_BASE)
-                + F.expr(f"({_TR_DAMP_NUM} * sum(c)) DIV {_TR_DAMP_DEN}")
-            )
-            .cast("long")
-            .alias("r")
-        )
+    ranks = _pagerank(edges)
     return (
         ranks.orderBy(F.desc("r"), F.asc("node"))
         .limit(_TR_TOPK)

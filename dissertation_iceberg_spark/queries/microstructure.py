@@ -717,17 +717,9 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; everything after runs on the O(bins) frame (720 rows
     at sf0.1 — a documented bounded single-partition window, same
     class as oi_acf)."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
+    from dissertation_iceberg_spark.queries.oi_variants import _oi_series
 
-    lob = lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
-    b = (
-        lob.withColumn("bin", bin_end("ts", _LB_DELTA))
-        .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
-    )
-    m = densify(b, _LB_DELTA, zero_fill=("oi",)).select(
+    m = _oi_series(spark, sf_dir, _LB_DELTA).select(
         "bin", round_long(F.col("oi") * 1e6).alias("oi_micro")
     )
     w = Window.orderBy("bin")
@@ -973,18 +965,10 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is O(bins) (720 rows at sf0.1 — documented bounded
     single-partition class, like oi_acf/ljung_box); block windows are
     keyed by block id so even a years-long series would shard."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
+    from dissertation_iceberg_spark.queries.oi_variants import _oi_series
 
-    lob = lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
-    b = (
-        lob.withColumn("bin", bin_end("ts", _HURST_DELTA))
-        .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
-    )
     z = (
-        densify(b, _HURST_DELTA, zero_fill=("oi",))
+        _oi_series(spark, sf_dir, _HURST_DELTA)
         .select(
             round_long(F.col("oi") * 1e6).alias("x"),
             (F.row_number().over(Window.orderBy("bin")) - 1).alias("rn"),
@@ -1512,17 +1496,9 @@ def oi_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: fact work is the binned aggregate; the trig sums run
     over the O(bins) frame once per k (6 passes over ≤720 rows at
     sf0.1 — bounded single-partition class, like oi_acf)."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
+    from dissertation_iceberg_spark.queries.oi_variants import _oi_series
 
-    lob = lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
-    b = (
-        lob.withColumn("bin", bin_end("ts", _PG_DELTA))
-        .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
-    )
-    z = densify(b, _PG_DELTA, zero_fill=("oi",)).select(
+    z = _oi_series(spark, sf_dir, _PG_DELTA).select(
         round_long(F.col("oi") * 1e6).alias("x"),
         (F.row_number().over(Window.orderBy("bin")) - 1).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),

@@ -27,6 +27,21 @@ def _oi_cents(dir_col, cents, pred):
     return F.when((sell + buy) != 0, (sell - buy) / (sell + buy))
 
 
+def _oi_series(spark: SparkSession, sf_dir: str, delta: int) -> DataFrame:
+    """The densified OI series (bin, oi) at ``delta``-second bins: the
+    all-orders cents OI per bin, with empty bins zero-filled."""
+    from dissertation_iceberg_spark.operators.order_imbalance import densify
+
+    d, c = F.col("direction"), F.col("cents")
+    b = (
+        lob_cents(spark, sf_dir)
+        .withColumn("bin", bin_end("ts", delta))
+        .groupBy("bin")
+        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
+    )
+    return densify(b, delta, zero_fill=("oi",))
+
+
 def _oi_cents_sql(pred: str) -> str:
     sell = f"sum(CASE WHEN direction=-1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)"
     buy = f"sum(CASE WHEN direction=1 AND {pred} THEN {CENTS_SQL} ELSE 0 END)"
@@ -424,16 +439,7 @@ def oi_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13: autocorrelation of the densified OI series by lag
     (timeseries_analysis.ipynb cells 2-5) — lag columns + corr aggs on
     the already-tiny binned frame."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-
-    df = lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
-    b = (
-        df.withColumn("bin", bin_end("ts", 3600))
-        .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
-    )
-    s = densify(b, 3600, zero_fill=("oi",))
+    s = _oi_series(spark, sf_dir, 3600)
     w = Window.orderBy("bin")
     for k in _ACF_LAGS:
         s = s.withColumn(f"oi_l{k}", F.lag("oi", k).over(w))

@@ -32,13 +32,12 @@ from dissertation_iceberg_spark.operators.regression import (
     moment_sums,
     scaled_comoment,
 )
-from dissertation_iceberg_spark.operators.strategy import cross_sectional_select
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
     with_scalars,
 )
 from dissertation_iceberg_spark.queries.registry import register
-from dissertation_iceberg_spark.queries.strategy import _SIGNAL_SQL, _signals
+from dissertation_iceberg_spark.queries.strategy import _SIGNAL_SQL, _daily_pnl
 from dissertation_iceberg_spark.session import pin
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
@@ -92,15 +91,7 @@ def max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. All arithmetic in integer cents: running sums,
     running max, and the drawdown are exact bigints on both engines;
     the earliest-day tiebreak pins the trough row."""
-    sel = cross_sectional_select(
-        _signals(spark, sf_dir), "day", "signal", "user_id", 0.2
-    )
-    p = sel.groupBy("day").agg(
-        (
-            F.sum(F.when(F.col("is_top") == 1, F.col("gross")).otherwise(0.0))
-            - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
-        ).alias("pnl")
-    )
+    p = _daily_pnl(spark, sf_dir)
     c = p.select("day", round_long(F.col("pnl") * 100).alias("cents"))
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     dd = c.select(
@@ -324,6 +315,51 @@ FROM lm
 """
 
 
+def _durations(e: DataFrame) -> DataFrame:
+    """Time to first purchase per user (user_id, t_day, ev): days from
+    the user's first active day to their first purchase day (ev = 1),
+    or to their last active day when they never purchase (censored,
+    ev = 0)."""
+    day = F.date_trunc("day", F.col("ts"))
+    u = e.groupBy("user_id").agg(
+        F.min(day).alias("t0"),
+        F.min(F.when(F.col("event_type") == "purchase", day)).alias("tp"),
+        F.max(day).alias("tend"),
+    )
+    return u.select(
+        "user_id",
+        F.datediff(F.coalesce(F.col("tp"), F.col("tend")), F.col("t0"))
+        .cast("long")
+        .alias("t_day"),
+        F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("ev"),
+    )
+
+
+def _risk_table(dur: DataFrame) -> DataFrame:
+    """The risk table of a duration frame: per distinct t_day the
+    events d, the censorings c, the at-risk count n_risk (the frame
+    size, injected as a scalar subquery, less every earlier exit) and
+    the micro log-survival factor lm_micro = ln((n_risk − d)/n_risk)
+    micro-rounded once, NULL on a day that empties the risk set."""
+    grp = dur.groupBy("t_day").agg(
+        F.sum("ev").cast("long").alias("d"),
+        F.sum(1 - F.col("ev")).cast("long").alias("c"),
+    )
+    n_users = dur.agg(F.count(F.lit(1)).alias("n_users"))
+    wb = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, -1)
+    d, nr = F.col("d"), F.col("n_risk")
+    exits = F.coalesce(F.sum(d + F.col("c")).over(wb), F.lit(0))
+    return grp.transform(with_scalars, n_users).select(
+        "t_day",
+        "d",
+        "c",
+        (F.col("n_users") - exits).cast("long").alias("n_risk"),
+    ).withColumn(
+        "lm_micro",
+        F.when(d < nr, round_long(F.log((nr - d).cast("double") / nr) * 1e6)),
+    )
+
+
 @register("kaplan_meier", oracle=_KM_ORACLE)
 def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival curve for time-to-first-purchase at day
@@ -339,62 +375,17 @@ def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the survival product becomes an exact integer cumsum (d = n_risk
     terminal bucket pinned to a −1e12 sentinel → surv 0 on both
     engines)."""
-    e = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-    u = e.groupBy("user_id").agg(
-        F.min(day).alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", day)).alias("tp"),
-        F.max(day).alias("tend"),
-    )
-    dur = u.select(
-        F.datediff(F.coalesce(F.col("tp"), F.col("tend")), F.col("t0")).alias(
-            "t_day"
-        ),
-        F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    n_users = dur.agg(F.count(F.lit(1)).alias("n_users"))
-    grp = dur.groupBy("t_day").agg(
-        F.sum("ev").alias("d"), F.sum(1 - F.col("ev")).alias("c")
-    )
-    w_prev = Window.orderBy("t_day").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
+    risk = _risk_table(_durations(load_table(spark, sf_dir, "events")))
     w_cum = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, 0)
-    risk = grp.transform(with_scalars, n_users).select(
+    lm_micro = F.coalesce("lm_micro", F.lit(-1000000000000).cast("long"))
+    return risk.select(
         "t_day",
-        "d",
-        "c",
-        (
-            F.col("n_users")
-            - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0))
-        ).alias("n_risk"),
-    )
-    lm = risk.select(
-        "t_day",
-        "d",
-        "c",
         "n_risk",
-        F.when(
-            F.col("d") < F.col("n_risk"),
-            round_long(
-                F.log(
-                    (F.col("n_risk") - F.col("d")).cast("double")
-                    / F.col("n_risk")
-                )
-                * 1e6
-            ),
-        )
-        .otherwise(F.lit(-1000000000000).cast("long"))
-        .alias("lm_micro"),
-    )
-    return lm.select(
-        F.col("t_day").cast("long").alias("t_day"),
-        F.col("n_risk").cast("long").alias("n_risk"),
-        F.col("d").cast("long").alias("n_event"),
-        F.col("c").cast("long").alias("n_censored"),
-        F.round(
-            F.exp(F.sum("lm_micro").over(w_cum).cast("double") / 1e6), 6
-        ).alias("surv"),
+        F.col("d").alias("n_event"),
+        F.col("c").alias("n_censored"),
+        F.round(F.exp(F.sum(lm_micro).over(w_cum).cast("double") / 1e6), 6).alias(
+            "surv"
+        ),
     )
 
 
@@ -724,15 +715,7 @@ def var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded frame with a (cents, day) total-order tiebreak. Integer
     cents throughout; CVaR's only division happens once on exact
     integer sums."""
-    sel = cross_sectional_select(
-        _signals(spark, sf_dir), "day", "signal", "user_id", 0.2
-    )
-    p = sel.groupBy("day").agg(
-        (
-            F.sum(F.when(F.col("is_top") == 1, F.col("gross")).otherwise(0.0))
-            - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
-        ).alias("pnl")
-    )
+    p = _daily_pnl(spark, sf_dir)
     c = p.select("day", round_long(F.col("pnl") * 100).alias("cents"))
     n = c.agg(F.count(F.lit(1)).alias("n_days"))
     r = c.select(

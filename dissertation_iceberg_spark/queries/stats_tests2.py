@@ -29,7 +29,13 @@ from dissertation_iceberg_spark.functions.scalars import (
     bcast_params,
     with_scalars,
 )
+from dissertation_iceberg_spark.queries.behavior_ops import (
+    _CAL_SPLIT,
+    _holdout_scores,
+)
+from dissertation_iceberg_spark.queries.changepoint_ops import _daily_moves
 from dissertation_iceberg_spark.queries.registry import register
+from dissertation_iceberg_spark.queries.stats_tests import _durations, _risk_table
 from dissertation_iceberg_spark.functions.exact import r6, round_long
 from dissertation_iceberg_spark.operators.regression import (
     centred_comoment,
@@ -1687,20 +1693,7 @@ def runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(days) frame. Counts are exact BIGINTs; mu/var/z evaluate
     once on the 1-row reduce.
     """
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(round_long(F.col("value") * 100))
-        .cast("long")
-        .alias("cents")
-    )
-    w = Window.orderBy("day")
-    mv = daily.select(
-        "day", (F.col("cents") - F.lag("cents").over(w)).alias("diff")
-    )
-    up = F.when(F.col("diff") > 0, 1).otherwise(0)
-    signs = mv.filter(F.col("diff").isNotNull() & (F.col("diff") != 0)).select(
-        "day", up.alias("up")
-    )
+    signs = _daily_moves(load_table(spark, sf_dir, "events"))
     flips = signs.select(
         "up",
         (F.col("up") != F.lag("up").over(Window.orderBy("day")))
@@ -1919,18 +1912,17 @@ def mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cumulative gains / lift table for the propensity score
 # --------------------------------------------------------------------------
 
-_GAINS_SPLIT = "2024-01-16 00:00:00"  # same holdout split as calibration_bins
 _GAINS_BINS = 10
 
 _GAINS_ORACLE = f"""
 WITH hist AS (
   SELECT user_id, count(*) AS n_ev,
          count(*) FILTER (event_type = 'purchase') AS n_p
-  FROM events WHERE ts < TIMESTAMP '{_GAINS_SPLIT}'
+  FROM events WHERE ts < TIMESTAMP '{_CAL_SPLIT}'
   GROUP BY 1),
 fut AS (
   SELECT DISTINCT user_id FROM events
-  WHERE ts >= TIMESTAMP '{_GAINS_SPLIT}' AND event_type = 'purchase'),
+  WHERE ts >= TIMESTAMP '{_CAL_SPLIT}' AND event_type = 'purchase'),
 scored AS (
   SELECT h.user_id, (h.n_p * 1000000) // h.n_ev AS s_micro,
          CASE WHEN f.user_id IS NULL THEN 0 ELSE 1 END AS y
@@ -1987,29 +1979,7 @@ def cumulative_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
         _idiv,
         bucketed_row_number,
     )
-    e = load_table(spark, sf_dir, "events")
-    split = F.lit(_GAINS_SPLIT).cast("timestamp_ntz")
-    hist = (
-        e.filter(F.col("ts") < split)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias(
-                "n_p"
-            ),
-        )
-    )
-    fut = (
-        e.filter((F.col("ts") >= split) & (F.col("event_type") == "purchase"))
-        .select("user_id")
-        .distinct()
-        .withColumn("y", F.lit(1))
-    )
-    scored = hist.join(fut, "user_id", "left").select(
-        "user_id",
-        F.expr("(n_p * 1000000) div n_ev").alias("s_micro"),
-        F.coalesce(F.col("y"), F.lit(0)).alias("y"),
-    )
+    scored = _holdout_scores(load_table(spark, sf_dir, "events"))
     totals = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("pos"),
@@ -2505,11 +2475,11 @@ _QINI_ORACLE = f"""
 WITH hist AS (
   SELECT user_id, count(*) AS n_ev,
          count(*) FILTER (event_type = 'purchase') AS n_p
-  FROM events WHERE ts < TIMESTAMP '{_GAINS_SPLIT}'
+  FROM events WHERE ts < TIMESTAMP '{_CAL_SPLIT}'
   GROUP BY 1),
 fut AS (
   SELECT DISTINCT user_id FROM events
-  WHERE ts >= TIMESTAMP '{_GAINS_SPLIT}' AND event_type = 'purchase'
+  WHERE ts >= TIMESTAMP '{_CAL_SPLIT}' AND event_type = 'purchase'
     AND value > {_MCN_THR}),
 scored AS (
   SELECT h.user_id, (h.n_p * 1000000) // h.n_ev AS s_micro,
@@ -2570,34 +2540,9 @@ def qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _idiv,
         bucketed_row_number,
     )
-    e = load_table(spark, sf_dir, "events")
-    split = F.lit(_GAINS_SPLIT).cast("timestamp_ntz")
-    hist = (
-        e.filter(F.col("ts") < split)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias(
-                "n_p"
-            ),
-        )
-    )
-    fut = (
-        e.filter(
-            (F.col("ts") >= split)
-            & (F.col("event_type") == "purchase")
-            & (F.col("value") > _MCN_THR)
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("y", F.lit(1))
-    )
-    scored = hist.join(fut, "user_id", "left").select(
-        "user_id",
-        F.expr("(n_p * 1000000) div n_ev").alias("s_micro"),
-        (F.col("user_id") % 2).alias("arm"),
-        F.coalesce(F.col("y"), F.lit(0)).alias("y"),
-    )
+    scored = _holdout_scores(
+        load_table(spark, sf_dir, "events"), _MCN_THR
+    ).select("user_id", "s_micro", (F.col("user_id") % 2).alias("arm"), "y")
     n = scored.agg(F.count(F.lit(1)).cast("long").alias("n")).scalar()
     ranked = bucketed_row_number(
         scored.withColumn("__neg_s", -F.col("s_micro")),
@@ -2735,19 +2680,8 @@ def log_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-rounded ONCE to BIGINT and summed exactly, so the z and χ²
     hash-match the oracle.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-    u = e.groupBy("user_id", (F.col("user_id") % 2).alias("arm")).agg(
-        F.min(day).alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", day)).alias("tp"),
-        F.max(day).alias("tend"),
-    )
-    dur = u.select(
-        "arm",
-        F.datediff(F.coalesce(F.col("tp"), F.col("tend")), F.col("t0"))
-        .cast("long")
-        .alias("t_day"),
-        F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("ev"),
+    dur = _durations(load_table(spark, sf_dir, "events")).select(
+        (F.col("user_id") % 2).alias("arm"), "t_day", "ev"
     )
     grp = dur.groupBy("t_day").agg(
         F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
@@ -3133,36 +3067,7 @@ def nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     and variance increment is nano-rounded ONCE to BIGINT and
     cumulated exactly.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-    u = e.groupBy("user_id").agg(
-        F.min(day).alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", day)).alias("tp"),
-        F.max(day).alias("tend"),
-    )
-    dur = u.select(
-        F.datediff(F.coalesce(F.col("tp"), F.col("tend")), F.col("t0"))
-        .cast("long")
-        .alias("t_day"),
-        F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    grp = dur.groupBy("t_day").agg(
-        F.sum("ev").cast("long").alias("d"),
-        F.sum(1 - F.col("ev")).cast("long").alias("c"),
-    )
-    total = dur.count()  # driver-side O(1) scalar, same class as k-row Grams
-    wb = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, -1)
-    risk = grp.select(
-        "t_day",
-        "d",
-        "c",
-        (
-            F.lit(total)
-            - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb), F.lit(0))
-        )
-        .cast("long")
-        .alias("n_risk"),
-    )
+    risk = _risk_table(_durations(load_table(spark, sf_dir, "events")))
     dd = F.col("d").cast("double")
     nr = F.col("n_risk").cast("double")
     terms = risk.select(
@@ -3248,11 +3153,11 @@ _PLATT_ORACLE = (
 WITH hist AS (
   SELECT user_id, count(*) AS n_ev,
          count(*) FILTER (event_type = 'purchase') AS n_p
-  FROM events WHERE ts < TIMESTAMP '{_GAINS_SPLIT}'
+  FROM events WHERE ts < TIMESTAMP '{_CAL_SPLIT}'
   GROUP BY 1),
 fut AS (
   SELECT DISTINCT user_id FROM events
-  WHERE ts >= TIMESTAMP '{_GAINS_SPLIT}' AND event_type = 'purchase'
+  WHERE ts >= TIMESTAMP '{_CAL_SPLIT}' AND event_type = 'purchase'
     AND value > {{thr}}),
 scored AS (
   SELECT h.user_id,
@@ -3303,33 +3208,9 @@ def platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     that tiny frame × a 1-row broadcast parameter frame — optimizer
     cost independent of row count.
     """.format(it=_PLATT_ITERS, xg=_PLATT_XG)
-    e = load_table(spark, sf_dir, "events")
-    split = F.lit(_GAINS_SPLIT).cast("timestamp_ntz")
-    hist = (
-        e.filter(F.col("ts") < split)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias(
-                "n_p"
-            ),
-        )
-    )
-    fut = (
-        e.filter(
-            (F.col("ts") >= split)
-            & (F.col("event_type") == "purchase")
-            & (F.col("value") > _MCN_THR)
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("y", F.lit(1))
-    )
-    scored = hist.join(fut, "user_id", "left").select(
-        round_long(F.expr("(n_p * 1000000 div n_ev)") / 1000.0)
-        .alias("xq"),
-        F.coalesce(F.col("y"), F.lit(0)).alias("y"),
-    )
+    scored = _holdout_scores(
+        load_table(spark, sf_dir, "events"), _MCN_THR
+    ).select(round_long(F.col("s_micro") / 1000.0).alias("xq"), "y")
     shist = scored.groupBy("xq").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("pos"),
@@ -4135,11 +4016,11 @@ _ECE_ORACLE = f"""
 WITH hist AS (
   SELECT user_id, count(*) AS n_ev,
          count(*) FILTER (event_type = 'purchase') AS n_p
-  FROM events WHERE ts < TIMESTAMP '{_GAINS_SPLIT}'
+  FROM events WHERE ts < TIMESTAMP '{_CAL_SPLIT}'
   GROUP BY 1),
 fut AS (
   SELECT DISTINCT user_id FROM events
-  WHERE ts >= TIMESTAMP '{_GAINS_SPLIT}' AND event_type = 'purchase'),
+  WHERE ts >= TIMESTAMP '{_CAL_SPLIT}' AND event_type = 'purchase'),
 scored AS (
   SELECT h.user_id, (h.n_p * 1000000) // h.n_ev AS s_micro,
          CASE WHEN f.user_id IS NULL THEN 0 ELSE 1 END AS y
@@ -4178,28 +4059,7 @@ def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT sum; MCE micro-rounds each bin's gap once before max.
     Scale shape: one per-user reduce, O(bins) afterwards.
     """
-    e = load_table(spark, sf_dir, "events")
-    split = F.lit(_GAINS_SPLIT).cast("timestamp_ntz")
-    hist = (
-        e.filter(F.col("ts") < split)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias(
-                "n_p"
-            ),
-        )
-    )
-    fut = (
-        e.filter((F.col("ts") >= split) & (F.col("event_type") == "purchase"))
-        .select("user_id")
-        .distinct()
-        .withColumn("y", F.lit(1))
-    )
-    scored = hist.join(fut, "user_id", "left").select(
-        F.expr("(n_p * 1000000) div n_ev").alias("s_micro"),
-        F.coalesce(F.col("y"), F.lit(0)).alias("y"),
-    )
+    scored = _holdout_scores(load_table(spark, sf_dir, "events"))
     b = scored.groupBy(
         F.least(
             F.expr(f"s_micro div {1_000_000 // _ECE_BINS}"),
@@ -4935,11 +4795,11 @@ _CT_ORACLE = f"""
 WITH hist AS (
   SELECT user_id, count(*) AS n_ev,
          count(*) FILTER (event_type = 'purchase') AS n_p
-  FROM events WHERE ts < TIMESTAMP '{_GAINS_SPLIT}'
+  FROM events WHERE ts < TIMESTAMP '{_CAL_SPLIT}'
   GROUP BY 1),
 fut AS (
   SELECT DISTINCT user_id FROM events
-  WHERE ts >= TIMESTAMP '{_GAINS_SPLIT}' AND event_type = 'purchase'),
+  WHERE ts >= TIMESTAMP '{_CAL_SPLIT}' AND event_type = 'purchase'),
 scored AS (
   SELECT (h.n_p * 1000000) // h.n_ev AS s,
          CASE WHEN f.user_id IS NULL THEN 0 ELSE 1 END AS y
@@ -4989,27 +4849,8 @@ def cost_optimal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery); the argmin ties break toward the smaller threshold.
     One per-user reduce; the sweep is O(distinct scores).
     """.format(fn=_CT_FN_COST, fp=_CT_FP_COST)
-    e = load_table(spark, sf_dir, "events")
-    split = F.lit(_GAINS_SPLIT).cast("timestamp_ntz")
-    hist = (
-        e.filter(F.col("ts") < split)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias(
-                "n_p"
-            ),
-        )
-    )
-    fut = (
-        e.filter((F.col("ts") >= split) & (F.col("event_type") == "purchase"))
-        .select("user_id")
-        .distinct()
-        .withColumn("y", F.lit(1))
-    )
-    scored = hist.join(fut, "user_id", "left").select(
-        F.expr("(n_p * 1000000) div n_ev").alias("s"),
-        F.coalesce(F.col("y"), F.lit(0)).alias("y"),
+    scored = _holdout_scores(load_table(spark, sf_dir, "events")).select(
+        F.col("s_micro").alias("s"), "y"
     )
     sh = scored.groupBy("s").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -5130,49 +4971,9 @@ def weibull_plot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on exact integer Gram sums, and the scale's single exp()
     output micro-rounds once.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-    u = e.groupBy("user_id").agg(
-        F.min(day).alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", day)).alias("tp"),
-        F.max(day).alias("tend"),
+    lm = _risk_table(_durations(load_table(spark, sf_dir, "events"))).filter(
+        F.col("lm_micro").isNotNull()
     )
-    dur = u.select(
-        F.datediff(F.coalesce(F.col("tp"), F.col("tend")), F.col("t0"))
-        .cast("long")
-        .alias("t_day"),
-        F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    grp = dur.groupBy("t_day").agg(
-        F.sum("ev").cast("long").alias("d"),
-        F.sum(1 - F.col("ev")).cast("long").alias("c"),
-    )
-    total = dur.count()
-    wb = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, -1)
-    risk = grp.select(
-        "t_day",
-        "d",
-        (
-            F.lit(total)
-            - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb), F.lit(0))
-        )
-        .cast("long")
-        .alias("n_risk"),
-    )
-    lm = risk.select(
-        "t_day",
-        "d",
-        F.when(
-            F.col("d") < F.col("n_risk"),
-            round_long(
-                F.log(
-                    (F.col("n_risk") - F.col("d")).cast("double")
-                    / F.col("n_risk")
-                )
-                * 1e6
-            ),
-        ).alias("lm_micro"),
-    ).filter(F.col("lm_micro").isNotNull())
     cw = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, 0)
     surv = lm.select(
         "t_day",
@@ -5737,50 +5538,12 @@ def km_greenwood_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Greenwood variance terms nano-round once, both cumulating
     exactly; the z constant is a shared literal.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-    u = e.groupBy("user_id").agg(
-        F.min(day).alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", day)).alias("tp"),
-        F.max(day).alias("tend"),
-    )
-    dur = u.select(
-        F.datediff(F.coalesce(F.col("tp"), F.col("tend")), F.col("t0"))
-        .cast("long")
-        .alias("t_day"),
-        F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    grp = dur.groupBy("t_day").agg(
-        F.sum("ev").cast("long").alias("d"),
-        F.sum(1 - F.col("ev")).cast("long").alias("c"),
-    )
-    total = dur.count()
-    wb = Window.orderBy("t_day").rowsBetween(Window.unboundedPreceding, -1)
-    risk = grp.select(
-        "t_day",
-        "d",
-        "c",
-        (
-            F.lit(total)
-            - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb), F.lit(0))
-        )
-        .cast("long")
-        .alias("n_risk"),
-    )
+    risk = _risk_table(_durations(load_table(spark, sf_dir, "events")))
     lm = risk.select(
         "t_day",
         "d",
         "n_risk",
-        F.when(
-            F.col("d") < F.col("n_risk"),
-            round_long(
-                F.log(
-                    (F.col("n_risk") - F.col("d")).cast("double")
-                    / F.col("n_risk")
-                )
-                * 1e6
-            ),
-        ).alias("lm_micro"),
+        "lm_micro",
         F.when(
             (F.col("d") < F.col("n_risk")) & (F.col("d") > 0),
             round_long(

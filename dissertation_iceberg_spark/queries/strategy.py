@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.operators.strategy import (
     cross_sectional_select,
+    leg_pnl,
     portfolio_pnl,
     top_k,
 )
@@ -37,6 +38,20 @@ def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.groupBy(F.date_trunc("day", F.col("ts")).alias("day"), "user_id").agg(
         (F.sum(direction * cents) / 100.0).alias("signal"),
         (F.sum(cents) / 100.0).alias("gross"),
+    )
+
+
+def _daily_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily long-short PnL series (day, pnl, n_trades) of the
+    20% cross-sectional selection over :func:`_signals`: the unrounded
+    leg difference and the number of legs traded that day
+    (single_strategy_statistics.ipynb evaluates this series)."""
+    sel = cross_sectional_select(
+        _signals(spark, sf_dir), "day", "signal", "user_id", 0.2
+    )
+    return sel.groupBy("day").agg(
+        leg_pnl("gross").alias("pnl"),
+        F.sum(F.col("is_top") + F.col("is_bottom")).alias("n_trades"),
     )
 
 

@@ -17,10 +17,14 @@ from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.functions.scalars import (
     with_scalars,
 )
-from dissertation_iceberg_spark.queries.strategy import _SIGNAL_SQL, _signals
+from dissertation_iceberg_spark.queries.strategy import (
+    _SIGNAL_SQL,
+    _daily_pnl,
+    _signals,
+)
 from dissertation_iceberg_spark.operators.strategy import (
     cross_sectional_select,
-    portfolio_pnl,
+    leg_pnl,
 )
 
 _SEL_SQL = """
@@ -72,16 +76,7 @@ def portfolio_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     kurtosis(non-Fisher −3)/annualized Sharpe/PPT(×10⁴) with two-pass
     central moments (single_strategy_statistics.ipynb cell 12,
     portfolio_strategy_statistics.ipynb cell 6)."""
-    sel = cross_sectional_select(
-        _signals(spark, sf_dir), "day", "signal", "user_id", 0.2
-    )
-    p = sel.groupBy("day").agg(
-        (
-            F.sum(F.when(F.col("is_top") == 1, F.col("gross")).otherwise(0.0))
-            - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
-        ).alias("pnl"),
-        F.sum(F.col("is_top") + F.col("is_bottom")).alias("n_trades"),
-    )
+    p = _daily_pnl(spark, sf_dir)
     m = p.agg(
         F.count(F.lit(1)).alias("n"),
         F.avg("pnl").alias("mu"),
@@ -179,15 +174,7 @@ def sharpe_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to portfolio_statistics — daily PnL series
     (one groupBy), 1-row moments frame broadcast back for two-pass
     central sums, then pure scalar arithmetic on a single row."""
-    sel = cross_sectional_select(
-        _signals(spark, sf_dir), "day", "signal", "user_id", 0.2
-    )
-    p = sel.groupBy("day").agg(
-        (
-            F.sum(F.when(F.col("is_top") == 1, F.col("gross")).otherwise(0.0))
-            - F.sum(F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0))
-        ).alias("pnl")
-    )
+    p = _daily_pnl(spark, sf_dir)
     m = p.agg(F.count(F.lit(1)).alias("n"), F.avg("pnl").alias("mu"))
     c = (
         p.transform(with_scalars, m)
@@ -265,14 +252,7 @@ def percentile_sweep_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
         sel = cross_sectional_select(
             _signals(spark, sf_dir), "day", "signal", "user_id", p
         )
-        pnl = sel.groupBy("day").agg(
-            (
-                F.sum(F.when(F.col("is_top") == 1, F.col("gross")).otherwise(0.0))
-                - F.sum(
-                    F.when(F.col("is_bottom") == 1, F.col("gross")).otherwise(0.0)
-                )
-            ).alias("pnl")
-        )
+        pnl = sel.groupBy("day").agg(leg_pnl("gross").alias("pnl"))
         parts.append(
             pnl.agg(
                 F.count(F.lit(1)).cast("long").alias("n_days"),

@@ -238,7 +238,9 @@ def test_shuffle_width_knob_hash_equal(spark, sf_dir, monkeypatch):
     # mmr_rerank: its greedy fold must not depend on the order
     # collect_list gathers the candidate pool in; pq_codebooks and
     # ivf_ann_topk: the shared Lloyd argmin (a struct min) must pick
-    # the same centroid at any width
+    # the same centroid at any width; the last six read one shared
+    # input-frame builder each (holdout scores, risk table, daily PnL,
+    # daily moves, OI series, PageRank)
     names = (
         "order_revenue",
         "regional_supplier_revenue",
@@ -246,6 +248,12 @@ def test_shuffle_width_knob_hash_equal(spark, sf_dir, monkeypatch):
         "mmr_rerank",
         "pq_codebooks",
         "ivf_ann_topk",
+        "cumulative_gains",
+        "nelson_aalen",
+        "sharpe_test",
+        "runs_test",
+        "ljung_box_oi",
+        "textrank_keywords",
     )
 
     def run_all(s):

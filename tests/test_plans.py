@@ -333,21 +333,45 @@ def test_plan_red_flag_sweep(spark, sf_dir):
     assert not failures, "\n".join(failures)
 
 
+def _warm_build_jobs(spark, sf_dir, name: str) -> int:
+    """Spark jobs fired while building ``name`` a second time; the
+    first build warms the loader's once-per-process schema inference."""
+    sc = spark.sparkContext
+    REGISTRY[name].fn(spark, sf_dir)
+    group = f"test_plans.{name}_build"
+    sc.setJobGroup(group, f"build {name}")
+    try:
+        REGISTRY[name].fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_mmr_rerank_build_fires_at_most_the_loader_job(spark, sf_dir):
     """Building mmr_rerank runs no Spark job of its own: the greedy
     rounds are an array fold inside the plan, not pinned frames, and
     the loader infers a table's parquet schema once per process. So
     after one warm build, a second build fires no job at all."""
-    sc = spark.sparkContext
-    REGISTRY["mmr_rerank"].fn(spark, sf_dir)
-    group = "test_plans.mmr_rerank_build"
-    sc.setJobGroup(group, "build mmr_rerank")
-    try:
-        REGISTRY["mmr_rerank"].fn(spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 0, f"{len(jobs)} jobs fired while building"
+    jobs = _warm_build_jobs(spark, sf_dir, "mmr_rerank")
+    assert jobs == 0, f"{jobs} jobs fired while building"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "kaplan_meier",
+        "nelson_aalen",
+        "weibull_plot_fit",
+        "km_greenwood_bands",
+        "log_rank_test",
+    ],
+)
+def test_survival_build_fires_no_job(spark, sf_dir, name):
+    """The survival queries read the at-risk total as a scalar
+    subquery of their shared risk table, so after one warm build
+    a build fires no Spark job."""
+    jobs = _warm_build_jobs(spark, sf_dir, name)
+    assert jobs == 0, f"{jobs} jobs fired while building"
 
 
 def test_q3_pushdown_broadcast_topk(spark, sf_dir):

@@ -3096,7 +3096,7 @@ def test_cumulative_gains_invariants_and_replay(spark, sf_dir):
     from dissertation_iceberg_spark.io import load_table
     from dissertation_iceberg_spark.queries.stats_tests2 import (
         _GAINS_BINS,
-        _GAINS_SPLIT,
+        _CAL_SPLIT,
         cumulative_gains,
     )
 
@@ -3107,7 +3107,7 @@ def test_cumulative_gains_invariants_and_replay(spark, sf_dir):
         .reset_index(drop=True)
     )
     e = load_table(spark, sf_dir, "events").toPandas()
-    split = np.datetime64(_GAINS_SPLIT)
+    split = np.datetime64(_CAL_SPLIT)
     h = e[e["ts"] < split]
     hist = h.groupby("user_id").agg(
         n_ev=("event_type", "size"),
@@ -3520,7 +3520,7 @@ def test_qini_uplift_invariants_and_replay(spark, sf_dir):
     from dissertation_iceberg_spark.io import load_table
     from dissertation_iceberg_spark.queries.stats_tests2 import (
         _GAINS_BINS,
-        _GAINS_SPLIT,
+        _CAL_SPLIT,
         _MCN_THR,
         qini_uplift,
     )
@@ -3532,7 +3532,7 @@ def test_qini_uplift_invariants_and_replay(spark, sf_dir):
         .reset_index(drop=True)
     )
     e = load_table(spark, sf_dir, "events").toPandas()
-    split = np.datetime64(_GAINS_SPLIT)
+    split = np.datetime64(_CAL_SPLIT)
     h = e[e["ts"] < split]
     hist = h.groupby("user_id").agg(
         n_ev=("event_type", "size"),
@@ -3913,7 +3913,7 @@ def test_platt_scaling_matches_python_replay(spark, sf_dir):
 
     from dissertation_iceberg_spark.io import load_table
     from dissertation_iceberg_spark.queries.stats_tests2 import (
-        _GAINS_SPLIT,
+        _CAL_SPLIT,
         _MCN_THR,
         _PLATT_ITERS,
         _PLATT_PG,
@@ -3923,7 +3923,7 @@ def test_platt_scaling_matches_python_replay(spark, sf_dir):
 
     row = platt_scaling(spark, sf_dir).toPandas().iloc[0]
     e = load_table(spark, sf_dir, "events").toPandas()
-    split = np.datetime64(_GAINS_SPLIT)
+    split = np.datetime64(_CAL_SPLIT)
     h = e[e["ts"] < split]
     hist = h.groupby("user_id").agg(
         n_ev=("event_type", "size"),
@@ -4516,13 +4516,13 @@ def test_ece_matches_python_replay(spark, sf_dir):
     from dissertation_iceberg_spark.io import load_table
     from dissertation_iceberg_spark.queries.stats_tests2 import (
         _ECE_BINS,
-        _GAINS_SPLIT,
+        _CAL_SPLIT,
         expected_calibration_error,
     )
 
     row = expected_calibration_error(spark, sf_dir).toPandas().iloc[0]
     e = load_table(spark, sf_dir, "events").toPandas()
-    split = np.datetime64(_GAINS_SPLIT)
+    split = np.datetime64(_CAL_SPLIT)
     h = e[e["ts"] < split]
     hist = h.groupby("user_id").agg(
         n_ev=("event_type", "size"),
@@ -4893,13 +4893,13 @@ def test_cost_threshold_matches_python_replay(spark, sf_dir):
     from dissertation_iceberg_spark.queries.stats_tests2 import (
         _CT_FN_COST,
         _CT_FP_COST,
-        _GAINS_SPLIT,
+        _CAL_SPLIT,
         cost_optimal_threshold,
     )
 
     row = cost_optimal_threshold(spark, sf_dir).toPandas().iloc[0]
     e = load_table(spark, sf_dir, "events").toPandas()
-    split = np.datetime64(_GAINS_SPLIT)
+    split = np.datetime64(_CAL_SPLIT)
     h = e[e["ts"] < split]
     hist = h.groupby("user_id").agg(
         n_ev=("event_type", "size"),

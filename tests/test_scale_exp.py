@@ -80,7 +80,7 @@ def test_replica_is_written_once_per_source(spark, sf_dir, replica):
 @pytest.fixture(scope="module")
 def replica_x1(spark, sf_dir, tmp_path_factory):
     # sf0.01: at sf0.001 the 30 s and 120 s E1 arms have singular OLS
-    # designs, which the E1 plan raises on
+    # designs and give no row, so the E1 kernel would time a partial fit
     src = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
     return se.write_replica(
         spark, src, 1, root=str(tmp_path_factory.mktemp("replicas"))

@@ -4,6 +4,8 @@ portfolio PnL leg-sum identity."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.plans.workflows import (
@@ -33,6 +35,16 @@ def test_regression_workflow(spark, sf_dir):
     for c in res.columns:
         if c.startswith(("beta_", "t_")):
             assert abs(row[c]) < 1e9
+
+
+def test_regression_workflow_drops_singular_arms(spark, sf_dir):
+    """At sf0.001 the 30 s and 120 s OI designs are singular: those
+    arms give no row (the zero-rows convention of
+    regression_workflow_coefs), and the 3600 s arm still fits."""
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    res = regression_workflow(spark, sf, deltas=[30, 120, 3600]).toPandas()
+    assert list(res["delta_sec"]) == [3600]
+    assert res.iloc[0]["n"] > 10
 
 
 def test_single_strategy_workflow(spark, sf_dir):
