@@ -117,9 +117,8 @@ def salted_join(
     small: DataFrame,
     key: str,
     factor: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: big side gets a random-ish salt derived
+    """Skew-resistant inner equi-join: big side gets a random-ish salt derived
     from a stable hash of its row, small side is replicated across all
     salt values. Deterministic (hash-based salt, no rand())."""
     big_s = big.withColumn(
@@ -127,5 +126,5 @@ def salted_join(
     )
     salt_values = F.array(*[F.lit(i) for i in range(factor)])
     small_s = small.withColumn("__salt", F.explode(salt_values))
-    out = big_s.join(small_s, [key, "__salt"], how)
+    out = big_s.join(small_s, [key, "__salt"])
     return out.drop("__salt")

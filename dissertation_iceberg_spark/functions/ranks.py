@@ -8,8 +8,8 @@ the classic two-pass ranking scheme:
    (``width_bucket`` over the observed min/max — boundaries only affect
    balance, never correctness, because equal values always land in the
    same bucket);
-2. per-bucket totals -> exclusive prefix sums over the O(n_buckets)
-   bucket frame (a tiny single-partition window, the accepted
+2. per-bucket totals -> exclusive prefix sums over the bucket frame
+   (at most 1024 rows: a tiny single-partition window, the accepted
    O(groups) pattern);
 3. within-bucket exclusive cumulative sums via a window PARTITIONED by
    bucket — fully parallel;
@@ -33,7 +33,6 @@ def bucketed_exclusive_cumsums(
     df: DataFrame,
     order_col: str | Sequence[str],
     sum_cols: list[str],
-    n_buckets: int = 1024,
     prefix: str = "cum_",
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
@@ -52,7 +51,7 @@ def bucketed_exclusive_cumsums(
     with duplicates, the within-bucket exclusive frame would split tie
     rows nondeterministically. With ``group_cols``, bucket bounds come
     from each group's own min/max, the offset window partitions by
-    group over O(groups x n_buckets) rows, and within-bucket windows
+    group over O(groups x 1024) rows, and within-bucket windows
     partition by (group, bucket) — every stage stays group-parallel.
     """
     g = list(group_cols)
@@ -73,7 +72,7 @@ def bucketed_exclusive_cumsums(
         ).withColumn("__vmax", stats.select("__vmax").scalar())
     bucket = F.when(
         F.col("__vmax") > F.col("__vmin"),
-        F.width_bucket(oc, F.col("__vmin"), F.col("__vmax"), F.lit(n_buckets)),
+        F.width_bucket(oc, F.col("__vmin"), F.col("__vmax"), F.lit(1024)),
     ).otherwise(F.lit(1))
     b = joined.withColumn("__bucket", bucket).drop("__vmin", "__vmax")
     totals = b.groupBy(*g, "__bucket").agg(
@@ -83,7 +82,7 @@ def bucketed_exclusive_cumsums(
         (Window.partitionBy(*g) if g else Window)
         .orderBy("__bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
-    )  # O(n_buckets) rows per group: the accepted bounded-frame window
+    )  # ≤ 1024 rows per group: the accepted bounded-frame window
     offsets = totals.select(
         *g,
         "__bucket",
@@ -110,7 +109,6 @@ def bucketed_row_number(
     df: DataFrame,
     order_cols: Sequence[str],
     out_col: str = "rn",
-    n_buckets: int = 1024,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Add a 1-based global row number in ``order_cols`` order without
@@ -122,14 +120,13 @@ def bucketed_row_number(
     ``row_number().over(Window.orderBy(...))`` on data-scaled frames
     (O(users) propensity ranks and kin): every window in the plan is
     partitioned by the rank bucket, so no executor ever sees more than
-    ~n_rows / n_buckets rows of the ordered frame.
+    ~n_rows / 1024 rows of the ordered frame.
     """
     tmp = df.withColumn("__one", F.lit(1))
     out = bucketed_exclusive_cumsums(
         tmp,
         list(order_cols),
         ["__one"],
-        n_buckets=n_buckets,
         prefix="__rn_",
         group_cols=group_cols,
     )

@@ -22,22 +22,17 @@ frames that can be empty.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_scalars(
-    df: DataFrame, stats: DataFrame, cols: Sequence[str] | None = None
-) -> DataFrame:
+def with_scalars(df: DataFrame, stats: DataFrame) -> DataFrame:
     """Drop-in replacement for ``df.crossJoin(F.broadcast(stats))``
     when ``stats`` is a 1-row global aggregate: appends each stats
     column as a scalar subquery under the same name. Downstream code
     that referenced the crossJoined columns is unchanged."""
-    cols = list(cols) if cols is not None else stats.columns
     return df.select(
-        "*", *[stats.select(c).scalar().alias(c) for c in cols]
+        "*", *[stats.select(c).scalar().alias(c) for c in stats.columns]
     )
 
 

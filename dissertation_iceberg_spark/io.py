@@ -151,17 +151,17 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Decouple parallelism from input file splits.
 
     Small single-file parquet reads arrive as ONE partition, which
     serializes expression-heavy per-row stages (tokenization, vector
-    math) on one core. One cheap round-robin repartition restores
-    cluster-wide parallelism; on a real multi-file table this is a
-    near-no-op and can be dropped by the caller.
+    math) on one core. One cheap round-robin repartition into the
+    context's default parallelism restores cluster-wide parallelism;
+    on a real multi-file table this is a near-no-op and can be dropped
+    by the caller.
     """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def write_partitioned(

@@ -53,11 +53,11 @@ def feature_pipeline(feature_cols: list[str]) -> list:
     ]
 
 
-def direction_label(df: DataFrame, dir_col: str = "direction") -> DataFrame:
+def direction_label(df: DataFrame) -> DataFrame:
     """Reference remaps direction −1→0 for binary loss
     (chunk_pipeline.py:63-64)."""
     return df.withColumn(
-        "label", F.when(F.col(dir_col) == 1, 1.0).otherwise(0.0)
+        "label", F.when(F.col("direction") == 1, 1.0).otherwise(0.0)
     )
 
 
@@ -66,15 +66,14 @@ def train_rf(
     feature_cols: list[str],
     cv: bool = False,
     num_trees: int = 50,
-    max_depth: int = 6,
 ) -> PipelineModel:
-    """M2: RandomForest; with cv=True a 5-fold accuracy grid search
-    like GridSearchCV(cv=5, scoring='accuracy')."""
+    """M2: RandomForest (depth 6); with cv=True a 5-fold accuracy grid
+    search like GridSearchCV(cv=5, scoring='accuracy')."""
     rf = RandomForestClassifier(
         featuresCol="features",
         labelCol="label",
         numTrees=num_trees,
-        maxDepth=max_depth,
+        maxDepth=6,
         seed=SEED,
     )
     pipe = Pipeline(stages=[*feature_pipeline(feature_cols), rf])

@@ -44,16 +44,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep one row (lowest id) per distinct text."""
-    w = Window.partitionBy(text_col).orderBy(id_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def word_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int = 3, with_size: bool = False
 ) -> DataFrame:

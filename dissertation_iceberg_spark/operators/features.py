@@ -55,15 +55,13 @@ def rolling_sentiment(
     signed_col: Column,
     partition_cols: list[str],
     order_cols: list[str],
-    window_rows: int = 5,
-    back_name: str = "sent_back",
-    fwd_name: str = "sent_fwd",
 ) -> DataFrame:
-    """Backward and forward rolling sums of a signed-size column."""
+    """Backward and forward rolling 5-row sums of a signed-size column
+    (``sent_back``, ``sent_fwd``)."""
     base = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    back = F.sum(signed_col).over(base.rowsBetween(-(window_rows - 1), 0))
-    fwd = F.sum(signed_col).over(base.rowsBetween(0, window_rows - 1))
-    return df.withColumn(back_name, back).withColumn(fwd_name, fwd)
+    back = F.sum(signed_col).over(base.rowsBetween(-4, 0))
+    fwd = F.sum(signed_col).over(base.rowsBetween(0, 4))
+    return df.withColumn("sent_back", back).withColumn("sent_fwd", fwd)
 
 
 def signed_size(

@@ -36,11 +36,10 @@ def asof_next_within(
     ts_col: str = "ts",
     seq_col: str = "event_id",
     tolerance_us: int = 1_000,
-    flag_col: str = "iceberg",
 ) -> DataFrame:
     """Generic forward as-of existence flag.
 
-    Rows satisfying ``probe_pred`` get ``flag_col`` = 1 if the next row
+    Rows satisfying ``probe_pred`` get ``iceberg`` = 1 if the next row
     satisfying ``match_pred`` within the same ``by_cols`` partition
     (ordered by ts, seq) occurs no later than ``tolerance_us``
     microseconds after them. Non-probe rows pass through with NULL flag.
@@ -63,7 +62,7 @@ def asof_next_within(
             F.lit(0),
         ),
     )
-    return df.withColumn(flag_col, flag)
+    return df.withColumn("iceberg", flag)
 
 
 def iceberg_tag(
@@ -71,19 +70,11 @@ def iceberg_tag(
     exec_type: Column,
     submit_type: Column,
     by_cols: list[str],
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-    tolerance_us: int = 1_000,
 ) -> DataFrame:
-    """Tag visible executions refilled within tolerance as iceberg=1,
-    returning only the execution rows (order_imbalance.py:44-47)."""
+    """Tag visible executions refilled within 1 ms (ordered by ts,
+    event_id) as iceberg=1, returning only the execution rows
+    (order_imbalance.py:44-47)."""
     tagged = asof_next_within(
-        df,
-        probe_pred=exec_type,
-        match_pred=submit_type,
-        by_cols=by_cols,
-        ts_col=ts_col,
-        seq_col=seq_col,
-        tolerance_us=tolerance_us,
+        df, probe_pred=exec_type, match_pred=submit_type, by_cols=by_cols
     )
     return tagged.filter(exec_type)

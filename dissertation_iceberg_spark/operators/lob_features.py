@@ -34,23 +34,18 @@ def with_lob_features(df: DataFrame) -> DataFrame:
     )
 
 
-def outside_spread_override(
-    df: DataFrame,
-    pred_dir_col: str = "pred_dir",
-    pred_prob_col: str = "pred_prob",
-) -> DataFrame:
-    """M5: force predictions for hidden executions priced outside the
-    spread — below bid (agg_ratio <= 0) is a buyer-initiated hidden
-    exec, above ask (agg_ratio >= 1) seller-initiated."""
+def outside_spread_override(df: DataFrame) -> DataFrame:
+    """M5: force predictions (``pred_dir``, ``pred_prob``) for hidden
+    executions priced outside the spread — below bid (agg_ratio <= 0)
+    is a buyer-initiated hidden exec, above ask (agg_ratio >= 1)
+    seller-initiated."""
     ar = F.col("agg_ratio")
     return df.withColumn(
-        pred_dir_col,
-        F.when(ar <= 0, F.lit(1))
-        .when(ar >= 1, F.lit(-1))
-        .otherwise(F.col(pred_dir_col)),
+        "pred_dir",
+        F.when(ar <= 0, F.lit(1)).when(ar >= 1, F.lit(-1)).otherwise(F.col("pred_dir")),
     ).withColumn(
-        pred_prob_col,
+        "pred_prob",
         F.when(ar <= 0, F.lit(1.0))
         .when(ar >= 1, F.lit(0.0))
-        .otherwise(F.col(pred_prob_col)),
+        .otherwise(F.col("pred_prob")),
     )

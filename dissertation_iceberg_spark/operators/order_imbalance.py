@@ -78,11 +78,10 @@ def binned_oi(
 def densify(
     binned: DataFrame,
     delta_sec: int,
-    bin_col: str = "bin",
     zero_fill: tuple[str, ...] = ("order_imbalance", "n_events"),
     group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Left-join the binned frame onto its complete calendar grid.
+    """Left-join the binned frame onto its complete ``bin`` calendar grid.
 
     Missing bins get OI=0 (load-bearing reference semantics: an empty
     interval is 'balanced', not absent). Other columns stay NULL.
@@ -99,18 +98,18 @@ def densify(
     interval = F.expr(f"INTERVAL {int(delta_sec)} SECONDS")
     if gc:
         bounds = binned.groupBy(*gc).agg(
-            F.min(bin_col).alias("lo"), F.max(bin_col).alias("hi")
+            F.min("bin").alias("lo"), F.max("bin").alias("hi")
         )
         grid = bounds.select(
-            *gc, F.explode(F.sequence("lo", "hi", interval)).alias(bin_col)
+            *gc, F.explode(F.sequence("lo", "hi", interval)).alias("bin")
         )
-        out = grid.join(binned, on=[*gc, bin_col], how="left")
+        out = grid.join(binned, on=[*gc, "bin"], how="left")
     else:
-        bounds = binned.agg(F.min(bin_col).alias("lo"), F.max(bin_col).alias("hi"))
+        bounds = binned.agg(F.min("bin").alias("lo"), F.max("bin").alias("hi"))
         grid = bounds.select(
-            F.explode(F.sequence("lo", "hi", interval)).alias(bin_col)
+            F.explode(F.sequence("lo", "hi", interval)).alias("bin")
         )
-        out = grid.join(F.broadcast(binned), on=bin_col, how="left")
+        out = grid.join(F.broadcast(binned), on="bin", how="left")
     return out.withColumns(
         {
             c: F.coalesce(F.col(c), F.lit(0))
@@ -121,13 +120,10 @@ def densify(
 
 
 def with_returns(
-    densified: DataFrame,
-    bin_col: str = "bin",
-    first_col: str = "first_price",
-    last_col: str = "last_price",
-    group_cols: list[str] | None = None,
+    densified: DataFrame, group_cols: list[str] | None = None
 ) -> DataFrame:
-    """Within-bin log return + next-bin future return (W4 lead).
+    """Within-bin log return (first_price -> last_price) + next-bin
+    future return (W4 lead over ``bin``).
 
     The lead is partitioned by trading day (in addition to any group
     cols): the reference operates on per-day LOBSTER files, so no
@@ -137,29 +133,20 @@ def with_returns(
     task). A bin label is the bin END, so the label at exactly
     midnight belongs to the PREVIOUS day's data — day is derived from
     (bin - 1 microsecond)."""
-    day = F.date_trunc(
-        "day", F.col(bin_col) - F.expr("INTERVAL 1 MICROSECOND")
-    )
-    w = Window.partitionBy(*(group_cols or []), day).orderBy(bin_col)
+    day = F.date_trunc("day", F.col("bin") - F.expr("INTERVAL 1 MICROSECOND"))
+    w = Window.partitionBy(*(group_cols or []), day).orderBy("bin")
     # zero/negative prices (possible in raw feeds) must not evaluate
     # ln(): Spark ANSI and DuckDB both raise — guard, emit NULL
-    log_ret = F.when(
-        (F.col(first_col) > 0) & (F.col(last_col) > 0),
-        F.log(F.col(last_col)) - F.log(F.col(first_col)),
-    )
+    first, last = F.col("first_price"), F.col("last_price")
+    log_ret = F.when((first > 0) & (last > 0), F.log(last) - F.log(first))
     return densified.withColumn("log_ret", log_ret).withColumn(
         "fut_log_ret", F.lead("log_ret", 1).over(w)
     )
 
 
-def oi_pipeline(
-    df: DataFrame,
-    delta_sec: int,
-    round_to: int = 6,
-    **kw,
-) -> DataFrame:
-    """A1 + A3 -> J3 densify -> W4 returns; floats rounded for oracle
-    stability. This is the flagship end-to-end slice (SURVEY §7 step 3).
+def oi_pipeline(df: DataFrame, delta_sec: int, **kw) -> DataFrame:
+    """A1 + A3 -> J3 densify -> W4 returns; floats rounded to 6 dp for
+    oracle stability. This is the flagship end-to-end slice (SURVEY §7 step 3).
     """
     group_cols = kw.pop("group_cols", None)
     b = binned_oi(df, delta_sec, group_cols=group_cols, **kw)
@@ -167,7 +154,7 @@ def oi_pipeline(
     r = with_returns(dz, group_cols=group_cols)
 
     def rounded(c: str) -> Column:
-        return F.round(F.col(c), round_to).alias(c)
+        return F.round(F.col(c), 6).alias(c)
 
     return r.select(
         *(group_cols or []),

@@ -26,14 +26,11 @@ def seconds_of_day_us(ts_col: str | Column) -> Column:
     return micros(ts_col) % US_PER_DAY
 
 
-def trading_hours_filter(
-    df: DataFrame,
-    ts_col: str = "ts",
-    start_sec: int = 36_000,  # 10:00:00 (prod window, BASELINE.md)
-    end_sec: int = 55_800,  # 15:30:00, inclusive like pandas between_time
-) -> DataFrame:
-    sod = seconds_of_day_us(ts_col)
-    return df.filter(sod.between(start_sec * 1_000_000, end_sec * 1_000_000))
+def trading_hours_filter(df: DataFrame) -> DataFrame:
+    """Events whose ``ts`` falls in 10:00:00-15:30:00 (the prod window,
+    BASELINE.md), inclusive like pandas between_time."""
+    sod = seconds_of_day_us("ts")
+    return df.filter(sod.between(36_000 * 1_000_000, 55_800 * 1_000_000))
 
 
 def dedup_first(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -54,12 +51,11 @@ def event_number(
     df: DataFrame,
     group_cols: list[str],
     order_col: str,
-    out_col: str = "event_number",
-    burst_col: str = "event_number_at_t",
 ) -> DataFrame:
-    """0-based position within simultaneous-event groups + group size."""
+    """0-based position within simultaneous-event groups
+    (``event_number``) + group size (``event_number_at_t``)."""
     w = Window.partitionBy(*group_cols).orderBy(order_col)
     wp = Window.partitionBy(*group_cols)
-    return df.withColumn(out_col, F.row_number().over(w) - 1).withColumn(
-        burst_col, F.count(F.lit(1)).over(wp)
+    return df.withColumn("event_number", F.row_number().over(w) - 1).withColumn(
+        "event_number_at_t", F.count(F.lit(1)).over(wp)
     )

@@ -33,11 +33,7 @@ WEEK_US = 7 * 86_400 * 1_000_000
 
 
 def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_cents: Column | None = None,
-    gap: str = "6 hours",
+    events: DataFrame, value_cents: Column | None = None, gap: str = "6 hours"
 ) -> DataFrame:
     """Gap-based sessions per user via native ``session_window``.
 
@@ -50,10 +46,10 @@ def sessionize(
     Monetary sums use the integer-cents trick so the per-session sum
     is exact under any aggregation order.
     """
-    us = micros(F.col(ts_col))
+    us = micros(F.col("ts"))
     cents = value_cents if value_cents is not None else F.lit(0).cast("long")
     return (
-        events.groupBy(user_col, F.session_window(F.col(ts_col), gap))
+        events.groupBy("user_id", F.session_window(F.col("ts"), gap))
         .agg(
             F.min(us).alias("session_start_us"),
             F.max(us).alias("session_end_us"),
@@ -64,13 +60,7 @@ def sessionize(
     )
 
 
-def funnel_stages(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel_stages(events: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered funnel: first time each user reaches each step, where
     step k+1 must happen strictly AFTER the user's step-k time.
 
@@ -79,23 +69,23 @@ def funnel_stages(
     is user-cardinality. Unreached stages are 0 (not NULL) so the
     output stays integral.
     """
-    us = micros(F.col(ts_col))
+    us = micros(F.col("ts"))
     reached = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
         .agg(F.min(us).alias(f"{steps[0]}_us"))
     )
     prev = f"{steps[0]}_us"
     for step in steps[1:]:
         col = f"{step}_us"
         nxt = (
-            events.filter(F.col(type_col) == step)
-            .join(reached.select(user_col, prev), user_col)
+            events.filter(F.col("event_type") == step)
+            .join(reached.select("user_id", prev), "user_id")
             .filter(us > F.col(prev))
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min(us).alias(col))
         )
-        reached = reached.join(nxt, user_col, "left")
+        reached = reached.join(nxt, "user_id", "left")
         prev = col
     out = reached
     for step in steps[1:]:
@@ -104,11 +94,7 @@ def funnel_stages(
     return out
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: users grouped by first-active week,
     counted at each whole-week offset they were active again.
 
@@ -117,12 +103,12 @@ def retention_cohorts(
     integer multiples of a week in epoch-µs space.
     """
     uw = events.select(
-        user_col,
-        micros(F.date_trunc("week", F.col(ts_col))).alias("week_us"),
+        "user_id",
+        micros(F.date_trunc("week", F.col("ts"))).alias("week_us"),
     ).distinct()
-    cohort = uw.groupBy(user_col).agg(F.min("week_us").alias("cohort_week_us"))
+    cohort = uw.groupBy("user_id").agg(F.min("week_us").alias("cohort_week_us"))
     return (
-        uw.join(cohort, user_col)
+        uw.join(cohort, "user_id")
         .select(
             "cohort_week_us",
             ((F.col("week_us") - F.col("cohort_week_us")) / F.lit(WEEK_US))
@@ -134,17 +120,12 @@ def retention_cohorts(
     )
 
 
-def gap_fill_linear(
-    obs: DataFrame,
-    group_col: str = "event_type",
-    bin_col: str = "bi",
-    cents_col: str = "cents",
-) -> DataFrame:
+def gap_fill_linear(obs: DataFrame) -> DataFrame:
     """Densify each group's integer bin range and linearly interpolate
     missing values from the surrounding observations.
 
-    Input: one row per OBSERVED (group, bin) with an integer-scaled
-    value. Output: one row per bin in [min, max] per group, with
+    Input: one row per OBSERVED (event_type, bi) with an integer-scaled
+    ``cents`` value. Output: one row per bin in [min, max] per group, with
     ``value`` = cents/100 for observed bins, the linear fill for
     interior gaps (NULL at leading/trailing edges) and a ``filled``
     flag. The fill is computed as an exact integer numerator over the
@@ -153,14 +134,14 @@ def gap_fill_linear(
     avoids). Scale: grids generate per-group; the scaffolding is two
     O(bins) windows per group, nothing row-scale."""
     grid = (
-        obs.groupBy(group_col)
-        .agg(F.min(bin_col).alias("__mn"), F.max(bin_col).alias("__mx"))
+        obs.groupBy("event_type")
+        .agg(F.min("bi").alias("__mn"), F.max("bi").alias("__mx"))
         .select(
-            group_col,
-            F.explode(F.sequence(F.col("__mn"), F.col("__mx"))).alias(bin_col),
+            "event_type",
+            F.explode(F.sequence(F.col("__mn"), F.col("__mx"))).alias("bi"),
         )
     )
-    g = grid.join(obs, [group_col, bin_col], "left")
+    g = grid.join(obs, ["event_type", "bi"], "left")
     # Both fills are RUNNING frames (round 8): the backward fill runs
     # over the ascending order, the forward fill over the DESCENDING
     # order — `first(...) OVER (ROWS CURRENT ROW AND UNBOUNDED
@@ -172,36 +153,36 @@ def gap_fill_linear(
     # expression form expanded into 12 window aggregates because
     # Spark does not CSE window expressions across output columns.
     wp = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col(bin_col).asc())
+        Window.partitionBy("event_type")
+        .orderBy(F.col("bi").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     wn = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col(bin_col).desc())
+        Window.partitionBy("event_type")
+        .orderBy(F.col("bi").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    c = F.col(cents_col)
-    mark = F.when(c.isNotNull(), F.col(bin_col))
+    c = F.col("cents")
+    mark = F.when(c.isNotNull(), F.col("bi"))
     filled = g.select(
-        group_col,
-        bin_col,
-        cents_col,
-        F.last(cents_col, ignorenulls=True).over(wp).alias("__pc"),
+        "event_type",
+        "bi",
+        "cents",
+        F.last("cents", ignorenulls=True).over(wp).alias("__pc"),
         F.last(mark, ignorenulls=True).over(wp).alias("__pb"),
-        F.last(cents_col, ignorenulls=True).over(wn).alias("__nc"),
+        F.last("cents", ignorenulls=True).over(wn).alias("__nc"),
         F.last(mark, ignorenulls=True).over(wn).alias("__nb"),
     )
     pc, pb = F.col("__pc"), F.col("__pb")
     nc, nb = F.col("__nc"), F.col("__nb")
     interp = (
-        (pc * (nb - pb) + (nc - pc) * (F.col(bin_col) - pb)).cast("double")
+        (pc * (nb - pb) + (nc - pc) * (F.col("bi") - pb)).cast("double")
         / (nb - pb)
         / F.lit(1e2)
     )
     return filled.select(
-        group_col,
-        bin_col,
+        "event_type",
+        "bi",
         F.when(c.isNotNull(), c / F.lit(1e2))
         .when(pc.isNotNull() & nc.isNotNull(), interp)
         .alias("value"),

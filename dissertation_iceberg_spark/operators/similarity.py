@@ -77,15 +77,9 @@ def topk_per_query(df: DataFrame, k: int, *order: Column) -> DataFrame:
     return df.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    k: int = 3,
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector.
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
+    """Exact top-k cosine neighbors per query vector: corpus
+    (vec_id, embedding), queries (query_id, embedding).
 
     ORACLE BASELINE — cap the query-set size. The plan is a
     BroadcastNestedLoopJoin scoring O(|corpus| × |queries|) pairs: one
@@ -103,31 +97,45 @@ def cosine_topk(
     The cosine expression value is bit-identical (same ops, evaluated
     in an earlier projection); only the dot product remains per-pair.
     """
-    q = queries.select(
-        F.col(query_id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        vec_norm(F.col(vec_col)).alias("__nq"),
+    q = _query_side(queries)
+    c = _corpus_side(corpus)
+    pairs = c.alias("c").join(F.broadcast(q), F.col("qid") != F.col("vec_id"))
+    return topk_per_query(_scored(pairs), k)
+
+
+def _query_side(queries: DataFrame) -> DataFrame:
+    """(qid, qvec, __nq): each query vector with its norm, computed
+    once per row before any pair join."""
+    return queries.select(
+        F.col("query_id").alias("qid"),
+        F.col("embedding").alias("qvec"),
+        vec_norm(F.col("embedding")).alias("__nq"),
     )
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        vec_norm(F.col(vec_col)).alias("__nv"),
+
+
+def _corpus_side(corpus: DataFrame) -> DataFrame:
+    """(vec_id, embedding, __nv): each corpus vector with its norm."""
+    return corpus.select(
+        "vec_id", "embedding", vec_norm(F.col("embedding")).alias("__nv")
     )
-    pairs = c.alias("c").join(F.broadcast(q), F.col("qid") != F.col(id_col))
-    scored = pairs.select(
+
+
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(qid, neighbor_id, cosine) of (query, corpus) pairs: the exact
+    cosine, rounded to 6 dp."""
+    return pairs.select(
         "qid",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.round(
-            cosine(F.col("qvec"), F.col(vec_col), F.col("__nq"), F.col("__nv")),
+            cosine(F.col("qvec"), F.col("embedding"), F.col("__nq"), F.col("__nv")),
             6,
         ).alias("cosine"),
     )
-    return topk_per_query(scored, k)
 
 
-def lsh_plane_weights(tbl: int, plane: int, dim: int, seed: int = 42) -> list[int]:
+def lsh_plane_weights(tbl: int, plane: int, dim: int) -> list[int]:
     """Deterministic integer hyperplane: weight d = md5-derived hash of
-    ``'{seed}:{tbl}:{plane}:{d}'`` mapped to [-1000, 1000]. Integer
+    ``'42:{tbl}:{plane}:{d}'`` mapped to [-1000, 1000]. Integer
     weights (not gauss floats) make the projection EXACT integer
     arithmetic once the vector is micro-quantized — the bucket sign can
     never flip on a float half-ulp, in either engine. Uniform signs are
@@ -136,20 +144,15 @@ def lsh_plane_weights(tbl: int, plane: int, dim: int, seed: int = 42) -> list[in
     from dissertation_iceberg_spark.functions.hashing import hash60_py
 
     return [
-        hash60_py(f"{seed}:{tbl}:{plane}:{d}") % 2001 - 1000 for d in range(dim)
+        hash60_py(f"42:{tbl}:{plane}:{d}") % 2001 - 1000 for d in range(dim)
     ]
 
 
 def hyperplane_lsh_buckets(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    num_tables: int = 1,
+    df: DataFrame, num_planes: int, num_tables: int
 ) -> DataFrame:
-    """Sign-of-projection LSH bucket ids per vector (scale path for ANN).
+    """Sign-of-projection LSH bucket ids per 64-dim (vec_id, embedding)
+    vector (scale path for ANN).
 
     ``num_tables`` independent hash tables (OR-amplification): a
     candidate pair needs to collide in ANY table, trading extra
@@ -171,9 +174,9 @@ def hyperplane_lsh_buckets(
     # (same zip_with/aggregate fold, same casts, same init), so bucket
     # ids — and the DuckDB oracle replay — are unchanged.
     def proj_sql(t: int, p: int) -> str:
-        arr = ",".join(str(w) for w in lsh_plane_weights(t, p, dim, seed))
+        arr = ",".join(str(w) for w in lsh_plane_weights(t, p, 64))
         return (
-            f"aggregate(zip_with({vec_col}, array({arr}), "
+            f"aggregate(zip_with(embedding, array({arr}), "
             "(x, w) -> CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT) * w), "
             "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
         )
@@ -191,8 +194,8 @@ def hyperplane_lsh_buckets(
             )
         )
     return df.select(
-        F.col(id_col), F.col(vec_col), F.explode(F.array(*rows)).alias("tb")
-    ).select(id_col, vec_col, "tb.tbl", "tb.bucket")
+        "vec_id", "embedding", F.explode(F.array(*rows)).alias("tb")
+    ).select("vec_id", "embedding", "tb.tbl", "tb.bucket")
 
 
 # --------------------------------------------------------------------------
@@ -309,11 +312,9 @@ class IVFIndex:
     pruning.
     """
 
-    def __init__(self, lists: DataFrame, cent_df: DataFrame, id_col: str, vec_col: str):
-        self.lists = lists  # (id_col, vec_col, list_id)
+    def __init__(self, lists: DataFrame, cent_df: DataFrame):
+        self.lists = lists  # (vec_id, embedding, list_id)
         self.cent_df = cent_df  # (list_id, pos, s, n)
-        self.id_col = id_col
-        self.vec_col = vec_col
 
     def save(self, path: str) -> None:
         self.lists.write.mode("overwrite").partitionBy("list_id").parquet(
@@ -322,27 +323,21 @@ class IVFIndex:
         self.cent_df.write.mode("overwrite").parquet(f"{path}/centroids")
 
     @staticmethod
-    def load(spark, path: str, id_col: str = "vec_id", vec_col: str = "embedding"):
+    def load(spark, path: str):
         return IVFIndex(
             spark.read.parquet(f"{path}/lists"),
             spark.read.parquet(f"{path}/centroids"),
-            id_col,
-            vec_col,
         )
 
 
-def build_ivf_index_exact(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_lists: int = 16,
-) -> IVFIndex:
-    """Deterministic IVF build: 2 integer-quantized Lloyd iterations
-    (:func:`lloyd2`) seeded from the first ``n_lists`` ids —
-    bit-reproducible on any cluster size AND replayable in plain SQL,
-    which is what lets the registered ivf_ann_topk query carry a DuckDB
-    oracle. This is the only IVF build: a float k-means (MLlib's
-    k-means|| init) is not cross-engine reproducible.
+def build_ivf_index_exact(corpus: DataFrame, n_lists: int = 16) -> IVFIndex:
+    """Deterministic IVF build over (vec_id, embedding): 2
+    integer-quantized Lloyd iterations (:func:`lloyd2`) seeded from
+    the first ``n_lists`` ids — bit-reproducible on any cluster size
+    AND replayable in plain SQL, which is what lets the registered
+    ivf_ann_topk query carry a DuckDB oracle. This is the only IVF
+    build: a float k-means (MLlib's k-means|| init) is not
+    cross-engine reproducible.
 
     The returned index stores centroids as un-normalized integer
     (list_id, pos, s, n) component sums — never floats — so a saved
@@ -350,23 +345,20 @@ def build_ivf_index_exact(
     broadcast join + one int-sum shuffle keyed on (list_id, pos),
     identical to kmeans_cluster_stats."""
     base = corpus.select(
-        F.col(id_col).alias("__id"), F.transform(F.col(vec_col), quantize).alias("qv")
+        F.col("vec_id").alias("__id"),
+        F.transform(F.col("embedding"), quantize).alias("qv"),
     )
     xe = base.select("__id", F.posexplode("qv").alias("pos", "x"))
     a2 = lloyd2(xe, seed_centroids(base, n_lists, "list_id", "__id"), "__id", "list_id")
     c2 = lloyd_recenter(a2.select("__id", "list_id").join(xe, "__id"), "list_id")
     lists = corpus.join(
-        a2.select(F.col("__id").alias(id_col), "list_id"), id_col
-    ).select(id_col, vec_col, "list_id")
-    return IVFIndex(lists, c2, id_col, vec_col)
+        a2.select(F.col("__id").alias("vec_id"), "list_id"), "vec_id"
+    ).select("vec_id", "embedding", "list_id")
+    return IVFIndex(lists, c2)
 
 
 def ivf_search_exact(
-    index: IVFIndex,
-    queries: DataFrame,
-    query_id_col: str = "query_id",
-    k: int = 3,
-    n_probe: int = 4,
+    index: IVFIndex, queries: DataFrame, k: int = 3, n_probe: int = 4
 ) -> DataFrame:
     """Probe an exact-build IVF index: the Lloyd distance
     (:func:`lloyd_num`) to the (s, n) centroids picks each query's
@@ -374,42 +366,25 @@ def ivf_search_exact(
     arithmetic as the build), then the probed lists rerank with the
     standard exact cosine (double casts, 6dp round, neighbor-id
     tiebreak). Self-matches are excluded."""
-    id_col, vec_col = index.id_col, index.vec_col
-    q = queries.select(
-        F.col(query_id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        vec_norm(F.col(vec_col)).alias("__nq"),
-    )
+    q = _query_side(queries)
     qxe = q.select(
         "qid", F.posexplode(F.transform("qvec", quantize)).alias("pos", "x")
     )
     d = lloyd_num(qxe, index.cent_df, ["qid", "list_id"])
     probes = topk_per_query(d, n_probe, F.asc("dist"), F.asc("list_id"))
     probes = probes.select("qid", "list_id").join(q, "qid")
-    lists = index.lists.withColumn("__nv", vec_norm(F.col(vec_col)))
+    lists = index.lists.withColumn("__nv", vec_norm(F.col("embedding")))
     pairs = lists.join(F.broadcast(probes), "list_id").where(
-        F.col("qid") != F.col(id_col)
+        F.col("qid") != F.col("vec_id")
     )
-    scored = pairs.select(
-        "qid",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine(F.col("qvec"), F.col(vec_col), F.col("__nq"), F.col("__nv")),
-            6,
-        ).alias("cosine"),
-    )
-    return topk_per_query(scored, k)
+    return topk_per_query(_scored(pairs), k)
 
 
 def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
     k: int = 3,
     num_planes: int = 8,
-    dim: int = 64,
     num_tables: int = 4,
 ) -> DataFrame:
     """ANN: candidates restricted to vectors sharing the query's bucket
@@ -427,46 +402,19 @@ def lsh_cosine_topk(
     the cosine_topk §1.2 fix) re-attach afterwards: queries by
     broadcast, corpus by one narrow equi-join. Same candidate set,
     same 6-dp cosines, same ranks."""
-    cb = hyperplane_lsh_buckets(
-        corpus, vec_col, id_col, num_planes, dim, num_tables=num_tables
-    )
+    cb = hyperplane_lsh_buckets(corpus, num_planes, num_tables)
     qb = hyperplane_lsh_buckets(
-        queries.select(F.col(query_id_col).alias("vec_id"), F.col(vec_col)),
-        vec_col,
-        "vec_id",
+        queries.select(F.col("query_id").alias("vec_id"), "embedding"),
         num_planes,
-        dim,
-        num_tables=num_tables,
+        num_tables,
     ).select(F.col("vec_id").alias("qid"), "tbl", "bucket")
     cand = (
-        cb.select(id_col, "tbl", "bucket")
+        cb.select("vec_id", "tbl", "bucket")
         .join(F.broadcast(qb), ["tbl", "bucket"])
-        .where(F.col("qid") != F.col(id_col))
-        .select("qid", id_col)
+        .where(F.col("qid") != F.col("vec_id"))
+        .select("qid", "vec_id")
         .distinct()
     )
-    qv = queries.select(
-        F.col(query_id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        vec_norm(F.col(vec_col)).alias("__nq"),
-    )
-    cv = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        vec_norm(F.col(vec_col)).alias("__nv"),
-    )
-    scored = (
-        cand.join(cv, id_col)
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                cosine(
-                    F.col("qvec"), F.col(vec_col), F.col("__nq"), F.col("__nv")
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_query(scored, k)
+    qv = _query_side(queries)
+    pairs = cand.join(_corpus_side(corpus), "vec_id").join(F.broadcast(qv), "qid")
+    return topk_per_query(_scored(pairs), k)

@@ -29,10 +29,9 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 
 
-def moment_stats(
-    df: DataFrame, value_col: str, group_cols: list[str], annualize: float = 252.0
-) -> DataFrame:
-    """n/mean/std(ddof=1)/skew(g1)/excess-kurtosis(g2)/Sharpe via
+def moment_stats(df: DataFrame, value_col: str, group_cols: list[str]) -> DataFrame:
+    """n/mean/std(ddof=1)/skew(g1)/excess-kurtosis(g2)/Sharpe (252-day
+    annualized) via
     TWO-PASS centered sums (round-2 advice fix): pass 1 computes each
     group's mean, pass 2 sums (x−μ)^2..4. Raw power sums suffer
     catastrophic cancellation when |mean| ≫ spread; centering matches
@@ -65,7 +64,7 @@ def moment_stats(
     # Sharpe undefined — NULL on both engines (DuckDB's division by
     # zero is NULL-valued, so the SQL twin needs no CASE)
     std = F.when(n > 1, F.sqrt(F.col("cs2") / (n - 1)))
-    sharpe = F.when(std != 0, mu / std * F.lit(float(annualize) ** 0.5))
+    sharpe = F.when(std != 0, mu / std * F.lit(252.0**0.5))
     nz = F.col("cs2") != 0
     return g.select(
         *group_cols,
@@ -107,10 +106,8 @@ FROM g
 """
 
 
-def quantile_filter(
-    df: DataFrame, value_col: str, lo: float = 0.025, hi: float = 0.975
-) -> DataFrame:
-    """Keep rows with value in [q_lo, q_hi] (exact percentiles).
+def quantile_filter(df: DataFrame, value_col: str) -> DataFrame:
+    """Keep rows with value in [q_0.025, q_0.975] (exact percentiles).
 
     The 1-row quantile frame is injected as merged scalar subqueries
     (functions/scalars.py) — no driver collect and no join node, so
@@ -118,8 +115,8 @@ def quantile_filter(
     comparison against two literals.
     """
     q = df.agg(
-        F.expr(f"percentile({value_col}, {lo})").alias("__qlo"),
-        F.expr(f"percentile({value_col}, {hi})").alias("__qhi"),
+        F.expr(f"percentile({value_col}, 0.025)").alias("__qlo"),
+        F.expr(f"percentile({value_col}, 0.975)").alias("__qhi"),
     )
     return (
         df.transform(with_scalars, q)

@@ -75,16 +75,6 @@ def top_k(
     to TakeOrderedAndProject: per-partition top-k + driver merge of k×P
     rows — no single-partition window, survives any input size (round-2
     fix; the old global row_number window moved every row to one
-    partition). Use :func:`top_k_ranked` when the rank must be a column.
+    partition).
     """
     return df.orderBy(F.desc(order_col), F.asc(tiebreak_col)).limit(k)
-
-
-def top_k_ranked(
-    df: DataFrame, order_col: str, tiebreak_col: str, k: int = 5
-) -> DataFrame:
-    """Top-k WITH the rank as an output column (row_number window).
-    Only for frames already reduced to O(groups) — the unpartitioned
-    window is the price of materializing the rank."""
-    w = Window.orderBy(F.desc(order_col), F.asc(tiebreak_col))
-    return df.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)

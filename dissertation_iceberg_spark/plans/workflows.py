@@ -32,12 +32,9 @@ from dissertation_iceberg_spark.operators.strategy import (
 from dissertation_iceberg_spark.functions.exact import round_long
 
 
-def tagged_lob(
-    spark: SparkSession,
-    sf_dir: str,
-    tolerance_us: int = 6 * 3600 * 1_000_000,
-) -> DataFrame:
-    """E1 steps 1-2: the as-of iceberg-tagged LOB frame. Delta-
+def tagged_lob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E1 steps 1-2: the as-of iceberg-tagged LOB frame (a purchase
+    matched to a signup of the same user within 6 hours). Delta-
     INDEPENDENT — callers that loop deltas (regression_workflow's 9-arm
     sweep) should compute this once, ``session.pin`` it, and pass it to
     :func:`oi_frame`, so the event scan + the tagging window sort run
@@ -50,7 +47,7 @@ def tagged_lob(
         probe_pred=F.col("event_type") == "purchase",
         match_pred=F.col("event_type") == "signup",
         by_cols=["user_id"],
-        tolerance_us=tolerance_us,
+        tolerance_us=6 * 3600 * 1_000_000,
     )
 
 
@@ -58,14 +55,13 @@ def oi_frame(
     spark: SparkSession,
     sf_dir: str,
     delta_sec: int,
-    tolerance_us: int = 6 * 3600 * 1_000_000,
     tagged: DataFrame | None = None,
 ) -> DataFrame:
-    """E1 step 3: tag icebergs -> per-bin OI (vis/ib/hid split) ->
-    densify -> returns. One lazy plan. Pass a precomputed (pinned)
-    ``tagged`` frame when looping deltas."""
+    """E1 step 3: tag icebergs (:func:`tagged_lob`, 6 h tolerance) ->
+    per-bin OI (vis/ib/hid split) -> densify -> returns. One lazy plan.
+    Pass a precomputed (pinned) ``tagged`` frame when looping deltas."""
     if tagged is None:
-        tagged = tagged_lob(spark, sf_dir, tolerance_us)
+        tagged = tagged_lob(spark, sf_dir)
     d, s = F.col("direction"), F.col("size")
     is_exec = F.col("event_type") == "purchase"
     is_hid = F.col("event_type") == "error"
@@ -153,11 +149,9 @@ def single_strategy_workflow(
     )
 
 
-def portfolio_strategy_workflow(
-    spark: SparkSession, sf_dir: str, percentile: float = 0.2
-) -> DataFrame:
+def portfolio_strategy_workflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3: cross-sectional rank of rolling-refit signals -> top/bottom
-    legs -> daily portfolio PnL + counts (trading_strategy.py:347-464)."""
+    quintile legs -> daily portfolio PnL + counts (trading_strategy.py:347-464)."""
     from dissertation_iceberg_spark.queries.ml_rolling import rolling_refit_signal
 
     sig = rolling_refit_signal(spark, sf_dir)
@@ -171,5 +165,5 @@ def portfolio_strategy_workflow(
         )
     )
     j = sig.join(fut, ["user_id", "day"]).filter(F.col("fut_gross").isNotNull())
-    sel = cross_sectional_select(j, "day", "signal_hat", "user_id", percentile)
+    sel = cross_sectional_select(j, "day", "signal_hat", "user_id", 0.2)
     return portfolio_pnl(sel, "day", "fut_gross")

@@ -3144,11 +3144,7 @@ FROM rules
 
 
 @register("association_rules", oracle=_RULES_ORACLE)
-def association_rules(
-    spark: SparkSession,
-    sf_dir: str,
-    max_basket_size: int | None = _DEFAULT_MAX_BASKET,
-) -> DataFrame:
+def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed association-rule panel over the top co-purchased part
     pairs: for each direction antecedent -> consequent, the full
     Apriori metric set — support, confidence, lift, leverage, and
@@ -3167,7 +3163,7 @@ def association_rules(
     array — no union rescan, no join). Every metric is one mirrored
     float expression over exact BIGINT counts."""
     li = load_table(spark, sf_dir, "lineitem")
-    assoc, raw = _basket_universe(li, max_basket_size)
+    assoc, raw = _basket_universe(li, _DEFAULT_MAX_BASKET)
     n = assoc.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     pairs, _ = _marginal_pair_counts(assoc, bound_src=raw)
     top = (

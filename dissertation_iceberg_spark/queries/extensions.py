@@ -1927,9 +1927,15 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("t")
         )
-        v = w.transform(bcast_params, t).select(
-            F.col("i").alias("j"),
-            F.expr(_FD_SPARK.format(a="w", b="t")).alias("v"),
+        # pinned once per iteration: v reads w twice (its max and the
+        # renormalize), so unpinned the plan doubled every iteration
+        v = (
+            w.transform(bcast_params, t)
+            .select(
+                F.col("i").alias("j"),
+                F.expr(_FD_SPARK.format(a="w", b="t")).alias("v"),
+            )
+            .transform(pin)
         )
     vtv = v.agg(F.sum(F.col("v") * F.col("v")).cast("long").alias("vtv"))
     tr = g.filter(F.col("i") == F.col("j")).agg(

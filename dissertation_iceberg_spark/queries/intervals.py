@@ -91,9 +91,7 @@ FROM p GROUP BY 1
 """
 
 
-def banded_overlap_pairs(
-    iv: DataFrame, band_days: int = _BAND_DAYS
-) -> DataFrame:
+def banded_overlap_pairs(iv: DataFrame) -> DataFrame:
     """Band-blocked interval overlap self-join on (ck, band): emits one
     row per overlapping (ok, ok2) pair within a group, with s/e/s2/e2
     riding along. See :func:`interval_overlap_pairs` for the full
@@ -101,7 +99,7 @@ def banded_overlap_pairs(
     key-scaled at 1×/10×/100×."""
     b = F.explode(
         F.sequence(
-            F.floor(F.col("s") / band_days), F.floor(F.col("e") / band_days)
+            F.floor(F.col("s") / _BAND_DAYS), F.floor(F.col("e") / _BAND_DAYS)
         )
     ).alias("band")
     left = iv.select("ok", "ck", "s", "e", b)
@@ -121,7 +119,7 @@ def banded_overlap_pairs(
         & (F.col("s2") <= F.col("e"))
         & (
             F.col("band")
-            == F.floor(F.greatest(F.col("s"), F.col("s2")) / band_days)
+            == F.floor(F.greatest(F.col("s"), F.col("s2")) / _BAND_DAYS)
         ),
     )
 

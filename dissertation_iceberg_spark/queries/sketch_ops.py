@@ -545,7 +545,7 @@ def bloom_gated_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive exact check — the measured Bloom win (at a 1e-4 FPR the
     exact join sees ~0.01% of the corpus instead of 100%).
 
-    Composes bloom_membership_audit's gate with exact_dedup's
+    Composes bloom_membership_audit's gate with exact_dedup_groups'
     fingerprint equality; the Bloom no-false-negative contract makes
     the gate SAFE (n_confirmed is exactly what an ungated anti-join
     finds — pinned in tests/test_properties.py).""".format(k=_BLOOM_K)

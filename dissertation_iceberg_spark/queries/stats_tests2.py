@@ -36,6 +36,7 @@ from dissertation_iceberg_spark.queries.behavior_ops import (
 from dissertation_iceberg_spark.queries.changepoint_ops import _daily_moves
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.stats_tests import _durations, _risk_table
+from dissertation_iceberg_spark.session import pin
 from dissertation_iceberg_spark.functions.exact import r6, round_long
 from dissertation_iceberg_spark.operators.regression import (
     centred_comoment,
@@ -468,17 +469,23 @@ def gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("gain"), F.asc("f"), F.asc("v"))
             .limit(1)
         )
-        resid = resid.transform(bcast_params, best).select(
-            "q",
-            "d",
-            (
-                F.col("r")
-                - F.when(
-                    ((F.col("f") == "quantity") & (F.col("q") <= F.col("v")))
-                    | ((F.col("f") == "discount") & (F.col("d") <= F.col("v"))),
-                    F.col("wl"),
-                ).otherwise(F.col("wr"))
-            ).alias("r"),
+        # pinned once per round: the round reads resid in hist, tot and
+        # the update, so unpinned the plan doubled every round
+        resid = (
+            resid.transform(bcast_params, best)
+            .select(
+                "q",
+                "d",
+                (
+                    F.col("r")
+                    - F.when(
+                        ((F.col("f") == "quantity") & (F.col("q") <= F.col("v")))
+                        | ((F.col("f") == "discount") & (F.col("d") <= F.col("v"))),
+                        F.col("wl"),
+                    ).otherwise(F.col("wr"))
+                ).alias("r"),
+            )
+            .transform(pin)
         )
         mse = resid.agg(
             F.round(
@@ -4501,6 +4508,8 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         cs = w.groupBy("dow").agg(F.sum("wq").cast("long").alias("col_sum"))
+        # pinned once per iteration: each half-step reads w twice (its
+        # margin and the rescale), so unpinned the plan doubled per step
         w = (
             w.join(cs, "dow")
             .transform(bcast_params, tot)
@@ -4521,6 +4530,7 @@ def ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .alias("wq"),
             )
+            .transform(pin)
         )
     final_rs = w.groupBy("event_type").agg(
         F.sum("wq").cast("long").alias("row_sum")

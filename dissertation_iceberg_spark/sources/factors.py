@@ -117,29 +117,24 @@ def nyse_holidays(start_year: int, end_year: int) -> set:
     return out
 
 
-def trading_days(
-    spark: SparkSession, start: str, end: str, calendar: str = "XNYS"
-) -> DataFrame:
+def trading_days(spark: SparkSession, start: str, end: str) -> DataFrame:
     """Trading-calendar dim (date, is_trading_day, next/prev trading
     day) — the strategies' lookup table, replacing
     ``exchange_calendars.sessions_in_range``
     (trading_strategy.py:114-120,253-265).
 
-    ``calendar='XNYS'`` (default) excludes weekends AND rule-derived
-    NYSE holidays/ad-hoc closures; ``calendar=None`` is the plain
-    weekday approximation. The dim is O(days) — the global window is
-    over a tiny frame by construction (documented single-partition
-    point)."""
+    The XNYS calendar: weekends AND rule-derived NYSE holidays/ad-hoc
+    closures are not trading days. The dim is O(days) — the global
+    window is over a tiny frame by construction (documented
+    single-partition point)."""
     days = spark.sql(
         f"SELECT explode(sequence(to_date('{start}'), to_date('{end}'), "
         "interval 1 day)) AS date"
     )
-    is_td = ~F.dayofweek("date").isin(1, 7)  # Sun=1, Sat=7
-    if calendar == "XNYS":
-        hols = nyse_holidays(int(start[:4]), int(end[:4]))
-        is_td = is_td & ~F.col("date").isin(*[h.isoformat() for h in sorted(hols)])
-    elif calendar is not None:
-        raise ValueError(f"unknown calendar {calendar!r}")
+    hols = nyse_holidays(int(start[:4]), int(end[:4]))
+    is_td = ~F.dayofweek("date").isin(1, 7) & ~F.col("date").isin(  # Sun=1, Sat=7
+        *[h.isoformat() for h in sorted(hols)]
+    )
     cal = days.withColumn("is_trading_day", is_td)
     w = Window.orderBy("date")
     next_td = F.first(

@@ -47,17 +47,15 @@ MESSAGE_SCHEMA = StructType(
 )
 
 
-def orderbook_schema(depth: int = 1) -> StructType:
-    """Parameterized L1..Ln book schema (prediction_ML_pipeline.py:87-94)."""
-    fields = []
-    for i in range(1, depth + 1):
-        fields += [
-            StructField(f"ask_price_{i}", LongType(), False),
-            StructField(f"ask_size_{i}", LongType(), False),
-            StructField(f"bid_price_{i}", LongType(), False),
-            StructField(f"bid_size_{i}", LongType(), False),
-        ]
-    return StructType(fields)
+# level-1 book (prediction_ML_pipeline.py:87-94)
+ORDERBOOK_SCHEMA = StructType(
+    [
+        StructField("ask_price_1", LongType(), False),
+        StructField("ask_size_1", LongType(), False),
+        StructField("bid_price_1", LongType(), False),
+        StructField("bid_size_1", LongType(), False),
+    ]
+)
 
 
 _FNAME_RE = r"([A-Z]+)_(\d{4}-\d{2}-\d{2})_"
@@ -89,9 +87,9 @@ def read_messages(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn("datetime", F.timestamp_micros(base_us + us)).drop("time")
 
 
-def read_orderbook(spark: SparkSession, path: str, depth: int = 1) -> DataFrame:
+def read_orderbook(spark: SparkSession, path: str) -> DataFrame:
     """S2: orderbook CSV -> typed frame with (ticker, date, seq) key."""
-    df = spark.read.csv(path, schema=orderbook_schema(depth), header=False)
+    df = spark.read.csv(path, schema=ORDERBOOK_SCHEMA, header=False)
     return _with_file_meta(df)
 
 
@@ -105,9 +103,10 @@ def widen(messages: DataFrame, orderbook: DataFrame) -> DataFrame:
     ).drop("date_str")
 
 
-def sentinel_filter(df: DataFrame, sentinel: int = 9_999_999_999) -> DataFrame:
-    """P7: drop empty-book rows flagged with ±sentinel prices
+def sentinel_filter(df: DataFrame) -> DataFrame:
+    """P7: drop empty-book rows flagged with ±9999999999 sentinel prices
     (EDA.ipynb cell 24)."""
     return df.filter(
-        (F.col("ask_price_1") != sentinel) & (F.col("bid_price_1") != -sentinel)
+        (F.col("ask_price_1") != 9_999_999_999)
+        & (F.col("bid_price_1") != -9_999_999_999)
     )

@@ -20,23 +20,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def streaming_abtest(
-    events: DataFrame,
-    window_sec: int,
-    ts_col: str = "ts",
-    arm_col: str = "arm",
-    conv_col: str = "conv",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_abtest(events: DataFrame, window_sec: int) -> DataFrame:
     """readStream frame with (ts, arm∈{0,1}, conv∈{0,1}) -> one row per
     tumbling window: per-arm counts, conversion rates, and pooled
     z-score. Works identically on batch frames, which is how the test
     pins streaming output == batch output."""
     # parquet fixtures carry TIMESTAMP_NTZ; watermarks require TIMESTAMP
-    df = events.withColumn("__ts", F.col(ts_col).cast("timestamp"))
+    df = events.withColumn("__ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
-        df = df.withWatermark("__ts", watermark)
-    arm, conv = F.col(arm_col), F.col(conv_col)
+        df = df.withWatermark("__ts", "1 hour")
+    arm, conv = F.col("arm"), F.col("conv")
     agg = df.groupBy(
         F.window(F.col("__ts"), f"{int(window_sec)} seconds").alias("win")
     ).agg(

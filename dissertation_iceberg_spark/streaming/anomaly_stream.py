@@ -57,15 +57,13 @@ def _step(model: tuple, cell: tuple) -> tuple[tuple, list[tuple]]:
     return (new,), [(day, cents, new, anomaly)]
 
 
-def streaming_daily_ewma_anomalies(
-    events: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
+def streaming_daily_ewma_anomalies(events: DataFrame) -> DataFrame:
     """events stream (event_type, ts, value) -> sealed daily EWMA rows
     (event_type, day_us, cents, ewma_cents, anomaly), append-mode,
     bit-equal to the batch ewma_daily_by_type fold for every day the
     watermark has sealed."""
     cents = round_long(F.col("value") * 100).alias("cents")
     return sealed_fold(
-        events, "event_type", [cents], MODEL, _step, OUTPUT_SCHEMA, watermark,
+        events, "event_type", [cents], MODEL, _step, OUTPUT_SCHEMA, "30 minutes",
         day_cells=True,
     )

@@ -10,8 +10,8 @@ no-false-negative contract makes the routing safe: a true contaminant
 can never take the fast path.
 
 Why this formulation streams well: the filter is BOUNDED relational
-state (at most ``bits`` rows — the 8 KiB bitmap as a table), so it
-broadcasts; the probe is k stream-static broadcast LEFT joins, one per
+state (at most ``_BLOOM_BITS`` rows — the 8 KiB bitmap as a table), so
+it broadcasts; the probe is k stream-static broadcast LEFT joins, one per
 hash — completely stateless (no watermark, no aggregation, append mode
 works on any trigger). State never grows with the stream, unlike
 ``dropDuplicatesWithinWatermark`` whose state tracks arrival rate.
@@ -28,34 +28,26 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.functions.hashing import seeded_hash60_col
 
-DEFAULT_BITS = 1 << 16
-DEFAULT_K = 4
+# the batch twin's filter shape: the bit table's builder and its probe
+# must agree on it
+from dissertation_iceberg_spark.queries.sketch_ops import _BLOOM_BITS, _BLOOM_K
 
 
-def bloom_bits(
-    keys: DataFrame,
-    fp_col: str = "fp",
-    bits: int = DEFAULT_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
+def bloom_bits(keys: DataFrame) -> DataFrame:
     """Fold a (batch) key frame into the filter's set-bit table:
-    ≤ ``bits`` distinct rows no matter how many keys — the relational
-    encoding of the bitmap, built once and broadcast to every probe."""
-    idx = F.array(*[F.lit(i) for i in range(k)])
+    ≤ ``_BLOOM_BITS`` distinct rows no matter how many keys — the
+    relational encoding of the bitmap, built once and broadcast to every probe."""
+    idx = F.array(*[F.lit(i) for i in range(_BLOOM_K)])
     return (
-        keys.select(F.explode(idx).alias("i"), F.col(fp_col).alias("__fp"))
-        .select((seeded_hash60_col(F.col("i"), F.col("__fp")) % bits).alias("bit"))
+        keys.select(F.explode(idx).alias("i"), F.col("fp").alias("__fp"))
+        .select(
+            (seeded_hash60_col(F.col("i"), F.col("__fp")) % _BLOOM_BITS).alias("bit")
+        )
         .distinct()
     )
 
 
-def bloom_gate(
-    stream: DataFrame,
-    bits_df: DataFrame,
-    fp_col: str = "fp",
-    bits: int = DEFAULT_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
+def bloom_gate(stream: DataFrame, bits_df: DataFrame) -> DataFrame:
     """Per-row Bloom membership probe (streaming or batch): appends a
     boolean ``gate_hit`` — True iff all k hashed bits are set, i.e. the
     row MAY be a member and must take the exact-check path; False rows
@@ -68,10 +60,10 @@ def bloom_gate(
     micro-batch."""
     out = stream
     hit = None
-    for i in range(k):
+    for i in range(_BLOOM_K):
         b = f"__b{i}"
         out = out.withColumn(
-            b, seeded_hash60_col(F.lit(i), F.col(fp_col)) % bits
+            b, seeded_hash60_col(F.lit(i), F.col("fp")) % _BLOOM_BITS
         ).join(
             F.broadcast(
                 bits_df.select(
@@ -83,5 +75,5 @@ def bloom_gate(
         )
         term = F.col(f"__set{i}").isNotNull()
         hit = term if hit is None else hit & term
-    drop = [c for i in range(k) for c in (f"__b{i}", f"__set{i}")]
+    drop = [c for i in range(_BLOOM_K) for c in (f"__b{i}", f"__set{i}")]
     return out.withColumn("gate_hit", hit).drop(*drop)

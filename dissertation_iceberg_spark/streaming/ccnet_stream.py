@@ -88,9 +88,7 @@ def train_ccnet_artifact(docs: DataFrame) -> dict[str, Any]:
     }
 
 
-def ccnet_gate(
-    docs: DataFrame, artifact: dict[str, Any], text_col: str = "text"
-) -> DataFrame:
+def ccnet_gate(docs: DataFrame, artifact: dict[str, Any]) -> DataFrame:
     """Per-document CCNet score + bucket, stateless. Identical code
     path on a batch frame — the test's batch twin. Documents with no
     tokens are dropped (the batch scorer's explode does the same);
@@ -104,7 +102,7 @@ def ccnet_gate(
         for pdf in it:
             out = []
             for doc_id, lang, source, text in zip(
-                pdf["doc_id"], pdf["lang"], pdf["source"], pdf[text_col]
+                pdf["doc_id"], pdf["lang"], pdf["source"], pdf["text"]
             ):
                 toks = [t for t in (text or "").split(" ") if t != ""]
                 if not toks:

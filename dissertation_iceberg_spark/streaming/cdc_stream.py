@@ -18,19 +18,14 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.functions.exact import round_long
 
 
-def streaming_cdc_latest(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_cdc_latest(events: DataFrame) -> DataFrame:
     """readStream change log -> one row per key: the latest event
     (ties broken by event_id, matching the batch twin), its
     microsecond timestamp, integer-cent value, and delete flag.
     Works identically on batch frames — the parity pin."""
-    df = events.withColumn("__ts", F.col(ts_col).cast("timestamp"))
+    df = events.withColumn("__ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
-        df = df.withWatermark("__ts", watermark)
+        df = df.withWatermark("__ts", "1 hour")
     ordkey = F.struct(
         F.unix_micros(F.col("__ts")).alias("us"),
         F.col("event_id").alias("event_id"),
@@ -42,10 +37,10 @@ def streaming_cdc_latest(
         (F.col("event_type") == "error").alias("is_delete"),
     )
     return (
-        df.groupBy(F.col(key_col))
+        df.groupBy("user_id")
         .agg(F.max_by(row, ordkey).alias("r"))
         .select(
-            key_col,
+            "user_id",
             F.col("r.last_event_id").alias("last_event_id"),
             F.col("r.last_us").alias("last_us"),
             F.col("r.last_cents").alias("last_cents"),

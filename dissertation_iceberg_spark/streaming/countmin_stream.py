@@ -19,15 +19,12 @@ from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.queries.sketch_ops import _seeded_hash_col
 
+# sketch shape; the cells' writer and their reader must agree on it
+CM_DEPTH = 4
+CM_WIDTH = 256
 
-def window_sketch_cells(
-    events: DataFrame,
-    key_col: str = "event_type",
-    depth: int = 4,
-    width: int = 256,
-    window: str = "6 hours",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+
+def window_sketch_cells(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window count-min cells (streaming or batch).
 
     Output: (window_start, d, cell, n) — append-mode on window close.
@@ -36,42 +33,36 @@ def window_sketch_cells(
     """
     e = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
-    ds = F.array(*[F.lit(d) for d in range(depth)])
+        e = e.withWatermark("ts", "30 minutes")
+    ds = F.array(*[F.lit(d) for d in range(CM_DEPTH)])
     cells = e.select(
-        "ts", F.col(key_col).alias("__k"), F.explode(ds).alias("d")
+        "ts", F.col("event_type").alias("__k"), F.explode(ds).alias("d")
     ).select(
         "ts",
         "d",
-        (_seeded_hash_col(F.col("d"), F.col("__k")) % width).alias("cell"),
+        (_seeded_hash_col(F.col("d"), F.col("__k")) % CM_WIDTH).alias("cell"),
     )
     return (
-        cells.groupBy(F.window("ts", window).alias("w"), "d", "cell")
+        cells.groupBy(F.window("ts", "6 hours").alias("w"), "d", "cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "d", "cell", "n")
     )
 
 
-def sketch_estimate(
-    cells: DataFrame,
-    keys: DataFrame,
-    key_col: str = "event_type",
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
+def sketch_estimate(cells: DataFrame, keys: DataFrame) -> DataFrame:
     """Read the sketch back for a (small) key set: per (window, key),
     est_n = min over depth rows of the hashed cell. ``keys`` is
     broadcast — the sketch never shuffles for a readout."""
-    ds = F.array(*[F.lit(d) for d in range(depth)])
-    probes = keys.select(F.col(key_col).alias("__k")).distinct().select(
+    ds = F.array(*[F.lit(d) for d in range(CM_DEPTH)])
+    probes = keys.select(F.col("event_type").alias("__k")).distinct().select(
         "__k", F.explode(ds).alias("d")
     ).select(
         "__k",
         "d",
-        (_seeded_hash_col(F.col("d"), F.col("__k")) % width).alias("cell"),
+        (_seeded_hash_col(F.col("d"), F.col("__k")) % CM_WIDTH).alias("cell"),
     )
     return (
         cells.join(F.broadcast(probes), ["d", "cell"])
-        .groupBy("window_start", F.col("__k").alias(key_col))
+        .groupBy("window_start", F.col("__k").alias("event_type"))
         .agg(F.min("n").alias("est_n"))
     )

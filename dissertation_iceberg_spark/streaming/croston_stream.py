@@ -53,9 +53,7 @@ def _step(model: tuple, cell: tuple) -> tuple[tuple, list[tuple]]:
     return (1, z, q, day), [(day, cents, gap, z, q)]
 
 
-def streaming_croston_forecast(
-    events: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
+def streaming_croston_forecast(events: DataFrame) -> DataFrame:
     """purchase-events stream (user_id, ts, value, ...) -> sealed
     demand-day Croston rows (user_id, day_us, cents, gap_days, z_hat,
     q_hat), append-mode; the last row per user is bit-equal to the
@@ -63,5 +61,5 @@ def streaming_croston_forecast(
     cents = round_long(F.col("value") * 100).alias("cents")
     return sealed_fold(
         events.filter(F.col("event_type") == "purchase"), "user_id", [cents],
-        MODEL, _step, OUTPUT_SCHEMA, watermark, day_cells=True,
+        MODEL, _step, OUTPUT_SCHEMA, "30 minutes", day_cells=True,
     )

@@ -85,9 +85,7 @@ def train_dsir_artifact(docs: DataFrame) -> dict[str, Any]:
     }
 
 
-def dsir_gate(
-    docs: DataFrame, artifact: dict[str, Any], text_col: str = "text"
-) -> DataFrame:
+def dsir_gate(docs: DataFrame, artifact: dict[str, Any]) -> DataFrame:
     """Per-document DSIR importance score + selection flag, stateless.
     Identical code path on a batch frame — the test's batch twin.
     Documents with no tokens are dropped (the batch scorer's explode
@@ -100,7 +98,7 @@ def dsir_gate(
         for pdf in it:
             out = []
             for doc_id, source, text in zip(
-                pdf["doc_id"], pdf["source"], pdf[text_col]
+                pdf["doc_id"], pdf["source"], pdf["text"]
             ):
                 toks = [t for t in (text or "").split(" ") if t != ""]
                 if not toks:

@@ -19,22 +19,17 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.functions.exact import round_long
 
 
-def segment_window_counts(
-    events: DataFrame,
-    segments: DataFrame,
-    window: str = "6 hours",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def segment_window_counts(events: DataFrame, segments: DataFrame) -> DataFrame:
     """Events joined to a (user_id, segment) static dim, counted per
     (segment, tumbling window). Identical code path on a batch frame
     (watermark skipped) — the test's batch twin."""
     # NTZ -> LTZ (session tz pinned UTC): withWatermark requires it
     e = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
+        e = e.withWatermark("ts", "30 minutes")
     joined = e.join(F.broadcast(segments), "user_id")
     return (
-        joined.groupBy(F.window("ts", window).alias("w"), "segment")
+        joined.groupBy(F.window("ts", "6 hours").alias("w"), "segment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(round_long(F.col("value") * 100)).alias("cents"),

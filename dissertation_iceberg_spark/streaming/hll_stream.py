@@ -29,12 +29,7 @@ from dissertation_iceberg_spark.queries.sketch_ops import (
 )
 
 
-def window_hll_registers(
-    events: DataFrame,
-    key_col: str = "user_id",
-    window: str = "6 hours",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def window_hll_registers(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window HLL registers (streaming or batch).
 
     Output: (window_start, bucket, m) — append on window close; at most
@@ -42,8 +37,8 @@ def window_hll_registers(
     """
     e = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
-    hv = hash60(F.col(key_col).cast("string"))
+        e = e.withWatermark("ts", "30 minutes")
+    hv = hash60(F.col("user_id").cast("string"))
     w = hv.bitwiseAND(F.lit((1 << _HLL_WBITS) - 1))
     rho = e.select(
         "ts",
@@ -53,7 +48,7 @@ def window_hll_registers(
         .alias("r"),
     )
     return (
-        rho.groupBy(F.window("ts", window).alias("w"), "bucket")
+        rho.groupBy(F.window("ts", "6 hours").alias("w"), "bucket")
         .agg(F.max("r").alias("m"))
         .select(F.col("w.start").alias("window_start"), "bucket", "m")
     )

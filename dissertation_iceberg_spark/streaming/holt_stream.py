@@ -56,14 +56,12 @@ def _step(model: tuple, cell: tuple) -> tuple[tuple, list[tuple]]:
     return (1, l_new, b_new), [(day, y, fc, y - fc, l_new, b_new)]
 
 
-def streaming_holt_forecast(
-    events: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
+def streaming_holt_forecast(events: DataFrame) -> DataFrame:
     """events stream (event_type, ts, ...) -> sealed daily Holt rows
     (event_type, day_us, y, forecast, error, level, trend),
     append-mode, bit-equal to the batch holt_linear_forecast
     integer-shift recursion for every sealed day."""
     return sealed_fold(
         events, "event_type", [F.lit(1).alias("y")], MODEL, _step,
-        OUTPUT_SCHEMA, watermark, day_cells=True,
+        OUTPUT_SCHEMA, "30 minutes", day_cells=True,
     )

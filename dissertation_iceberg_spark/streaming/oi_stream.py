@@ -24,13 +24,7 @@ from dissertation_iceberg_spark.operators.order_imbalance import oi_expr
 
 
 def streaming_oi(
-    events: DataFrame,
-    delta_sec: int,
-    ts_col: str = "ts",
-    dir_col: str = "direction",
-    size_col: str = "size",
-    watermark: str = "1 hour",
-    group_cols: list[str] | None = None,
+    events: DataFrame, delta_sec: int, watermark: str = "1 hour"
 ) -> DataFrame:
     """readStream frame -> watermarked tumbling-window conditional OI.
 
@@ -42,19 +36,18 @@ def streaming_oi(
     # column IS the watermarked column, not an expression over it
     df = events.withColumn(
         "__ts_shift",
-        F.expr(f"CAST({ts_col} AS TIMESTAMP) - INTERVAL 1 MICROSECOND"),
+        F.expr("CAST(ts AS TIMESTAMP) - INTERVAL 1 MICROSECOND"),
     )
     win = F.window(F.col("__ts_shift"), f"{int(delta_sec)} seconds")
     if df.isStreaming:
         df = df.withWatermark("__ts_shift", watermark)
     return (
-        df.groupBy(*(group_cols or []), win.alias("win"))
+        df.groupBy(win.alias("win"))
         .agg(
-            oi_expr(F.col(dir_col), F.col(size_col)).alias("order_imbalance"),
+            oi_expr(F.col("direction"), F.col("size")).alias("order_imbalance"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .select(
-            *(group_cols or []),
             F.col("win.end").alias("bin"),
             "order_imbalance",
             "n_events",

@@ -42,18 +42,16 @@ def _bin_col():
     return c.otherwise(len(PSI_EDGES))
 
 
-def window_bin_counts(
-    events: DataFrame, window: str = "1 day", watermark: str = "30 minutes"
-) -> DataFrame:
+def window_bin_counts(events: DataFrame) -> DataFrame:
     """Stage 1: watermarked tumbling-window histogram counts
     (streaming or batch). One row per closed window, B integer
     columns — the only fact-scale stage."""
     e = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
+        e = e.withWatermark("ts", "30 minutes")
     return (
         e.withColumn("bin", _bin_col())
-        .groupBy(F.window("ts", window).alias("w"))
+        .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             *[

@@ -23,10 +23,10 @@ from pyspark.sql import functions as F
 from dissertation_iceberg_spark.operators.text import gopher_flags
 
 
-def gopher_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_gate(docs: DataFrame) -> DataFrame:
     """Per-document rule flags + pass verdict. Identical code path on
     a batch frame — the test's batch twin."""
-    fl = gopher_flags(text_col)
+    fl = gopher_flags("text")
     out = docs.select(
         "doc_id",
         "source",

@@ -43,15 +43,13 @@ def _step(model: tuple, cell: tuple) -> tuple[tuple, list[tuple]]:
     return (1, run_max, n_records), [(day, cents, is_rec, n_records)]
 
 
-def streaming_record_highs(
-    events: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
+def streaming_record_highs(events: DataFrame) -> DataFrame:
     """events stream (event_type, ts, value) -> sealed daily rows
     (event_type, day_us, cents, is_record, n_records), append-mode;
     sealed rows reproduce the batch exclusive-running-max record
     flags exactly."""
     cents = round_long(F.col("value") * 100).alias("cents")
     return sealed_fold(
-        events, "event_type", [cents], MODEL, _step, OUTPUT_SCHEMA, watermark,
+        events, "event_type", [cents], MODEL, _step, OUTPUT_SCHEMA, "30 minutes",
         day_cells=True,
     )

@@ -13,19 +13,14 @@ on user across the cluster, same as the batch shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dissertation_iceberg_spark.operators.sessions import sessionize
 
 
 def streaming_sessions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_cents: Column | None = None,
-    gap: str = "6 hours",
-    watermark: str = "30 minutes",
+    events: DataFrame, gap: str = "6 hours", watermark: str = "30 minutes"
 ) -> DataFrame:
     """readStream frame -> watermarked gap-sessions (append-mode final
     sessions). On a batch frame this is exactly ``sessionize`` — which
@@ -34,8 +29,8 @@ def streaming_sessions(
     # arrives as TIMESTAMP_NTZ, which withWatermark rejects; the cast
     # reads the wall clock in the session tz (pinned UTC) and is a
     # no-op for LTZ inputs
-    df = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    df = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
         # session_window must range over the watermarked column itself
-        df = df.withWatermark(ts_col, watermark)
-    return sessionize(df, user_col, ts_col, value_cents, gap)
+        df = df.withWatermark("ts", watermark)
+    return sessionize(df, gap=gap)

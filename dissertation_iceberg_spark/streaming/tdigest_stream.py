@@ -37,42 +37,34 @@ TDS_LO_CENTS = 0  # declared value bounds (cents)
 TDS_HI_CENTS = 50_000
 
 
-def window_tdigest_cells(
-    events: DataFrame,
-    value_col: str = "value",
-    window: str = "6 hours",
-    watermark: str = "30 minutes",
-    lo_cents: int = TDS_LO_CENTS,
-    hi_cents: int = TDS_HI_CENTS,
-    prebins: int = TDS_PREBINS,
-) -> DataFrame:
+def window_tdigest_cells(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window t-digest cells (streaming or batch).
 
     Output: (window_start, cell, n, sum_c, min_c, max_c) — append on
-    window close; at most ``prebins`` rows per window regardless of
+    window close; at most ``TDS_PREBINS`` rows per window regardless of
     row count. All four aggregates are associative integer state, so
     any partitioning/replay produces identical rows.
     """
     e = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
-    c = round_long(F.col(value_col) * 100)
-    span = hi_cents - lo_cents + 1
+        e = e.withWatermark("ts", "30 minutes")
+    c = round_long(F.col("value") * 100)
+    span = TDS_HI_CENTS - TDS_LO_CENTS + 1
     return (
         e.select(
             "ts",
             c.alias("c"),
-            ((c - F.lit(lo_cents)) * prebins).alias("__num"),
+            ((c - F.lit(TDS_LO_CENTS)) * TDS_PREBINS).alias("__num"),
         )
         .select(
             "ts",
             "c",
             F.greatest(
                 F.lit(0),
-                F.least(F.lit(prebins - 1), F.expr(f"__num div {span}")),
+                F.least(F.lit(TDS_PREBINS - 1), F.expr(f"__num div {span}")),
             ).alias("cell"),
         )
-        .groupBy(F.window("ts", window).alias("w"), "cell")
+        .groupBy(F.window("ts", "6 hours").alias("w"), "cell")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("c").cast("long").alias("sum_c"),
@@ -84,7 +76,7 @@ def window_tdigest_cells(
     )
 
 
-def tdigest_finalize(cells: DataFrame, k: int = TDS_K) -> DataFrame:
+def tdigest_finalize(cells: DataFrame) -> DataFrame:
     """Fold closed-window cells into per-window k1-scale centroids —
     the batch digest's pass-3 arithmetic (cumulative cell counts →
     asin micro-map → centroid merge), PARTITIONED BY window over
@@ -107,7 +99,7 @@ def tdigest_finalize(cells: DataFrame, k: int = TDS_K) -> DataFrame:
         c.withColumn("asin_micro", asin_micro)
         .select(
             "window_start",
-            F.expr(f"least(({k} * asin_micro) div {_TD_PI_MICRO}, {k - 1})")
+            F.expr(f"least(({TDS_K} * asin_micro) div {_TD_PI_MICRO}, {TDS_K - 1})")
             .alias("centroid"),
             "n",
             "sum_c",
@@ -124,9 +116,7 @@ def tdigest_finalize(cells: DataFrame, k: int = TDS_K) -> DataFrame:
     )
 
 
-def tdigest_window_quantiles(
-    centroids: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
-) -> DataFrame:
+def tdigest_window_quantiles(centroids: DataFrame) -> DataFrame:
     """Per-window quantile estimates from finalized centroids via the
     covering-centroid interpolation of the batch readout
     (tdigest_quantile_readout): the first centroid whose cumulative
@@ -142,7 +132,7 @@ def tdigest_window_quantiles(
         centroids.withColumn("cum", F.sum("n").over(cw))
         .withColumn("cum_prev", F.col("cum") - F.col("n"))
         .withColumn("n_tot", F.sum("n").over(tot))
-        .withColumn("q", F.explode(F.array(*[F.lit(q) for q in qs])))
+        .withColumn("q", F.explode(F.array(*[F.lit(q) for q in (0.5, 0.9, 0.99)])))
         .withColumn(
             "target", F.ceil(F.col("q") * F.col("n_tot")).cast("long")
         )

@@ -23,32 +23,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def window_key_counts(
-    events: DataFrame,
-    key_col: str = "event_type",
-    window: str = "6 hours",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def window_key_counts(events: DataFrame) -> DataFrame:
     """Stage 1: watermarked tumbling-window counts per key (streaming
     or batch)."""
     # NTZ -> LTZ (session tz pinned UTC): withWatermark requires it
     e = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if e.isStreaming:
-        e = e.withWatermark("ts", watermark)
+        e = e.withWatermark("ts", "30 minutes")
     return (
-        e.groupBy(F.window("ts", window).alias("w"), key_col)
+        e.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), key_col, "n_events")
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
 
 
-def rank_topk(counts: DataFrame, key_col: str = "event_type", k: int = 3) -> DataFrame:
-    """Stage 2: top-k keys per closed window. Partitioned by window —
+def rank_topk(counts: DataFrame) -> DataFrame:
+    """Stage 2: the top 3 keys per closed window. Partitioned by window —
     never a global sort; ties break on the key for determinism."""
     w = Window.partitionBy("window_start").orderBy(
-        F.desc("n_events"), F.asc(key_col)
+        F.desc("n_events"), F.asc("event_type")
     )
     return (
         counts.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= 3)
     )

@@ -374,6 +374,20 @@ def test_survival_build_fires_no_job(spark, sf_dir, name):
     assert jobs == 0, f"{jobs} jobs fired while building"
 
 
+@pytest.mark.parametrize("name", ["gbm_stumps", "ipf_raking", "pca_power_iteration"])
+def test_iterative_state_pinned_per_round(spark, sf_dir, name):
+    """Each round of these loops reads its state (residuals, weights,
+    iterate) more than once, so an unpinned state doubles the plan
+    every round. Pinned once per round, the executed plan keeps a
+    bounded exchange count, counted as tools/time_registry.py counts
+    them."""
+    import re
+
+    plan = _plan(spark, sf_dir, name)
+    n = len(re.findall(r"\b(?:Exchange|BroadcastExchange|ReusedExchange)\b", plan))
+    assert n <= 50, f"{n} exchanges in the executed plan"
+
+
 def test_q3_pushdown_broadcast_topk(spark, sf_dir):
     """Q3 shape: date/segment filters reach the scans, customer dim is
     broadcast, and the top-k compiles to TakeOrderedAndProject."""
